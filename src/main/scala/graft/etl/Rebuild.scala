@@ -1,6 +1,8 @@
 package graft.etl
 
+import graft.operators.Checkpoints._
 import graft.sources.UsersCsv
+import java.util.concurrent.{ExecutionException, Executors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The `synth rebuild` entrypoint (SURVEY §3.1;
@@ -40,7 +42,20 @@ object Rebuild {
       outputDois: DataFrame,
       doiMetadata: DataFrame)
 
-  /** Result: every analysis table, keyed by its target-schema name. */
+  /** Result: every analysis table, keyed by its target-schema name.
+    *
+    * One frame is materialized here, eagerly: the visitor-project table
+    * (`fillVisitorProject`'s 48-column join, its single-partition global
+    * `row_number` window and the regex institution cleaning). Five outputs
+    * read it — its own write through [[Geo.fillMissingCountry]] (which
+    * references it twice), the project mapping behind `access_request`,
+    * the view, and `evaluation_score` (twice) — and each would otherwise
+    * re-plan and re-execute it from the sources when written. It is cut
+    * with [[graft.operators.Checkpoints.LineageOps.cutLineage]] (a local
+    * checkpoint unless a checkpoint dir is set), not persisted: a cache
+    * entry outlives the rebuild, while the checkpoint's blocks are freed
+    * once the returned frames are unreachable.
+    */
   def run(inputs: Inputs): Map[String, DataFrame] = {
     import inputs._
 
@@ -58,9 +73,11 @@ object Rebuild {
     val outputClean            = Steps.cleanOutputs(output, outputMap, outputDois, doiMetadata)
 
     val guids                  = UsersCsv.explodeGuids(usersCsv)
-    val (visitorProject, projMap) = Steps.fillVisitorProject(
+    val (vpPlan, _)            = Steps.fillVisitorProject(
       Steps.unionRounds(userProjects), Steps.unionRounds(users), guids,
       call, specMap, countryMap, institutionAliases)
+    val visitorProject         = vpPlan.cutLineage() // the one materialization
+    val projMap                = Steps.projectMapping(visitorProject)
 
     // xlsx-resource steps
     val category               = Steps.fillCategory(xlsxCategory)
@@ -73,7 +90,7 @@ object Rebuild {
     val vpWithCountry          = Geo.fillMissingCountry(visitorProject, geoCities,
       unmatchedTowns, countryMap)
     val evaluationScore        = Steps.aggregateEvaluationScores(
-      Steps.unionRounds(applicationScores), visitorProject, projMap, call)
+      Steps.unionRounds(applicationScores), visitorProject)
 
     Map(
       "round" -> round, "call" -> call, "country" -> country,
@@ -86,16 +103,44 @@ object Rebuild {
       "evaluation_score" -> evaluationScore)
   }
 
-  /** Write every table (ClearAnalysisDB/CreateAnalysisDB analog: overwrite).
-    * The `round`-partitioned facts get `round` as a partition column so
-    * downstream per-round predicates prune partitions (SURVEY §4).
+  /** Write every table (ClearAnalysisDB/CreateAnalysisDB analog:
+    * overwrite), each through [[writeTable]].
+    *
+    * The tables are written concurrently, one pool thread per table: most
+    * are dimension-sized, and one at a time they left most cores idle. The
+    * pool is created inside the call, so its threads inherit the caller's
+    * Spark local properties — a `setJobGroup` id attributes (and cancels)
+    * every write job. Every write is waited for; then the first failure,
+    * in table order, is rethrown as it was raised, with a suppressed
+    * exception naming its table. A failed call may leave other tables
+    * already overwritten, as a sequential write could.
     */
   def writeAll(tables: Map[String, DataFrame], outDir: String): Unit =
-    tables.foreach { case (name, df) =>
-      val w = df.write.mode("overwrite")
-      val partitioned = if (df.columns.contains("round")) w.partitionBy("round") else w
-      partitioned.parquet(s"$outDir/$name")
+    if (tables.nonEmpty) {
+      val pool = Executors.newFixedThreadPool(tables.size)
+      try {
+        val writes = tables.toSeq.map { case (name, df) =>
+          name -> pool.submit(new Runnable { def run(): Unit = writeTable(name, df, outDir) })
+        }
+        val failures = writes.flatMap { case (name, w) =>
+          try { w.get(); None }
+          catch { case e: ExecutionException => Some(name -> e.getCause) }
+        }
+        failures.headOption.foreach { case (name, e) =>
+          e.addSuppressed(new RuntimeException(s"writing table '$name' to $outDir failed"))
+          throw e
+        }
+      } finally pool.shutdown()
     }
+
+  /** One table's plain-parquet write: overwrite, and tables carrying
+    * `round` get it as a partition column so downstream per-round
+    * predicates prune partitions (SURVEY §4).
+    */
+  private def writeTable(name: String, df: DataFrame, outDir: String): Unit = {
+    val w = df.write.mode("overwrite")
+    (if (df.columns.contains("round")) w.partitionBy("round") else w).parquet(s"$outDir/$name")
+  }
 
   /** The fact tables' repeated-join keys: the visitor-project star is what
     * analysis queries join over and over (the view, score lookups,
@@ -113,8 +158,9 @@ object Rebuild {
   /** Bucketed variant of [[writeAll]]: tables with a registered join key
     * are written `bucketBy(nBuckets, key).sortBy(key)` as saved tables
     * (bucket metadata lives in the session catalog); the rest stay plain
-    * parquet in `outDir`. Table names are prefixed `prefix` to keep
-    * catalogs from different runs apart.
+    * parquet in `outDir` ([[writeTable]]). Table names are prefixed
+    * `prefix` to keep catalogs from different runs apart. Sequential:
+    * `saveAsTable` and `DROP TABLE` go through the session catalog.
     */
   def writeAllBucketed(
       tables: Map[String, DataFrame], outDir: String,
@@ -127,10 +173,7 @@ object Rebuild {
           df.write.mode("overwrite")
             .bucketBy(nBuckets, key).sortBy(key)
             .saveAsTable(t)
-        case None =>
-          val w = df.write.mode("overwrite")
-          val partitioned = if (df.columns.contains("round")) w.partitionBy("round") else w
-          partitioned.parquet(s"$outDir/$name")
+        case None => writeTable(name, df, outDir)
       }
     }
 

@@ -355,10 +355,16 @@ object Steps {
           Cleaning.toDatetimeLegacy(col("submission_date")).as("submission_date") // F3
         case c => col(c)
       }): _*)
-    val mapping = table.select(col("round"),
-      col("original_project_id").as("original_id"), col("id").as("new_id"))
-    (table, mapping)
+    (table, projectMapping(table))
   }
+
+  /** The J11 project mapping of a visitor-project table: (round, original
+    * UserProject_ID) → new id, for the steps that translate source project
+    * ids (AccessRequest).
+    */
+  def projectMapping(visitorProject: DataFrame): DataFrame =
+    visitorProject.select(col("round"),
+      col("original_project_id").as("original_id"), col("id").as("new_id"))
 
   /** FillCategory / FillInstitution / FillInstallationFacility /
     * FillAccessRequest (etl.py:564-658): xlsx-sheet fixtures → tables;
@@ -408,13 +414,17 @@ object Steps {
     * (count≥0, mean/mode/sum≥1, stddev≥2). A row is emitted for every
     * (project, score type) — even scoreless ones (count=0, rest NULL).
     *
+    * Scores are keyed by the source (round, UserProject_ID), which the
+    * visitor-project table carries as (round, original_project_id): the
+    * reference's get_synth_round (the round of the project's call,
+    * utils.py:125-135) is the project's own round, because
+    * [[fillVisitorProject]]'s J8 join only matches calls of that round.
+    *
     * Mode determinism: Python's statistics.mode returns the first mode in
     * iteration order of an unordered scan; we use (max count, min value) —
     * deterministic on any cluster (SURVEY §7.4.2).
     */
-  def aggregateEvaluationScores(
-      scores: DataFrame, visitorProject: DataFrame, projectMapping: DataFrame,
-      callTable: DataFrame): DataFrame = {
+  def aggregateEvaluationScores(scores: DataFrame, visitorProject: DataFrame): DataFrame = {
 
     // score definitions (etl.py:789-798): name, per-round totals (1-4)
     val defs: Seq[(String, Seq[Option[Int]])] = Seq(
@@ -445,19 +455,8 @@ object Steps {
     val points = scores.selectExpr("round", "UserProject_ID", stackExpr)
       .filter(col("point").isNotNull && col("point") =!= 0) // the zero-drop quirk
 
-    // project round via its call (get_synth_round, utils.py:125-135)
-    val projRound = visitorProject.select(col("id").as("visitor_project_id"),
-        col("call_submitted"))
-      .join(broadcast(callTable.select(col("id").as("call_submitted"),
-        col("round_id").as("round"))), Seq("call_submitted"))
-
-    // reverse-translate project id → original (round, UserProject_ID) (J11 reverse)
-    val projKeys = projRound.as("pr")
-      .join(broadcast(projectMapping).as("pm"),
-        col("pr.round") === col("pm.round") &&
-          col("pr.visitor_project_id") === col("pm.new_id"))
-      .select(col("pr.visitor_project_id"), col("pr.round"),
-        col("pm.original_id").as("UserProject_ID"))
+    val projKeys = visitorProject.select(col("id").as("visitor_project_id"),
+      col("round"), col("original_project_id").as("UserProject_ID"))
 
     val normalized = projKeys
       .join(points, Seq("round", "UserProject_ID"))
@@ -484,7 +483,7 @@ object Steps {
 
     // a row for EVERY (project, score type) — the reference emits all 7 per
     // project regardless of data presence (etl.py:801-821)
-    val scaffold = projRound.select(col("visitor_project_id"))
+    val scaffold = projKeys.select(col("visitor_project_id"))
       .crossJoin(broadcast(defs.map(_._1).toDF("score_name")))
 
     scaffold

@@ -1,9 +1,16 @@
 package graft.etl
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Window => WindowNode}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** Whole-pipeline end-to-end test: all 16 steps over a 2-round fixture
   * universe (FIXTURES.md shapes), checking cross-step wiring — mappings
@@ -85,8 +92,9 @@ class RebuildSpec extends SparkSpec {
       .withColumn("Degree", lit(null).cast("string"))
       .withColumn("PublicationStatus_ID", lit(1))
 
-  test("full rebuild: 13 analysis tables, cross-step mappings, geo enrichment, dump") {
-    val inputs = Rebuild.Inputs(
+  /** The 2-round fixture universe. */
+  private def fixtureInputs: Rebuild.Inputs =
+    Rebuild.Inputs(
       calls = Seq(
         Seq((1, 1, ts("2004-01-01 00:00:00"), ts("2004-04-01 00:00:00")),
             (2, 2, ts("2004-06-01 00:00:00"), ts("2004-09-01 00:00:00")))
@@ -144,7 +152,8 @@ class RebuildSpec extends SparkSpec {
         .withColumn("volume", lit(null).cast("string"))
         .withColumn("pages", lit(null).cast("string")))
 
-    val tables = Rebuild.run(inputs)
+  test("full rebuild: 13 analysis tables, cross-step mappings, geo enrichment, dump") {
+    val tables = Rebuild.run(fixtureInputs)
     assert(tables.keySet.size === 13)
 
     assert(tables("round").count() === 2)
@@ -213,5 +222,87 @@ class RebuildSpec extends SparkSpec {
     assert(new java.io.File(s"$dir/t/round=1").exists())
     val back = spark.read.parquet(s"$dir/t")
     assert(back.count() === 2)
+  }
+
+  test("rebuild materializes the visitor-project frame once: its consumers plan over it, not the sources") {
+    val dir = java.nio.file.Files.createTempDirectory("rebuild_src").toString
+    // parquet-backed sources, so a re-read shows up as a scan of their paths
+    def viaParquet(name: String, rounds: Seq[DataFrame]): Seq[DataFrame] =
+      rounds.zipWithIndex.map { case (df, i) =>
+        df.write.parquet(s"$dir/$name$i")
+        spark.read.parquet(s"$dir/$name$i")
+      }
+    val in = fixtureInputs
+    val tables = Rebuild.run(in.copy(
+      userProjects = viaParquet("userProjects", in.userProjects),
+      users = viaParquet("users", in.users)))
+    Seq("visitor_project", "access_request", "vw_project_access_requests", "evaluation_score")
+      .foreach { t =>
+        val plan = tables(t).queryExecution.optimizedPlan
+        val scanned = plan.collect { case r: LogicalRelation => r.relation }
+          .collect { case h: HadoopFsRelation => h.location.rootPaths.map(_.toString) }.flatten
+        assert(!scanned.exists(_.contains(dir)), s"$t re-reads the project sources:\n$plan")
+        // the project id window (row_number over round, original_project_id);
+        // the country ids' window and evaluation_score's mode window stay
+        assert(plan.collectFirst {
+          case w: WindowNode if w.orderSpec.exists(_.references.exists(_.name == "original_project_id")) => w
+        }.isEmpty, s"$t re-runs the project id window:\n$plan")
+        assert(plan.collectFirst { case r: LogicalRDD => r }.isDefined,
+          s"$t does not read the materialized frame:\n$plan")
+      }
+  }
+
+  test("writeAll waits for every table, then rethrows the first failure naming its table") {
+    val dir = java.nio.file.Files.createTempDirectory("rebuild_fail").toString
+    val boom = udf { (x: Long) =>
+      if (x >= 0) throw new IllegalStateException("planted write failure")
+      x
+    }
+    val slow = udf { (x: Long) => Thread.sleep(1000); x }
+    val bad = spark.range(1).select(boom(col("id")).as("id"))
+    val tables = Map(
+      "bad" -> bad,
+      "slow" -> spark.range(1).select(slow(col("id")).as("id")),
+      "plain" -> Seq((1, 1, "x")).toDF("id", "round", "v"))
+    val e = intercept[Exception](Rebuild.writeAll(tables, dir))
+    // the exception the write itself raises, not the pool's wrapper
+    val direct = intercept[Exception](bad.write.parquet(s"$dir/direct"))
+    assert(e.getClass === direct.getClass)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => c.isInstanceOf[IllegalStateException] && c.getMessage == "planted write failure"))
+    assert(e.getSuppressed.exists(_.getMessage.contains("'bad'")), e.getSuppressed.toSeq)
+    Seq("slow", "plain").foreach { t =>
+      assert(new java.io.File(s"$dir/$t/_SUCCESS").exists(), s"$t was not written before the throw")
+    }
+  }
+
+  test("writeAll runs every write job under the caller's job group") {
+    val dir = java.nio.file.Files.createTempDirectory("rebuild_group").toString
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(js.properties.getProperty("spark.jobGroup.id")))
+    }
+    // several calls under different groups: a writer thread reused across
+    // calls would carry an earlier caller's group
+    val callers = Seq("writes-a", "writes-b", "writes-c")
+    sc.addSparkListener(listener)
+    try {
+      callers.foreach { g =>
+        sc.setJobGroup(g, "writeAll")
+        Rebuild.writeAll((1 to 8).map(i => s"$g-t$i" -> Seq((i, i)).toDF("id", "round")).toMap, dir)
+      }
+      // the bus delivers in order: once the marker job is seen, every write job was
+      sc.setJobGroup("marker", "marker")
+      spark.range(1).count()
+      eventually(timeout(30.seconds)) { assert(groups.contains("marker")) }
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val writes = groups.asScala.toSeq.takeWhile(_ != "marker")
+    callers.foreach(g => assert(writes.count(_ == g) >= 8, writes))
+    assert(writes === writes.sortBy(callers.indexOf(_)), writes)
   }
 }

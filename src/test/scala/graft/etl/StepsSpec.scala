@@ -133,11 +133,10 @@ class StepsSpec extends SparkSpec {
   }
 
   test("aggregateEvaluationScores: zero-drop quirk, min_size semantics, per-round totals, all-7 scaffold (utils.py:156-199, etl.py:772-821)") {
-    // one project in round 1 (call id 1), one in round 4 (call id 4)
-    val callTable = Seq((1, 1, 1), (2, 2, 1), (3, 3, 1), (4, 4, 1))
-      .toDF("id", "round_id", "ordinal")
-    val vp = Seq((100, 1), (200, 4)).toDF("id", "call_submitted")
-    val pm = Seq((1, 77, 100), (4, 88, 200)).toDF("round", "original_id", "new_id")
+    // one project in round 1 (call id 1, source id 77), one in round 4
+    // (call id 4, source id 88)
+    val vp = Seq((100, 1, 1, 77), (200, 4, 4, 88))
+      .toDF("id", "call_submitted", "round", "original_project_id")
     val scores = Steps.unionRounds(Seq(
       // round 1, project 77: methodology 15, 15, 0 (dropped), null (dropped)
       Seq[(Int, Option[Double], Option[Double])](
@@ -156,7 +155,7 @@ class StepsSpec extends SparkSpec {
       .withColumn("Expected_Gains_Score", lit(null).cast("double"))
       .withColumn("Societal_Challenge_Score", lit(null).cast("double"))
 
-    val out = Steps.aggregateEvaluationScores(scores, vp, pm, callTable)
+    val out = Steps.aggregateEvaluationScores(scores, vp)
     assert(out.count() === 14) // 2 projects × 7 score types, always
 
     val meth = out.filter(col("visitor_project_id") === 100 && col("name") === "Methodology").head()
