@@ -192,8 +192,10 @@ object Bench {
     // investigate the code.
     val runsDetail = detail(_.runsD.map(r => num(r.sec)).mkString("[", ",", "]"))
     val coldDetail = detail(r => if (r.cold.sec.isNaN) "null" else num(r.cold.sec))
-    val loadDetail = detail(r =>
-      s"[${num(r.loadBefore)},${num(r.runsD.lastOption.getOrElse(r.cold).load)}]")
+    val loadDetail = detail { r =>
+      val after = r.runsD.lastOption.getOrElse(r.cold).load
+      s"[${num(r.loadBefore)},${if (after.isNaN) "null" else num(after)}]"
+    }
     val loadRuns = detail(_.runsD.map(r => num(r.load)).mkString("[", ",", "]"))
     val stealDetail = detail(_.runsD.map(_.steal).mkString("[", ",", "]"))
     val stealColdDetail = detail(_.cold.steal.toString)

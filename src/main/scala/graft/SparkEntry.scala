@@ -1606,6 +1606,7 @@ object SparkEntry {
           col("p_brand").as("SpecificDisciplineName"),
           length(col("p_brand")).cast("int").as("DisciplineID"),
           (m(col("p_partkey"), 4) + 1).cast("int").as("round"))
+      graft.etl.Steps.checkSpecificDisciplineParents(spec)
       val (_, specMapping) = graft.etl.Steps.fillSpecificDiscipline(spec)
 
       val iso = t(s, dir, "nation")
@@ -2158,6 +2159,7 @@ object SparkEntry {
           col("p_brand").as("SpecificDisciplineName"),
           length(col("p_brand")).cast("int").as("DisciplineID"), // consistent per name
           (pmod(col("p_partkey"), lit(4)) + 1).cast("int").as("round"))
+      graft.etl.Steps.checkSpecificDisciplineParents(spec)
       val (table, _) = graft.etl.Steps.fillSpecificDiscipline(spec)
       table.select(col("id").cast("bigint").as("id"), col("name"), col("discipline_id"))
         .orderBy("id")
@@ -2249,7 +2251,7 @@ object SparkEntry {
           col("o_orderstatus"))
       val o = col("o")
       val outputTable = base.select(
-        o.as("id"),
+        o.as("id"), o.as("original_id"),
         lit("article").as("output_type"), lit("published").as("publication_status"),
         when(m(o, 11) === 0, lit("")).when(m(o, 11) === 1, lit(null))
           .otherwise(concat(lit("A\tB  "), o)).as("authors"),
@@ -2261,7 +2263,6 @@ object SparkEntry {
         concat(lit("pg"), m(o, 13)).as("pages"),
         col("o_orderstatus").as("conference"), lit(null).cast("string").as("degree"),
         col("round"))
-      val mapping = base.select(col("round"), o.as("original_id"), o.as("new_id"))
       val doiRows = base.filter(m(o, 3) === 0)
         .select(col("round"), o.as("original_id"),
           concat(lit("10."), m(o, 1000), lit("/x"), o).as("doi"), o.as("mo"))
@@ -2281,7 +2282,7 @@ object SparkEntry {
         when(m(mo, 6) < 3, concat(lit("MV"), m(mo, 9))).otherwise(lit(null)).as("volume"),
         when(m(mo, 13) === 0, lit(null)).otherwise(concat(lit("mpg"), m(mo, 13)))
           .as("pages"))
-      graft.etl.Steps.cleanOutputs(outputTable, mapping,
+      graft.etl.Steps.cleanOutputs(outputTable,
           doiRows.select(col("round"), col("original_id"), col("doi")), doiMetadata)
         .select(col("id"), col("authors"), col("year"), col("title"),
           col("publisher"), col("url"), col("volume"), col("pages"),
@@ -2295,7 +2296,7 @@ object SparkEntry {
     // double) and per-round age cells (empty → NULL) — the exact
     // resources.py:415-457 surface, oracled by replaying the split +
     // unnest + casts in SQL. The GUID-uniqueness invariant
-    // (DuplicateUserGuidError) runs inside explodeGuids.
+    // (DuplicateUserGuidError) runs first, as checkUniqueGuids.
     "etl_users_csv" -> ((s, dir) => {
       def m(c: Column, n: Int) = pmod(c, lit(n))
       val ck = col("c_custkey")
@@ -2311,6 +2312,7 @@ object SparkEntry {
               .as(s"SYNTH_${r}_AGE"))
         }
       val wide = t(s, dir, "customer").select(cols: _*)
+      graft.sources.UsersCsv.checkUniqueGuids(wide)
       graft.sources.UsersCsv.explodeGuids(wide)
         .orderBy("round", "user_id")
     }),

@@ -1,8 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** FillMissingCountryData (J12; /root/reference/synth/etl.py:674-769):
   * resolve a free-text town to a country code against a geonames-style city
@@ -19,10 +18,14 @@ import org.apache.spark.sql.DataFrame
   *     documented Islamabad-style mismatch, which is semantics, not a bug)
   *
   * Spark shape: the per-town linear scan over ~25k cities (find_cities,
-  * etl.py:689-696) becomes one explode of name variants + a broadcast-able
-  * equi-join; each fallback stage is another join on the derived key, and
-  * precedence is a coalesce over stage results. All stages are
-  * O(towns + cities), no driver loops — at 100 TB the towns side streams.
+  * etl.py:689-696) becomes one explode of name variants + an equi-join.
+  * Each town that needs a country explodes to its stage keys — the exact
+  * key and one key per delimiter, tagged by stage — and those join the
+  * city variants once. One `groupBy(town)` resolves every stage with
+  * per-stage conditional aggregates, precedence is a coalesce over the
+  * manual map and the stages in order, and the per-town result is
+  * broadcast-joined back on the town. O(towns + cities), no per-town
+  * loop — at 100 TB the towns side streams.
   */
 object Geo {
 
@@ -34,19 +37,6 @@ object Geo {
       col("countrycode"), col("population"))
       .select(lower(col("variant")).as("variant"), col("countrycode"), col("population"))
 
-  /** Resolve one town-key column against the variants; returns
-    * (key, resolved_code) applying the same-country/max-population rule.
-    */
-  private def resolveKey(keyed: DataFrame, variants: DataFrame): DataFrame = {
-    val cands = keyed.join(variants, keyed("key") === variants("variant"))
-    cands.groupBy(col("key"))
-      .agg(countDistinct(col("countrycode")).as("n_countries"),
-        max_by(col("countrycode"), struct(col("population"), col("countrycode"))).as("biggest"),
-        min(col("countrycode")).as("only"))
-      .select(col("key"),
-        when(col("n_countries") === 1, col("only")).otherwise(col("biggest")).as("code"))
-  }
-
   /** Fill home_institution_country where NULL/empty and a town is present
     * (etl.py:752-769). `manual` maps town (verbatim, pre-trim — matching the
     * reference's `town in manually_mapped`) → country code; `countryMapping`
@@ -56,64 +46,60 @@ object Geo {
       visitorProject: DataFrame, cities: DataFrame,
       manual: Map[String, String], countryMapping: DataFrame): DataFrame = {
 
-    val variants = cityVariants(cities)
-
-    val needs = visitorProject
+    val town = col("geo_town")
+    val towns = visitorProject
       .filter((col("home_institution_country").isNull ||
         col("home_institution_country") === 0) && col("home_institution_town").isNotNull &&
         col("home_institution_town") =!= "")
-      .select(col("id").as("vp_id"), col("home_institution_town").as("town"))
+      .select(col("home_institution_town").as("geo_town"))
 
-    val manualCol = typedLit(manual)
-    val withManual = needs
-      .withColumn("manual_code", element_at(manualCol, col("town")))
-
-    // stage 2: exact variant match
-    val exactKey = withManual.select(col("vp_id"),
-      lower(trim(col("town"))).as("key"))
-    val exact = resolveKey(
-      exactKey.select(col("key")).distinct(), variants)
-      .withColumnRenamed("code", "exact_code")
-
-    // stage 3: delimiter fallbacks, in precedence order
+    // stage 0: the exact key; stage i: the first segment of the split on
+    // delimiter i, when the town contains it (else no key)
     val delims = Seq(", ", " - ", ". ")
-    val fallbacks = delims.zipWithIndex.map { case (d, i) =>
-      val key = withManual
-        .filter(size(split(col("town"), java.util.regex.Pattern.quote(d))) > 1)
-        .select(lower(trim(element_at(split(col("town"), java.util.regex.Pattern.quote(d)), 1)))
-          .as("key")).distinct()
-      resolveKey(key, variants).withColumnRenamed("code", s"fb${i}_code")
+    def stageKey(stage: Int, key: Column) = struct(lit(stage).as("stage"), key.as("key"))
+    val stageKeys = stageKey(0, lower(trim(town))) +: delims.zipWithIndex.map { case (d, i) =>
+      val parts = split(town, java.util.regex.Pattern.quote(d))
+      stageKey(i + 1, when(size(parts) > 1, lower(trim(element_at(parts, 1)))))
     }
+    val keyed = towns
+      .select(town, explode(array(stageKeys: _*)).as("k"))
+      .select(town, col("k.stage").as("stage"), col("k.key").as("key"))
+      .filter(col("key").isNotNull)
 
-    val townKey = lower(trim(col("town")))
-    var resolved = withManual
-      .join(broadcast(exact), townKey === exact("key"), "left").drop("key")
-    delims.zipWithIndex.foreach { case (d, i) =>
-      val q = java.util.regex.Pattern.quote(d)
-      val fbKey = when(size(split(col("town"), q)) > 1,
-        lower(trim(element_at(split(col("town"), q), 1))))
-      resolved = resolved.join(broadcast(fallbacks(i)), fbKey === fallbacks(i)("key"), "left")
-        .drop("key")
+    // left: every town keeps its exact-key row, so a town resolved only by
+    // the manual map still reaches the coalesce
+    val variants = cityVariants(cities)
+    val candidates = keyed.join(variants, keyed("key") === variants("variant"), "left")
+
+    // per stage: candidates all in one country → that country, otherwise
+    // the max-population candidate's. One country ⇔ min = max over the
+    // non-null codes; with no code both are NULL and max_by decides, as a
+    // distinct-country count of 0 would.
+    val stages = 0 to delims.size
+    def inStage(s: Int, c: Column): Column = when(col("stage") === s, c)
+    val cc = col("countrycode")
+    val aggs = stages.flatMap { s =>
+      Seq(min(inStage(s, cc)).as(s"lo$s"), max(inStage(s, cc)).as(s"hi$s"),
+        max_by(inStage(s, cc), inStage(s, struct(col("population"), cc))).as(s"big$s"))
     }
-
+    val perStage = candidates.groupBy(town).agg(aggs.head, aggs.tail: _*)
     val code = coalesce(
-      col("manual_code"), col("exact_code"),
-      col("fb0_code"), col("fb1_code"), col("fb2_code"))
+      element_at(typedLit(manual), town) +:
+        stages.map(s => when(col(s"lo$s") === col(s"hi$s"), col(s"lo$s")).otherwise(col(s"big$s"))): _*)
 
-    val updates = resolved
-      .withColumn("code", code)
+    val updates = perStage
+      .select(town, code.as("code"))
       .join(broadcast(countryMapping.select(col("original_id").as("code"),
-        col("new_id").as("resolved_country"))), Seq("code"), "left")
-      .select(col("vp_id"), col("resolved_country"))
-      .filter(col("resolved_country").isNotNull)
+        col("new_id").as("resolved_country"))), Seq("code"))
+      .select(town, col("resolved_country"))
 
     visitorProject.join(broadcast(updates),
-        visitorProject("id") === updates("vp_id"), "left")
+        visitorProject("home_institution_town") === updates("geo_town"), "left")
       .withColumn("home_institution_country",
         coalesce(
           when(col("home_institution_country") === 0, lit(null)) // falsy-empty
             .otherwise(col("home_institution_country")),
           col("resolved_country")))
-      .drop("vp_id", "resolved_country")
+      .drop("geo_town", "resolved_country")
   }
 }

@@ -4,6 +4,7 @@ import graft.operators.Checkpoints._
 import graft.sources.UsersCsv
 import java.util.concurrent.{ExecutionException, Executors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Try
 
 /** The `synth rebuild` entrypoint (SURVEY §3.1;
   * /root/reference/synth/cli.py:66-74 → etl.py:25-58): run the 16-step
@@ -55,6 +56,14 @@ object Rebuild {
     * checkpoint unless a checkpoint dir is set), not persisted: a cache
     * entry outlives the rebuild, while the checkpoint's blocks are freed
     * once the returned frames are unreachable.
+    *
+    * The two input checks run beside that cut, each on its own thread of
+    * a pool created in this call (so both inherit the caller's job group,
+    * as in [[writeAll]]): [[Steps.checkSpecificDisciplineParents]] and
+    * [[graft.sources.UsersCsv.checkUniqueGuids]]. All three are waited
+    * for. A check failure wins over a failure of the cut — the parent
+    * check's first, then the GUID check's — so a bad input fails by its
+    * named error.
     */
   def run(inputs: Inputs): Map[String, DataFrame] = {
     import inputs._
@@ -65,18 +74,24 @@ object Rebuild {
     val (call, _)              = Steps.fillCall(callsU)
     val (country, countryMap)  = Steps.fillCountry(countryIso)
     val discipline             = Steps.fillDiscipline(disciplines4)
-    val (specific, specMap)    = Steps.fillSpecificDiscipline(Steps.unionRounds(specificDisciplines))
+    val specU                  = Steps.unionRounds(specificDisciplines)
+    val (specific, specMap)    = Steps.fillSpecificDiscipline(specU)
 
     // fact steps
-    val (output, outputMap)    = Steps.fillOutput(Steps.unionRounds(outputs),
+    val output                 = Steps.fillOutput(Steps.unionRounds(outputs),
       outputTypes4, publicationStatuses4)
-    val outputClean            = Steps.cleanOutputs(output, outputMap, outputDois, doiMetadata)
+    val outputClean            = Steps.cleanOutputs(output, outputDois, doiMetadata)
 
-    val guids                  = UsersCsv.explodeGuids(usersCsv)
-    val (vpPlan, _)            = Steps.fillVisitorProject(
-      Steps.unionRounds(userProjects), Steps.unionRounds(users), guids,
-      call, specMap, countryMap, institutionAliases)
-    val visitorProject         = vpPlan.cutLineage() // the one materialization
+    val (cut, checkFailures)   = concurrently(Seq(
+      () => Steps.checkSpecificDisciplineParents(specU),
+      () => UsersCsv.checkUniqueGuids(usersCsv))) {
+      val (vpPlan, _) = Steps.fillVisitorProject(
+        Steps.unionRounds(userProjects), Steps.unionRounds(users),
+        UsersCsv.explodeGuids(usersCsv), call, specMap, countryMap, institutionAliases)
+      vpPlan.cutLineage() // the one materialization
+    }
+    checkFailures.flatten.headOption.foreach(e => throw e)
+    val visitorProject         = cut.get
     val projMap                = Steps.projectMapping(visitorProject)
 
     // xlsx-resource steps
@@ -103,34 +118,46 @@ object Rebuild {
       "evaluation_score" -> evaluationScore)
   }
 
+  /** Runs each of `tasks` on its own thread of a pool created inside the
+    * call — so the threads inherit the caller's Spark local properties,
+    * and a `setJobGroup` id attributes (and cancels) their jobs — while
+    * `meanwhile` runs on the caller's thread. Waits for all of it, then
+    * returns `meanwhile`'s outcome and each task's failure, in task order,
+    * as it was raised.
+    */
+  private def concurrently[A](tasks: Seq[() => Unit])(meanwhile: => A)
+      : (Try[A], Seq[Option[Throwable]]) = {
+    val pool = Executors.newFixedThreadPool(tasks.size)
+    try {
+      val submitted = tasks.map(t => pool.submit(new Runnable { def run(): Unit = t() }))
+      val result = Try(meanwhile)
+      (result, submitted.map { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      })
+    } finally pool.shutdown()
+  }
+
   /** Write every table (ClearAnalysisDB/CreateAnalysisDB analog:
     * overwrite), each through [[writeTable]].
     *
-    * The tables are written concurrently, one pool thread per table: most
-    * are dimension-sized, and one at a time they left most cores idle. The
-    * pool is created inside the call, so its threads inherit the caller's
-    * Spark local properties — a `setJobGroup` id attributes (and cancels)
-    * every write job. Every write is waited for; then the first failure,
-    * in table order, is rethrown as it was raised, with a suppressed
-    * exception naming its table. A failed call may leave other tables
-    * already overwritten, as a sequential write could.
+    * The tables are written [[concurrently]], one pool thread per table:
+    * most are dimension-sized, and one at a time they left most cores
+    * idle. Every write is waited for; then the first failure, in table
+    * order, is rethrown as it was raised, with a suppressed exception
+    * naming its table. A failed call may leave other tables already
+    * overwritten, as a sequential write could.
     */
   def writeAll(tables: Map[String, DataFrame], outDir: String): Unit =
     if (tables.nonEmpty) {
-      val pool = Executors.newFixedThreadPool(tables.size)
-      try {
-        val writes = tables.toSeq.map { case (name, df) =>
-          name -> pool.submit(new Runnable { def run(): Unit = writeTable(name, df, outDir) })
-        }
-        val failures = writes.flatMap { case (name, w) =>
-          try { w.get(); None }
-          catch { case e: ExecutionException => Some(name -> e.getCause) }
-        }
-        failures.headOption.foreach { case (name, e) =>
-          e.addSuppressed(new RuntimeException(s"writing table '$name' to $outDir failed"))
-          throw e
-        }
-      } finally pool.shutdown()
+      val writes = tables.toSeq
+      val (_, failures) = concurrently(writes.map { case (name, df) =>
+        () => writeTable(name, df, outDir)
+      })(())
+      writes.map(_._1).zip(failures).collectFirst { case (name, Some(e)) =>
+        e.addSuppressed(new RuntimeException(s"writing table '$name' to $outDir failed"))
+        throw e
+      }
     }
 
   /** One table's plain-parquet write: overwrite, and tables carrying

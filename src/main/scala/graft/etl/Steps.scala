@@ -76,21 +76,27 @@ object Steps {
     synth4Disciplines
       .select(col("DisciplineID").as("id"), col("DisciplineName").as("name"))
 
-  /** FillSpecificDiscipline (etl.py:263-321, A4): dedup by name with
-    * first-seen-wins scanning rounds 4→1 (etl.py:295), ids in scan order;
-    * duplicate names whose parent disciplines conflict fail the job
-    * (SpecificDisciplineParentMismatch, errors.py:3-19).
-    * Returns (table, mapping (round, SpecificDisciplineID) → new id).
+  /** FillSpecificDiscipline's invariant (etl.py:309-312, errors.py:3-19):
+    * duplicate names whose parent disciplines conflict fail the job with
+    * [[SpecificDisciplineParentMismatch]]. A separate eager check, so a
+    * caller can run it beside other work ([[Rebuild.run]] does).
     */
-  def fillSpecificDiscipline(spec: DataFrame): (DataFrame, DataFrame) = {
-    // invariant first: conflicting parents for a shared name → job failure
+  def checkSpecificDisciplineParents(spec: DataFrame): Unit = {
     val conflicts = spec.groupBy(col("SpecificDisciplineName"))
       .agg(countDistinct(col("DisciplineID")).as("n_parents"))
       .filter(col("n_parents") > 1)
       .select(col("SpecificDisciplineName"))
       .collect().map(_.getString(0)).toSeq
     if (conflicts.nonEmpty) throw SpecificDisciplineParentMismatch(conflicts)
+  }
 
+  /** FillSpecificDiscipline (etl.py:263-321, A4): dedup by name with
+    * first-seen-wins scanning rounds 4→1 (etl.py:295), ids in scan order.
+    * Lazy: the parent invariant is [[checkSpecificDisciplineParents]],
+    * which callers run themselves.
+    * Returns (table, mapping (round, SpecificDisciplineID) → new id).
+    */
+  def fillSpecificDiscipline(spec: DataFrame): (DataFrame, DataFrame) = {
     val wScan = Window.orderBy(col("round").desc, col("SpecificDisciplineID"))
     val scanned = spec.withColumn("scan_order", row_number().over(wScan))
     val canonical = scanned
@@ -110,30 +116,34 @@ object Steps {
     * order; we document (round, pk) as the deterministic choice (SURVEY
     * §7.4.1). Output type / publication status denormalized via broadcast
     * left joins (missing key → null, matching dict.get default).
+    *
+    * The table carries the source `Output_ID` as `original_id` beside the
+    * new id: it is the output mapping (round, original_id) → id, in the
+    * same frame, so [[cleanOutputs]] keys the DOI cache on it without a
+    * second copy of the id window. `cleanOutputs` drops it.
     */
   def fillOutput(outputs: DataFrame, outputTypes: DataFrame,
-                 publicationStatuses: DataFrame): (DataFrame, DataFrame) = {
+                 publicationStatuses: DataFrame): DataFrame = {
     val w = Window.orderBy(col("round"), col("Output_ID"))
-    val t = outputs
+    outputs
       .join(broadcast(outputTypes), Seq("OutputType_ID"), "left")
       .join(broadcast(publicationStatuses), Seq("PublicationStatus_ID"), "left")
       .withColumn("id", row_number().over(w))
-    val table = t.select(
-      col("id"),
-      col("OutputType").as("output_type"),
-      col("PublicationStatus").as("publication_status"),
-      col("Authors").as("authors"),
-      col("Year").cast("int").as("year"), // F5 (etl.py:364)
-      col("Title").as("title"),
-      col("Publisher").as("publisher"),
-      col("URL").as("url"),
-      col("Volume").as("volume"),
-      col("Pages").as("pages"),
-      col("Conference").as("conference"),
-      col("Degree").as("degree"),
-      col("round"))
-    val mapping = t.select(col("round"), col("Output_ID").as("original_id"), col("id").as("new_id"))
-    (table, mapping)
+      .select(
+        col("id"),
+        col("Output_ID").as("original_id"),
+        col("OutputType").as("output_type"),
+        col("PublicationStatus").as("publication_status"),
+        col("Authors").as("authors"),
+        col("Year").cast("int").as("year"), // F5 (etl.py:364)
+        col("Title").as("title"),
+        col("Publisher").as("publisher"),
+        col("URL").as("url"),
+        col("Volume").as("volume"),
+        col("Pages").as("pages"),
+        col("Conference").as("conference"),
+        col("Degree").as("degree"),
+        col("round"))
   }
 
   /** CleanOutputs (etl.py:375-432): clean authors/title strings in place
@@ -147,9 +157,12 @@ object Steps {
     *  - title ← clean(titles[0]) if titles non-empty else existing
     *  - year ← int(created[:4]); publisher/url overwritten
     *  - volume/pages only overwritten when present in metadata
+    *
+    * `outputTable` is [[fillOutput]]'s: the DOI cache joins on its own
+    * (round, original_id), which the result drops.
     */
-  def cleanOutputs(outputTable: DataFrame, outputMapping: DataFrame,
-                   outputDois: DataFrame, doiMetadata: DataFrame): DataFrame = {
+  def cleanOutputs(outputTable: DataFrame, outputDois: DataFrame,
+                   doiMetadata: DataFrame): DataFrame = {
     def cleanInPlace(c: Column): Column =
       when(c.isNotNull && c =!= "", Cleaning.cleanString(c)).otherwise(c)
 
@@ -157,12 +170,10 @@ object Steps {
       .withColumn("authors", cleanInPlace(col("authors")))
       .withColumn("title", cleanInPlace(col("title")))
 
-    val doiByNewId = outputMapping
-      .join(outputDois, Seq("round", "original_id"))
-      .select(col("new_id"), col("doi"))
-    val meta = doiByNewId.join(doiMetadata, Seq("doi"))
+    val meta = outputDois.join(doiMetadata, Seq("doi"))
       .select(
-        col("new_id"),
+        col("round"),
+        col("original_id"),
         col("doi"),
         array_join(
           transform(
@@ -183,7 +194,7 @@ object Steps {
     // row per identified output), not dimension-sized — a forced broadcast
     // is a driver/executor OOM at 100× scale. AQE picks broadcast when the
     // side actually measures small.
-    cleaned.join(meta, cleaned("id") === meta("new_id"), "left")
+    cleaned.join(meta, Seq("round", "original_id"), "left")
       .select(
         cleaned("id"),
         cleaned("output_type"), cleaned("publication_status"),
@@ -195,7 +206,7 @@ object Steps {
         when(col("m_found"), col("m_url")).otherwise(cleaned("url")).as("url"),
         coalesce(col("m_volume"), cleaned("volume")).as("volume"), // F10
         coalesce(col("m_pages"), cleaned("pages")).as("pages"),
-        cleaned("conference"), cleaned("degree"), cleaned("round"),
+        cleaned("conference"), cleaned("degree"), col("round"),
         col("doi"))
   }
 
@@ -422,7 +433,12 @@ object Steps {
     *
     * Mode determinism: Python's statistics.mode returns the first mode in
     * iteration order of an unordered scan; we use (max count, min value) —
-    * deterministic on any cluster (SURVEY §7.4.2).
+    * deterministic on any cluster (SURVEY §7.4.2). That is
+    * `mode(value, deterministic = true)`, which returns the lowest of the
+    * most frequent values, so all five statistics come from one
+    * aggregation. A value is NULL when its round has no total (Societal
+    * Challenge before round 4): such a point counts, while mean, mode and
+    * sum stay NULL.
     */
   def aggregateEvaluationScores(scores: DataFrame, visitorProject: DataFrame): DataFrame = {
 
@@ -469,17 +485,8 @@ object Steps {
         count(col("point")).as("cnt"),
         avg(col("value")).as("mean0"),
         sum(col("value")).as("sum0"),
-        stddev_samp(col("value")).as("sd0"))
-
-    // deterministic mode: highest count, lowest value tiebreak
-    val valueCounts = normalized
-      .groupBy(col("visitor_project_id"), col("score_name"), col("value"))
-      .agg(count(lit(1)).as("c"))
-    val wMode = Window.partitionBy(col("visitor_project_id"), col("score_name"))
-      .orderBy(col("c").desc, col("value"))
-    val modes = valueCounts
-      .withColumn("rn", row_number().over(wMode)).filter(col("rn") === 1)
-      .select(col("visitor_project_id"), col("score_name"), col("value").as("mode0"))
+        stddev_samp(col("value")).as("sd0"),
+        mode(col("value"), deterministic = true).as("mode0"))
 
     // a row for EVERY (project, score type) — the reference emits all 7 per
     // project regardless of data presence (etl.py:801-821)
@@ -488,7 +495,6 @@ object Steps {
 
     scaffold
       .join(aggregated, Seq("visitor_project_id", "score_name"), "left")
-      .join(modes, Seq("visitor_project_id", "score_name"), "left")
       .select(
         col("visitor_project_id"),
         col("score_name").as("name"),

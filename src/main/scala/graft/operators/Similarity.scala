@@ -278,6 +278,20 @@ object Similarity {
       .parquet(path + "/vectors")
   }
 
+  /** The centroids of an index written here, in cell order. Searches take
+    * a centroid's array index as its cell id, so the stored cells must be
+    * exactly 0..n-1: a table with a gap fails here rather than assigning
+    * queries to the wrong cells.
+    */
+  private def readCentroids(spark: SparkSession, path: String): Array[Array[Double]] = {
+    val rows = spark.read.parquet(path + "/centroids")
+      .select(col("cell"), col("centroid")).collect().sortBy(_.getInt(0))
+    val cells = rows.map(_.getInt(0)).toSeq
+    require(cells == rows.indices,
+      s"centroid cells in $path/centroids must be 0..${rows.length - 1}, got ${cells.mkString(",")}")
+    rows.map(_.getSeq[Double](1).toArray)
+  }
+
   /** IVF search over a [[writeIvfPartitioned]] index with the partition
     * prune applied: the query batch's probed cells become scan-time
     * literals (one small job over the bounded query frame), so the vectors
@@ -289,9 +303,7 @@ object Similarity {
   def ivfTopKFromPartitioned(spark: SparkSession, path: String,
       queries: DataFrame, k: Int, nProbe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val centers = spark.read.parquet(path + "/centroids")
-      .select(col("cell"), col("centroid")).collect().sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
+    val centers = readCentroids(spark, path)
     val probes = assignToCells(queries, centers, idCol, vecCol,
       "query_id", "qvec", probes = nProbe)
     val probedCells = probes.select(col("cell")).distinct()
@@ -467,9 +479,7 @@ object Similarity {
       threshold: Double, idCol: String = "vec_id", vecCol: String = "embedding",
       assignProbes: Int = 1): DataFrame = {
     val spark = corpus.sparkSession
-    val centers = spark.read.parquet(path + "/centroids")
-      .select(col("cell"), col("centroid")).collect()
-      .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
+    val centers = readCentroids(spark, path)
     semanticSearchPairs(centers, corpus, threshold, idCol, vecCol, assignProbes)
   }
 
@@ -851,9 +861,7 @@ object Similarity {
       seed: Long = 42L, maxTrainSamples: Int = 100000): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val centers = spark.read.parquet(ivfPath + "/centroids")
-      .select(col("cell"), col("centroid")).collect()
-      .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
+    val centers = readCentroids(spark, ivfPath)
     val books = fitPqCodebooksResidual(corpus, centers, m, ksub, seed,
       maxTrainSamples, vecCol)
     val n = corpus.count()
@@ -896,9 +904,7 @@ object Similarity {
       k: Int, nProbe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession
-    val centers = spark.read.parquet(path + "/centroids")
-      .select(col("cell"), col("centroid")).collect()
-      .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
+    val centers = readCentroids(spark, path)
     ivfSearch(centers, corpus, queries, k, nProbe, idCol, vecCol)
   }
 
@@ -988,9 +994,7 @@ object Similarity {
       nProbe: Int = 4, refine: Int = 32,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession
-    val centers = spark.read.parquet(ivfPath + "/centroids")
-      .select(col("cell"), col("centroid")).collect()
-      .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
+    val centers = readCentroids(spark, ivfPath)
     val bdf = spark.read.parquet(pqPath + "/codebooks")
     // the codebooks table self-describes its encoding space (legacy
     // tables without the column are direct-coded)
@@ -1149,8 +1153,7 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     import graft.functions.VectorOps.dotProduct
     import spark.implicits._
-    val centerRows = spark.read.parquet(path + "/centroids")
-      .select(col("cell"), col("centroid")).collect().sortBy(_.getInt(0))
+    val centers = readCentroids(spark, path)
     val bdf = spark.read.parquet(path + "/codebooks")
     // self-described encoding space (legacy tables = direct)
     val residual = bdf.columns.contains("residual") &&
@@ -1163,8 +1166,6 @@ object Similarity {
       }.toArray
     val m = books.length
     val subDim = books(0)(0).length
-    val centers = centerRows
-      .map(r => r.getSeq[Double](1).toArray)
 
     def subv(v: org.apache.spark.sql.Column, j: Int) = slice(v, j * subDim + 1, subDim)
     val tableCols = (0 until m).map { j =>
@@ -1181,11 +1182,10 @@ object Similarity {
       .filter(col("cell").isin(probedCells: _*))
     // residual-coded packages add back the per-(query, cell) offset
     // q̂·ĉ(cell) the decomposition factors out; direct packages need none
-    val centersArr = centerRows.map(_.getSeq[Double](1).toArray)
     val offset =
       if (residual)
         dotProduct(col("qvec"),
-          element_at(normalizedCentersLit(centersArr), col("cell") + 1))
+          element_at(normalizedCentersLit(centers), col("cell") + 1))
       else lit(0.0)
     val adc = (0 until m)
       .map(j => element_at(col(s"t_$j"), col(s"code_$j")))

@@ -21,7 +21,10 @@ object UsersCsv {
       .schema(graft.etl.Schemas.usersCsv)
       .csv(path)
 
-  /** GUID uniqueness invariant (DuplicateUserGUIDError, resources.py:420-421). */
+  /** GUID uniqueness invariant (DuplicateUserGUIDError, resources.py:420-421).
+    * A separate eager check, so a caller can run it beside other work
+    * ([[graft.etl.Rebuild.run]] does).
+    */
   def checkUniqueGuids(users: DataFrame): Unit = {
     val dups = users.groupBy(col("GUID")).agg(count(lit(1)).as("n"))
       .filter(col("n") > 1).select(col("GUID"))
@@ -29,9 +32,11 @@ object UsersCsv {
     if (dups.nonEmpty) throw DuplicateUserGuidError(dups)
   }
 
-  /** Explode to the tall lookup table: one row per (round, user_id). */
+  /** Explode to the tall lookup table: one row per (round, user_id).
+    * Lazy: GUID uniqueness is [[checkUniqueGuids]], which callers run
+    * themselves.
+    */
   def explodeGuids(users: DataFrame): DataFrame = {
-    checkUniqueGuids(users)
     val perRound = (1 to 4).map { r =>
       users
         .filter(col(s"SYNTH_${r}_ID").isNotNull && col(s"SYNTH_${r}_ID") =!= "")

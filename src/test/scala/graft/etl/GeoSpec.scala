@@ -13,7 +13,9 @@ class GeoSpec extends SparkSpec {
     (4, "Moscow", Seq.empty[String], "US", 25000L),
     (5, "Paris", Seq("paname"), "FR", 2100000L),
     (6, "Springfield", Seq.empty[String], "US", 150000L),
-    (7, "Springfield", Seq.empty[String], "US", 60000L))
+    (7, "Springfield", Seq.empty[String], "US", 60000L),
+    (8, "Moscow - Idaho", Seq.empty[String], "US", 20000L),
+    (9, "Gare du Nord", Seq("paris - nord"), "CA", 1000L))
     .toDF("geonameid", "name", "alternatenames", "countrycode", "population")
 
   private val countryMapping = Seq(("GB", 1), ("CA", 2), ("RU", 3), ("US", 4), ("FR", 5), ("DE", 6))
@@ -23,7 +25,7 @@ class GeoSpec extends SparkSpec {
     rows.toSeq.toDF("id", "home_institution_country", "home_institution_town")
 
   private def resolve(rows: (Int, Option[Int], String)*) =
-    Geo.fillMissingCountry(vp(rows: _*), cities, Map("Atlantis" -> "DE"), countryMapping)
+    Geo.fillMissingCountry(vp(rows: _*), cities, Map("Atlantis" -> "DE", "Springfield, ZZ" -> "ZZ"), countryMapping)
       .select("id", "home_institution_country")
       .collect().map(r => r.getInt(0) -> Option(r.get(1)).map(_.asInstanceOf[Int])).toMap
 
@@ -56,5 +58,31 @@ class GeoSpec extends SparkSpec {
     val r = resolve((1, Some(2), "Paris"), (2, None, "Nowhereville"))
     assert(r(1) === Some(2)) // pre-existing value kept
     assert(r(2) === None)
+  }
+
+  test("an exact match beats a delimiter match for the same town") {
+    val r = resolve((1, None, "Moscow - Idaho"))
+    assert(r(1) === Some(4)) // exact US, not the " - " fallback's RU
+  }
+
+  test("the first delimiter with candidates beats a later one") {
+    val r = resolve((1, None, "Paris - Nord, Gare"))
+    assert(r(1) === Some(2)) // ", " → "paris - nord" (CA), not " - " → "paris" (FR)
+  }
+
+  test("a manual code missing from the country table leaves NULL") {
+    val r = resolve((1, None, "Springfield, ZZ"))
+    assert(r(1) === None) // the manual "ZZ" wins over the ", " fallback's US
+  }
+
+  test("a 0 country is filled from a resolvable town, else becomes NULL") {
+    val r = resolve((1, Some(0), "Paris"), (2, Some(0), "Nowhereville"))
+    assert(r(1) === Some(5))
+    assert(r(2) === None)
+  }
+
+  test("rows sharing a town all resolve; a filled one keeps its country") {
+    val r = resolve((1, None, "London"), (2, None, "London"), (3, Some(6), "London"))
+    assert(r === Map(1 -> Some(1), 2 -> Some(1), 3 -> Some(6)))
   }
 }

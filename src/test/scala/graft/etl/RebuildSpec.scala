@@ -4,8 +4,10 @@ import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Window => WindowNode}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
@@ -16,7 +18,7 @@ import scala.jdk.CollectionConverters._
   * universe (FIXTURES.md shapes), checking cross-step wiring — mappings
   * consumed downstream, geo enrichment applied, dump emitted.
   */
-class RebuildSpec extends SparkSpec {
+class RebuildSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
@@ -243,13 +245,101 @@ class RebuildSpec extends SparkSpec {
           .collect { case h: HadoopFsRelation => h.location.rootPaths.map(_.toString) }.flatten
         assert(!scanned.exists(_.contains(dir)), s"$t re-reads the project sources:\n$plan")
         // the project id window (row_number over round, original_project_id);
-        // the country ids' window and evaluation_score's mode window stay
+        // the country ids' window stays
         assert(plan.collectFirst {
           case w: WindowNode if w.orderSpec.exists(_.references.exists(_.name == "original_project_id")) => w
         }.isEmpty, s"$t re-runs the project id window:\n$plan")
         assert(plan.collectFirst { case r: LogicalRDD => r }.isDefined,
           s"$t does not read the materialized frame:\n$plan")
       }
+  }
+
+  /** A table's final adaptive plan over the fixture, which exists once
+    * the table has run. The fixture gets one cached DOI, so that the
+    * output's DOI join is not pruned as a join with an empty relation.
+    */
+  private lazy val fixtureTables = {
+    val in = fixtureInputs
+    Rebuild.run(in.copy(
+      outputDois = Seq((1, 1, "10.1234/x")).toDF("round", "original_id", "doi"),
+      doiMetadata = in.doiMetadata.union(Seq("10.1234/x").toDF("doi")
+        .select(in.doiMetadata.columns.map {
+          case "doi" => col("doi")
+          case c => lit(null).cast(in.doiMetadata.schema(c).dataType).as(c)
+        }: _*))))
+  }
+  private def finalPlan(t: String): SparkPlan = {
+    fixtureTables(t).collect()
+    fixtureTables(t).queryExecution.executedPlan
+  }
+
+  test("output's plan runs the output id window once") {
+    val plan = finalPlan("output")
+    assert(collect(plan) { case w: WindowExec => w }.size === 1, plan)
+  }
+
+  test("visitor_project's plan reads the materialized frame at most three times") {
+    val plan = finalPlan("visitor_project")
+    assert(collect(plan) { case r: RDDScanExec => r }.size <= 3, plan)
+  }
+
+  test("evaluation_score's plan has no window") {
+    val plan = finalPlan("evaluation_score")
+    assert(collect(plan) { case w: WindowExec => w }.isEmpty, plan)
+  }
+
+  test("a conflicting specific-discipline parent fails the rebuild by its named error") {
+    val in = fixtureInputs
+    val conflicting = in.copy(specificDisciplines = Seq(
+      Seq((1, "Ferns", 10)).toDF("SpecificDisciplineID", "SpecificDisciplineName", "DisciplineID"),
+      Seq((1, "Ferns", 99)).toDF("SpecificDisciplineID", "SpecificDisciplineName", "DisciplineID")))
+    val e = intercept[SpecificDisciplineParentMismatch](Rebuild.run(conflicting))
+    assert(e.names === Seq("Ferns"))
+    // with both inputs bad, the parent check's error wins
+    val both = conflicting.copy(usersCsv = in.usersCsv.union(in.usersCsv))
+    intercept[SpecificDisciplineParentMismatch](Rebuild.run(both))
+  }
+
+  test("a duplicate users.csv GUID fails the rebuild by its named error") {
+    val in = fixtureInputs
+    val dup = in.copy(usersCsv = in.usersCsv.union(in.usersCsv.filter(col("GUID") === 501L)))
+    val e = intercept[DuplicateUserGuidError](Rebuild.run(dup))
+    assert(e.guids === Seq(501L))
+  }
+
+  /** The job group of every job `body` starts, in start order. */
+  private def jobGroupsDuring(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(js.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      // marker jobs before and after: the bus delivers in order, so the
+      // jobs between them are exactly body's
+      sc.setJobGroup("before", "marker")
+      spark.range(1).count()
+      body
+      sc.setJobGroup("after", "marker")
+      spark.range(1).count()
+      eventually(timeout(30.seconds)) { assert(groups.contains("after")) }
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    groups.asScala.toSeq.dropWhile(_ != "before").dropWhile(_ == "before")
+      .takeWhile(_ != "after")
+  }
+
+  test("rebuild runs its input checks and the cut under the caller's job group") {
+    val jobs = jobGroupsDuring {
+      spark.sparkContext.setJobGroup("rebuild-run", "Rebuild.run")
+      Rebuild.run(fixtureInputs)
+    }
+    // the two checks and the visitor-project cut, at least
+    assert(jobs.size >= 3 && jobs.forall(_ == "rebuild-run"), jobs)
   }
 
   test("writeAll waits for every table, then rethrows the first failure naming its table") {
@@ -278,30 +368,15 @@ class RebuildSpec extends SparkSpec {
 
   test("writeAll runs every write job under the caller's job group") {
     val dir = java.nio.file.Files.createTempDirectory("rebuild_group").toString
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(js.properties.getProperty("spark.jobGroup.id")))
-    }
     // several calls under different groups: a writer thread reused across
     // calls would carry an earlier caller's group
     val callers = Seq("writes-a", "writes-b", "writes-c")
-    sc.addSparkListener(listener)
-    try {
+    val writes = jobGroupsDuring {
       callers.foreach { g =>
-        sc.setJobGroup(g, "writeAll")
+        spark.sparkContext.setJobGroup(g, "writeAll")
         Rebuild.writeAll((1 to 8).map(i => s"$g-t$i" -> Seq((i, i)).toDF("id", "round")).toMap, dir)
       }
-      // the bus delivers in order: once the marker job is seen, every write job was
-      sc.setJobGroup("marker", "marker")
-      spark.range(1).count()
-      eventually(timeout(30.seconds)) { assert(groups.contains("marker")) }
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
-    val writes = groups.asScala.toSeq.takeWhile(_ != "marker")
     callers.foreach(g => assert(writes.count(_ == g) >= 8, writes))
     assert(writes === writes.sortBy(callers.indexOf(_)), writes)
   }

@@ -57,7 +57,7 @@ class StepsSpec extends SparkSpec {
     val spec = Steps.unionRounds(Seq(
       Seq((1, "Botany", 10)).toDF("SpecificDisciplineID", "SpecificDisciplineName", "DisciplineID"),
       Seq((5, "Botany", 99)).toDF("SpecificDisciplineID", "SpecificDisciplineName", "DisciplineID")))
-    val e = intercept[SpecificDisciplineParentMismatch](Steps.fillSpecificDiscipline(spec))
+    val e = intercept[SpecificDisciplineParentMismatch](Steps.checkSpecificDisciplineParents(spec))
     assert(e.names === Seq("Botany"))
   }
 
@@ -79,7 +79,7 @@ class StepsSpec extends SparkSpec {
   test("fillOutput: denorm joins with dict.get(None) semantics, year int cast, ids over (round, pk) (etl.py:324-372)") {
     val types = Seq((1, "Paper"), (2, "Talk")).toDF("OutputType_ID", "OutputType")
     val statuses = Seq((1, "Published"), (2, "In prep")).toDF("PublicationStatus_ID", "PublicationStatus")
-    val (table, mapping) = Steps.fillOutput(outputsFixture, types, statuses)
+    val table = Steps.fillOutput(outputsFixture, types, statuses)
     val t = table.orderBy("id").collect()
     assert(t.length === 3)
     val first = table.filter(col("id") === 1).head()
@@ -89,14 +89,14 @@ class StepsSpec extends SparkSpec {
     // round-2 output has OutputType_ID=9 → unmapped → null (dict.get default)
     val third = table.filter(col("id") === 3).head()
     assert(third.getAs[String]("output_type") === null)
-    assert(mapping.filter(col("round") === 2 && col("original_id") === 11)
-      .head().getAs[Int]("new_id") === 3)
+    assert(table.filter(col("round") === 2 && col("original_id") === 11)
+      .head().getAs[Int]("id") === 3)
   }
 
   test("cleanOutputs: string cleaning preserves '' (filter semantics), DOI metadata enrichment F7-F10 (etl.py:375-432)") {
     val types = Seq((1, "Paper")).toDF("OutputType_ID", "OutputType")
     val statuses = Seq((1, "Published")).toDF("PublicationStatus_ID", "PublicationStatus")
-    val (table, mapping) = Steps.fillOutput(outputsFixture, types, statuses)
+    val table = Steps.fillOutput(outputsFixture, types, statuses)
     val dois = Seq((1, 11, "10.1234/X")).toDF("round", "original_id", "doi")
     val meta = Seq(
       ("10.1234/X",
@@ -106,7 +106,8 @@ class StepsSpec extends SparkSpec {
       .withColumn("authors", transform(col("authors_raw"),
         a => struct(a.getField("_1").as("given"), a.getField("_2").as("family"))))
       .drop("authors_raw")
-    val cleaned = Steps.cleanOutputs(table, mapping, dois, meta)
+    val cleaned = Steps.cleanOutputs(table, dois, meta)
+    assert(!cleaned.columns.contains("original_id"))
 
     val enriched = cleaned.filter(col("id") === 1).head()
     assert(enriched.getAs[String]("authors") === "Lovelace Ada") // both-parts filter (etl.py:395-397)
@@ -176,5 +177,33 @@ class StepsSpec extends SparkSpec {
     val soc = out.filter(col("visitor_project_id") === 100 && col("name") === "Societal Challenge").head()
     assert(soc.getAs[Long]("count") === 0)           // scaffolded row, no data
     assert(soc.getAs[Any]("mean") === null)
+  }
+
+  test("aggregateEvaluationScores: a mode tie returns the lower value; a score without a round total counts but has no mean, mode or sum") {
+    val vp = Seq((100, 1, 77)).toDF("id", "round", "original_project_id")
+    // methodology /30: 30, 30, 15, 15, 6 → 1.0 and 0.5 tie at two each;
+    // societal challenge has no round-1 total (etl.py:798)
+    val scores = Steps.unionRounds(Seq(
+      Seq[(Int, Option[Double], Option[Double])](
+          (77, Some(30.0), Some(3.0)), (77, Some(30.0), None), (77, Some(15.0), None),
+          (77, Some(15.0), None), (77, Some(6.0), None))
+        .toDF("UserProject_ID", "Methodology_Score", "Societal_Challenge_Score")))
+      .withColumn("Research_Excellence_Score", lit(null).cast("double"))
+      .withColumn("Support_Stmt_Score", lit(null).cast("double"))
+      .withColumn("Justification_Score", lit(null).cast("double"))
+      .withColumn("Expected_Gains_Score", lit(null).cast("double"))
+      .withColumn("Scientific_Merit_Score", lit(null).cast("double"))
+
+    val out = Steps.aggregateEvaluationScores(scores, vp)
+    val meth = out.filter(col("name") === "Methodology").head()
+    assert(meth.getAs[Long]("count") === 5)
+    assert(meth.getAs[Double]("mode") === 0.5) // lower of the two most frequent
+
+    val soc = out.filter(col("name") === "Societal Challenge").head()
+    assert(soc.getAs[Long]("count") === 1)
+    assert(soc.getAs[Any]("mean") === null)
+    assert(soc.getAs[Any]("mode") === null)
+    assert(soc.getAs[Any]("sum") === null)
+    assert(soc.getAs[Any]("std_dev") === null)
   }
 }

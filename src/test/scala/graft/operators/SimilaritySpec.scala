@@ -215,6 +215,31 @@ class SimilaritySpec extends SparkSpec {
     assert(a === b, "pruned IVF-PQ search diverged from the two-index search")
   }
 
+  test("partitioned loaders refuse a centroid table whose cells have a gap") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfgap").toFile
+    dir.deleteOnExit()
+    val ivf = dir.getAbsolutePath + "/ivf"
+    val ivfPq = dir.getAbsolutePath + "/ivfpq"
+    Similarity.writeIvfPartitioned(vecs, ivf, nCells = 3)
+    Similarity.writeIvfPqPartitioned(vecs, ivfPq, nCells = 3, m = 2, ksub = 2)
+    // renumber cells 0,1,2 → 0,2,3
+    Seq(ivf, ivfPq).foreach { p =>
+      val c = spark.read.parquet(p + "/centroids")
+        .withColumn("cell", when(col("cell") > 0, col("cell") + 1).otherwise(col("cell")))
+        .collect()
+      spark.createDataFrame(java.util.Arrays.asList(c: _*), c.head.schema)
+        .write.mode("overwrite").parquet(p + "/centroids")
+    }
+    val qs = vecs.filter(col("vec_id") < 2)
+    val e1 = intercept[IllegalArgumentException](
+      Similarity.ivfTopKFromPartitioned(spark, ivf, qs, k = 4, nProbe = 2))
+    val e2 = intercept[IllegalArgumentException](
+      Similarity.ivfPqTopKFromPartitioned(spark, ivfPq, vecs, qs, k = 3, nProbe = 2, refine = 2))
+    Seq(e1, e2).foreach { e =>
+      assert(e.getMessage.contains("must be 0..2, got 0,2,3"), e.getMessage)
+    }
+  }
+
   test("ensureIndex on an empty corpus fingerprints as n0 instead of NPEing") {
     import spark.implicits._
     val kind = "spec_empty_" + System.nanoTime()

@@ -28,7 +28,7 @@ class UsersCsvSpec extends SparkSpec {
 
   test("duplicate GUIDs fail the load (resources.py:420-421)") {
     val e = intercept[DuplicateUserGuidError] {
-      UsersCsv.explodeGuids(usersDf(
+      UsersCsv.checkUniqueGuids(usersDf(
         (1001L, "1", "", null, null),
         (1001L, "2", "", null, null)))
     }
