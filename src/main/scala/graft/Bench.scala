@@ -1,5 +1,8 @@
 package graft
 
+import graft.tools.TimedRun
+import graft.tools.TimedRun.{Run, num}
+
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and reports per-query seconds. Failed queries are
   * reported as -1.0 so a broken query can never masquerade as a fast one,
@@ -53,106 +56,21 @@ object Bench {
     val warm  = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "1") == "1"
     val spark = GraftSession.get(s"local[$cpus]", shufflePartitions = cpus)
 
-    // Hypervisor steal clock (r17 finding): /proc/stat's 8th cpu field in
-    // jiffies. The box episodically loses ALL vCPUs for ~2 s bursts (~60
-    // CPU-s of steal observed inside one 20 s window) and a CPU-saturated
-    // 32-task stage then runs 3-8× its quiet time while the GUEST's
-    // thread-CPU clocks keep ticking — which is exactly why r16's "wild
-    // family" looked like engine churn: wall ≈ task-CPU ≈ inflated, GC
-    // clean. Per-run steal deltas travel in the artifact (steal_detail)
-    // so an over-band run adjudicates as steal (delta >> 0) vs regression
-    // (delta ≈ 0) mechanically, per run, without re-running anything.
-    def stealJiffies: Long =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try src.getLines().take(1).toSeq.headOption
-          .map(_.trim.split("\\s+")).filter(_.length > 8).map(_(8).toLong)
-          .getOrElse(-1L)
-        finally src.close()
-      } catch { case scala.util.control.NonFatal(_) => -1L }
-
-    // Cumulative JVM GC time (ms) across all collectors: per-run deltas
-    // complete the adjudication triple (steal / GC / load) — an over-band
-    // run with steal ≈ 0 AND gc ≈ 0 AND a flat load is the engine's
-    // fault; any one of them non-zero names the external cause in the
-    // artifact itself (VERDICT r17 #1: several 3-15× outliers carried
-    // near-zero steal and the artifact had nothing else to consult).
-    def gcMillis: Long =
-      try {
-        val it = java.lang.management.ManagementFactory
-          .getGarbageCollectorMXBeans.iterator()
-        var sum = 0L
-        while (it.hasNext) { val t = it.next().getCollectionTime; if (t > 0) sum += t }
-        sum
-      } catch { case scala.util.control.NonFatal(_) => -1L }
-
-    def loadAvg: Double = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-
-    // one timed execution: seconds, plus the per-run adjudication triple
-    // (steal jiffies, GC ms, host 1-min load at run end)
-    case class Run(sec: Double, steal: Long, gc: Long, load: Double)
-
+    // one timed execution plus its steal/GC/load triple (TimedRun.once)
     def timeOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Run = {
-      val s0 = stealJiffies
-      val g0 = gcMillis
-      val t0 = System.nanoTime()
-      val ok =
-        // toRdd.count(), NOT count(): count() wraps the query in a new
-        // Aggregate and re-optimizes, letting Catalyst ELIMINATE work the
-        // real query does — left outer joins with unique right keys drop
-        // out entirely (measured: text_span_dup 0.5 s under count() vs
-        // 12 s real) and unused output columns are pruned to a bare scan.
-        // toRdd executes the query's own physical plan, producing every
-        // output row — what a consumer writing the result would pay.
-        try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            false
-        }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val stealDelta = { val s1 = stealJiffies; if (s0 < 0 || s1 < 0) -1L else s1 - s0 }
-      val gcDelta = { val g1 = gcMillis; if (g0 < 0 || g1 < 0) -1L else g1 - g0 }
-      val loadEnd = loadAvg
-      spark.catalog.clearCache() // drop per-query persist()ed intermediates
-      // clearCache only covers the SQL cache; localCheckpoint blocks (the
-      // iterative kernels and sortOnce cuts) are plain persistent RDDs that
-      // otherwise linger until a GC lets the async ContextCleaner get to
-      // them — r17 measurement: the query AFTER a checkpoint-heavy one ran
-      // up to 4× slow (events_anomaly 4.6 s in-suite vs 1.0 s standalone)
-      // while the block manager drained. BLOCKING unpersist drains them
-      // here, off-clock, so no query is timed against its predecessor's
-      // debris.
-      //
-      // INVARIANT (the reason the blanket sweep is safe, including for
-      // locally-checkpointed RDDs whose truncated lineage cannot
-      // recompute them — Spark WARNs about exactly that): no DataFrame,
-      // cached table or checkpoint is ever shared ACROSS queries in this
-      // session — every query function builds its frames from the sfDir
-      // parquet inputs, and `ensureIndex` state lives on DISK, not in
-      // RDD blocks. Any future session-level cached frame would break
-      // this sweep (its next use would fail to recompute) — keep
-      // cross-query state on disk, never in the block manager.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      Run(if (ok) sec else -1.0, stealDelta, gcDelta, loadEnd)
+      val r = TimedRun.once(spark)(fn(spark, sfDir))
+      r.error.foreach(e => System.err.println(s"[bench] $name FAILED: ${e.getMessage}"))
+      r
     }
-
-    // Locale.ROOT formatting for every number that lands in the JSON —
-    // a comma decimal separator under a non-ROOT default locale would
-    // corrupt the artifact (the tools/Steady lesson)
-    def num(d: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
 
     case class QRes(name: String, value: Double, runsD: Seq[Run],
       cold: Run, loadBefore: Double)
 
-    val loadStart = loadAvg
-    val stealStart = stealJiffies
+    val loadStart = TimedRun.loadAvg
+    val suite = new TimedRun.Mark
     val noRun = Run(Double.NaN, -1L, -1L, Double.NaN)
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val loadBefore = loadAvg
+      val loadBefore = TimedRun.loadAvg
       // warm pass: untimed-for-the-headline but RECORDED — the cold/warm
       // gap is itself adjudication evidence (a query whose cold run is 7×
       // its warm median has an index build, not a regression)
@@ -166,13 +84,7 @@ object Bench {
       System.gc() // let ContextCleaner reap broadcasts/shuffles off-clock
       val value =
         if (runsD.length < runs) -1.0
-        else {
-          val s = runsD.map(_.sec).sorted
-          // true median: middle element odd, mean of the two middles even
-          // (picking s(runs/2) for even runs would report the WORST run
-          // at runs=2)
-          if (runs % 2 == 1) s(runs / 2) else (s(runs / 2 - 1) + s(runs / 2)) / 2.0
-        }
+        else TimedRun.median(runsD.map(_.sec))
       QRes(name, value, runsD, cold, loadBefore)
     }
     def detail(f: QRes => String): String =
@@ -206,7 +118,7 @@ object Bench {
     // neighboring JVMs inflates multi-stage shuffle queries superlinearly
     // (measured: 2× oversubscription ⇒ 2.5× on the shingle-dedup queries,
     // 1× on map-only queries), so the number contextualizes the timings.
-    val load = loadAvg
+    val load = TimedRun.loadAvg
     // n_failed/n_queries travel IN the artifact: the process exits 0 even
     // with failed queries (the -1.0 convention), so a consumer checking the
     // exit code alone must still see partial-suite failure in the JSON.
@@ -216,11 +128,7 @@ object Bench {
     // tree's bench_last.json and readers mistook whose run it was — the
     // producer travels IN the JSON (driver leaves the env unset)
     val producer = sys.env.getOrElse("SPARK_GRAFT_PRODUCER", "driver")
-    // both endpoints guarded: a failed END read used to subtract the
-    // (positive) start and record a huge bogus negative instead of the
-    // -1 sentinel
-    val stealEnd = stealJiffies
-    val stealTotal = if (stealStart < 0 || stealEnd < 0) -1L else stealEnd - stealStart
+    val stealTotal = suite.steal
     val common = s""""unit":"sec","sf":"$sfDir","cpus":$cpus,"runs":$runs,"warm":$warm,""" +
       s""""n_queries":${results.length},"n_failed":$nFailed,""" +
       s""""load_avg":${num(load)},"load_avg_start":${num(loadStart)},""" +

@@ -213,9 +213,6 @@ object SparkEntry {
     }
   }
 
-  private[graft] def churnSketchPathForProbe(s: SparkSession, dir: String): String =
-    churnSketchPath(s, dir)
-
   /** Exact week-over-week retained + the inclusion–exclusion sketch
     * estimate gated by `greatest(relative, union-scaled floor)` — shared
     * by `events_retention_sketch` (natural activity) and its `_churn`
@@ -254,9 +251,6 @@ object SparkEntry {
           .as("est_ok"))
       .orderBy("week_us")
   }
-
-  private[graft] def churnEventsForProbe(ev: DataFrame): DataFrame =
-    churnEvents(ev)
 
   /** Trailing-7-day WAU derivation over a (user_id, day) frame — shared
     * by events_wau and events_wau_streamed under ONE oracle. Input rows
@@ -1023,16 +1017,64 @@ object SparkEntry {
       .select("src", "dst").distinct()
   }
 
-  /** Probe-tool access to the segment fixture (tools/GraphProbe). */
-  /** Probe-tool access to the HLL sketch index (tools/RetentionProbe). */
-  private[graft] def sketchPathForProbe(s: SparkSession, dir: String): String =
-    sketchPath(s, dir)
+  /** The four resource sheets of `s4_xlsx`, in `Schemas.xlsx*` column
+    * order, derived from TPC-H rows: categories from region, institutions
+    * from nation, installation facilities from supplier, access requests
+    * from orders. Planted: empty cells (every other HigherCategoryName,
+    * CountryCode on nationkey % 7 = 3, DaysRequested on orderkey % 13 = 0)
+    * and non-ASCII text ("Catégorie", "Université"). The `s4_xlsx` oracle
+    * derives the same rows in DuckDB — change both together.
+    */
+  private def xlsxFixtureSheets(s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
+    import graft.etl.Schemas
+    val o = t(s, dir, "orders")
+    val r = t(s, dir, "region")
+    val sp = t(s, dir, "supplier")
+    val n = t(s, dir, "nation")
+    Seq(
+      "AccessRequest" -> o.select(col("o_orderkey"), col("o_custkey"),
+        col("o_orderkey") % 4 + 1, col("o_custkey") % 100 + 1,
+        when(col("o_orderkey") % 13 =!= 0, col("o_orderkey") % 30 + 1),
+        col("o_orderpriority")).toDF(Schemas.xlsxAccessRequest.fieldNames: _*),
+      "Category" -> r.select(col("r_regionkey") + 1, col("r_name"),
+        when(col("r_regionkey") % 2 === 1, concat(lit("Cat\u00e9gorie "), col("r_name"))))
+        .toDF(Schemas.xlsxCategory.fieldNames: _*),
+      "InstallationFacility" -> sp.select(col("s_suppkey"),
+        concat(lit("IF-"), col("s_suppkey").cast("string")), col("s_name"),
+        col("s_nationkey") % 5 + 1, col("s_nationkey") + 1)
+        .toDF(Schemas.xlsxInstallationFacility.fieldNames: _*),
+      "Institution" -> n.select(col("n_nationkey") + 1, substring(col("n_name"), 1, 3),
+        concat(lit("Universit\u00e9 de "), col("n_name")),
+        when(col("n_nationkey") % 7 =!= 3, substring(col("n_name"), 1, 2)))
+        .toDF(Schemas.xlsxInstitution.fieldNames: _*))
+  }
 
-  private[graft] def warcIngestPathForProbe(s: SparkSession, dir: String): String =
-    warcIngestPath(s, dir)
+  /** One sheet row as text, columns '|'-joined, NULLs skipped — what the
+    * `s4_xlsx` digest sorts and hashes (DuckDB's `concat_ws` also skips
+    * NULLs).
+    */
+  private def xlsxRowText(df: DataFrame): Column =
+    concat_ws("|", df.columns.toIndexedSeq.map(c => col(c).cast("string")): _*)
 
-  private[graft] def warcFixtureForProbe(s: SparkSession, dir: String): String =
-    warcFixturePath(s, dir)
+  /** The `s4_xlsx` workbook, `access_request_rebuild.xlsx`, written once
+    * per distinct sheet content (ensureIndex-keyed on the row texts, so
+    * sf0.01/sf0.1 coexist and a regenerated table forces a rebuild).
+    */
+  private def xlsxFixturePath(s: SparkSession, dir: String): String = {
+    val sheets = xlsxFixtureSheets(s, dir)
+    val corpus = sheets.map { case (_, df) => df.select(xlsxRowText(df).as("row")) }
+      .reduce(_ union _)
+    ensureIndex(s, corpus, "xlsxs4", "built") { p =>
+      val bytes = graft.sources.Xlsx.writeBytes(sheets.map { case (name, df) =>
+        (name, df.columns.toSeq, df.orderBy(df.columns.head).collect().toSeq.map(_.toSeq))
+      })
+      val out = new org.apache.hadoop.fs.Path(s"$p/access_request_rebuild.xlsx")
+      val os = out.getFileSystem(s.sparkContext.hadoopConfiguration).create(out, true)
+      try os.write(bytes) finally os.close()
+      s.range(1).select(lit(bytes.length).as("bytes")).write.mode("overwrite")
+        .parquet(s"$p/built")
+    }
+  }
 
   /** The streamed-ingest segment fixture shared by `warc_ingest_streamed`
     * and `warc_links_streamed`: 16 range-partitioned archive segments
@@ -2319,31 +2361,32 @@ object SparkEntry {
 
     // S10 (DDL sink): the schema-to-DDL half of the dump path as data —
     // one row per table, the exact CREATE TABLE text the dump writes.
-    // S4 live XLSX: the reference's real resource workbook read end-to-end
-    // by the stdlib OOXML reader (sources/Xlsx.scala), reduced to per-sheet
-    // aggregates. The oracle is a VALUES table of literals derived by an
-    // INDEPENDENT stdlib-Python parse of the same workbook
-    // (scripts/s4_oracle_values.py) — DuckDB cannot read xlsx, so the
-    // cross-check is cross-language rather than cross-engine.
+    // S4 live XLSX: a synthesized four-sheet resource workbook (the
+    // `Schemas.xlsx*` columns over TPC-H rows, see [[xlsxFixtureSheets]])
+    // read end-to-end by the stdlib OOXML reader (sources/Xlsx.scala),
+    // reduced to per-sheet aggregates plus an md5 over the sorted row
+    // texts. The DuckDB oracle derives the same rows from the same tables,
+    // so every cell — numbers, empty cells, non-ASCII text — is checked
+    // across engines.
     "s4_xlsx" -> ((s, dir) => {
       import graft.etl.Schemas
-      val wb = "/root/reference/synth/data/access_request_rebuild.xlsx"
+      val wb = s"${xlsxFixturePath(s, dir)}/access_request_rebuild.xlsx"
       val parsed = graft.sources.Xlsx.readSheets(s, wb) // ONE parse, four sheets
-      def sheet(name: String, schema: org.apache.spark.sql.types.StructType,
-          idCol: String, daysCol: Option[String]) = {
+      def sheet(name: String, schema: StructType, daysCol: Option[String]) = {
         val df = graft.sources.Xlsx.applySchema(
           parsed.find(_.name == name).get.toDF(s), schema)
         df.agg(count(lit(1)).as("n_rows"),
-            sum(col(idCol)).cast("bigint").as("id_sum"),
+            sum(col(schema.head.name)).cast("bigint").as("id_sum"),
             daysCol.map(d => sum(col(d)).cast("bigint"))
-              .getOrElse(lit(null).cast("bigint")).as("days_sum"))
-          .select(lit(name).as("sheet"), col("n_rows"), col("id_sum"), col("days_sum"))
+              .getOrElse(lit(null).cast("bigint")).as("days_sum"),
+            md5(concat_ws("\n", sort_array(collect_list(xlsxRowText(df))))).as("rows_md5"))
+          .select(lit(name).as("sheet"), col("n_rows"), col("id_sum"), col("days_sum"),
+            col("rows_md5"))
       }
-      sheet("AccessRequest", Schemas.xlsxAccessRequest, "AccessRequest_ID", Some("DaysRequested"))
-        .unionByName(sheet("Category", Schemas.xlsxCategory, "Category_ID", None))
-        .unionByName(sheet("InstallationFacility", Schemas.xlsxInstallationFacility,
-          "InstallationFacility_ID", None))
-        .unionByName(sheet("Institution", Schemas.xlsxInstitution, "Institution_ID", None))
+      sheet("AccessRequest", Schemas.xlsxAccessRequest, Some("DaysRequested"))
+        .unionByName(sheet("Category", Schemas.xlsxCategory, None))
+        .unionByName(sheet("InstallationFacility", Schemas.xlsxInstallationFacility, None))
+        .unionByName(sheet("Institution", Schemas.xlsxInstitution, None))
         .orderBy("sheet")
     }),
 
@@ -3056,10 +3099,10 @@ object SparkEntry {
     // walk. The last segment changes ~40% of the EDGE set (new sources
     // PLUS previously-unresolvable targets becoming live — real ingest
     // deltas are bigger than node-count splits suggest), so the honest
-    // budget/tolerance came from tools/GraphProbe: warm-8 lands 6.3e-4
-    // from cold at 500 docs (3.2× margin) and 8.7e-5 at sf0.1 (23×),
-    // while cold-10's own residual vs cold-15 is 1.4e-5 — the reference
-    // is converged. Published output = the cold ranks (replaying the
+    // budget/tolerance was measured with the former `tools/GraphProbe`:
+    // warm-8 lands 6.3e-4 from cold at 500 docs (3.2× margin) and 8.7e-5
+    // at sf0.1 (23×), while cold-10's own residual vs cold-15 is 1.4e-5
+    // — the reference is converged. Published output = the cold ranks (replaying the
     // shared extracted-edges chain) + the pinned-TRUE proximity bool —
     // the graph_pagerank_incremental gate convention, now over the REAL
     // ingest accumulation instead of an arithmetic split. The three
@@ -4139,7 +4182,7 @@ object SparkEntry {
       // single-pass melt-join shape (full row rides the explode, one
       // cache join, one hash-agg fold, no id-rejoin) — A/B history: five
       // stage-sliced broadcast joins ~11-15 s (r10), rejoin melt ~8.1 s,
-      // this form ~2.9 s steady at sf0.1 (r12, DoiProbe/Time; includes
+      // this form ~2.9 s steady at sf0.1 (r12, measured with the former `tools/DoiProbe`; includes
       // the recognizer dedup + direct fixture keys of the same round)
       graft.functions.DoiNetwork.resolveFromCachesMelted(records, "url", "id", cache)
         .select(col("id"), col("url"), col("k_elsevier"), col("k_cambridge"),
@@ -4686,8 +4729,8 @@ object SparkEntry {
     // every consecutive pair's EXACT retained 0 (the parities are
     // disjoint), so the relative bound term is 0 and the floor is the
     // ONLY thing between benign inclusion–exclusion noise and a red row.
-    // RetentionProbe prints both terms per pair at both SFs (the
-    // probe-calibrate-before-pinning convention).
+    // Both terms per pair at both SFs were measured with the former
+    // `tools/RetentionProbe` before the floor was pinned.
     "events_retention_sketch_churn" -> ((s, dir) =>
       retentionSketchShape(s, churnEvents(t(s, dir, "events")),
         churnSketchPath(s, dir))),
@@ -5986,7 +6029,7 @@ object SparkEntry {
 
     // Recall gates for the two approximate ANN paths: avg recall@5 against
     // the brute-force baseline must clear 0.6 (measured 0.86/0.96 LSH and
-    // 0.80/0.78 IVF at sf0.01/sf0.1 — see tools/AnnProbe). The DuckDB
+    // 0.80/0.78 IVF at sf0.01/sf0.1, measured with the former `tools/AnnProbe`). The DuckDB
     // oracle asserts the boolean, so a silent recall regression becomes a
     // hash mismatch. Everything is seeded, so the value is deterministic.
     "ann_lsh_recall" -> ((s, dir) => {
@@ -6010,7 +6053,7 @@ object SparkEntry {
 
     // Recall gate for the image-retrieval scale path (ann_image_ivf's
     // parameters) against its own brute baseline — measured avg recall@5:
-    // 1.00 at sf0.01, 0.88 at sf0.1 (tools/ImgAnnProbe), gated at the
+    // 1.00 at sf0.01, 0.88 at sf0.1 (measured with the former `tools/ImgAnnProbe`), gated at the
     // same 0.6 floor as the text-embedding IVF gate. A regression in the
     // decode → feature → quantizer chain becomes a hash mismatch.
     "ann_image_recall" -> ((s, dir) => {
@@ -7990,18 +8033,40 @@ object SparkEntry {
         |FROM cells WHERE cell <> ''
         |ORDER BY round, user_id""".stripMargin,
 
-    // Literals independently derived by a stdlib-Python parse of the same
-    // static workbook (scripts/s4_oracle_values.py) — a cross-LANGUAGE
-    // oracle, since DuckDB has no xlsx reader.
+    // The xlsxFixtureSheets rows re-derived from the same tables: per
+    // sheet, row count, id and days sums, and the md5 of the sorted
+    // '|'-joined row texts (chr(233) = 'é').
     "s4_xlsx" ->
-      """SELECT * FROM (VALUES
-        |  ('AccessRequest', CAST(22748 AS BIGINT), CAST(258747126 AS BIGINT),
-        |     CAST(140328 AS BIGINT)),
-        |  ('Category', CAST(10 AS BIGINT), CAST(55 AS BIGINT), CAST(NULL AS BIGINT)),
-        |  ('InstallationFacility', CAST(216 AS BIGINT), CAST(23436 AS BIGINT),
-        |     CAST(NULL AS BIGINT)),
-        |  ('Institution', CAST(23 AS BIGINT), CAST(276 AS BIGINT), CAST(NULL AS BIGINT))
-        |) AS t(sheet, n_rows, id_sum, days_sum) ORDER BY sheet""".stripMargin,
+      """WITH ar AS (
+        |  SELECT o_orderkey AS id, CASE WHEN o_orderkey % 13 <> 0 THEN o_orderkey % 30 + 1 END AS days,
+        |    concat_ws('|', CAST(o_orderkey AS VARCHAR), CAST(o_custkey AS VARCHAR),
+        |      CAST(o_orderkey % 4 + 1 AS VARCHAR), CAST(o_custkey % 100 + 1 AS VARCHAR),
+        |      CAST(CASE WHEN o_orderkey % 13 <> 0 THEN o_orderkey % 30 + 1 END AS VARCHAR),
+        |      o_orderpriority) AS row
+        |  FROM orders),
+        |cat AS (
+        |  SELECT r_regionkey + 1 AS id, concat_ws('|', CAST(r_regionkey + 1 AS VARCHAR), r_name,
+        |    CASE WHEN r_regionkey % 2 = 1 THEN 'Cat' || chr(233) || 'gorie ' || r_name END) AS row
+        |  FROM region),
+        |fac AS (
+        |  SELECT s_suppkey AS id, concat_ws('|', CAST(s_suppkey AS VARCHAR),
+        |    'IF-' || CAST(s_suppkey AS VARCHAR), s_name, CAST(s_nationkey % 5 + 1 AS VARCHAR),
+        |    CAST(s_nationkey + 1 AS VARCHAR)) AS row
+        |  FROM supplier),
+        |inst AS (
+        |  SELECT n_nationkey + 1 AS id, concat_ws('|', CAST(n_nationkey + 1 AS VARCHAR),
+        |    substr(n_name, 1, 3), 'Universit' || chr(233) || ' de ' || n_name,
+        |    CASE WHEN n_nationkey % 7 <> 3 THEN substr(n_name, 1, 2) END) AS row
+        |  FROM nation),
+        |sheets AS (
+        |  SELECT 'AccessRequest' AS sheet, id, days, row FROM ar
+        |  UNION ALL SELECT 'Category', id, NULL, row FROM cat
+        |  UNION ALL SELECT 'InstallationFacility', id, NULL, row FROM fac
+        |  UNION ALL SELECT 'Institution', id, NULL, row FROM inst)
+        |SELECT sheet, CAST(count(*) AS BIGINT) AS n_rows, CAST(sum(id) AS BIGINT) AS id_sum,
+        |  CAST(sum(days) AS BIGINT) AS days_sum,
+        |  md5(string_agg(row, chr(10) ORDER BY row)) AS rows_md5
+        |FROM sheets GROUP BY sheet ORDER BY sheet""".stripMargin,
 
     // WARC: re-derive every record the synthesizer wrote (uri variants,
     // status line, HTML body incl. the planted fake-record literal, and

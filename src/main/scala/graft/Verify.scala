@@ -26,9 +26,10 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name FAILED: ${e.getMessage}")
       } finally {
-        // drop any persist()ed intermediates a query pinned (dedup/LSH do) —
-        // leaked cache blocks degrade every subsequent query in the session
-        spark.catalog.clearCache()
+        // drop any persist()ed and checkpointed intermediates a query pinned
+        // (dedup/LSH, the iterative kernels) — leaked blocks degrade every
+        // subsequent query in the session
+        graft.tools.TimedRun.drain(spark)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -242,18 +242,6 @@ object Rebuild {
       df.write.mode("overwrite").jdbc(url, name, props)
     }
 
-  /** CLI (`synth rebuild` analog, cli.py:66-74): `Rebuild <inDir> <outDir>`.
-    *
-    * Input layout: `<inDir>/round<N>/` (N ascending = synth rounds) with
-    * parquet per source table (NHM_Call, NHM_Specific_Disciplines,
-    * NHM_Outputs, T_List_of_UserProjects, T_List_of_Users,
-    * NHM_Application_Scores); round-shared dims (NHM_Disciplines,
-    * NHM_OutputTypes, NHM_PublicationStatus) read from the LAST round
-    * (etl.py reads synth-4); `<inDir>/resources/` with Country_Iso_Codes /
-    * xlsx-sheet parquet, users.csv, master_clean.json,
-    * unmatched_home_institutions.json, geocities.parquet and (optional)
-    * output_dois.parquet / doi_metadata.parquet caches.
-    */
   /** S4 resource sheet (resources.py:141-143): the live
     * `access_request_rebuild.xlsx` workbook when present (parsed once per
     * JVM path, all sheets from the one parse), else the per-sheet parquet
@@ -278,6 +266,18 @@ object Rebuild {
   private val xlsxCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[graft.sources.Xlsx.RawSheet]]()
 
+  /** CLI (`synth rebuild` analog, cli.py:66-74): `Rebuild <inDir> <outDir>`.
+    *
+    * Input layout: `<inDir>/round<N>/` (N ascending = synth rounds) with
+    * parquet per source table (NHM_Call, NHM_Specific_Disciplines,
+    * NHM_Outputs, T_List_of_UserProjects, T_List_of_Users,
+    * NHM_Application_Scores); round-shared dims (NHM_Disciplines,
+    * NHM_OutputTypes, NHM_PublicationStatus) read from the LAST round
+    * (etl.py reads synth-4); `<inDir>/resources/` with Country_Iso_Codes /
+    * xlsx-sheet parquet, users.csv, master_clean.json,
+    * unmatched_home_institutions.json, geocities.parquet and (optional)
+    * output_dois.parquet / doi_metadata.parquet caches.
+    */
   def main(args: Array[String]): Unit = {
     val Array(inDir, outDir) = args.take(2)
     val spark = graft.GraftSession.get(

@@ -210,33 +210,6 @@ object PosTag {
   def tagUTF8(s: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String =
     org.apache.spark.unsafe.types.UTF8String.fromString(tagOf(s.toString))
 
-  /** Diagnostic attribution: WHICH rule tags `t`, plus the tag that rule
-    * implies — the single source the `PosReport` sweep tool reads, so
-    * the report can never attribute words to rules the tagger doesn't
-    * fire. Same cascade order as [[tagOf]]; returning the tag alongside
-    * lets PosTagSpec assert `ruleOf(t)._2 == tagOf(t)` over any
-    * vocabulary, which pins the two against drifting. Not a hot path.
-    */
-  def ruleOf(t: String): (String, String) =
-    lexicon.find(_._1.contains(t)) match {
-      case Some((words, tg)) =>
-        val name =
-          if ((words eq nounExceptions) || (words eq adjExceptions))
-            "exception-lex"
-          else "closed-lex"
-        (name, tg)
-      case None =>
-        if (numRe.matcher(t).matches()) ("numeric", "NUM")
-        else if (t.endsWith("ly")) ("sfx:-ly", "ADV")
-        else nounSuffixes.find(t.endsWith).map(s => (s"sfx:-$s", "NOUN"))
-          .orElse(adjSuffixes.find(t.endsWith).map(s => (s"sfx:-$s", "ADJ")))
-          .orElse(verbSuffixes.find(t.endsWith).map(s => (s"sfx:-$s", "VERB")))
-          .getOrElse(
-            if (t.endsWith("ing") && t.length > 5) ("sfx:-ing", "VERB")
-            else if (t.endsWith("ed") && t.length > 4) ("sfx:-ed", "VERB")
-            else ("default-NOUN", "NOUN"))
-    }
-
   /** [[filterNounAdj]] on the fast path: same keep contract, the tag via
     * [[PosTagExpr]].
     */

@@ -277,7 +277,7 @@ object Dedup {
     * hashes), so the default margin 0.40 at threshold 0.7 (keep est ≥
     * 0.30, ≈ 4.9σ below the mean of a boundary pair) bounds the per-pair
     * drop probability near 5e-7 — and it decays geometrically above the
-    * threshold. Measured on the shipped corpora (tools/EstProbe): the
+    * threshold. Measured on the shipped corpora (with the former `tools/EstProbe`): the
     * LOWEST estimate of any exactly-qualifying pair is 0.84 (sf0.01,
     * 25 pairs) / 0.75 (sf0.1, 256 pairs), so the boundary population the
     * tail bound guards is empty, and cutting at 0.30 keeps the prefilter's
@@ -328,20 +328,6 @@ object Dedup {
         sum((col("jaccard") >= threshold).cast("long")).as("n_pairs"),
         (avg(col("err")) <= 0.10).as("avg_err_ok"),
         (max(col("err")) <= 0.35).as("max_err_ok"))
-  }
-
-  /** Audit view of (est, exact) per banded candidate — what the margin
-    * analysis in [[minhashEstimatedPairs]] is measured from (tools/EstProbe).
-    */
-  private[graft] def minhashEstimateDebug(
-      docs: DataFrame, textCol: String, idCol: String, n: Int,
-      bands: Int = 16, rowsPerBand: Int = 2, maxBucket: Int = 4096): DataFrame = {
-    val (cand, sh, sigs) =
-      bandedCandidates(docs, textCol, idCol, n, bands, rowsPerBand, maxBucket)
-    val exact = verifyExactJaccard(cand, sh, threshold = 0.0)
-    withAgreement(cand, sigs, bands * rowsPerBand)
-      .join(exact, Seq("doc_a", "doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("est"), col("jaccard"))
   }
 
   /** Shared head of the banded-LSH paths: candidate pairs plus the

@@ -1,7 +1,8 @@
 package graft.sources
 
-import java.io.{ByteArrayInputStream, InputStream}
-import java.util.zip.{ZipFile, ZipInputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.zip.{ZipEntry, ZipFile, ZipInputStream, ZipOutputStream}
 
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
@@ -419,6 +420,77 @@ object Xlsx {
       cast.as(f.name)
     }
     raw.select(cols.toIndexedSeq: _*)
+  }
+
+  /** Minimal OOXML writer, the inverse of [[readRawBytes]] for synthesized
+    * fixtures (like `Warc.synthesizeFiles`): one worksheet per
+    * (name, header, rows), header in row 1. A `Number` becomes a numeric
+    * `<v>` cell, any other value an inline string, and NULL or "" an absent
+    * cell — which the reader, like pandas, gives back as NULL. No styles,
+    * no shared strings.
+    */
+  def writeBytes(sheets: Seq[(String, Seq[String], Seq[Seq[Any]])]): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val z = new ZipOutputStream(bos)
+    def put(name: String, body: String): Unit = {
+      z.putNextEntry(new ZipEntry(name))
+      z.write(("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" + body).getBytes(UTF_8))
+      z.closeEntry()
+    }
+    val ml = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    val od = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
+    val pr = "http://schemas.openxmlformats.org/package/2006/relationships"
+    val ct = "application/vnd.openxmlformats-officedocument.spreadsheetml"
+    val ids = sheets.indices.map(_ + 1)
+    put("[Content_Types].xml",
+      """<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">""" +
+        """<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>""" +
+        """<Default Extension="xml" ContentType="application/xml"/>""" +
+        s"""<Override PartName="/xl/workbook.xml" ContentType="$ct.sheet.main+xml"/>""" +
+        ids.map(i => s"""<Override PartName="/xl/worksheets/sheet$i.xml" ContentType="$ct.worksheet+xml"/>""").mkString +
+        "</Types>")
+    put("_rels/.rels", s"""<Relationships xmlns="$pr"><Relationship Id="rId1" """ +
+      s"""Type="$od/officeDocument" Target="xl/workbook.xml"/></Relationships>""")
+    put("xl/workbook.xml", s"""<workbook xmlns="$ml" xmlns:r="$od"><sheets>""" +
+      sheets.zip(ids).map { case ((name, _, _), i) =>
+        s"""<sheet name="${xmlText(name)}" sheetId="$i" r:id="rId$i"/>"""
+      }.mkString + "</sheets></workbook>")
+    put("xl/_rels/workbook.xml.rels", s"""<Relationships xmlns="$pr">""" +
+      ids.map(i => s"""<Relationship Id="rId$i" Type="$od/worksheet" Target="worksheets/sheet$i.xml"/>""").mkString +
+      "</Relationships>")
+    sheets.zip(ids).foreach { case ((_, header, rows), i) =>
+      val sb = new StringBuilder(s"""<worksheet xmlns="$ml"><sheetData>""")
+      (header +: rows).iterator.zipWithIndex.foreach { case (cells, r) =>
+        sb ++= s"""<row r="${r + 1}">"""
+        cells.iterator.zipWithIndex.foreach {
+          case (null | "", _) => ()
+          case (v: Number, c) => sb ++= s"""<c r="${colRef(c)}${r + 1}"><v>$v</v></c>"""
+          case (v, c) => sb ++= s"""<c r="${colRef(c)}${r + 1}" t="inlineStr"><is>""" +
+            s"""<t xml:space="preserve">${xmlText(v.toString)}</t></is></c>"""
+        }
+        sb ++= "</row>"
+      }
+      put(s"xl/worksheets/sheet$i.xml", sb.append("</sheetData></worksheet>").toString)
+    }
+    z.close()
+    bos.toByteArray
+  }
+
+  /** 0-based column index → "A", "Z", "AA", … (inverse of [[colIndex]]). */
+  private def colRef(i: Int): String =
+    (if (i >= 26) colRef(i / 26 - 1) else "") + ('A' + i % 26).toChar
+
+  /** XML-escape cell text; a control character XML 1.0 cannot carry (and
+    * CR, which parsers normalize away) is rejected, not silently altered.
+    */
+  private def xmlText(s: String): String = s.flatMap {
+    case '&' => "&amp;"
+    case '<' => "&lt;"
+    case '>' => "&gt;"
+    case '"' => "&quot;"
+    case c if c < ' ' && c != '\t' && c != '\n' =>
+      throw new IllegalArgumentException(f"cell text has control character \\u${c.toInt}%04x")
+    case c => c.toString
   }
 
   /** Distributed bulk ingest: a glob of workbooks → one DataFrame with the

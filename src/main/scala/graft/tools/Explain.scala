@@ -18,14 +18,9 @@ object Explain {
       println(s"========== $name ==========")
       df.explain("formatted")
       if (run) {
-        val t0 = System.nanoTime()
-        // toRdd.count(), NOT count() — count() wraps the plan in a new
-        // Aggregate and re-optimizes, letting Catalyst eliminate left
-        // joins / prune the query's real work (same rationale as
-        // Bench.timeOnce; a count() timing here mis-measured the
-        // five-left-join DOI cascade 3× fast)
-        val n = df.queryExecution.toRdd.count()
-        println(f"[$name] rows=$n time=${(System.nanoTime() - t0) / 1e9}%.2fs")
+        // execution only: the query was built above, before explain
+        val r = TimedRun.once(spark)(df).orThrow
+        println(f"[$name] rows=${r.rows} time=${r.sec}%.2fs")
       }
     }
     spark.stop()

@@ -3,20 +3,19 @@ package graft.tools
 import graft.{GraftSession, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Per-job breakdown of ONE query execution — where a multi-action query
-  * (eager checkpoints, range-sample jobs, broadcast builds) actually
-  * spends its wall clock. Explain can't see this: everything that runs
-  * during query CONSTRUCTION (persist+count, cutLineage) happens before
-  * its timer starts. Usage: JobProfile <sfDir> <name> [warmRuns=1]
-  *
-  * Prints one line per job of the LAST (warm) execution: job id, wall ms,
-  * total task time ms, peak stage task count, and the callsite/description.
+/** Per-run seconds of each named query in one warm JVM (run 1 carries
+  * JIT/codegen warmup and any cold index build), then a per-job breakdown
+  * of its LAST run — wall ms, task time ms, task count and callsite per
+  * job, including the jobs query CONSTRUCTION starts (persist+count,
+  * cutLineage) — and the executed plan's per-operator metrics.
+  * Usage: JobProfile <sfDir> <q[,q...]> [runs=2]
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val name  = args(1)
-    val warm  = if (args.length > 2) args(2).toInt else 1
+    val names = args(1).split(",")
+    val runs  = if (args.length > 2) args(2).toInt else 2
+    require(runs >= 1, "runs must be >= 1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.get(s"local[$cpus]", shufflePartitions = cpus)
 
@@ -46,19 +45,6 @@ object JobProfile {
       }
     }
 
-    var lastDf: org.apache.spark.sql.DataFrame = null
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.queryExecution.toRdd.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      lastDf = df
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      sec
-    }
-
     // post-run SQL-metric walk: per-operator timing/cardinality off the
     // executed (post-AQE) plan, broadcast/subquery subtrees included —
     // names the slow operator where the job listing can only name a stage
@@ -80,22 +66,30 @@ object JobProfile {
       p.subqueries.foreach(dumpPlan(_, depth + 1))
     }
 
-    (1 to warm).foreach(_ => once()) // JIT/codegen + index builds off-profile
-    spark.sparkContext.addSparkListener(listener)
-    val sec = once()
-    spark.sparkContext.removeSparkListener(listener)
-    Thread.sleep(500) // let the listener bus drain
+    names.foreach { name =>
+      var lastDf: org.apache.spark.sql.DataFrame = null
+      def once(): Double = TimedRun.once(spark) {
+        lastDf = SparkEntry.queries(name)(spark, sfDir); lastDf
+      }.orThrow.sec
+      val warm = (1 until runs).map(_ => once())
+      jobs.clear(); stageToJob.clear()
+      spark.sparkContext.addSparkListener(listener)
+      val sec = once()
+      spark.sparkContext.removeSparkListener(listener)
+      Thread.sleep(500) // let the listener bus drain
+      println(f"[$name] " + (warm :+ sec).map(t => f"$t%.2f").mkString(" "))
 
-    val js = jobs.values.toSeq.sortBy(_.id)
-    val wall = js.map(j => math.max(0L, j.end - j.start)).sum
-    println(f"[$name] run=${sec}%.2fs sum-of-job-wall=${wall / 1000.0}%.2fs jobs=${js.length}")
-    js.foreach { j =>
-      println(f"  job ${j.id}%3d wall=${math.max(0L, j.end - j.start)}%6dms " +
-        f"taskTime=${j.taskMs}%7dms tasks=${j.nTasks}%4d ${j.desc.take(90)}%s")
-      println("        stages: " + j.stages.reverse.mkString(" "))
+      val js = jobs.values.toSeq.sortBy(_.id)
+      val wall = js.map(j => math.max(0L, j.end - j.start)).sum
+      println(f"[$name] run=${sec}%.2fs sum-of-job-wall=${wall / 1000.0}%.2fs jobs=${js.length}")
+      js.foreach { j =>
+        println(f"  job ${j.id}%3d wall=${math.max(0L, j.end - j.start)}%6dms " +
+          f"taskTime=${j.taskMs}%7dms tasks=${j.nTasks}%4d ${j.desc.take(90)}%s")
+        println("        stages: " + j.stages.reverse.mkString(" "))
+      }
+      println("---- executed plan metrics ----")
+      dumpPlan(lastDf.queryExecution.executedPlan, 0)
     }
-    println("---- executed plan metrics ----")
-    dumpPlan(lastDf.queryExecution.executedPlan, 0)
     spark.stop()
   }
 }

@@ -1,11 +1,12 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
+import TimedRun.num
+import scala.jdk.CollectionConverters._
 
-/** Machine-readable steady-state bands for EVERY registry query — the
-  * adjudication artifact the per-round prose table in PLANS.md used to
-  * be. Re-times each query in ONE warm JVM (run 1 dropped as
-  * JIT/codegen warmup) and writes `STEADY.json`:
+/** Machine-readable steady-state bands for EVERY registry query.
+  * Re-times each query in ONE warm JVM (run 1 dropped as JIT/codegen
+  * warmup) and writes `STEADY.json`:
   *
   * {{{
   * {"sf":"...","runs":8,"producer":"builder","canary":[...],
@@ -13,34 +14,21 @@ import graft.{GraftSession, SparkEntry}
   *  "queries":{"name":{"median":2.5,"min":2.1,"max":2.8,"runs":[...]}}}
   * }}}
   *
-  * A future judge (or the driver) diffs `BENCH_r{N}.json` per-query
-  * against these bands mechanically: artifact value within ~1.5× of
-  * `max` ⇒ in band; beyond ⇒ investigate the code, not the box. The
-  * canary (`s1_scan_project`, a bare pushed-down scan) travels in the
-  * file because a quiet canary does NOT certify a cool box for the
-  * heavy shuffle queries (r14 finding) — band consumers should weigh
+  * A bench value within ~1.5× of a band's `max` is in band; beyond it,
+  * investigate the code, not the box. The canary (`s1_scan_project`, a
+  * bare pushed-down scan) travels in the file, but a quiet canary does
+  * NOT certify a cool box for the heavy shuffle queries — weigh
   * `load_avg_end` and the spread of the heavy runs themselves.
   *
-  * NO selection threshold by default (r15 lesson, twice over: the
-  * threshold + regenerate-before-the-last-commit combination is exactly
-  * how the query that became the round's biggest driver outlier escaped
-  * banding two rounds running). Every query in `SparkEntry.queries`
-  * gets a band; `scripts/steady_check.py` fails the close when any
-  * registry query lacks one. To keep a 237-query full pass tractable,
-  * the run count adapts: a query whose warmup run comes in under
-  * `lightCut` (default 0.8 s) is banded from `lightRuns` (4) runs, the
-  * rest from `runs` (8) — sub-second map-side queries don't need eight
-  * samples to band, the heavy shuffle queries do.
+  * No selection threshold by default: every registry query gets a band
+  * (`scripts/steady_check.py` fails when one lacks it). A query whose
+  * warmup run is under `lightCut` (0.8 s) is banded from `lightRuns` (4)
+  * runs, the rest from `runs` (8).
   *
   * usage: Steady <sfDir> <benchJson> [thresholdSec=0] [runs=8] [onlyCsv]
-  * (benchJson is consulted only when thresholdSec > 0 — legacy mode)
-  *
-  * `onlyCsv` (comma-separated query names) is the INCREMENTAL mode: only
-  * the listed queries are re-timed and their bands are MERGED into the
-  * existing STEADY.json (every other band preserved verbatim) — for
-  * banding a post-close single-leg addition without a 40-minute full
-  * regen. The full no-threshold regen remains the round-close norm;
-  * merged files carry mixed provenance by construction.
+  * (benchJson is consulted only when thresholdSec > 0 — legacy mode).
+  * `onlyCsv` re-times only the listed queries and MERGES their bands into
+  * the existing STEADY.json, every other band preserved verbatim.
   */
 object Steady {
   def main(args: Array[String]): Unit = {
@@ -54,109 +42,58 @@ object Steady {
     val lightCut  = 0.8
     val cpus      = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
+    // the "queries" object of a bench or STEADY artifact, via the Jackson
+    // that ships with Spark — no extra dependency
+    def queriesOf(path: String) = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))).get("queries")
+    val all = SparkEntry.queries.keys.toSeq.sorted
     val heavy =
-      if (only.isDefined)
-        SparkEntry.queries.keys.toSeq.sorted.filter(only.get.contains)
-      else if (threshold <= 0.0) SparkEntry.queries.keys.toSeq.sorted
-      else {
-        // legacy selection mode: the bench artifact's "queries" map, via
-        // the Jackson that ships with Spark — no extra dependency
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = mapper.readTree(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(benchJson)))
-        val qNode = root.get("queries")
-        SparkEntry.queries.keys.toSeq.sorted.filter { name =>
-          val v = qNode.get(name)
-          v != null && v.asDouble(-1.0) >= threshold
-        }
+      if (only.isDefined) all.filter(only.get.contains)
+      else if (threshold <= 0.0) all
+      else { // legacy selection mode
+        val q = queriesOf(benchJson)
+        all.filter(n => q.has(n) && q.get(n).asDouble(-1.0) >= threshold)
       }
 
     val spark = GraftSession.get(s"local[$cpus]", shufflePartitions = cpus)
-    // hypervisor steal clock (see Bench.stealJiffies): per-run deltas land
-    // in each band so a wide band self-adjudicates as steal vs regression
-    def stealJiffies: Long =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try src.getLines().take(1).toSeq.headOption
-          .map(_.trim.split("\\s+")).filter(_.length > 8).map(_(8).toLong)
-          .getOrElse(-1L)
-        finally src.close()
-      } catch { case scala.util.control.NonFatal(_) => -1L }
-    // cumulative JVM GC ms — per-run deltas complete the band's
-    // adjudication triple (steal / gc / load), mirroring Bench
-    def gcMillis: Long =
-      try {
-        val it = java.lang.management.ManagementFactory
-          .getGarbageCollectorMXBeans.iterator()
-        var sum = 0L
-        while (it.hasNext) { val t = it.next().getCollectionTime; if (t > 0) sum += t }
-        sum
-      } catch { case scala.util.control.NonFatal(_) => -1L }
-    def timeOnce(name: String): (Double, Long, Long, Double) = {
-      val s0 = stealJiffies
-      val g0 = gcMillis
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val sd = { val s1 = stealJiffies; if (s0 < 0 || s1 < 0) -1L else s1 - s0 }
-      val gd = { val g1 = gcMillis; if (g0 < 0 || g1 < 0) -1L else g1 - g0 }
-      val ld = java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
-      spark.catalog.clearCache()
-      // match Bench: blocking-drain checkpoint/persist blocks off-clock
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      (sec, sd, gd, ld)
-    }
-    def timeQuery(name: String): (Seq[Double], Seq[Long], Seq[Long], Seq[Double]) = {
+    // a failing query fails the whole regen: a band needs every run
+    def timeOnce(name: String): TimedRun.Run =
+      TimedRun.once(spark)(SparkEntry.queries(name)(spark, sfDir)).orThrow
+    def timeQuery(name: String): Seq[TimedRun.Run] = {
       val warm = timeOnce(name)
-      val rest = if (warm._1 < lightCut) lightRuns - 1 else runs - 1
-      val all = warm +: (1 to rest).map(_ => timeOnce(name))
-      (all.map(_._1), all.map(_._2), all.map(_._3), all.map(_._4))
+      val rest = if (warm.sec < lightCut) lightRuns - 1 else runs - 1
+      warm +: (1 to rest).map(_ => timeOnce(name))
     }
+    def arr(xs: Seq[Any]): String = xs.mkString("[", ",", "]")
 
     // canary FIRST: its run-1 JIT absorbs session warmup off the heavy
     // queries' clocks, same as Bench's alphabetical order does in practice
-    // Locale.ROOT: the f-interpolator uses the default locale, which
-    // could emit a comma decimal separator and corrupt the JSON
-    def num(d: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-    val canary = timeQuery("s1_scan_project")._1
+    val canary = timeQuery("s1_scan_project").map(_.sec)
     val rows = heavy.map { name =>
-      val (ts, steals, gcs, loads) = timeQuery(name)
+      val runsQ = timeQuery(name)
       System.gc()
+      val ts = runsQ.map(_.sec)
       val steady = ts.drop(1).sorted // run 1 = JIT/codegen warmup, dropped
-      val median =
-        if (steady.length % 2 == 1) steady(steady.length / 2)
-        else (steady(steady.length / 2 - 1) + steady(steady.length / 2)) / 2.0
+      val median = TimedRun.median(steady)
       System.err.println(f"[steady] $name%-40s median $median%.2f " +
         f"band ${steady.head}%.2f-${steady.last}%.2f (run1 ${ts.head}%.2f)")
-      val runsJson = ts.map(num).mkString("[", ",", "]")
-      val stealJson = steals.mkString("[", ",", "]")
-      val gcJson = gcs.mkString("[", ",", "]")
-      val loadJson = loads.map(num).mkString("[", ",", "]")
-      s""""$name":{"median":${num(median)},"min":${num(steady.head)},"max":${num(steady.last)},"runs":$runsJson,"steal":$stealJson,"gc":$gcJson,"load":$loadJson}"""
+      s""""$name":{"median":${num(median)},"min":${num(steady.head)},"max":${num(steady.last)},""" +
+        s""""runs":${arr(ts.map(num))},"steal":${arr(runsQ.map(_.steal))},""" +
+        s""""gc":${arr(runsQ.map(_.gc))},"load":${arr(runsQ.map(r => num(r.load)))}}"""
     }
-    val load = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
+    val load = TimedRun.loadAvg
     val producer = sys.env.getOrElse("SPARK_GRAFT_PRODUCER", "builder")
     // incremental mode: preserve every band not re-timed this run
-    val kept: Seq[String] =
-      if (only.isEmpty) Seq.empty
-      else {
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val prior = mapper.readTree(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("STEADY.json"))).get("queries")
-        val names = scala.collection.mutable.ArrayBuffer[String]()
-        val it = prior.fieldNames()
-        while (it.hasNext) { val n = it.next(); if (!only.get.contains(n)) names += n }
-        names.sorted.map(n => "\"" + n + "\":" + prior.get(n).toString).toSeq
-      }
+    val kept: Seq[String] = only.toSeq.flatMap { retimed =>
+      val prior = queriesOf("STEADY.json")
+      prior.fieldNames().asScala.filterNot(retimed).toSeq.sorted
+        .map(n => "\"" + n + "\":" + prior.get(n).toString)
+    }
     val allRows = (kept ++ rows).mkString(",")
     val json =
       s"""{"sf":"$sfDir","runs":$runs,"threshold_sec":$threshold,""" +
         s""""producer":"$producer","load_avg_end":$load,""" +
-        s""""canary":${canary.map(num).mkString("[", ",", "]")},""" +
+        s""""canary":${arr(canary.map(num))},""" +
         s""""queries":{$allRows}}"""
     println(json)
     java.nio.file.Files.write(java.nio.file.Paths.get("STEADY.json"),

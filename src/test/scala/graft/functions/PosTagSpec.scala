@@ -86,22 +86,6 @@ class PosTagSpec extends SparkSpec {
     assert(disagree.isEmpty, disagree.mkString("\n"))
   }
 
-  test("ruleOf attribution can never drift from tagOf") {
-    // every lexicon word, every suffix exercised synthetically, numerics,
-    // the -ing/-ed length-guard boundaries, and the default
-    val vocab =
-      (PosTag.det ++ PosTag.conj ++ PosTag.pron ++ PosTag.adp ++
-        PosTag.aux ++ PosTag.advLex ++ PosTag.num ++
-        PosTag.nounExceptions ++ PosTag.adjExceptions) ++
-      (PosTag.nounSuffixes ++ PosTag.adjSuffixes ++ PosTag.verbSuffixes)
-        .flatMap(s => Seq("qq" + s, "z" + s)) ++
-      Seq("12", "3.5", "curly", "zingly", "ring", "zring", "zzring",
-        "zed", "zzed", "zzzed", "spark", "xyz")
-    vocab.foreach { w =>
-      assert(PosTag.ruleOf(w)._2 === PosTag.tagOf(w), s"drift on '$w'")
-    }
-  }
-
   test("generated DuckDB CASE mirrors the rule order") {
     val sql = PosTag.duckdbCaseSql("tok")
     // lexicon before suffixes, ADV -ly before noun suffixes, NOUN default

@@ -180,6 +180,16 @@ class GraphSpec extends SparkSpec {
     assert(math.abs(got.values.map(_._2).sum - 1.0) < 1e-9)
   }
 
+  test("hits: new half-step totals reuse the compiled code; an empty graph scores nothing") {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    // same node count (so the same 1/N start), different edges and totals
+    hitsGot(Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L), 4)
+    val compiled = METRIC_COMPILATION_TIME.getCount
+    hitsGot(Seq(1L -> 2L, 1L -> 3L, 2L -> 3L, 4L -> 1L, 4L -> 2L), 4)
+    assert(METRIC_COMPILATION_TIME.getCount === compiled)
+    assert(hitsGot(Seq.empty, 3).isEmpty)
+  }
+
   test("out-of-graph seeds absorb their teleport share (documented convention)") {
     val e = Set(1L -> 2L, 2L -> 1L)
     // seed 9 is not a node: half the teleport mass leaks each round

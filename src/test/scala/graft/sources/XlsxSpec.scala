@@ -114,6 +114,21 @@ class XlsxSpec extends SparkSpec {
     bos.toByteArray
   }
 
+  test("writeBytes round-trips through the reader: numbers, blanks, escapes, non-ASCII") {
+    val wide = (0 until 28).map(i => s"h$i") // past column Z: AA, AB
+    val bytes = Xlsx.writeBytes(Seq(
+      ("Müller & <Co>", Seq("id", "name", "note"),
+        Seq(Seq(1, "Université \"Ä\"", null), Seq(2L, "", "tab\there"), Seq(3.5, "x", "a\nb"))),
+      ("Wide", wide, Seq(wide.indices.map(i => i: Any)))))
+    val Seq(a, w) = Xlsx.readRawBytes(bytes)
+    assert(a.name == "Müller & <Co>" && a.header == Seq("id", "name", "note"))
+    assert(a.rows.map(_.toSeq) == Seq(
+      Seq("1", "Université \"Ä\"", null), Seq("2", null, "tab\there"), Seq("3.5", "x", "a\nb")))
+    assert(w.header == wide && w.rows.head.toSeq == wide.indices.map(_.toString))
+    intercept[IllegalArgumentException](
+      Xlsx.writeBytes(Seq(("S", Seq("a"), Seq(Seq("bell\u0007"))))))
+  }
+
   test("date styles render ISO strings; non-date styles stay raw; merged " +
       "cells default to pandas parity and fill on request") {
     // pandas parity (default): anchor-only merge, date-styled serials ISO
