@@ -340,7 +340,7 @@ object SparkEntry {
     * is NOT acceptable when the "corpus" is itself an expensive derived
     * computation — fingerprinting the extracted link graph cost a WARC
     * parse + resolution join per scheduling query (the r13 defect) —
-    * which is what [[ensureIndexNamed]] + [[listingKey]] exist for:
+    * which is what [[ensureIndexNamed]] + [[Tables.listingKey]] exist for:
     * key such indexes off their INGEST METADATA. At production scale
     * the listing key generalizes to the table's snapshot/commit id
     * (the changelog family's landed-batch convention).
@@ -349,7 +349,7 @@ object SparkEntry {
     * bit_xor) aggregate is a full corpus scan, and every index-backed query
     * re-derived it PER CALL — four times per query under Bench's warm +
     * median-of-3, ~47 call sites. The memo key is the corpus frame's
-    * analyzed-plan semantic hash plus the [[listingKey]] (names + sizes) of
+    * analyzed-plan semantic hash plus the [[Tables.listingKey]] (names + sizes) of
     * every file-source root the plan reads — the same O(listing) freshness
     * model `fixturePathMemo` and the crawl-scheduling index already use, so
     * an in-place fixture regeneration (new sizes/names) re-fingerprints
@@ -387,7 +387,7 @@ object SparkEntry {
       if (roots.isEmpty) fingerprintScan(corpus) // non-file corpus: no safe key
       else fingerprintMemo.computeIfAbsent(
         s"$kind|${analyzed.semanticHash()}|" +
-          roots.sorted.map(r => s"$r=${listingKey(s, r)}").mkString(","),
+          roots.sorted.map(r => s"$r=${Tables.listingKey(s, r)}").mkString(","),
         _ => fingerprintScan(corpus))
     ensureIndexNamed(s, kind, f"n${n}_x$fp%016x", marker)(write)
   }
@@ -417,42 +417,6 @@ object SparkEntry {
     path
   }
 
-  /** O(listing) content key for a directory of landed files: total bytes
-    * plus an md5 over the sorted (relative name, size, mtime) roster.
-    * This is the cache key an index derived from an INGESTED state should
-    * use — segment listings and hive batch dirs change whenever their
-    * content does (new files, rewritten sizes), so freshness never costs
-    * a byte of data read. The MTIME rides in the roster because an
-    * in-place regeneration can produce identical names AND byte lengths
-    * (VERDICT r17 #4: the content fingerprint this key replaces in
-    * `fingerprintMemo` detected same-size edits; a name+size listing did
-    * not) — any rewrite bumps mtime, so the key changes and the index
-    * re-fingerprints/rebuilds. `depth = 2` also walks one directory level
-    * (a hive-partitioned table's `batch_id=N/part-*.parquet` files).
-    */
-  private[graft] def listingKey(s: SparkSession, dirPath: String,
-      depth: Int = 1): String = {
-    val root = new org.apache.hadoop.fs.Path(dirPath)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def walk(p: org.apache.hadoop.fs.Path, d: Int): Seq[(String, Long, Long)] =
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toIndexedSeq.flatMap { st =>
-        if (st.isFile) Seq((st.getPath.getName, st.getLen, st.getModificationTime))
-        else if (d > 1) walk(st.getPath, d - 1)
-          .map { case (nm, len, mt) => (s"${st.getPath.getName}/$nm", len, mt) }
-        else Seq.empty
-      }
-    val entries = walk(root, depth)
-    val roster = entries.map { case (nm, len, mt) => s"$nm:$len:$mt" }.sorted
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(roster.mkString("\n").getBytes("UTF-8"))
-    // n = TOTAL BYTES, not file count: the sibling cleanup in
-    // ensureIndexNamed keys on n, and two scale factors produce the same
-    // FILE count (16 segments each) — byte totals differ, so sf0.01 and
-    // sf0.1 entries coexist instead of clobbering each other per switch
-    f"n${entries.map(_._2).sum}_x${java.nio.ByteBuffer.wrap(md).getLong}%016x"
-  }
-
   /** Shared WARC fixture for the `warc_*` queries: 16 gzipped archive
     * files synthesized from the documents ids (ensureIndex-keyed, so
     * sf0.01/sf0.1 coexist and a regenerated corpus forces a rebuild; the
@@ -472,7 +436,7 @@ object SparkEntry {
     * fingerprint (count+xor over the documents ids) is a corpus-column
     * scan, and every warc/crawl query re-derived it per CALL — including
     * three times per query under Bench's median-of-3. The memo key
-    * includes the sf dir's [[listingKey]] (names+sizes of the parquet
+    * includes the sf dir's [[Tables.listingKey]] (names+sizes of the parquet
     * tables — an O(listing) stat, no data read), NOT just the path
     * string: a long-lived session that regenerates a fixture dir in
     * place gets a fresh resolution instead of a stale path, so the
@@ -483,7 +447,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), String]()
 
   private def warcFixturePath(s: SparkSession, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warclqr", dir, listingKey(s, dir)), _ =>
+    fixturePathMemo.computeIfAbsent(("warclqr", dir, Tables.listingKey(s, dir)), _ =>
       warcFixturePathUncached(s, dir))
 
   private def warcFixturePathUncached(s: SparkSession, dir: String): String = {
@@ -507,7 +471,7 @@ object SparkEntry {
     * shares `warc_read`'s oracle verbatim.
     */
   private def warcZstdFixturePath(s: SparkSession, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warczstdlqr", dir, listingKey(s, dir)), _ => {
+    fixturePathMemo.computeIfAbsent(("warczstdlqr", dir, Tables.listingKey(s, dir)), _ => {
       val ids = t(s, dir, "documents").select(col("doc_id"))
       ensureIndex(s, ids, "warczstdlqr", "built") { p =>
         val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
@@ -522,7 +486,7 @@ object SparkEntry {
     * fixture for the WET content-type gate.
     */
   private def warcMimeFixturePath(s: SparkSession, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warcmime", dir, listingKey(s, dir)), _ => {
+    fixturePathMemo.computeIfAbsent(("warcmime", dir, Tables.listingKey(s, dir)), _ => {
       val ids = t(s, dir, "documents").select(col("doc_id"))
       ensureIndex(s, ids, "warcmime", "built") { p =>
         val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
@@ -539,7 +503,7 @@ object SparkEntry {
     * mime fixture's gate oracle stays untouched.
     */
   private def warcSniffFixturePath(s: SparkSession, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warcsniff", dir, listingKey(s, dir)), _ => {
+    fixturePathMemo.computeIfAbsent(("warcsniff", dir, Tables.listingKey(s, dir)), _ => {
       val ids = t(s, dir, "documents").select(col("doc_id"))
       ensureIndex(s, ids, "warcsniff", "built") { p =>
         val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
@@ -568,7 +532,7 @@ object SparkEntry {
     * novel key, downstream is pure joins.
     */
   private def httpCassettePath(s: SparkSession, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("httpcassette", dir, listingKey(s, dir)), _ => {
+    fixturePathMemo.computeIfAbsent(("httpcassette", dir, Tables.listingKey(s, dir)), _ => {
       val docs = t(s, dir, "documents").select(col("doc_id"))
       ensureIndex(s, docs, "httpcassette", "built") { p =>
         import s.implicits._
@@ -646,7 +610,7 @@ object SparkEntry {
     * untouched.
     */
   private def warcCanonFixturePath(s: SparkSession, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warccanonh2", dir, listingKey(s, dir)), _ => {
+    fixturePathMemo.computeIfAbsent(("warccanonh2", dir, Tables.listingKey(s, dir)), _ => {
       val ids = t(s, dir, "documents").select(col("doc_id"))
       ensureIndex(s, ids, "warccanonh2", "built") { p =>
         val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
@@ -665,7 +629,7 @@ object SparkEntry {
     * (`pipeline_crawl_change_rate`) compares digests across.
     */
   private def warcSnapFixturePath(s: SparkSession, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warcsnap1", dir, listingKey(s, dir)), _ => {
+    fixturePathMemo.computeIfAbsent(("warcsnap1", dir, Tables.listingKey(s, dir)), _ => {
       val ids = t(s, dir, "documents").select(col("doc_id"))
       ensureIndex(s, ids, "warcsnap1", "built") { p =>
         val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
@@ -682,7 +646,7 @@ object SparkEntry {
     * untouched.
     */
   private def warcBpFixturePath(s: SparkSession, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warcbphcenns", dir, listingKey(s, dir)), _ => {
+    fixturePathMemo.computeIfAbsent(("warcbphcenns", dir, Tables.listingKey(s, dir)), _ => {
       val ids = t(s, dir, "documents").select(col("doc_id"))
       // "warcbphcenns" (h = host-keyed footer token, c = charset declaration
       // classes, e = r16 ENCODING classes: latin-1/UTF-8-BOM/UTF-16LE
@@ -760,22 +724,26 @@ object SparkEntry {
 
   /** Assemble per-node component rows from a CC labeling over the edge
     * table's node set: singletons (self-loop-only nodes carry no pair)
-    * via the left join, sizes in one hash aggregate. Shared by
-    * `graph_components` and its incremental twin so the two queries can
-    * only differ in HOW the labeling was computed.
+    * via the left join, sizes as a count over the component's window.
+    * Shared by `graph_components` and its incremental twin so the two
+    * queries can only differ in HOW the labeling was computed.
+    *
+    * The size is a window, not a join back to a grouped count: a
+    * self-join through an aggregate let AQE pick its join per run from
+    * whichever side's shuffle finished first (a shuffled join, or a
+    * broadcast of either side), and each pick is different generated
+    * code, so warm runs compiled anew.
     */
   private def componentAssembly(edges: DataFrame, labeling: DataFrame): DataFrame = {
     val nodes = edges.select(col("src").as("node"))
       .unionByName(edges.select(col("dst").as("node"))).distinct()
     val labels = labeling
       .select(col("doc_id").as("node"), col("cluster_id").as("component_id"))
-    val lab = nodes.join(labels, Seq("node"), "left")
+    nodes.join(labels, Seq("node"), "left")
       .select(col("node"),
         coalesce(col("component_id"), col("node")).as("component_id"))
-    val sizes = lab.groupBy("component_id")
-      .agg(count(lit(1)).as("component_size"))
-    lab.join(sizes, Seq("component_id"))
-      .select(col("node"), col("component_id"), col("component_size"))
+      .withColumn("component_size",
+        count(lit(1)).over(Window.partitionBy("component_id")))
       .orderBy("node")
   }
 
@@ -786,7 +754,7 @@ object SparkEntry {
     * payload classes (h = host-keyed footer, c = charset declarations).
     */
   private def warcBpIngestPath(s: SparkSession, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warcbpingesthcenns", dir, listingKey(s, dir)), _ => {
+    fixturePathMemo.computeIfAbsent(("warcbpingesthcenns", dir, Tables.listingKey(s, dir)), _ => {
       val ids = t(s, dir, "documents").select(col("doc_id"))
       ensureIndex(s, ids, "warcbpingesthcenns", "built") { p =>
         val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
@@ -1092,7 +1060,7 @@ object SparkEntry {
     * compacted index.
     */
   private def warcIngestPath(s: SparkSession, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warcingestl2qr", dir, listingKey(s, dir)),
+    fixturePathMemo.computeIfAbsent(("warcingestl2qr", dir, Tables.listingKey(s, dir)),
       _ => warcIngestPathUncached(s, dir))
 
   private def warcIngestPathUncached(s: SparkSession, dir: String): String = {
@@ -1121,7 +1089,7 @@ object SparkEntry {
 
   /** PERSISTED crawl scheduling state — converged ranks AND the
     * discovered-URL candidate table — keyed by the archive's SEGMENT
-    * LISTING (names+sizes, [[listingKey]]), never by extracted content:
+    * LISTING (names+sizes, [[Tables.listingKey]]), never by extracted content:
     * an unchanged archive must cost a scheduling query an O(listing)
     * freshness check, not the WARC parse + href extraction + resolution
     * join the r13 content fingerprint re-ran per decision. New or
@@ -1136,7 +1104,7 @@ object SparkEntry {
   private def crawlIndexPath(s: SparkSession, dir: String): String = {
     val fixture = warcFixturePath(s, dir)
     ensureIndexNamed(s, "crawlsched",
-        listingKey(s, s"$fixture/files"), "ranks") { p =>
+        Tables.listingKey(s, s"$fixture/files"), "ranks") { p =>
       val resp = graft.sources.Warc.responses(
         graft.sources.Warc.readRecords(s, s"$fixture/files")).toDF()
       // the discovered-URL table: one row per canonical url with its
@@ -1207,7 +1175,7 @@ object SparkEntry {
       .digest((roster :+ s"b${upToBatch.getOrElse(-1L)}")
         .mkString("\n").getBytes("UTF-8"))
     // n from the roster TEXT bytes (names+sizes), not the file count —
-    // same cross-SF coexistence rationale as listingKey
+    // same cross-SF coexistence rationale as Tables.listingKey
     val name = f"n${roster.map(_.length + 1L).sum}" +
       f"_x${java.nio.ByteBuffer.wrap(md).getLong}%016x"
     val path = ensureIndexNamed(s, "crawlrankm", name, "ranks") { p =>
@@ -3123,8 +3091,15 @@ object SparkEntry {
         iterations = 8, init = Some(oldRanks))
       val cold = graft.operators.Graph.pageRank(full, "src", "dst",
         iterations = 10)
-      val gate = cold.join(warm.withColumnRenamed("rank", "wrank"), Seq("node"))
-        .agg(max(abs(col("rank") - col("wrank"))).as("m"))
+      // both walks rank the same node set (every endpoint of `full`), so
+      // the per-node difference is a sum over the two vectors' union. A
+      // join of the two would let AQE pick its build side per run from
+      // whichever walk's shuffle finished first, compiling new code for
+      // each pick; the union has one plan.
+      val gate = cold.select(col("node"), col("rank").as("d"))
+        .unionByName(warm.select(col("node"), (-col("rank")).as("d")))
+        .groupBy("node").agg(sum("d").as("d"))
+        .agg(max(abs(col("d"))).as("m"))
         .select((col("m") <= 2e-3).as("ok"))
       cold.crossJoin(broadcast(gate))
         .select(col("node"), round(col("rank"), 6).as("rank"),
@@ -3941,14 +3916,13 @@ object SparkEntry {
     // component splits where link density does, the site-section /
     // topic-blob granularity crawl analysts budget by. 5 synchronized
     // rounds, ties to the smallest label, so the recursive oracle
-    // replays every round exactly. Sizes via one extra hash aggregate.
+    // replays every round exactly. Sizes as a window count, for the
+    // reason componentAssembly gives.
     "graph_lpa" -> ((s, dir) => {
-      val lab = graft.operators.Graph.labelPropagation(
-        warcLinkEdges(s, dir), "src", "dst", iterations = 5)
-      val sizes = lab.groupBy("community")
-        .agg(count(lit(1)).as("community_size"))
-      lab.join(sizes, Seq("community"))
-        .select(col("node"), col("community"), col("community_size"))
+      graft.operators.Graph.labelPropagation(
+          warcLinkEdges(s, dir), "src", "dst", iterations = 5)
+        .select(col("node"), col("community"),
+          count(lit(1)).over(Window.partitionBy("community")).as("community_size"))
         .orderBy("node")
     }),
 

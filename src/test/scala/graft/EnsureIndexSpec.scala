@@ -40,8 +40,8 @@ class EnsureIndexSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("listing_key_spec")
     val f = dir.resolve("seg.dat")
     java.nio.file.Files.write(f, "0123456789".getBytes("UTF-8"))
-    val k1 = SparkEntry.listingKey(spark, dir.toString)
-    assert(k1 === SparkEntry.listingKey(spark, dir.toString),
+    val k1 = graft.sources.Tables.listingKey(spark, dir.toString)
+    assert(k1 === graft.sources.Tables.listingKey(spark, dir.toString),
       "an unchanged listing must key identically")
     // in-place regeneration: same name, same byte length, different content.
     // mtime is bumped explicitly (filesystem mtime granularity can be 1s —
@@ -51,7 +51,7 @@ class EnsureIndexSpec extends SparkSpec {
     java.nio.file.Files.setLastModifiedTime(f,
       java.nio.file.attribute.FileTime.fromMillis(
         java.nio.file.Files.getLastModifiedTime(f).toMillis + 5000))
-    val k2 = SparkEntry.listingKey(spark, dir.toString)
+    val k2 = graft.sources.Tables.listingKey(spark, dir.toString)
     assert(k1 !== k2,
       "a same-size in-place rewrite must change the listing key")
     // the byte-total n prefix is unchanged (cross-SF coexistence keys on n)

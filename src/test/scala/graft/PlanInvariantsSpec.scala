@@ -448,4 +448,45 @@ class PlanInvariantsSpec extends AnyFunSuite {
     assert(nestedOffenders.result().isEmpty,
       s"queries emitting non-scalar top-level columns: ${nestedOffenders.result()}")
   }
+
+  // Compile-reuse invariant: a warm run of a registry query compiles no new
+  // generated code. Three faults break it. A per-iteration value inlined as
+  // a literal (`lit(total)`) makes every run's code new. A working set
+  // larger than Spark's codegen cache (`spark.sql.codegen.cache.maxEntries`,
+  // sized in GraftSession) evicts in LRU order, so a sweep of queries
+  // recompiles on every pass. A plan that AQE settles differently from run
+  // to run (a join whose strategy depends on which side's shuffle finished
+  // first) compiles each variant the first time it shows up. The queries
+  // run as three passes in one session, and each query's third run must add
+  // 0 to Spark's compile count (`CodegenMetrics`, as GraphSpec's hits test
+  // counts it). They are the benchmark's `interactive` list (the notebook
+  // analyst's small queries) and the iterative graph and crawl kernels,
+  // which run a fixed budget of rounds and so would compile per round if a
+  // round's value reached the code.
+  test("compile reuse: the third pass over the interactive list and the " +
+      "iterative graph queries compiles no new code") {
+    assume(available)
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val interactive = {
+      val src = scala.io.Source.fromFile("perfbench/interactive_queries.txt", "UTF-8")
+      try src.getLines().map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toList
+      finally src.close()
+    }
+    val names = interactive ++ Seq("graph_components", "graph_hits",
+      "graph_pagerank", "graph_lpa", "pipeline_crawl_refresh")
+    assert(interactive.size === 20 && names.forall(SparkEntry.queries.contains))
+    val passes = (1 to 3).map { _ =>
+      names.map { n =>
+        val c0 = METRIC_COMPILATION_TIME.getCount
+        graft.tools.TimedRun.once(spark)(SparkEntry.queries(n)(spark, dir)).orThrow
+        n -> (METRIC_COMPILATION_TIME.getCount - c0)
+      }
+    }
+    val recompiled = passes(2).filter(_._2 > 0)
+    assert(recompiled.isEmpty,
+      "warm runs compiled new code (query: compiles on passes 1, 2, 3):\n" +
+        recompiled.map { case (n, _) =>
+          s"  $n: ${passes.map(_.toMap.apply(n)).mkString(", ")}"
+        }.mkString("\n"))
+  }
 }
