@@ -17,6 +17,18 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark.sql("SELECT key, smallest_k(struct(-score, id), 5) FROM t GROUP BY key")
   * }}}
   *
+  * It also injects the two small-input planning rules of
+  * [[SmallInputPlanning]], both gated on the one threshold
+  * `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MiB):
+  *  - after the planner, a scan of one file of at most that size is wrapped
+  *    in `CoalesceExec(1)`, so `EnsureRequirements` adds no exchange above it;
+  *  - after `EnsureRequirements`, a global sort's range shuffle over at most
+  *    that many bytes becomes a `SinglePartition` shuffle, with no sampling
+  *    job.
+  * Inputs over the threshold keep their exchanges, so plans at scale are
+  * unchanged. Both rules are AQE-only: Spark applies post-planner and
+  * query-stage-prep rules inside adaptive execution.
+  *
   * Enabled via `spark.sql.extensions=graft.GraftExtensions` (GraftSession
   * sets it by default).
   */
@@ -52,5 +64,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       c => PosTagExpr(c.head))
     register(ext, "html_text", classOf[HtmlTextExtract].getName, 1,
       c => HtmlTextExtract(c.head))
+    ext.injectQueryPostPlannerStrategyRule(_ => SmallInputPlanning.SingleFileScan)
+    ext.injectQueryStagePrepRule(_ => SmallInputPlanning.SmallRangeShuffle)
   }
 }

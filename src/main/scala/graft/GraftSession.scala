@@ -11,6 +11,17 @@ import org.apache.spark.sql.SparkSession
   * the 200 default, UTC session time zone for oracle parity, parquet
   * timestamps as TIMESTAMP_MICROS (portable, no INT96 legacy).
   *
+  * Small inputs: `GraftExtensions` adds two planning rules
+  * ([[SmallInputPlanning]]) that share one threshold, Spark's own
+  * `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MiB,
+  * left at its default here). A scan of one file of at most that size is
+  * wrapped in `CoalesceExec(1)`, so no exchange is planned above it; a
+  * global sort's range shuffle over at most that many bytes becomes a
+  * `SinglePartition` shuffle, with no range-sampling job. AQE would
+  * coalesce those shuffles to one partition anyway. Inputs over 1 MiB keep
+  * their exchanges, so plans at scale are unchanged. The rules are
+  * AQE-only: without `spark.sql.adaptive.enabled` they do not run.
+  *
   * Codegen cache: `spark.sql.codegen.cache.maxEntries` is 4000 (Spark's
   * default is 100). It is a static conf, read once per JVM when the first
   * class is compiled, so it is set here rather than per query. It is sized

@@ -252,6 +252,27 @@ object SparkEntry {
       .orderBy("week_us")
   }
 
+  /** `count(*)` as `rows`, and the exact `countDistinct` of each of `cols`
+    * under its paired name, per `keys`. This is the plan Spark makes for
+    * several `countDistinct`s in one `agg`: each input row becomes one row
+    * per counted column, tagged with the column's position; one
+    * aggregation groups by (keys, tag, value), a second by the keys. Spark
+    * orders the columns by a hash of their expression ids, which are new
+    * on every build of a query, so a rebuilt query planned them in another
+    * order about half the time and compiled new code for it. Here the
+    * order is the argument order. The counted columns share one type.
+    */
+  private def countDistincts(df: DataFrame, keys: Seq[String], rows: String,
+      cols: (String, String)*): DataFrame =
+    df.select(keys.map(col) :+
+        posexplode(array(cols.map(c => col(c._1)): _*)).as(Seq("tag", "value")): _*)
+      .groupBy((keys ++ Seq("tag", "value")).map(col): _*).agg(count(lit(1)).as("n"))
+      .groupBy(keys.map(col): _*)
+      .agg(coalesce(sum(when(col("tag") === 0, col("n"))), lit(0L)).as(rows),
+        cols.zipWithIndex.map { case ((_, name), i) =>
+          count(when(col("tag") === i && col("value").isNotNull, lit(1))).as(name)
+        }: _*)
+
   /** Trailing-7-day WAU derivation over a (user_id, day) frame — shared
     * by events_wau and events_wau_streamed under ONE oracle. Input rows
     * may carry duplicates; the distinct here is part of the contract.
@@ -2516,9 +2537,8 @@ object SparkEntry {
           graft.functions.Url.canonicalizeUrl(col("uri")).as("self_url"),
           coalesce(graft.functions.Url.canonicalizeUrl(decl),
             graft.functions.Url.canonicalizeUrl(col("uri"))).as("resolved_url"))
-        .agg(count(lit(1)).as("n_pages"),
-          countDistinct(col("self_url")).as("n_url_groups"),
-          countDistinct(col("resolved_url")).as("n_canonical_groups"))
+        .transform(countDistincts(_, Nil, "n_pages",
+          "self_url" -> "n_url_groups", "resolved_url" -> "n_canonical_groups"))
     }),
 
     // HREFLANG translation clusters (HtmlTextColumn.alternateLinkTags):
@@ -2958,9 +2978,8 @@ object SparkEntry {
       bpScoredBlocks(s, dir).groupBy("doc_id")
         .agg(joined(struct(col("pos"), col("text"))).as("raw_md5"),
           joined(when(col("kept"), struct(col("pos"), col("text")))).as("main_md5"))
-        .agg(count(lit(1)).as("n_pages"),
-          countDistinct(col("raw_md5")).as("n_raw_distinct"),
-          countDistinct(col("main_md5")).as("n_main_distinct"))
+        .transform(countDistincts(_, Nil, "n_pages",
+          "raw_md5" -> "n_raw_distinct", "main_md5" -> "n_main_distinct"))
     }),
 
     // CCNET-STYLE PARAGRAPH DEDUP (Wenzek et al. 2020 §4.1: hash every
@@ -3638,10 +3657,8 @@ object SparkEntry {
           md5(graft.functions.HtmlTextColumn.htmlText(col("body")))
             .as("content_md5"))
         .filter(col("url").isNotNull)
-      pages.groupBy("host")
-        .agg(count(lit(1)).as("n_fetches"),
-          countDistinct(col("url")).as("n_urls"),
-          countDistinct(col("content_md5")).as("n_contents"))
+      countDistincts(pages, Seq("host"), "n_fetches",
+        "url" -> "n_urls", "content_md5" -> "n_contents")
         .select(col("host"), col("n_fetches"), col("n_urls"), col("n_contents"),
           round(col("n_fetches").cast("double") / col("n_urls"), 4)
             .as("alias_rate"),

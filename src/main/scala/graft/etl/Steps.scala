@@ -121,6 +121,12 @@ object Steps {
     * new id: it is the output mapping (round, original_id) → id, in the
     * same frame, so [[cleanOutputs]] keys the DOI cache on it without a
     * second copy of the id window. `cleanOutputs` drops it.
+    *
+    * `Year` is cast strictly (F5; etl.py:364 calls `int()`, which raises).
+    * A value that is neither NULL nor integer text fails the task through
+    * `raise_error` with the named check [[YearCheck]], its `round`,
+    * `Output_ID` and the value. The check sits in the projection that
+    * casts, so it costs no job.
     */
   def fillOutput(outputs: DataFrame, outputTypes: DataFrame,
                  publicationStatuses: DataFrame): DataFrame = {
@@ -135,7 +141,7 @@ object Steps {
         col("OutputType").as("output_type"),
         col("PublicationStatus").as("publication_status"),
         col("Authors").as("authors"),
-        col("Year").cast("int").as("year"), // F5 (etl.py:364)
+        strictYear.as("year"), // F5 (etl.py:364)
         col("Title").as("title"),
         col("Publisher").as("publisher"),
         col("URL").as("url"),
@@ -144,6 +150,17 @@ object Steps {
         col("Conference").as("conference"),
         col("Degree").as("degree"),
         col("round"))
+  }
+
+  /** Name of [[fillOutput]]'s check that `Year` is integer text or NULL. */
+  val YearCheck = "output_year_is_integer"
+
+  private def strictYear: Column = {
+    val year = col("Year").try_cast("int")
+    when(col("Year").isNotNull && year.isNull, raise_error(format_string(
+      s"check $YearCheck failed: round %s, Output_ID %s, Year '%s'",
+      col("round"), col("Output_ID"), col("Year"))))
+      .otherwise(year)
   }
 
   /** CleanOutputs (etl.py:375-432): clean authors/title strings in place

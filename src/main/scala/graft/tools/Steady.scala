@@ -20,40 +20,30 @@ import scala.jdk.CollectionConverters._
   * NOT certify a cool box for the heavy shuffle queries — weigh
   * `load_avg_end` and the spread of the heavy runs themselves.
   *
-  * No selection threshold by default: every registry query gets a band
-  * (`scripts/steady_check.py` fails when one lacks it). A query whose
-  * warmup run is under `lightCut` (0.8 s) is banded from `lightRuns` (4)
-  * runs, the rest from `runs` (8).
+  * Every registry query gets a band (`scripts/steady_check.py` fails when
+  * one lacks it). A query whose warmup run is under `lightCut` (0.8 s) is
+  * banded from `lightRuns` (4) runs, the rest from `runs` (8).
   *
-  * usage: Steady <sfDir> <benchJson> [thresholdSec=0] [runs=8] [onlyCsv]
-  * (benchJson is consulted only when thresholdSec > 0 — legacy mode).
+  * usage: Steady <sfDir> [runs=8] [onlyCsv]
   * `onlyCsv` re-times only the listed queries and MERGES their bands into
   * the existing STEADY.json, every other band preserved verbatim.
   */
 object Steady {
   def main(args: Array[String]): Unit = {
     val sfDir     = args(0)
-    val benchJson = args(1)
-    val threshold = if (args.length > 2) args(2).toDouble else 0.0
-    val runs      = if (args.length > 3) args(3).toInt else 8
+    val runs      = if (args.length > 1) args(1).toInt else 8
     val only: Option[Set[String]] =
-      if (args.length > 4) Some(args(4).split(",").toSet) else None
+      if (args.length > 2) Some(args(2).split(",").toSet) else None
     val lightRuns = math.min(4, runs)
     val lightCut  = 0.8
     val cpus      = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
-    // the "queries" object of a bench or STEADY artifact, via the Jackson
-    // that ships with Spark — no extra dependency
+    // the "queries" object of a STEADY artifact, via the Jackson that
+    // ships with Spark — no extra dependency
     def queriesOf(path: String) = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))).get("queries")
     val all = SparkEntry.queries.keys.toSeq.sorted
-    val heavy =
-      if (only.isDefined) all.filter(only.get.contains)
-      else if (threshold <= 0.0) all
-      else { // legacy selection mode
-        val q = queriesOf(benchJson)
-        all.filter(n => q.has(n) && q.get(n).asDouble(-1.0) >= threshold)
-      }
+    val timed = only.fold(all)(o => all.filter(o.contains))
 
     val spark = GraftSession.get(s"local[$cpus]", shufflePartitions = cpus)
     // a failing query fails the whole regen: a band needs every run
@@ -69,7 +59,7 @@ object Steady {
     // canary FIRST: its run-1 JIT absorbs session warmup off the heavy
     // queries' clocks, same as Bench's alphabetical order does in practice
     val canary = timeQuery("s1_scan_project").map(_.sec)
-    val rows = heavy.map { name =>
+    val rows = timed.map { name =>
       val runsQ = timeQuery(name)
       System.gc()
       val ts = runsQ.map(_.sec)
@@ -91,7 +81,7 @@ object Steady {
     }
     val allRows = (kept ++ rows).mkString(",")
     val json =
-      s"""{"sf":"$sfDir","runs":$runs,"threshold_sec":$threshold,""" +
+      s"""{"sf":"$sfDir","runs":$runs,""" +
         s""""producer":"$producer","load_avg_end":$load,""" +
         s""""canary":${arr(canary.map(num))},""" +
         s""""queries":{$allRows}}"""

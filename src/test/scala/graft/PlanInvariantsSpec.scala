@@ -449,31 +449,62 @@ class PlanInvariantsSpec extends AnyFunSuite {
       s"queries emitting non-scalar top-level columns: ${nestedOffenders.result()}")
   }
 
+  private def interactiveQueries: List[String] = {
+    val src = scala.io.Source.fromFile("perfbench/interactive_queries.txt", "UTF-8")
+    try src.getLines().map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toList
+    finally src.close()
+  }
+
+  // The benchmark's `interactive` list: every input here is one small file
+  // (or a frame built from one), so with the small-input planning rules
+  // (`SmallInputPlanning`) no query samples range bounds for its output
+  // sort. The check reads the final adaptive plan, after the run.
+  test("small inputs: no interactive query plans a range shuffle") {
+    assume(available)
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    val names = interactiveQueries
+    assert(names.size === 20)
+    val ranged = names.filter { n =>
+      val df = SparkEntry.queries(n)(spark, dir)
+      graft.tools.TimedRun.once(spark)(df).orThrow
+      helper.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }.nonEmpty
+    }
+    assert(ranged.isEmpty, s"queries whose final plan still has a range shuffle: $ranged")
+  }
+
   // Compile-reuse invariant: a warm run of a registry query compiles no new
-  // generated code. Three faults break it. A per-iteration value inlined as
+  // generated code. Four faults break it. A per-iteration value inlined as
   // a literal (`lit(total)`) makes every run's code new. A working set
   // larger than Spark's codegen cache (`spark.sql.codegen.cache.maxEntries`,
   // sized in GraftSession) evicts in LRU order, so a sweep of queries
   // recompiles on every pass. A plan that AQE settles differently from run
   // to run (a join whose strategy depends on which side's shuffle finished
-  // first) compiles each variant the first time it shows up. The queries
-  // run as three passes in one session, and each query's third run must add
-  // 0 to Spark's compile count (`CodegenMetrics`, as GraphSpec's hits test
-  // counts it). They are the benchmark's `interactive` list (the notebook
-  // analyst's small queries) and the iterative graph and crawl kernels,
-  // which run a fixed budget of rounds and so would compile per round if a
-  // round's value reached the code.
+  // first) compiles each variant the first time it shows up. Spark's
+  // rewrite of several `countDistinct`s in one aggregation orders the
+  // columns by a hash of their expression ids, so a rebuilt query can plan
+  // them in another order (`SparkEntry.countDistincts` fixes the order).
+  // The queries run as three passes in one session, and each query's third
+  // run must add 0 to Spark's compile count (`CodegenMetrics`, as
+  // GraphSpec's hits test counts it). They are the benchmark's `interactive`
+  // list (the notebook analyst's small queries); the iterative graph and
+  // crawl kernels, which run a fixed budget of rounds and so would compile
+  // per round if a round's value reached the code; the three queries that
+  // count several distinct columns; and `events_retention`, whose join
+  // raced.
   test("compile reuse: the third pass over the interactive list and the " +
       "iterative graph queries compiles no new code") {
     assume(available)
     import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
-    val interactive = {
-      val src = scala.io.Source.fromFile("perfbench/interactive_queries.txt", "UTF-8")
-      try src.getLines().map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toList
-      finally src.close()
-    }
+    val interactive = interactiveQueries
     val names = interactive ++ Seq("graph_components", "graph_hits",
-      "graph_pagerank", "graph_lpa", "pipeline_crawl_refresh")
+      "graph_pagerank", "graph_lpa", "pipeline_crawl_refresh",
+      "pipeline_crawl_trap_score", "warc_main_dedup", "warc_canonical_dedup",
+      "events_retention")
     assert(interactive.size === 20 && names.forall(SparkEntry.queries.contains))
     val passes = (1 to 3).map { _ =>
       names.map { n =>

@@ -307,6 +307,24 @@ class RebuildSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(e.guids === Seq(501L))
   }
 
+  test("a non-numeric output Year fails writeAll by its named check, with round, Output_ID and value") {
+    val in = fixtureInputs
+    val planted = in.copy(outputs = Seq(in.outputs.head,
+      outputsRound(Seq((1, "Paper two"), (7, "Paper three")))
+        .withColumn("Year", when(col("Output_ID") === 7, lit("MMX")).otherwise(col("Year")))))
+    val dir = java.nio.file.Files.createTempDirectory("rebuild_year").toString
+    val e = intercept[Exception](Rebuild.writeAll(Rebuild.run(planted), dir))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(c => String.valueOf(c.getMessage)).toSeq
+    assert(messages.exists(_.contains(
+      s"check ${Steps.YearCheck} failed: round 2, Output_ID 7, Year 'MMX'")), messages)
+    assert(e.getSuppressed.exists(_.getMessage.contains("'output'")), e.getSuppressed.toSeq)
+    // NULL and integer text pass the check
+    val nullYear = in.copy(outputs = in.outputs.map(_.withColumn("Year",
+      when(col("Output_ID") === 1, lit(null).cast("string")).otherwise(col("Year")))))
+    assert(Rebuild.run(nullYear)("output").filter(col("year").isNull).count() === 2)
+  }
+
   /** The job group of every job `body` starts, in start order. */
   private def jobGroupsDuring(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
