@@ -29,29 +29,6 @@ object SparkEntry {
 
   private def fmt(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss")
 
-  /** Cut lineage before a final global ORDER BY when the segment feeding
-    * the sort is expensive map-side work (codec decode, O(n²) scoring,
-    * window/id assignment) with no shuffle boundary of its own.
-    *
-    * Why (guide §1.4/§2.4, r17 measurement): a global sort plans as
-    * Exchange(rangepartitioning) whose RangePartitioner runs a SAMPLING
-    * job over the child plan before the shuffle executes that child
-    * AGAIN — segments between the last shuffle/broadcast boundary and
-    * the sort are computed twice per action. For scan-shaped queries the
-    * re-run is a cheap parquet re-read; for the multimodal synthesize +
-    * decode pipelines, the all-pairs cosine loop and the sequential-id
-    * assembly it doubled the whole query. The eager cut materializes the
-    * (always small — these are result frames) pre-sort rows once; the
-    * sample and the shuffle then read the materialized blocks.
-    * [[Checkpoints.LineageOps.cutLineage]] keeps the two-tier durability
-    * contract: reliable checkpoint under a configured checkpoint dir,
-    * zero-I/O localCheckpoint in single-JVM runs.
-    */
-  private def sortOnce(df: DataFrame, cols: Column*): DataFrame = {
-    import graft.operators.Checkpoints.LineageOps
-    df.cutLineage().orderBy(cols: _*)
-  }
-
   /** The testdata corpus has no NULL text, so the NULL-digest contract
     * (NULL dedups against NULL under the `<null-text>` sentinel, and never
     * against `''`) would go unexercised by the driver compare. This
@@ -1735,8 +1712,8 @@ object SparkEntry {
           col("home_institution_name"), col("home_institution_town"),
           col("home_institution_country").cast("bigint").as("home_institution_country"),
           col("number_of_visits"), col("round"))
-      // sortOnce shape inline: the id-assignment segment (global window /
-      // two-phase offsets join) re-ran under the final sort's sampling pass
+      // the id-assignment segment (global window / two-phase offsets
+      // join) re-ran under the final sort's sampling pass: cut it first
       .cutLineage()
       .orderBy("id")
 
@@ -4249,10 +4226,13 @@ object SparkEntry {
     // Embedding-cosine near-dup pairs (exact, norm-precomputed; LSH
     // prefilter is the scale path — see Similarity.cosinePairs docs).
     "dedup_embedding_pairs" -> ((s, dir) => {
-      // sortOnce: the O(n²) nested-loop scoring is the segment under the
-      // sort — without the cut the range-sampling pass ran it twice
-      sortOnce(Similarity.cosinePairs(t(s, dir, "embeddings"), threshold = 0.45),
-        col("doc_a"), col("doc_b"))
+      // the O(n²) nested-loop scoring is the segment under the sort, and
+      // its size estimate is too large for the small-sort rule, so the
+      // range-sampling pass would run it twice: cut it first (warm median
+      // 2.04 s with the cut, 3.27 s without, at sf0.1, local[4] on 4 vCPUs)
+      Similarity.cosinePairs(t(s, dir, "embeddings"), threshold = 0.45)
+        .cutLineage()
+        .orderBy(col("doc_a"), col("doc_b"))
     }),
 
     // Text quality metrics (token counts, stopword ratio, quality score).
@@ -4521,7 +4501,7 @@ object SparkEntry {
       val split = Curation.stratifiedSplit(capped, "doc_id", "source",
           testFrac = 0.1, valFrac = 0.1)
         .select(col("doc_id"), col("split"))
-      sortOnce(gated.select(col("doc_id"), col("source"), col("q_pass"))
+      gated.select(col("doc_id"), col("source"), col("q_pass"))
         .join(assign.select(col("doc_id"), col("is_keeper")), Seq("doc_id"), "left")
         .join(ranked.select(col("doc_id"), col("cap_rank")), Seq("doc_id"), "left")
         .join(split, Seq("doc_id"), "left")
@@ -4530,8 +4510,8 @@ object SparkEntry {
             .when(!col("is_keeper"), "near_duplicate")
             .when(col("cap_rank") > 15, "source_cap")
             .otherwise("kept").as("reason"),
-          coalesce(col("split"), lit("")).as("split")),
-        col("doc_id"))
+          coalesce(col("split"), lit("")).as("split"))
+        .orderBy(col("doc_id"))
     }),
 
     // Daily + cumulative active users: DAU per day, first-seen new users,
@@ -4894,13 +4874,13 @@ object SparkEntry {
       val media = Multimodal.synthesizeGifs(
         t(s, dir, "documents").select("doc_id")
           .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
-      sortOnce(Multimodal.sampleVideoFrames(media, every = 2).toDF()
+      Multimodal.sampleVideoFrames(media, every = 2).toDF()
         .select(col("media_id").as("doc_id"),
           col("frame_no").cast("bigint").as("frame_no"),
           col("width").cast("bigint").as("width"),
           col("height").cast("bigint").as("height"),
-          col("pixel_sum")),
-        col("doc_id"), col("frame_no"))
+          col("pixel_sum"))
+        .orderBy(col("doc_id"), col("frame_no"))
     }),
 
     // REAL perceptual hash from encoded bytes: synthesize md5-pixel 9x8
@@ -4916,10 +4896,10 @@ object SparkEntry {
       val media = Multimodal.synthesizePhashImages(
         t(s, dir, "documents").select("doc_id")
           .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
-      sortOnce(Multimodal.imageDHash(media).toDF()
+      Multimodal.imageDHash(media).toDF()
         .select(col("media_id").as("doc_id"), col("hash_hi"),
-          col("hash_lo"), col("decoded")),
-        col("doc_id"))
+          col("hash_lo"), col("decoded"))
+        .orderBy(col("doc_id"))
     }),
 
     // Image near-dup pairs at hamming <= 3 over the perceptual hashes —
@@ -4976,12 +4956,12 @@ object SparkEntry {
       val pairs = Dedup.hammingPairsHiLo(sigs, maxHamming = 3, bands = 4)
       val assigned = Dedup.clusterAssignments(passing, "doc_id", pairs)
       val keeper = coalesce(col("is_keeper"), lit(false))
-      sortOnce(docs.join(quality, Seq("doc_id"), "left")
+      docs.join(quality, Seq("doc_id"), "left")
         .join(assigned, Seq("doc_id"), "left")
         .select(col("doc_id"), col("quality_ok"), col("cluster_id"),
           col("cluster_size"), keeper.as("is_keeper"),
-          (col("quality_ok") && keeper).as("kept")),
-        col("doc_id"))
+          (col("quality_ok") && keeper).as("kept"))
+        .orderBy(col("doc_id"))
     }),
 
     // Video QUALITY curation gate over REAL decoded frames — mean
@@ -5035,7 +5015,7 @@ object SparkEntry {
       val media = Multimodal.synthesizeMp4s(
         t(s, dir, "documents").select("doc_id")
           .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
-      sortOnce(Multimodal.decodeMp4Meta(media).toDF()
+      Multimodal.decodeMp4Meta(media).toDF()
         .select(col("media_id").as("doc_id"), col("major_brand"),
           col("timescale"), col("duration_units"), col("duration_s"),
           col("n_tracks").cast("long").as("n_tracks"),
@@ -5043,8 +5023,8 @@ object SparkEntry {
           col("n_audio_tracks").cast("long").as("n_audio_tracks"),
           col("decoded"),
           (col("decoded") && col("n_video_tracks") >= 1 &&
-            col("duration_s") >= 1.0).as("quality_ok")),
-        col("doc_id"))
+            col("duration_s") >= 1.0).as("quality_ok"))
+        .orderBy(col("doc_id"))
     }),
 
     // Audio QUALITY curation gate over REAL decoded PCM — silence (RMS
@@ -5113,11 +5093,11 @@ object SparkEntry {
       val media = Multimodal.synthesizePhashImages(
         t(s, dir, "documents").select("doc_id")
           .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
-      sortOnce(Multimodal.imageFeatures(media, bins = 16).toDF()
+      Multimodal.imageFeatures(media, bins = 16).toDF()
         .select(col("media_id").as("doc_id"),
           posexplode(col("histogram")).as(Seq("bin", "n")))
-        .select(col("doc_id"), col("bin").cast("bigint").as("bin"), col("n")),
-        col("doc_id"), col("bin"))
+        .select(col("doc_id"), col("bin").cast("bigint").as("bin"), col("n"))
+        .orderBy(col("doc_id"), col("bin"))
     }),
 
     // Image similarity search over the REAL extracted features: cosine
@@ -5634,10 +5614,10 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minhashBandedPairs(docs, "text", "doc_id",
         n = 3, threshold = 0.7)
-      sortOnce(Dedup.clusterKeepersByScore(
+      Dedup.clusterKeepersByScore(
           docs.withColumn("quality", TextStats.qualityScore(col("text"))),
-          "doc_id", "quality", pairs),
-        col("doc_id"))
+          "doc_id", "quality", pairs)
+        .orderBy(col("doc_id"))
     }),
 
     // Gopher-style rule-based quality gate (word-count / mean-word-length /
@@ -6703,8 +6683,8 @@ object SparkEntry {
     // 4-gram repeats, merged into maximal per-doc runs ≥ 8 tokens — the
     // spans an exact-substring-dedup rewrite removes.
     "text_span_cuts" -> ((s, dir) => {
-      sortOnce(Curation.duplicatedSpanCuts(t(s, dir, "documents"), "text", "doc_id"),
-        col("doc_id"), col("start_pos"))
+      Curation.duplicatedSpanCuts(t(s, dir, "documents"), "text", "doc_id")
+        .orderBy(col("doc_id"), col("start_pos"))
     }),
 
     // The rewrite half: corpus with every ≥8-token duplicated span removed
@@ -6714,8 +6694,8 @@ object SparkEntry {
     "text_span_rewrite" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val cuts = Curation.duplicatedSpanCuts(docs, "text", "doc_id")
-      sortOnce(Curation.applySpanCuts(docs, "text", "doc_id", cuts),
-        col("doc_id"))
+      Curation.applySpanCuts(docs, "text", "doc_id", cuts)
+        .orderBy(col("doc_id"))
     }),
 
     // Bucketized range join: events against keyed campaign windows (per
@@ -6857,8 +6837,8 @@ object SparkEntry {
         n = 3, threshold = 0.7)
       val assign = Dedup.clusterAssignments(docs, "doc_id", pairs)
         .select(col("doc_id"), col("cluster_id"))
-      sortOnce(Curation.groupAwareSplit(assign, testFrac = 0.1, valFrac = 0.1),
-        col("doc_id"))
+      Curation.groupAwareSplit(assign, testFrac = 0.1, valFrac = 0.1)
+        .orderBy(col("doc_id"))
     }),
 
     "dedup_incremental" -> ((s, dir) => {

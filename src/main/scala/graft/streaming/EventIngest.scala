@@ -17,47 +17,41 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Scale stance: a batch writes O(windows × types) partial rows, never
   * raw events; the merge read aggregates partials, not history — the "a
   * day of events lands on the rollup without recomputing the month"
-  * shape. Replay follows the [[BatchMarker]] exactly-once protocol
-  * (marker AFTER the append commits; partial dirs deleted and rewritten
-  * on replay).
+  * shape. Each table is one sink of the [[BatchMarker.ingest]]
+  * exactly-once core.
   */
 object EventIngest {
 
   def start(events: DataFrame, aggPath: String, checkpoint: String,
       windowDur: String = "1 hour"): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, aggPath, windowDur)
-      }
-      .start()
+    BatchMarker.stream(events, checkpoint)(
+      processBatch(_, _, aggPath, windowDur))
+
+  /** One single-sink micro-batch of the table `name` under `aggPath`,
+    * through the [[BatchMarker.ingest]] core: `rows` of a non-empty batch
+    * append under `<aggPath>/<name>/batch_id=<b>/`.
+    */
+  private def ingest(batch: DataFrame, batchId: Long, aggPath: String,
+      name: String)(rows: => DataFrame): Unit = {
+    val sink = BatchMarker.Sink(aggPath, name, s"$aggPath/$name")
+    BatchMarker.ingest(batch, batchId, Seq(sink), skipEmpty = true)(
+      _.append(sink)(rows))
+  }
 
   /** One micro-batch, callable from tests and backfills directly. */
   def processBatch(batch: DataFrame, batchId: Long, aggPath: String,
-      windowDur: String = "1 hour"): Unit = {
-    val spark = batch.sparkSession
-    val agg = s"$aggPath/agg"
-    BatchMarker.assertMarkeredSink(spark, aggPath, s"$agg/batch_id=*")
-    BatchMarker.ensureProtocol(spark, aggPath)
-    if (BatchMarker.landed(spark, aggPath, "agg", batchId)) return
-    BatchMarker.clearPartial(spark, s"$agg/batch_id=$batchId")
-    if (batch.isEmpty) {
-      BatchMarker.commit(spark, aggPath, "agg", batchId)
-      return
+      windowDur: String = "1 hour"): Unit =
+    ingest(batch, batchId, aggPath, "agg") {
+      // decimal partials: exact under re-aggregation, so streamed ≡ batch
+      // bit-for-bit after the final cast (the oracle-determinism rule the
+      // batch query already follows)
+      batch
+        .groupBy(window(col("ts"), windowDur).as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast("decimal(18,2)")).as("partial_value"))
+        .select(col("w.start").as("window_start"), col("event_type"),
+          col("n"), col("partial_value"))
     }
-    // decimal partials: exact under re-aggregation, so streamed ≡ batch
-    // bit-for-bit after the final cast (the oracle-determinism rule the
-    // batch query already follows)
-    batch
-      .groupBy(window(col("ts"), windowDur).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).as("partial_value"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n"), col("partial_value"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").partitionBy("batch_id").parquet(agg)
-    BatchMarker.commit(spark, aggPath, "agg", batchId)
-  }
 
   /** Streamed maintenance of the (user, day) ACTIVITY table — set-union
     * accumulation, the other merge class next to [[processBatch]]'s
@@ -69,23 +63,11 @@ object EventIngest {
     * exactly from the accumulated set — no sketches, no approximation.
     */
   def processActivityBatch(batch: DataFrame, batchId: Long,
-      aggPath: String): Unit = {
-    val spark = batch.sparkSession
-    val act = s"$aggPath/activity"
-    BatchMarker.assertMarkeredSink(spark, aggPath, s"$act/batch_id=*")
-    BatchMarker.ensureProtocol(spark, aggPath)
-    if (BatchMarker.landed(spark, aggPath, "activity", batchId)) return
-    BatchMarker.clearPartial(spark, s"$act/batch_id=$batchId")
-    if (batch.isEmpty) {
-      BatchMarker.commit(spark, aggPath, "activity", batchId)
-      return
+      aggPath: String): Unit =
+    ingest(batch, batchId, aggPath, "activity") {
+      batch.select(col("user_id"), date_trunc("day", col("ts")).as("day"))
+        .distinct()
     }
-    batch.select(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .distinct()
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").partitionBy("batch_id").parquet(act)
-    BatchMarker.commit(spark, aggPath, "activity", batchId)
-  }
 
   /** Streamed maintenance of per-day HLL SKETCHES — the third merge class
     * beside additive partials and set-union pairs: each batch appends one
@@ -98,24 +80,12 @@ object EventIngest {
     * against the exact count (the recall-gate convention).
     */
   def processSketchBatch(batch: DataFrame, batchId: Long,
-      aggPath: String): Unit = {
-    val spark = batch.sparkSession
-    val sk = s"$aggPath/sketches"
-    BatchMarker.assertMarkeredSink(spark, aggPath, s"$sk/batch_id=*")
-    BatchMarker.ensureProtocol(spark, aggPath)
-    if (BatchMarker.landed(spark, aggPath, "sketches", batchId)) return
-    BatchMarker.clearPartial(spark, s"$sk/batch_id=$batchId")
-    if (batch.isEmpty) {
-      BatchMarker.commit(spark, aggPath, "sketches", batchId)
-      return
+      aggPath: String): Unit =
+    ingest(batch, batchId, aggPath, "sketches") {
+      batch.select(date_trunc("day", col("ts")).as("day"), col("user_id"))
+        .groupBy(col("day"))
+        .agg(hll_sketch_agg(col("user_id")).as("sketch"))
     }
-    batch.select(date_trunc("day", col("ts")).as("day"), col("user_id"))
-      .groupBy(col("day"))
-      .agg(hll_sketch_agg(col("user_id")).as("sketch"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").partitionBy("batch_id").parquet(sk)
-    BatchMarker.commit(spark, aggPath, "sketches", batchId)
-  }
 
   /** Estimated DAU per day from the accumulated sketches: one union-agg
     * per day over O(batches) sketch rows, then the estimate.
@@ -192,9 +162,7 @@ object EventIngest {
   def activityFromAccumulated(spark: SparkSession, aggPath: String,
       userIdType: org.apache.spark.sql.types.DataType =
         org.apache.spark.sql.types.LongType): DataFrame = {
-    val act = new org.apache.hadoop.fs.Path(s"$aggPath/activity")
-    val fs = act.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(act)) {
+    if (!BatchMarker.exists(spark, s"$aggPath/activity")) {
       import org.apache.spark.sql.types._
       return spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
@@ -215,9 +183,7 @@ object EventIngest {
     // a rollup whose every batch was empty has markers but no agg/ dir —
     // that is an EMPTY aggregate, not a read error (the batch twin over
     // zero events returns empty too)
-    val agg = new org.apache.hadoop.fs.Path(s"$aggPath/agg")
-    val fs = agg.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(agg)) {
+    if (!BatchMarker.exists(spark, s"$aggPath/agg")) {
       import org.apache.spark.sql.types._
       return spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
@@ -255,53 +221,40 @@ object EventIngest {
     * cadence, same as [[LinkIngest]].
     */
   def processSessionBatch(batch: DataFrame, batchId: Long, aggPath: String,
-      gapMinutes: Int): Unit = {
-    val spark = batch.sparkSession
-    val st = s"$aggPath/sessions"
-    BatchMarker.assertMarkeredSink(spark, aggPath, s"$st/batch_id=*")
-    BatchMarker.ensureProtocol(spark, aggPath)
-    if (BatchMarker.landed(spark, aggPath, "sessions", batchId)) return
-    BatchMarker.clearPartial(spark, s"$st/batch_id=$batchId")
-    if (batch.isEmpty) {
-      BatchMarker.commit(spark, aggPath, "sessions", batchId)
-      return
+      gapMinutes: Int): Unit =
+    ingest(batch, batchId, aggPath, "sessions") {
+      val prior = sessionStateFromAccumulated(batch.sparkSession, aggPath)
+        .select(col("user_id"), col("last_us").as("carried_us"),
+          col("n_sessions").as("carried_sessions"),
+          col("n_events").as("carried_events"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+      val gapMicros = gapMinutes.toLong * 60L * 1000000L
+      batch.select(col("user_id"), col("ts"), col("event_id"))
+        .join(prior, Seq("user_id"), "left")
+        // predecessor time: previous event in THIS batch, else the
+        // carried last event of the open session (null = user's very
+        // first event)
+        .withColumn("prev_us",
+          coalesce(lag(unix_micros(col("ts")), 1).over(w), col("carried_us")))
+        .withColumn("brk",
+          when(col("prev_us").isNull ||
+            unix_micros(col("ts")) - col("prev_us") > gapMicros, 1L)
+            .otherwise(0L))
+        .groupBy(col("user_id"))
+        .agg(max(unix_micros(col("ts"))).as("last_us"),
+          (coalesce(max(col("carried_sessions")), lit(0L)) + sum(col("brk")))
+            .as("n_sessions"),
+          (coalesce(max(col("carried_events")), lit(0L)) + count(lit(1)))
+            .as("n_events"))
     }
-    val prior = sessionStateFromAccumulated(spark, aggPath)
-      .select(col("user_id"), col("last_us").as("carried_us"),
-        col("n_sessions").as("carried_sessions"),
-        col("n_events").as("carried_events"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val gapMicros = gapMinutes.toLong * 60L * 1000000L
-    batch.select(col("user_id"), col("ts"), col("event_id"))
-      .join(prior, Seq("user_id"), "left")
-      // predecessor time: previous event in THIS batch, else the carried
-      // last event of the open session (null = user's very first event)
-      .withColumn("prev_us",
-        coalesce(lag(unix_micros(col("ts")), 1).over(w), col("carried_us")))
-      .withColumn("brk",
-        when(col("prev_us").isNull ||
-          unix_micros(col("ts")) - col("prev_us") > gapMicros, 1L)
-          .otherwise(0L))
-      .groupBy(col("user_id"))
-      .agg(max(unix_micros(col("ts"))).as("last_us"),
-        (coalesce(max(col("carried_sessions")), lit(0L)) + sum(col("brk")))
-          .as("n_sessions"),
-        (coalesce(max(col("carried_events")), lit(0L)) + count(lit(1)))
-          .as("n_events"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").partitionBy("batch_id").parquet(st)
-    BatchMarker.commit(spark, aggPath, "sessions", batchId)
-  }
 
   /** Each user's latest carried session state over the accumulated
     * deltas: (user_id, last_us, n_sessions, n_events).
     */
   def sessionStateFromAccumulated(spark: SparkSession,
       aggPath: String): DataFrame = {
-    val st = new org.apache.hadoop.fs.Path(s"$aggPath/sessions")
-    val fs = st.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(st)) {
+    if (!BatchMarker.exists(spark, s"$aggPath/sessions")) {
       import org.apache.spark.sql.types._
       return spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Retrieval
+import graft.streaming.BatchMarker.Sink
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -17,11 +18,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * time from the accumulated tables, so they are always current without
   * any maintained aggregate.
   *
-  * Exactly-once per batchId, the [[IngestWithDigest]] recipe: the two
-  * parquet appends cannot commit atomically together, so EACH table
-  * carries batch_id and keeps its own replay guard — a crash between the
-  * appends replays into "doclens has this batch, postings does not", the
-  * doclens append is skipped and the postings append completes the pair.
+  * Exactly-once per batchId through the [[BatchMarker.ingest]] core, one
+  * sink per table: the two parquet appends cannot commit atomically
+  * together, so a crash between them replays into "doclens has this
+  * batch, postings does not" and only the postings append runs again.
   * Until the replay lands, [[bm25TopK]] restricts itself to batches
   * present in BOTH tables — an orphaned half must not even skew the
   * derived n_docs/avgdl statistics, let alone score.
@@ -38,53 +38,28 @@ object IndexIngest {
     */
   def start(docs: DataFrame, indexPath: String, checkpoint: String,
       textCol: String = "text", idCol: String = "doc_id"): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, indexPath, textCol, idCol)
-      }
-      .start()
+    BatchMarker.stream(docs, checkpoint)(
+      processBatch(_, _, indexPath, textCol, idCol))
+
+  private def sinks(indexPath: String, outer: Option[String] = None) = (
+    Sink(indexPath, "postings", s"$indexPath/postings", outer),
+    Sink(indexPath, "doclens", s"$indexPath/doclens"))
 
   /** One micro-batch, callable from tests directly. */
   def processBatch(batch: DataFrame, batchId: Long, indexPath: String,
       textCol: String = "text", idCol: String = "doc_id"): Unit = {
-    val spark = batch.sparkSession
-    val postingsPath = s"$indexPath/postings"
-    val doclensPath = s"$indexPath/doclens"
-    // [[BatchMarker]] exactly-once guard per sink (the r10 revision of the
-    // r9 O(1) dir-existence guard): even one batch_id=N/ directory is not
-    // commit-atomic — the committer merges task outputs into it one task
-    // at a time — so each sink's marker is written only after its append
-    // commits, and a replay without the marker deletes the partial dir
-    // and rewrites it (row-identical: the batch content is a pure
-    // function of the batch).
-    BatchMarker.assertMarkeredSink(spark, indexPath,
-      s"$postingsPath/batch_id=*")
-    BatchMarker.ensureProtocol(spark, indexPath)
-    val postingsHas = BatchMarker.landed(spark, indexPath, "postings", batchId)
-    val doclensHas = BatchMarker.landed(spark, indexPath, "doclens", batchId)
-    if (postingsHas && doclensHas) return // full replay of a landed batch
-    if (!postingsHas)
-      BatchMarker.clearPartial(spark, s"$postingsPath/batch_id=$batchId")
-    if (!doclensHas)
-      BatchMarker.clearPartial(spark, s"$doclensPath/batch_id=$batchId")
-
-    // both sinks derive from the same tokenization — persist the batch so
-    // it runs once, not once per append
-    val cached = batch.persist()
-    try {
-      val (postings, doclens) = Retrieval.invertedIndex(cached, textCol, idCol)
-      if (!doclensHas) {
-        doclens.withColumn("batch_id", lit(batchId))
-          .write.mode("append").partitionBy("batch_id").parquet(doclensPath)
-        BatchMarker.commit(spark, indexPath, "doclens", batchId)
-      }
-      if (!postingsHas) {
-        postings.withColumn("batch_id", lit(batchId))
-          .write.mode("append").partitionBy("batch_id").parquet(postingsPath)
-        BatchMarker.commit(spark, indexPath, "postings", batchId)
-      }
-    } finally cached.unpersist()
+    val (postingsSink, doclensSink) = sinks(indexPath)
+    BatchMarker.ingest(batch, batchId, Seq(postingsSink, doclensSink),
+        skipEmpty = false) { pending =>
+      // both sinks derive from the same tokenization — persist the batch
+      // so it runs once, not once per append
+      val cached = batch.persist()
+      try {
+        val (postings, doclens) = Retrieval.invertedIndex(cached, textCol, idCol)
+        pending.append(doclensSink)(doclens)
+        pending.append(postingsSink)(postings)
+      } finally cached.unpersist()
+    }
   }
 
   /** Search the accumulated index: same scorer as the batch path — the
@@ -134,69 +109,36 @@ object IndexIngest {
   def startPartitioned(docs: DataFrame, indexPath: String, checkpoint: String,
       textCol: String = "text", idCol: String = "doc_id",
       nBuckets: Int = 16): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatchPartitioned(batch, batchId, indexPath, textCol, idCol, nBuckets)
-      }
-      .start()
+    BatchMarker.stream(docs, checkpoint)(
+      processBatchPartitioned(_, _, indexPath, textCol, idCol, nBuckets))
 
-  /** One partitioned micro-batch, callable from tests directly. */
+  /** One partitioned micro-batch, callable from tests directly. Postings
+    * nest tok_bucket OUTER (the pruned scan's partition key and the
+    * per-bucket compaction unit) with batch_id INNER.
+    */
   def processBatchPartitioned(batch: DataFrame, batchId: Long,
       indexPath: String, textCol: String = "text", idCol: String = "doc_id",
       nBuckets: Int = 16): Unit = {
     val spark = batch.sparkSession
-    val postingsPath = s"$indexPath/postings"
-    val doclensPath = s"$indexPath/doclens"
     val metaPath = s"$indexPath/meta"
-    // postings nest tok_bucket OUTER (the pruned scan's partition key and
-    // the per-bucket compaction unit) with batch_id INNER. Both sinks
-    // follow the BatchMarker exactly-once protocol: no partition-dir
-    // rename sequence — one dir or many — is commit-atomic, so each
-    // sink's marker is written only after its append commits, and a
-    // replay without the marker deletes the batch's partial dirs and
-    // rewrites them.
-    BatchMarker.assertMarkeredSink(spark, indexPath,
-      s"$postingsPath/tok_bucket=*/batch_id=*")
-    // protocol dir from the first ATTEMPT (not the first success) — same
-    // contract as every other sink; without this the first-batch crash
-    // window is closed only by the accident that the doclens marker lands
-    // before any postings dir exists
-    BatchMarker.ensureProtocol(spark, indexPath)
-    val postingsHas = BatchMarker.landed(spark, indexPath, "postings", batchId)
-    val doclensHas = BatchMarker.landed(spark, indexPath, "doclens", batchId)
-    if (postingsHas && doclensHas) return
-    if (!postingsHas)
-      BatchMarker.clearPartial(spark,
-        s"$postingsPath/tok_bucket=*/batch_id=$batchId")
-    if (!doclensHas)
-      BatchMarker.clearPartial(spark, s"$doclensPath/batch_id=$batchId")
-
-    // meta first, overwrite-idempotent: a crash after meta but before any
-    // append replays into the same overwrite; later batches NEVER trust
-    // the parameter again
-    val buckets = readBuckets(spark, metaPath) match {
-      case Some(b) => b
-      case None =>
-        import spark.implicits._
-        Seq(nBuckets).toDF("n_buckets")
-          .coalesce(1).write.mode("overwrite").parquet(metaPath)
-        nBuckets
-    }
-
-    val (postings, doclens) = Retrieval.invertedIndex(batch, textCol, idCol)
-    if (!doclensHas) {
-      doclens.withColumn("batch_id", lit(batchId))
-        .write.mode("append").partitionBy("batch_id").parquet(doclensPath)
-      BatchMarker.commit(spark, indexPath, "doclens", batchId)
-    }
-    if (!postingsHas) {
-      postings.withColumn("batch_id", lit(batchId))
-        .withColumn("tok_bucket",
-          pmod(xxhash64(col("token")), lit(buckets.toLong)))
-        .write.mode("append").partitionBy("tok_bucket", "batch_id")
-        .parquet(postingsPath)
-      BatchMarker.commit(spark, indexPath, "postings", batchId)
+    val (postingsSink, doclensSink) = sinks(indexPath, Some("tok_bucket"))
+    BatchMarker.ingest(batch, batchId, Seq(postingsSink, doclensSink),
+        skipEmpty = false) { pending =>
+      // meta first, overwrite-idempotent: a crash after meta but before
+      // any append replays into the same overwrite; later batches NEVER
+      // trust the parameter again
+      val buckets = readBuckets(spark, metaPath) match {
+        case Some(b) => b
+        case None =>
+          import spark.implicits._
+          Seq(nBuckets).toDF("n_buckets")
+            .coalesce(1).write.mode("overwrite").parquet(metaPath)
+          nBuckets
+      }
+      val (postings, doclens) = Retrieval.invertedIndex(batch, textCol, idCol)
+      pending.append(doclensSink)(doclens)
+      pending.append(postingsSink)(postings.withColumn("tok_bucket",
+        pmod(xxhash64(col("token")), lit(buckets.toLong))))
     }
   }
 
@@ -238,13 +180,7 @@ object IndexIngest {
     */
   private def readBuckets(spark: org.apache.spark.sql.SparkSession,
       metaPath: String): Option[Int] =
-    if (!exists(spark, s"$metaPath/_SUCCESS")) None
+    if (!BatchMarker.exists(spark, s"$metaPath/_SUCCESS")) None
     else Some(spark.read.parquet(metaPath).select(col("n_buckets"))
       .first().getInt(0))
-
-  private def exists(spark: org.apache.spark.sql.SparkSession,
-      path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
 }

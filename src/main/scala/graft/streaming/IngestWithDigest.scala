@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.streaming.BatchMarker.Sink
+
 /** Streaming ingestion against a PERSISTENT dedup digest — the foreachBatch
   * pattern a production pipeline deploys when arriving documents must be
   * deduplicated against the WHOLE HISTORY, not just the watermark span
@@ -16,13 +18,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *   2. append survivors to the corpus sink,
   *   3. append the survivors' digests to the digest table.
   *
-  * foreachBatch gives exactly-once per-batch semantics through the
-  * checkpoint: a replayed batchId re-runs the same work, and PER-SINK
-  * batch_id replay guards (skip each append whose batchId already landed
-  * in THAT sink) keep the re-run from double-appending even when a crash
-  * falls between the two appends — the documented Spark recipe for
-  * idempotent foreachBatch sinks, done per sink because two parquet jobs
-  * never commit atomically together.
+  * Exactly-once per batchId through the [[BatchMarker.ingest]] core, one
+  * sink per table (each under its own root): the two parquet jobs never
+  * commit atomically together, so a crash between the appends replays
+  * into "corpus has this batch, digest does not" — the corpus append is
+  * skipped, and the digest append, recomputed from the same pre-batch
+  * digest state the crashed attempt saw, completes the pair.
   *
   * At 100 TB the digest table is (md5, batch_id) — ~48 bytes a document,
   * orders of magnitude smaller than the corpus; the per-batch anti-join
@@ -38,126 +39,60 @@ object IngestWithDigest {
     */
   def start(docs: DataFrame, corpusPath: String, digestPath: String,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, corpusPath, digestPath)
-      }
-      .start()
+    BatchMarker.stream(docs, checkpoint)(
+      processBatch(_, _, corpusPath, digestPath))
 
   /** One micro-batch, callable from tests directly: dedup against the
     * digest, append survivors (stamped with their batch_id) + their
     * digests.
-    *
-    * Exactly-once: the corpus and digest appends are two separate parquet
-    * jobs that cannot commit atomically together, so EACH sink carries
-    * batch_id and keeps its own replay guard. A crash between the two
-    * appends replays into "corpus has this batch, digest does not": the
-    * corpus append is skipped, and the digest append — recomputed from
-    * the same pre-batch digest state the crashed attempt saw, hence
-    * row-identical — completes the pair. A single shared guard on the
-    * digest (the previous form) left that window re-appending the corpus.
     */
   def processBatch(batch: DataFrame, batchId: Long, corpusPath: String,
       digestPath: String): Unit = {
     val spark = batch.sparkSession
-    // [[BatchMarker]] exactly-once guard per sink: a marker is written
-    // only AFTER that sink's append commits. Even a single batch_id=N/
-    // directory is NOT commit-atomic — the committer merges task outputs
-    // into it one task at a time — so dir existence can't stand in for
-    // "landed"; a replay without the marker deletes the batch's partial
-    // dir and rewrites it (row-identical: the anti-join state is the
-    // pre-batch history on first run and replay alike).
-    BatchMarker.assertMarkeredSink(spark, corpusPath, s"$corpusPath/batch_id=*")
-    BatchMarker.assertMarkeredSink(spark, digestPath, s"$digestPath/batch_id=*")
-    BatchMarker.ensureProtocol(spark, corpusPath)
-    BatchMarker.ensureProtocol(spark, digestPath)
-    val corpusHas = BatchMarker.landed(spark, corpusPath, "corpus", batchId)
-    val digestHas = BatchMarker.landed(spark, digestPath, "digest", batchId)
-    // repair the marker→sentinel crash window BEFORE any short-circuit:
-    // the digest marker commits first and the has_data sentinel second,
-    // so a landed data-bearing batch may still owe the sentinel
-    if (digestHas && !exists(spark, s"$digestPath/_batches/has_data") &&
-        exists(spark, s"$digestPath/batch_id=$batchId"))
-      stampHasData(spark, digestPath)
-    if (corpusHas && digestHas) return // full replay of a landed batch
-    if (!corpusHas)
-      BatchMarker.clearPartial(spark, s"$corpusPath/batch_id=$batchId")
-    if (!digestHas)
-      BatchMarker.clearPartial(spark, s"$digestPath/batch_id=$batchId")
+    val corpus = Sink(corpusPath, "corpus", corpusPath)
+    val digest = Sink(digestPath, "digest", digestPath,
+      sentinel = Some(s"$digestPath/_batches/has_data"))
+    BatchMarker.ingest(batch, batchId, Seq(corpus, digest),
+        skipEmpty = false) { pending =>
+      // null text digests under a reserved sentinel key, NOT as null and
+      // NOT as md5(''): a null key would make same-batch null-text docs
+      // collapse through the window while cross-batch ones never match
+      // the anti-join (inconsistent both ways), and md5('') would
+      // silently dedup "no content" against "empty content". The
+      // sentinel cannot collide with a real digest — md5 hex is exactly
+      // 32 [0-9a-f] chars.
+      val hashed = batch
+        .withColumn("content_md5",
+          when(col("text").isNull, lit("<null-text>"))
+            .otherwise(md5(col("text").cast("binary"))))
+        // a batch can carry its own internal dups: keep the smallest id
+        .withColumn("__rk", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy(col("content_md5")).orderBy(col("doc_id"))))
+        .filter(col("__rk") === 1).drop("__rk")
 
-    // null text digests under a reserved sentinel key, NOT as null and
-    // NOT as md5(''): a null key would make same-batch null-text docs
-    // collapse through the window while cross-batch ones never match the
-    // anti-join (inconsistent both ways), and md5('') would silently
-    // dedup "no content" against "empty content". The sentinel cannot
-    // collide with a real digest — md5 hex is exactly 32 [0-9a-f] chars.
-    val hashed = batch
-      .withColumn("content_md5",
-        when(col("text").isNull, lit("<null-text>"))
-          .otherwise(md5(col("text").cast("binary"))))
-      // a batch can carry its own internal dups: keep the smallest id
-      .withColumn("__rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("content_md5")).orderBy(col("doc_id"))))
-      .filter(col("__rk") === 1).drop("__rk")
-
-    // the digest never contains this batch here (digest is written LAST,
-    // and a landed digest short-circuits above), so the anti-join state
-    // is the pre-batch history on first run and replay alike. "History
-    // exists" is the O(1) `_batches/has_data` sentinel — stamped the
-    // first time a digest append lands actual rows (an all-duplicate
-    // batch writes no partition dir), never a listing of the accumulated
-    // table; an unreadable digest that HAS history still throws at the
-    // read site, not silently disabling dedup
-    val history =
-      if (exists(spark, s"$digestPath/_batches/has_data"))
-        Some(spark.read.parquet(digestPath).select("content_md5"))
-      else None
-    // BOTH appends consume survivors; persisted so the window dedup and
-    // the anti-join's full digest-history read run once per batch, not
-    // once per sink (the scaladoc's "reads it once" promise)
-    val survivors = (history match {
-      case Some(h) => hashed.join(h, Seq("content_md5"), "left_anti")
-      case None    => hashed
-    }).persist()
-    try {
-      if (!corpusHas) {
-        survivors.drop("content_md5").withColumn("batch_id", lit(batchId))
-          .write.mode("append").partitionBy("batch_id").parquet(corpusPath)
-        BatchMarker.commit(spark, corpusPath, "corpus", batchId)
-      }
-      if (!digestHas) {
-        survivors.select(col("content_md5"), lit(batchId).as("batch_id"))
-          .write.mode("append").partitionBy("batch_id").parquet(digestPath)
-        // marker FIRST, sentinel second: a crash between the two replays
-        // into the digestHas repair at the top of this method. The other
-        // order wedges the stream — replay's clearPartial deletes the
-        // batch's rows while the sentinel keeps claiming data exists,
-        // and the history read targets a data-less table forever. An
-        // append with zero survivors writes no partition dir and must
-        // not stamp (O(1) existence checks throughout, never a
-        // batch_id=* glob whose listing grows with every batch).
-        BatchMarker.commit(spark, digestPath, "digest", batchId)
-        if (exists(spark, s"$digestPath/batch_id=$batchId"))
-          stampHasData(spark, digestPath)
-      }
-    } finally survivors.unpersist()
-  }
-
-  private def stampHasData(spark: org.apache.spark.sql.SparkSession,
-      digestPath: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$digestPath/_batches/has_data")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) { fs.mkdirs(p.getParent); fs.create(p, true).close() }
-  }
-
-  /** Existence through the Hadoop FileSystem of the path's scheme — a
-    * java.io.File test is local-only and silently false on hdfs:///s3a://.
-    */
-  private def exists(spark: org.apache.spark.sql.SparkSession,
-      path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+      // the digest never contains this batch here (digest is written
+      // LAST, and a landed digest short-circuits), so the anti-join state
+      // is the pre-batch history on first run and replay alike. "History
+      // exists" is the digest's O(1) has_data sentinel (an all-duplicate
+      // batch writes no partition dir and stamps nothing); an unreadable
+      // digest that HAS history still throws at the read site, not
+      // silently disabling dedup
+      val history =
+        if (BatchMarker.hasData(spark, digest))
+          Some(spark.read.parquet(digestPath).select("content_md5"))
+        else None
+      // BOTH appends consume survivors; persisted so the window dedup and
+      // the anti-join's full digest-history read run once per batch, not
+      // once per sink (the scaladoc's "reads it once" promise)
+      val survivors = (history match {
+        case Some(h) => hashed.join(h, Seq("content_md5"), "left_anti")
+        case None    => hashed
+      }).persist()
+      try {
+        pending.append(corpus)(survivors.drop("content_md5"))
+        pending.append(digest)(survivors.select(col("content_md5")))
+      } finally survivors.unpersist()
+    }
   }
 }

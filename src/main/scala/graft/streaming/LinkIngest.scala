@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.{HtmlTextColumn, Url}
+import graft.streaming.BatchMarker.Sink
 
 /** Streamed LINK-GRAPH ingest — the edge-table half of the crawl loop,
   * accumulated as segments arrive: each micro-batch of parsed pages
@@ -24,11 +25,9 @@ import graft.functions.{HtmlTextColumn, Url}
   * `warc_links_streamed` share `warc_links`' oracle verbatim (the
   * equivalence-twin convention).
   *
-  * Exactly-once: both sinks follow [[BatchMarker]] (markers AFTER each
-  * append, partial dirs cleared and rewritten on replay), with
-  * `_batches_has_data` sentinels keeping the "does the table exist yet"
-  * checks O(1), marker→sentinel crash windows repaired at the top of the
-  * next call — the [[PhashIngest]] two-sink protocol verbatim.
+  * Exactly-once: both sinks run through the [[BatchMarker.ingest]] core,
+  * each with its `has_data` sentinel, and compact through
+  * [[BatchMarker.collapse]].
   */
 object LinkIngest {
 
@@ -40,52 +39,27 @@ object LinkIngest {
     */
   def start(pages: DataFrame, indexPath: String, checkpoint: String,
       compactAfterBatches: Option[Int] = None): StreamingQuery =
-    pages.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, indexPath)
-        compactAfterBatches.foreach(m =>
-          maybeCompact(batch.sparkSession, indexPath, m))
-      }
-      .start()
+    BatchMarker.stream(pages, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, indexPath)
+      compactAfterBatches.foreach(m =>
+        maybeCompact(batch.sparkSession, indexPath, m))
+    }
+
+  private val tables = Seq("pairs", "urls")
+
+  private def sink(indexPath: String, table: String) = Sink(indexPath, table,
+    s"$indexPath/$table",
+    sentinel = Some(s"$indexPath/$table/_batches_has_data"),
+    staging = Some(s"$indexPath/_compact_tmp/$table"))
 
   /** One micro-batch, callable from tests and backfills directly. */
   def processBatch(pages: DataFrame, batchId: Long, indexPath: String): Unit = {
-    val spark = pages.sparkSession
-    // roll forward any interrupted compaction BEFORE appending: a
-    // recovery that ran after this append would delete the new batch dir
-    // along with the pre-compaction ones (its marker would then
-    // short-circuit the replay — silent loss)
-    recoverCompaction(spark, indexPath)
-    val urlsPath = s"$indexPath/urls"
-    val pairsPath = s"$indexPath/pairs"
-    BatchMarker.assertMarkeredSink(spark, indexPath, s"$urlsPath/batch_id=*")
-    BatchMarker.assertMarkeredSink(spark, indexPath, s"$pairsPath/batch_id=*")
-    BatchMarker.ensureProtocol(spark, indexPath)
-    // landedOrCollapsed, not landed: a compaction GCs the markers below
-    // its horizon, and a replay of one of those batches must still
-    // short-circuit (its rows live inside the collapsed dir)
-    val pairsHas = BatchMarker.landedOrCollapsed(spark, indexPath, "pairs", batchId)
-    val urlsHas = BatchMarker.landedOrCollapsed(spark, indexPath, "urls", batchId)
-    if (pairsHas && !exists(spark, s"$pairsPath/_batches_has_data") &&
-        exists(spark, s"$pairsPath/batch_id=$batchId"))
-      stamp(spark, s"$pairsPath/_batches_has_data")
-    if (urlsHas && !exists(spark, s"$urlsPath/_batches_has_data") &&
-        exists(spark, s"$urlsPath/batch_id=$batchId"))
-      stamp(spark, s"$urlsPath/_batches_has_data")
-    if (pairsHas && urlsHas) return
-    if (!pairsHas) BatchMarker.clearPartial(spark, s"$pairsPath/batch_id=$batchId")
-    if (!urlsHas) BatchMarker.clearPartial(spark, s"$urlsPath/batch_id=$batchId")
-    if (pages.isEmpty) {
-      if (!pairsHas) BatchMarker.commit(spark, indexPath, "pairs", batchId)
-      if (!urlsHas) BatchMarker.commit(spark, indexPath, "urls", batchId)
-      return
-    }
-
-    if (!pairsHas) {
+    val pairs = sink(indexPath, "pairs")
+    val urls = sink(indexPath, "urls")
+    BatchMarker.ingest(pages, batchId, Seq(pairs, urls), skipEmpty = true) { pending =>
       // anchors from this batch's 200-status bodies, canonical on both
       // ends, per-batch distinct (the global distinct is the read's job)
-      pages.filter(col("http_status") === 200)
+      pending.append(pairs)(pages.filter(col("http_status") === 200)
         .select(Url.canonicalizeUrl(col("uri")).as("src_url"),
           explode(HtmlTextColumn.hrefs(col("body"))).as("href"))
         .filter(col("src_url").isNotNull)
@@ -95,24 +69,12 @@ object LinkIngest {
           Url.canonicalizeUrl(Url.resolveUrl(col("src_url"), col("href")))
             .as("dst_url"))
         .filter(col("dst_url").isNotNull)
-        .distinct()
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").partitionBy("batch_id").parquet(pairsPath)
-      BatchMarker.commit(spark, indexPath, "pairs", batchId)
-      if (exists(spark, s"$pairsPath/batch_id=$batchId"))
-        stamp(spark, s"$pairsPath/_batches_has_data")
-    }
-    if (!urlsHas) {
+        .distinct())
       // every fetched page claims its canonical URL (404s included — a
       // link to a dead page still resolves to a discovered node)
-      pages.select(Url.canonicalizeUrl(col("uri")).as("url"))
+      pending.append(urls)(pages.select(Url.canonicalizeUrl(col("uri")).as("url"))
         .filter(col("url").isNotNull)
-        .distinct()
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").partitionBy("batch_id").parquet(urlsPath)
-      BatchMarker.commit(spark, indexPath, "urls", batchId)
-      if (exists(spark, s"$urlsPath/batch_id=$batchId"))
-        stamp(spark, s"$urlsPath/_batches_has_data")
+        .distinct())
     }
   }
 
@@ -132,8 +94,7 @@ object LinkIngest {
       nodeOf: Column => Column = xxhash64(_)): DataFrame = {
     import spark.implicits._
     recoverCompaction(spark, indexPath)
-    if (!exists(spark, s"$indexPath/pairs/_batches_has_data") ||
-        !exists(spark, s"$indexPath/urls/_batches_has_data"))
+    if (!tables.forall(t => BatchMarker.hasData(spark, sink(indexPath, t))))
       return Seq.empty[(Long, Long)].toDF("src", "dst")
     // `upToBatch` is the TIME-TRAVEL read: the edge table as of segment
     // N — batch_id is the hive partition column on both tables, so the
@@ -154,13 +115,8 @@ object LinkIngest {
   /** Index health: batch-dir depth per table — the read-amplification
     * axis a segment-per-batch crawl grows without bound. O(listing).
     */
-  def nBatches(spark: SparkSession, indexPath: String, table: String): Int = {
-    val dir = new org.apache.hadoop.fs.Path(s"$indexPath/$table")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) return 0
-    fs.listStatus(dir).count(s =>
-      s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-  }
+  def nBatches(spark: SparkSession, indexPath: String, table: String): Int =
+    BatchMarker.batchDirs(spark, s"$indexPath/$table").size
 
   /** Compaction POLICY: collapse each table whose batch-dir depth exceeds
     * `maxBatches` (called between batches — foreachBatch is serial per
@@ -171,143 +127,46 @@ object LinkIngest {
     */
   def maybeCompact(spark: SparkSession, indexPath: String,
       maxBatches: Int = 16, targetBytes: Long = 128L << 20): Boolean =
-    indexLock(indexPath).synchronized {
+    BatchMarker.locked(indexPath) {
       recoverCompaction(spark, indexPath)
-      Seq("pairs", "urls").map { t =>
+      tables.map { t =>
         val due = nBatches(spark, indexPath, t) > maxBatches
         if (due) compactTable(spark, indexPath, t, targetBytes)
         due
       }.exists(identity)
     }
 
-  /** Collapse BOTH tables' batch dirs into one resolved dir each (file
-    * count sized from on-disk bytes over `targetBytes`, never a single
-    * funnel task) — semantics-preserving because [[edges]] distincts
-    * anyway, and exactly-once-preserving through the MARKER HORIZON:
-    * per-batch markers at or below the collapsed id are GC'd (the roster
-    * would otherwise grow per micro-batch forever) and replaced by one
-    * `<table>_horizon_<id>` file, which [[BatchMarker.landedOrCollapsed]]
-    * answers replays from — a replayed pre-compaction batch still
-    * short-circuits; its rows are inside the collapsed dir. RETENTION:
-    * like `UpsertIngest.compactLog`, history collapses into the highest
-    * landed id — `edges(upToBatch = N)` for N older than the horizon sees
-    * an empty state, never a stale one.
-    *
-    * Crash safety (the compactLog discipline — no multi-dir rename is
-    * atomic): distinct rows stage under `_compact_tmp/<table>` first, an
-    * INTENT marker `_batches/compact<table>_<id>` commits the decision,
-    * then old dirs delete and the staged dir renames in;
-    * [[recoverCompaction]] rolls an interrupted pass forward from the
-    * intent. Tables compact independently — a half-done pass (one table
-    * collapsed, the other not) reads correctly throughout.
+  /** Collapse BOTH tables' batch dirs into one resolved dir each through
+    * [[BatchMarker.collapse]] (staged under `_compact_tmp/<table>`, intent
+    * `_batches/compact<table>_<id>`) — semantics-preserving because
+    * [[edges]] distincts anyway. RETENTION: like
+    * `UpsertIngest.compactLog`, history collapses into the highest landed
+    * id — `edges(upToBatch = N)` for N older than the horizon sees an
+    * empty state, never a stale one. Tables compact independently — a
+    * half-done pass (one table collapsed, the other not) reads correctly
+    * throughout.
     */
   def compact(spark: SparkSession, indexPath: String,
       targetBytes: Long = 128L << 20): Unit =
-    indexLock(indexPath).synchronized {
+    BatchMarker.locked(indexPath) {
       recoverCompaction(spark, indexPath)
-      Seq("pairs", "urls").foreach(t =>
-        compactTable(spark, indexPath, t, targetBytes))
+      tables.foreach(compactTable(spark, indexPath, _, targetBytes))
     }
 
   private def compactTable(spark: SparkSession, indexPath: String,
-      table: String, targetBytes: Long): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(s"$indexPath/$table")
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return
-    // unmarkered dirs are crashed partials of never-committed batches:
-    // clear them (their batch replays in full) so the collapsed dir can
-    // never absorb rows a replay would then duplicate. (landedOrCollapsed:
-    // the previous compaction's collapsed dir has no marker of its own —
-    // the horizon covers it — and must never be classed as debris.)
-    val dirs = fs.listStatus(dir).toIndexedSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-    val (marked, debris) = dirs.partition(s =>
-      BatchMarker.landedOrCollapsed(spark, indexPath, table,
-        s.getPath.getName.stripPrefix("batch_id=").toLong))
-    debris.foreach(s => fs.delete(s.getPath, true))
-    if (marked.size <= 1) return
-    val maxId = marked.map(_.getPath.getName.stripPrefix("batch_id=").toLong).max
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexPath/_compact_tmp/$table")
-    fs.delete(tmp, true) // pre-intent leftovers of a dead pass
-    // output files sized from the log's ON-DISK bytes (an upper bound on
-    // the distinct size), the UpsertIngest.compactLog pattern — a
-    // corpus-sized edge table must never funnel through one task
-    val nBytes = marked.flatMap(d => fs.listStatus(d.getPath).toIndexedSeq)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(nBytes.toDouble / targetBytes).toInt)
-    // repartition, not coalesce: AQE may have coalesced the distinct to
-    // fewer partitions than nOut, and coalesce can only reduce — the one
-    // extra exchange buys a guaranteed-parallel write at the sized count
-    spark.read.parquet(s"$indexPath/$table")
-      .drop("batch_id").distinct()
-      .repartition(nOut)
-      .write.mode("overwrite")
-      .parquet(s"$indexPath/_compact_tmp/$table/batch_id=$maxId")
-    // COMMIT POINT: from here the staged dir is the table's truth
-    BatchMarker.commit(spark, indexPath, s"compact$table", maxId)
-    finishCompaction(spark, indexPath, table, maxId)
-  }
+      table: String, targetBytes: Long): Unit =
+    BatchMarker.collapse(spark, sink(indexPath, table), targetBytes) { n =>
+      // repartition, not coalesce: AQE may have coalesced the distinct to
+      // fewer partitions than n, and coalesce can only reduce — the one
+      // extra exchange buys a guaranteed-parallel write at the sized count
+      spark.read.parquet(s"$indexPath/$table")
+        .drop("batch_id").distinct()
+        .repartition(n)
+    }
 
   /** Roll forward interrupted table compactions from their intent
     * markers. No-op in O(1) listing when none exist.
     */
   def recoverCompaction(spark: SparkSession, indexPath: String): Unit =
-    indexLock(indexPath).synchronized { // reentrant under compact's hold
-      val batches = new org.apache.hadoop.fs.Path(s"$indexPath/_batches")
-      val fs = batches.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(batches)) return
-      fs.listStatus(batches).toIndexedSeq.map(_.getPath.getName).foreach { n =>
-        Seq("pairs", "urls").foreach { t =>
-          if (n.startsWith(s"compact${t}_"))
-            finishCompaction(spark, indexPath, t,
-              n.stripPrefix(s"compact${t}_").toLong)
-        }
-      }
-    }
-
-  private def finishCompaction(spark: SparkSession, indexPath: String,
-      table: String, maxId: Long): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(indexPath).getFileSystem(conf)
-    val staged = new org.apache.hadoop.fs.Path(
-      s"$indexPath/_compact_tmp/$table/batch_id=$maxId")
-    val dir = new org.apache.hadoop.fs.Path(s"$indexPath/$table")
-    if (fs.exists(staged)) {
-      fs.listStatus(dir).toIndexedSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-        .foreach(s => fs.delete(s.getPath, true))
-      if (!fs.rename(staged,
-          new org.apache.hadoop.fs.Path(dir, s"batch_id=$maxId")))
-        throw new IllegalStateException(
-          s"link-index compaction rename failed for $table/batch_id=$maxId")
-    } // else: a previous attempt already swapped — only debris remains
-    fs.delete(new org.apache.hadoop.fs.Path(s"$indexPath/_compact_tmp/$table"), true)
-    val tmpRoot = new org.apache.hadoop.fs.Path(s"$indexPath/_compact_tmp")
-    if (fs.exists(tmpRoot) && fs.listStatus(tmpRoot).isEmpty)
-      fs.delete(tmpRoot, false)
-    // marker GC below the horizon BEFORE the intent clears: a crash
-    // between the two re-runs this roll-forward (advanceHorizon is
-    // idempotent), so the roster can never be left half-GC'd for good
-    BatchMarker.advanceHorizon(spark, indexPath, table, maxId)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$indexPath/_batches/compact${table}_$maxId"), false)
-  }
-
-  private val indexLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def indexLock(indexPath: String): Object =
-    indexLocks.computeIfAbsent(indexPath, _ => new Object)
-
-  private def stamp(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) { fs.mkdirs(p.getParent); fs.create(p, true).close() }
-  }
-
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
+    BatchMarker.recover(spark, tables.map(sink(indexPath, _)))
 }

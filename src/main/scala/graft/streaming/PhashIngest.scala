@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{Dedup, Multimodal}
+import graft.streaming.BatchMarker.Sink
 
 /** Streamed IMAGE dedup ingest — the multimodal twin of
   * [[IngestWithDigest]]: encoded images arrive in micro-batches, each
@@ -27,16 +28,12 @@ import graft.operators.{Dedup, Multimodal}
   *     each pair exactly once (in the batch of its LATER member) — which
   *     is what lets one brute-force oracle verify the whole accumulation.
   *
-  * Exactly-once: both sinks follow the [[BatchMarker]] protocol (per-sink
-  * markers written AFTER each append commits, partial batch dirs cleared
-  * and rewritten on replay). Pairs are computed from the PRE-batch
-  * signature state and the signature append commits LAST, so every replay
-  * window recomputes an identical pair set: a crash before the pairs
-  * marker rewrites pairs from unchanged inputs; one after it skips pairs
-  * and completes the signature append. `_batches/has_data` sentinels keep
-  * the "does history/output exist yet" checks O(1) (never a batch_id=*
-  * listing), with the marker→sentinel crash window repaired at the top of
-  * the next call, exactly as [[IngestWithDigest]] does.
+  * Exactly-once: both sinks run through the [[BatchMarker.ingest]] core,
+  * each with its `has_data` sentinel. Pairs are computed from the
+  * PRE-batch signature state and the signature append commits LAST, so
+  * every replay window recomputes an identical pair set: a crash before
+  * the pairs marker rewrites pairs from unchanged inputs; one after it
+  * skips pairs and completes the signature append.
   *
   * Caller contract (matching [[Dedup.hammingPairsHiLoIncremental]]):
   * batches carry disjoint media_ids — an id belongs to the batch that
@@ -50,75 +47,37 @@ object PhashIngest {
     */
   def start(media: DataFrame, indexPath: String, checkpoint: String,
       maxHamming: Int = 3, bands: Int = 4): StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, indexPath, maxHamming, bands)
-      }
-      .start()
+    BatchMarker.stream(media, checkpoint)(
+      processBatch(_, _, indexPath, maxHamming, bands))
+
+  private def sink(indexPath: String, table: String) = Sink(indexPath, table,
+    s"$indexPath/$table", sentinel = Some(s"$indexPath/$table/_batches_has_data"))
 
   /** One micro-batch, callable from tests and backfills directly. */
   def processBatch(media: DataFrame, batchId: Long, indexPath: String,
       maxHamming: Int = 3, bands: Int = 4): Unit = {
     val spark = media.sparkSession
-    val sigsPath = s"$indexPath/sigs"
-    val pairsPath = s"$indexPath/pairs"
-    BatchMarker.assertMarkeredSink(spark, indexPath, s"$sigsPath/batch_id=*")
-    BatchMarker.assertMarkeredSink(spark, indexPath, s"$pairsPath/batch_id=*")
-    BatchMarker.ensureProtocol(spark, indexPath)
-    val pairsHas = BatchMarker.landed(spark, indexPath, "pairs", batchId)
-    val sigsHas = BatchMarker.landed(spark, indexPath, "sigs", batchId)
-    // repair the marker→sentinel crash window BEFORE any short-circuit
-    // (each sink's marker commits first, its has_data sentinel second)
-    if (pairsHas && !exists(spark, s"$pairsPath/_batches_has_data") &&
-        exists(spark, s"$pairsPath/batch_id=$batchId"))
-      stamp(spark, s"$pairsPath/_batches_has_data")
-    if (sigsHas && !exists(spark, s"$sigsPath/_batches_has_data") &&
-        exists(spark, s"$sigsPath/batch_id=$batchId"))
-      stamp(spark, s"$sigsPath/_batches_has_data")
-    if (pairsHas && sigsHas) return // full replay of a landed batch
-    if (!pairsHas)
-      BatchMarker.clearPartial(spark, s"$pairsPath/batch_id=$batchId")
-    if (!sigsHas)
-      BatchMarker.clearPartial(spark, s"$sigsPath/batch_id=$batchId")
-    if (media.isEmpty) { // sources can advance offsets with no rows
-      if (!pairsHas) BatchMarker.commit(spark, indexPath, "pairs", batchId)
-      if (!sigsHas) BatchMarker.commit(spark, indexPath, "sigs", batchId)
-      return
+    val pairs = sink(indexPath, "pairs")
+    val sigs = sink(indexPath, "sigs")
+    BatchMarker.ingest(media, batchId, Seq(pairs, sigs), skipEmpty = true) { pending =>
+      // decode once per batch: both the pair emission and the index append
+      // consume these rows. Corrupt payloads decode=false and are dropped
+      // HERE — they can neither pair nor poison the index.
+      val batchSigs = Multimodal.imageDHash(media).toDF()
+        .filter(col("decoded"))
+        .select(col("media_id").as("doc_id"), col("hash_hi"), col("hash_lo"))
+        .persist()
+      try {
+        pending.append(pairs) {
+          val history =
+            if (BatchMarker.hasData(spark, sigs)) readSigs(spark, indexPath)
+            else batchSigs.limit(0)
+          Dedup.hammingPairsHiLoIncremental(history, batchSigs, maxHamming,
+            bands)
+        }
+        pending.append(sigs)(batchSigs)
+      } finally batchSigs.unpersist()
     }
-
-    // decode once per batch: both the pair emission and the index append
-    // consume these rows. Corrupt payloads decode=false and are dropped
-    // HERE — they can neither pair nor poison the index.
-    val batchSigs = Multimodal.imageDHash(media).toDF()
-      .filter(col("decoded"))
-      .select(col("media_id").as("doc_id"), col("hash_hi"), col("hash_lo"))
-      .persist()
-    try {
-      // "history exists" is the O(1) sentinel, stamped only when a
-      // signature append lands actual rows — never a dir listing
-      val existing =
-        if (exists(spark, s"$sigsPath/_batches_has_data"))
-          spark.read.parquet(sigsPath)
-            .select(col("doc_id"), col("hash_hi"), col("hash_lo"))
-        else batchSigs.limit(0)
-      if (!pairsHas) {
-        Dedup.hammingPairsHiLoIncremental(existing, batchSigs,
-            maxHamming, bands)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").partitionBy("batch_id").parquet(pairsPath)
-        BatchMarker.commit(spark, indexPath, "pairs", batchId)
-        if (exists(spark, s"$pairsPath/batch_id=$batchId"))
-          stamp(spark, s"$pairsPath/_batches_has_data")
-      }
-      if (!sigsHas) {
-        batchSigs.withColumn("batch_id", lit(batchId))
-          .write.mode("append").partitionBy("batch_id").parquet(sigsPath)
-        BatchMarker.commit(spark, indexPath, "sigs", batchId)
-        if (exists(spark, s"$sigsPath/batch_id=$batchId"))
-          stamp(spark, s"$sigsPath/_batches_has_data")
-      }
-    } finally batchSigs.unpersist()
   }
 
   /** The accumulated pair table (empty-but-typed if no batch has emitted
@@ -127,7 +86,7 @@ object PhashIngest {
     */
   def readPairs(spark: SparkSession, indexPath: String): DataFrame = {
     import spark.implicits._
-    if (exists(spark, s"$indexPath/pairs/_batches_has_data"))
+    if (BatchMarker.hasData(spark, sink(indexPath, "pairs")))
       spark.read.parquet(s"$indexPath/pairs")
         .select(col("doc_a"), col("doc_b"), col("hamming"))
     else
@@ -137,21 +96,10 @@ object PhashIngest {
   /** The accumulated signature index (empty-but-typed before any rows). */
   def readSigs(spark: SparkSession, indexPath: String): DataFrame = {
     import spark.implicits._
-    if (exists(spark, s"$indexPath/sigs/_batches_has_data"))
+    if (BatchMarker.hasData(spark, sink(indexPath, "sigs")))
       spark.read.parquet(s"$indexPath/sigs")
         .select(col("doc_id"), col("hash_hi"), col("hash_lo"))
     else
       Seq.empty[(Long, Long, Long)].toDF("doc_id", "hash_hi", "hash_lo")
-  }
-
-  private def stamp(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) { fs.mkdirs(p.getParent); fs.create(p, true).close() }
-  }
-
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 }

@@ -21,8 +21,8 @@ import graft.operators.Similarity
   * production posture (codebook drift is handled by rebuilding the index
   * from a fresh snapshot, never by mutating history).
   *
-  * Codes append under `codes/cell=<c>/batch_id=<b>/` with the same
-  * [[BatchMarker]] exactly-once replay protocol as [[VectorIngest]];
+  * Codes append under `codes/cell=<c>/batch_id=<b>/` as one sink of the
+  * [[BatchMarker.ingest]] exactly-once core;
   * [[Similarity.ivfPqTopKFromPartitioned]] and per-cell compaction
   * compose unchanged (the search projects only (neighbor_id, cell,
   * code_*) and re-ranks from the live corpus).
@@ -48,15 +48,11 @@ object PqIngest {
     // Refuse; codebook drift is handled by building a FRESH index path
     // from a new snapshot. A crashed INITIAL bootstrap (no codes yet)
     // replays cleanly: both tables are overwritten together.
-    locally {
-      val codes = new org.apache.hadoop.fs.Path(s"$indexPath/codes")
-      val fs = codes.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(codes))
-        throw new IllegalStateException(
-          s"$indexPath already holds codes encoded against its existing " +
-            "codebooks — bootstrap a fresh index path instead of " +
-            "re-fitting over them")
-    }
+    if (BatchMarker.exists(spark, s"$indexPath/codes"))
+      throw new IllegalStateException(
+        s"$indexPath already holds codes encoded against its existing " +
+          "codebooks — bootstrap a fresh index path instead of " +
+          "re-fitting over them")
     val n = snapshot.count() // records the snapshot size, not a live count
     // unlike VectorIngest's clamp, a too-small PQ snapshot is a caller
     // error: ksub sub-centroids per subspace need at least that many
@@ -87,12 +83,8 @@ object PqIngest {
 
   def start(vecs: DataFrame, indexPath: String, checkpoint: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, indexPath, idCol, vecCol)
-      }
-      .start()
+    BatchMarker.stream(vecs, checkpoint)(
+      processBatch(_, _, indexPath, idCol, vecCol))
 
   /** One micro-batch: assign to the frozen cells (raw space), encode
     * against the frozen codebooks (normalized space — the
@@ -101,45 +93,30 @@ object PqIngest {
   def processBatch(batch: DataFrame, batchId: Long, indexPath: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    val codesPath = s"$indexPath/codes"
-    BatchMarker.assertMarkeredSink(spark, indexPath,
-      s"$codesPath/cell=*/batch_id=*")
-    BatchMarker.ensureProtocol(spark, indexPath)
-    if (BatchMarker.landed(spark, indexPath, "codes", batchId)) return
-    BatchMarker.clearPartial(spark, s"$codesPath/cell=*/batch_id=$batchId")
-    if (batch.isEmpty) {
-      BatchMarker.commit(spark, indexPath, "codes", batchId)
-      return
+    val codes = BatchMarker.Sink(indexPath, "codes", s"$indexPath/codes",
+      outer = Some("cell"))
+    BatchMarker.ingest(batch, batchId, Seq(codes), skipEmpty = true) { pending =>
+      val (centers, books, nSnapshot, residual) =
+        readMeta(spark, indexPath).getOrElse(
+          throw new IllegalStateException(
+            s"$indexPath has no centroids/codebooks — bootstrap() the index " +
+              "from a corpus snapshot before streaming into it"))
+      pending.append(codes)(Similarity.assignToCells(batch, centers, idCol,
+          vecCol, "neighbor_id", "rawv", probes = 1)
+        .select(col("neighbor_id"),
+          Similarity.normalize(col("rawv")).as("nvec"), col("cell"))
+        .withColumn("rvec",
+          if (residual) Similarity.residualOf(col("nvec"), col("cell"), centers)
+          else col("nvec"))
+        .select(col("neighbor_id") +: col("cell") +:
+          Similarity.pqCodeCols(books, col("rvec")): _*)
+        .withColumn("n_corpus", lit(nSnapshot))) // the flat layout's stamp
     }
-
-    val (centers, books, nSnapshot, residual) =
-      readMeta(spark, indexPath).getOrElse(
-        throw new IllegalStateException(
-          s"$indexPath has no centroids/codebooks — bootstrap() the index " +
-            "from a corpus snapshot before streaming into it"))
-    Similarity.assignToCells(batch, centers, idCol, vecCol,
-        "neighbor_id", "rawv", probes = 1)
-      .select(col("neighbor_id"),
-        Similarity.normalize(col("rawv")).as("nvec"), col("cell"))
-      .withColumn("rvec",
-        if (residual) Similarity.residualOf(col("nvec"), col("cell"), centers)
-        else col("nvec"))
-      .select(col("neighbor_id") +: col("cell") +:
-        Similarity.pqCodeCols(books, col("rvec")): _*)
-      .withColumn("n_corpus", lit(nSnapshot)) // the flat layout's stamp
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").partitionBy("cell", "batch_id")
-      .parquet(codesPath)
-    BatchMarker.commit(spark, indexPath, "codes", batchId)
   }
 
   private def readMeta(spark: SparkSession, indexPath: String)
       : Option[(Array[Array[Double]], Array[Array[Array[Double]]], Long, Boolean)] = {
-    def ok(t: String) = {
-      val p = new org.apache.hadoop.fs.Path(s"$indexPath/$t", "_SUCCESS")
-      p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-    }
+    def ok(t: String) = BatchMarker.exists(spark, s"$indexPath/$t/_SUCCESS")
     if (!ok("centroids") || !ok("codebooks")) None
     else {
       val centRows = spark.read.parquet(s"$indexPath/centroids")

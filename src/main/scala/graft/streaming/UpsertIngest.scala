@@ -26,12 +26,11 @@ object UpsertIngest {
 
   def start(updates: DataFrame, tablePath: String, checkpoint: String,
       uniqueKey: Option[String] = None): StreamingQuery =
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, tablePath, uniqueKey)
-      }
-      .start()
+    BatchMarker.stream(updates, checkpoint)(
+      processBatch(_, _, tablePath, uniqueKey))
+
+  private def logSink(tablePath: String) = BatchMarker.Sink(tablePath, "log",
+    s"$tablePath/log", staging = Some(s"$tablePath/_compact_tmp"))
 
   /** One micro-batch, callable from tests and backfills directly.
     *
@@ -44,32 +43,20 @@ object UpsertIngest {
     */
   def processBatch(batch: DataFrame, batchId: Long, tablePath: String,
       uniqueKey: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    val log = s"$tablePath/log"
-    BatchMarker.assertMarkeredSink(spark, tablePath, s"$log/batch_id=*")
-    BatchMarker.ensureProtocol(spark, tablePath)
-    recoverCompaction(spark, tablePath)
-    // landedOrCollapsed: compaction GCs markers below its horizon; a
-    // replay of a collapsed batch must still short-circuit
-    if (BatchMarker.landedOrCollapsed(spark, tablePath, "log", batchId)) return
-    BatchMarker.clearPartial(spark, s"$log/batch_id=$batchId")
-    if (batch.isEmpty) {
-      BatchMarker.commit(spark, tablePath, "log", batchId)
-      return
+    val log = logSink(tablePath)
+    BatchMarker.ingest(batch, batchId, Seq(log), skipEmpty = true) { pending =>
+      uniqueKey.foreach { k =>
+        val dups = batch.groupBy(col(k)).agg(count(lit(1)).as("__n"))
+          .filter(col("__n") > 1)
+          .select(col(k)).limit(5).collect().map(_.get(0))
+        if (dups.nonEmpty)
+          throw new IllegalArgumentException(
+            s"batch $batchId violates the one-row-per-key contract on '$k' " +
+              s"(sample duplicate keys: ${dups.mkString(", ")}) — dedupe " +
+              "upstream or drop uniqueKey to accept content-hash resolution")
+      }
+      pending.append(log)(batch)
     }
-    uniqueKey.foreach { k =>
-      val dups = batch.groupBy(col(k)).agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > 1)
-        .select(col(k)).limit(5).collect().map(_.get(0))
-      if (dups.nonEmpty)
-        throw new IllegalArgumentException(
-          s"batch $batchId violates the one-row-per-key contract on '$k' " +
-            s"(sample duplicate keys: ${dups.mkString(", ")}) — dedupe " +
-            "upstream or drop uniqueKey to accept content-hash resolution")
-    }
-    batch.withColumn("batch_id", lit(batchId))
-      .write.mode("append").partitionBy("batch_id").parquet(log)
-    BatchMarker.commit(spark, tablePath, "log", batchId)
   }
 
   /** Merge-on-read resolve: latest batch per key. One shuffle on the key;
@@ -232,11 +219,8 @@ object UpsertIngest {
                             maxBatchId: Long)
 
   def logStats(spark: SparkSession, tablePath: String): LogStats = {
-    val log = new Path(s"$tablePath/log")
-    val fs = log.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(log)) return LogStats(0, 0, 0L, -1L)
-    val dirs = fs.listStatus(log).toIndexedSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
+    val dirs = BatchMarker.batchDirs(spark, s"$tablePath/log")
+    val fs = new Path(tablePath).getFileSystem(spark.sessionState.newHadoopConf())
     val files = dirs.flatMap(d => fs.listStatus(d.getPath))
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     val maxId = dirs.map(_.getPath.getName.stripPrefix("batch_id=").toLong)
@@ -256,11 +240,9 @@ object UpsertIngest {
   def maybeCompact(spark: SparkSession, tablePath: String, keyCol: String,
       maxBatches: Int = 16, maxFiles: Int = 256,
       targetBytes: Long = 128L << 20): Boolean =
-    tableLock(tablePath).synchronized {
+    BatchMarker.locked(tablePath) {
       recoverCompaction(spark, tablePath)
-      // stats AFTER recovery (a rolled-forward swap changes both axes),
-      // and computed ONCE — compactLogResolved reuses them instead of
-      // re-listing the whole log
+      // stats AFTER recovery (a rolled-forward swap changes both axes)
       val st = logStats(spark, tablePath)
       val due = st.nBatches > maxBatches || st.nFiles > maxFiles
       if (due) compactLogResolved(spark, tablePath, keyCol, targetBytes)
@@ -274,44 +256,26 @@ object UpsertIngest {
   def startWithCompaction(updates: DataFrame, tablePath: String,
       checkpoint: String, keyCol: String, maxBatches: Int = 16,
       maxFiles: Int = 256, validateUnique: Boolean = false): StreamingQuery =
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, tablePath,
-          if (validateUnique) Some(keyCol) else None)
-        maybeCompact(batch.sparkSession, tablePath, keyCol,
-          maxBatches, maxFiles)
-        ()
-      }
-      .start()
+    BatchMarker.stream(updates, checkpoint) { (batch, batchId) =>
+      processBatch(batch, batchId, tablePath,
+        if (validateUnique) Some(keyCol) else None)
+      maybeCompact(batch.sparkSession, tablePath, keyCol, maxBatches, maxFiles)
+      ()
+    }
 
   /** Collapse the changelog to ONE batch holding the resolved view —
-    * [[readLatest]] → fresh log, the merge-on-read debt payment. The
-    * resolved rows land under the HIGHEST landed batch id, and every
-    * existing `_batches` marker is preserved, so the exactly-once replay
-    * contract survives: a replayed pre-compaction batch short-circuits on
-    * its marker (its effects are already inside the resolved view), and
-    * post-compaction batches keep winning on their higher ids.
-    *
-    * Crash safety (no multi-dir rename is atomic — the BatchMarker
-    * lesson): the resolved view is staged under `_compact_tmp` first,
-    * then an INTENT marker `_batches/compactlog_<id>` commits the
-    * decision, then the old batch dirs are deleted and the staged dir
-    * renamed in (one rename), then the intent is cleared.
-    * [[recoverCompaction]] — called by [[processBatch]] and
-    * [[readLatest]] — rolls an interrupted pass forward from the intent
-    * marker: before the intent exists the old log is untouched (the pass
-    * simply re-runs); after it, the staged view is the truth and recovery
-    * finishes the swap. In-process entry points all serialize on a
-    * per-table monitor, so concurrent serving reads can never interleave
-    * one swap's non-idempotent steps. Caller contract: the writer is
+    * [[readLatest]] → fresh log, the merge-on-read debt payment, through
+    * [[BatchMarker.collapse]] (staged under `_compact_tmp`, intent
+    * `_batches/compactlog_<id>`). The resolved rows land under the
+    * HIGHEST landed batch id and the markers below it collapse into the
+    * horizon, so the exactly-once replay contract survives: a replayed
+    * pre-compaction batch short-circuits (its effects are already inside
+    * the resolved view), and post-compaction batches keep winning on
+    * their higher ids. [[recoverCompaction]] — called by [[processBatch]]
+    * and every read — rolls an interrupted pass forward; all of them
+    * serialize on the table's monitor. Caller contract: the writer is
     * quiescent (run it from the foreachBatch loop or a paused-stream
-    * maintenance window), and — as for the append protocol itself — one
-    * process owns the table's maintenance. UNMARKERED batch dirs
-    * (crashed partials of never-committed batches) are cleared before
-    * the resolve, never folded in: their batch will replay in full, and
-    * a resolved view staged under a marker-less id would be deleted
-    * wholesale by that replay's clearPartial.
+    * maintenance window), and one process owns the table's maintenance.
     *
     * Output file sizing follows [[graft.sinks.Compaction]]: file count
     * from on-disk log bytes over `targetBytes` (an upper bound on the
@@ -320,101 +284,23 @@ object UpsertIngest {
     */
   def compactLog(spark: SparkSession, tablePath: String, keyCol: String,
       targetBytes: Long = 128L << 20): Unit =
-    tableLock(tablePath).synchronized {
+    BatchMarker.locked(tablePath) {
       recoverCompaction(spark, tablePath)
       compactLogResolved(spark, tablePath, keyCol, targetBytes)
     }
 
-  /** The pass proper — callers hold the table lock and have recovered. */
-  private def compactLogResolved(spark: SparkSession, tablePath: String,
-      keyCol: String, targetBytes: Long): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new Path(tablePath).getFileSystem(conf)
-    // UNMARKERED batch dirs are crashed partials of never-committed
-    // batches: their rows will be re-appended when the batch replays, and
-    // folding them into the resolved view would be fatal — the staged
-    // view would land under an id with NO marker, so that batch's replay
-    // clearPartial would delete the entire compacted table. Clear the
-    // debris now (exactly what the replay itself would do first); the
-    // quiescent-writer contract makes this safe.
-    val log = new Path(s"$tablePath/log")
-    if (fs.exists(log))
-      fs.listStatus(log).toIndexedSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-        .filterNot(s => BatchMarker.landedOrCollapsed(spark, tablePath, "log",
-          s.getPath.getName.stripPrefix("batch_id=").toLong))
-        .foreach(s => fs.delete(s.getPath, true))
-    val st = logStats(spark, tablePath) // marker-covered dirs only, now
-    if (st.nBatches <= 1) return // already compact (or empty)
-    val tmp = new Path(s"$tablePath/_compact_tmp")
-    fs.delete(tmp, true) // pre-intent leftovers of a dead pass
-    val nOut = math.max(1, math.ceil(st.nBytes.toDouble / targetBytes).toInt)
-    // resolve via the shared window (not readLatest: keep this pass free
-    // of the recovery re-entrance) and stage under the winning batch id's
-    // hive dir name
-    latestPerKey(readLog(spark, tablePath), keyCol)
-      .coalesce(nOut)
-      .write.mode("overwrite")
-      .parquet(s"$tablePath/_compact_tmp/batch_id=${st.maxBatchId}")
-    // COMMIT POINT: from here the staged view is the table's truth
-    BatchMarker.commit(spark, tablePath, "compactlog", st.maxBatchId)
-    finishCompaction(spark, tablePath, st.maxBatchId)
-  }
-
-  /** One monitor per table path: every recovery/compaction/serving-read
-    * entry point serializes on it, so concurrent readers (readLatest
-    * auto-recovers) can never interleave the non-idempotent steps of one
-    * swap. CROSS-PROCESS exclusion is the caller's contract, exactly as
-    * for the append protocol itself: one maintenance actor per table
-    * (BatchMarker assumes a single writer; compaction assumes a single
-    * recoverer the same way).
+  /** The pass proper — callers hold the table lock and have recovered.
+    * Resolves via the shared window (not readLatest: keeps this pass free
+    * of the recovery re-entrance).
     */
-  private val tableLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def tableLock(tablePath: String): Object =
-    tableLocks.computeIfAbsent(tablePath, _ => new Object)
+  private def compactLogResolved(spark: SparkSession, tablePath: String,
+      keyCol: String, targetBytes: Long): Unit =
+    BatchMarker.collapse(spark, logSink(tablePath), targetBytes)(n =>
+      latestPerKey(readLog(spark, tablePath), keyCol).coalesce(n))
 
-  /** Roll forward an interrupted [[compactLog]]: an intent marker without
-    * its finished swap means the staged view (or the already-renamed log)
-    * is the truth — finish the deletes/rename and clear the intent.
+  /** Roll forward an interrupted [[compactLog]] from its intent marker.
     * No-op in O(1) listing when no intent marker exists.
     */
   def recoverCompaction(spark: SparkSession, tablePath: String): Unit =
-    tableLock(tablePath).synchronized {
-      val batches = new Path(s"$tablePath/_batches")
-      val fs = batches.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(batches)) return
-      fs.listStatus(batches).toIndexedSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith("compactlog_"))
-        .map(_.stripPrefix("compactlog_").toLong)
-        .sorted
-        .foreach(id => finishCompaction(spark, tablePath, id))
-    }
-
-  private def finishCompaction(spark: SparkSession, tablePath: String,
-      maxBatchId: Long): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new Path(tablePath).getFileSystem(conf)
-    val staged = new Path(s"$tablePath/_compact_tmp/batch_id=$maxBatchId")
-    val log = new Path(s"$tablePath/log")
-    if (fs.exists(staged)) {
-      // deletes are idempotent; the staged dir still holds the truth
-      if (fs.exists(log))
-        fs.listStatus(log).toIndexedSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-          .foreach(s => fs.delete(s.getPath, true))
-      else fs.mkdirs(log)
-      if (!fs.rename(staged, new Path(log, s"batch_id=$maxBatchId")))
-        throw new IllegalStateException(
-          s"compaction rename failed: $staged -> $log/batch_id=$maxBatchId")
-    }
-    // else: rename already happened in a previous attempt — only the
-    // intent (and tmp debris) are left to clear
-    fs.delete(new Path(s"$tablePath/_compact_tmp"), true)
-    // marker GC below the horizon BEFORE the intent clears (idempotent —
-    // a crash between the two just re-runs this roll-forward)
-    BatchMarker.advanceHorizon(spark, tablePath, "log", maxBatchId)
-    fs.delete(new Path(s"$tablePath/_batches/compactlog_$maxBatchId"), false)
-  }
+    BatchMarker.recover(spark, Seq(logSink(tablePath)))
 }

@@ -21,11 +21,8 @@ import graft.operators.Similarity
   *
   * Layout: `vectors/cell=<c>/batch_id=<b>/` — cell OUTER (the pruned
   * scan's partition key and the per-cell compaction unit), batch inner.
-  * Replay follows the [[BatchMarker]] exactly-once protocol: an O(1)
-  * per-batch marker written AFTER the append commits, with partial batch
-  * dirs deleted and rewritten on replay — a Hadoop committer renames
-  * partition dirs sequentially, so "some dirs exist" must never be read
-  * as "the batch landed".
+  * The vectors table is one sink of the [[BatchMarker.ingest]]
+  * exactly-once core.
   *
   * Search composes unchanged: [[Similarity.ivfTopKFromPartitioned]] reads
   * `centroids` + `vectors` and projects only (id, vec, cell), so the inner
@@ -41,13 +38,8 @@ object VectorIngest {
       idCol: String = "vec_id", vecCol: String = "embedding",
       nCells: Int = 8, seed: Long = 42L,
       maxTrainSamples: Int = 100000): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, indexPath, idCol, vecCol, nCells, seed,
-          maxTrainSamples)
-      }
-      .start()
+    BatchMarker.stream(vecs, checkpoint)(processBatch(_, _, indexPath, idCol,
+      vecCol, nCells, seed, maxTrainSamples))
 
   /** One micro-batch, callable from tests and backfills directly. */
   def processBatch(batch: DataFrame, batchId: Long, indexPath: String,
@@ -56,58 +48,39 @@ object VectorIngest {
       maxTrainSamples: Int = 100000): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val vectorsPath = s"$indexPath/vectors"
     val centroidsPath = s"$indexPath/centroids"
-    BatchMarker.assertMarkeredSink(spark, indexPath,
-      s"$vectorsPath/cell=*/batch_id=*")
-    BatchMarker.ensureProtocol(spark, indexPath)
-    if (BatchMarker.landed(spark, indexPath, "vectors", batchId)) return
-    // crash-replay: a crash mid-commit (or between the append and the
-    // marker) leaves partial batch dirs — the batch owns them, delete and
-    // rewrite (the BatchMarker protocol)
-    BatchMarker.clearPartial(spark, s"$vectorsPath/cell=*/batch_id=$batchId")
-
+    val vectors = BatchMarker.Sink(indexPath, "vectors", s"$indexPath/vectors",
+      outer = Some("cell"))
     // an empty micro-batch (sources can advance offsets with no rows) has
-    // nothing to write and must NOT stamp a degenerate quantizer.
-    // isEmpty, not count(): steady-state batches should pay a limit-1
-    // probe, not a full pass that only the first-ever batch needs
-    if (batch.isEmpty) {
-      BatchMarker.commit(spark, indexPath, "vectors", batchId)
-      return
+    // nothing to write and must NOT stamp a degenerate quantizer — the
+    // core's isEmpty probe lands it as a marker only
+    BatchMarker.ingest(batch, batchId, Seq(vectors), skipEmpty = true) { pending =>
+      // centroids first, overwrite-idempotent (the IndexIngest meta
+      // contract): a crash after centroids but before the vector append
+      // replays into the same overwrite; later batches never re-fit
+      val centers: Array[Array[Double]] = readCentroids(spark, centroidsPath)
+        .getOrElse {
+          // a stream doesn't control its batch sizes: a first batch
+          // smaller than nCells must clamp k rather than fail the KMeans
+          // fit — the centroids table is self-describing, so later
+          // (larger) batches stay consistent with whatever cell count was
+          // stamped. The count() runs only on this one first-ever batch.
+          val k = math.max(1L, math.min(nCells.toLong, batch.count())).toInt
+          val c = Similarity.fitQuantizer(batch, k, seed, maxTrainSamples,
+            vecCol)
+          c.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
+            .toDF("cell", "centroid")
+            .coalesce(1).write.mode("overwrite").parquet(centroidsPath)
+          c
+        }
+      pending.append(vectors)(Similarity.assignToCells(batch, centers, idCol,
+        vecCol, idCol, vecCol, probes = 1))
     }
-
-    // centroids first, overwrite-idempotent (the IndexIngest meta
-    // contract): a crash after centroids but before the vector append
-    // replays into the same overwrite; later batches never re-fit
-    val centers: Array[Array[Double]] = readCentroids(spark, centroidsPath)
-      .getOrElse {
-        // a stream doesn't control its batch sizes: a first batch smaller
-        // than nCells must clamp k rather than fail the KMeans fit — the
-        // centroids table is self-describing, so later (larger) batches
-        // stay consistent with whatever cell count was stamped. The
-        // count() runs only on this one first-ever batch.
-        val k = math.max(1L, math.min(nCells.toLong, batch.count())).toInt
-        val c = Similarity.fitQuantizer(batch, k, seed, maxTrainSamples,
-          vecCol)
-        c.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-          .toDF("cell", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(centroidsPath)
-        c
-      }
-    Similarity.assignToCells(batch, centers, idCol, vecCol, idCol, vecCol,
-        probes = 1)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").partitionBy("cell", "batch_id")
-      .parquet(vectorsPath)
-    BatchMarker.commit(spark, indexPath, "vectors", batchId)
   }
 
   private def readCentroids(spark: SparkSession,
       centroidsPath: String): Option[Array[Array[Double]]] = {
-    val p = new org.apache.hadoop.fs.Path(centroidsPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(new org.apache.hadoop.fs.Path(centroidsPath, "_SUCCESS")))
-      None
+    if (!BatchMarker.exists(spark, s"$centroidsPath/_SUCCESS")) None
     else
       Some(spark.read.parquet(centroidsPath)
         .select(col("cell"), col("centroid")).collect()

@@ -29,12 +29,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pipeline's global min-doc_id resolution, so `kept(...)` equals the
   * from-scratch result row-for-row.
   *
-  * Exactly-once: single sink, [[BatchMarker]] protocol — the log append is
-  * batch_id-partitioned, the marker commits after it, a crash in between
-  * replays as clearPartial + rewrite (row-identical: the anti-join state
-  * is the pre-batch log on first run and replay alike). The `has_data`
-  * sentinel gates the history read without ever globbing batch dirs, same
-  * posture as [[IngestWithDigest]].
+  * Exactly-once: one sink through the [[BatchMarker.ingest]] core (the
+  * anti-join state is the pre-batch log on first run and replay alike),
+  * its `has_data` sentinel gating the history read.
   *
   * At 100 TB the log is ~100 bytes per CLAIMED url (not per record read),
   * and each batch reads it once for two lookups; its small-file debt
@@ -46,22 +43,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object WarcIngest {
 
   /** Run the stream: each micro-batch of parsed pages goes through
-    * [[processBatch]] transactionally per batchId — the same wrapper
-    * shape as [[IngestWithDigest.start]]. `pages` is a STREAMING frame
-    * of the page-digest shape (in production: a binaryFile stream of
-    * arriving WARC segments, parsed + WET-split + canonicalized
+    * [[processBatch]] transactionally per batchId. `pages` is a STREAMING
+    * frame of the page-digest shape (in production: a binaryFile stream
+    * of arriving WARC segments, parsed + WET-split + canonicalized
     * map-side; the record walk and extraction are plain Dataset ops, so
     * they lift to streaming unchanged). Returns the started query
     * (caller stops it).
     */
   def start(pages: DataFrame, logPath: String, checkpoint: String,
       minTokens: Int = 3): org.apache.spark.sql.streaming.StreamingQuery =
-    pages.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, logPath, minTokens)
-      }
-      .start()
+    BatchMarker.stream(pages, checkpoint)(
+      processBatch(_, _, logPath, minTokens))
+
+  private def logSink(logPath: String) = BatchMarker.Sink(logPath, "log",
+    logPath, sentinel = Some(s"$logPath/_batches/has_data"))
 
   /** One micro-batch. `pages` must carry unique `doc_id` plus `url`,
     * `n_tokens`, `text_md5` (the `SparkEntry.warcPages` shape).
@@ -69,84 +64,59 @@ object WarcIngest {
   def processBatch(pages: DataFrame, batchId: Long, logPath: String,
       minTokens: Int = 3): Unit = {
     val spark = pages.sparkSession
-    BatchMarker.assertMarkeredSink(spark, logPath, s"$logPath/batch_id=*")
-    BatchMarker.ensureProtocol(spark, logPath)
-    if (BatchMarker.landed(spark, logPath, "log", batchId)) {
-      // repair the marker->sentinel crash window before short-circuiting
-      if (!exists(spark, s"$logPath/_batches/has_data") &&
-          exists(spark, s"$logPath/batch_id=$batchId"))
-        stampHasData(spark, logPath)
-      return
-    }
-    BatchMarker.clearPartial(spark, s"$logPath/batch_id=$batchId")
+    val log = logSink(logPath)
+    BatchMarker.ingest(pages, batchId, Seq(log), skipEmpty = false) { pending =>
+      val history =
+        if (BatchMarker.hasData(spark, log)) Some(spark.read.parquet(logPath))
+        else None
 
-    val history =
-      if (exists(spark, s"$logPath/_batches/has_data"))
-        Some(spark.read.parquet(logPath))
-      else None
-
-    // tier 1: batch-local first arrival per url, then the claim check
-    val urlCand = pages
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy(col("url")).orderBy(col("doc_id"))))
-      .filter(col("__rk") === 1).drop("__rk")
-    val urlNew = (history match {
-      case Some(h) => urlCand.join(h.select("url"), Seq("url"), "left_anti")
-      case None    => urlCand
-    }).persist() // referenced by tiers 2-3 AND the final append
-
-    try {
-      // tier 2 + 3: quality gate, then first arrival per text digest
-      val gated = urlNew.filter(col("n_tokens") >= minTokens)
-      val textCand = gated
+      // tier 1: batch-local first arrival per url, then the claim check
+      val urlCand = pages
         .withColumn("__rk", row_number().over(
-          Window.partitionBy(col("text_md5")).orderBy(col("doc_id"))))
+          Window.partitionBy(col("url")).orderBy(col("doc_id"))))
         .filter(col("__rk") === 1).drop("__rk")
-      val textNew = history match {
-        case Some(h) =>
-          textCand.join(h.filter(col("kept")).select("text_md5"),
-            Seq("text_md5"), "left_anti")
-        case None => textCand
-      }
+      val urlNew = (history match {
+        case Some(h) => urlCand.join(h.select("url"), Seq("url"), "left_anti")
+        case None    => urlCand
+      }).persist() // referenced by tiers 2-3 AND the final append
 
-      // one append: every new url claim, flagged kept where it survived
-      // all tiers (quality failures and text dups land with kept = false
-      // — they hold their url slot but never surface in kept())
-      val out = urlNew
-        .join(textNew.select(col("doc_id"), lit(true).as("__kept")),
-          Seq("doc_id"), "left")
-        .withColumn("kept", coalesce(col("__kept"), lit(false)))
-        .drop("__kept")
-      out.withColumn("batch_id", lit(batchId))
-        .write.mode("append").partitionBy("batch_id").parquet(logPath)
-      BatchMarker.commit(spark, logPath, "log", batchId)
-      if (exists(spark, s"$logPath/batch_id=$batchId"))
-        stampHasData(spark, logPath)
-    } finally urlNew.unpersist()
+      try {
+        // tier 2 + 3: quality gate, then first arrival per text digest
+        val gated = urlNew.filter(col("n_tokens") >= minTokens)
+        val textCand = gated
+          .withColumn("__rk", row_number().over(
+            Window.partitionBy(col("text_md5")).orderBy(col("doc_id"))))
+          .filter(col("__rk") === 1).drop("__rk")
+        val textNew = history match {
+          case Some(h) =>
+            textCand.join(h.filter(col("kept")).select("text_md5"),
+              Seq("text_md5"), "left_anti")
+          case None => textCand
+        }
+
+        // one append: every new url claim, flagged kept where it survived
+        // all tiers (quality failures and text dups land with kept = false
+        // — they hold their url slot but never surface in kept())
+        val out = urlNew
+          .join(textNew.select(col("doc_id"), lit(true).as("__kept")),
+            Seq("doc_id"), "left")
+          .withColumn("kept", coalesce(col("__kept"), lit(false)))
+          .drop("__kept")
+        pending.append(log)(out)
+      } finally urlNew.unpersist()
+    }
   }
 
   /** The curated corpus: rows that survived every tier, across all landed
-    * batches. Gated on the `_batches/has_data` sentinel (the
-    * [[PhashIngest]] convention): before any data-bearing batch lands the
-    * log has no files and no inferable schema, so the read returns an
-    * empty typed frame instead of throwing.
+    * batches. Gated on the log's `has_data` sentinel: before any
+    * data-bearing batch lands the log has no files and no inferable
+    * schema, so the read returns an empty typed frame instead of throwing.
     */
   def kept(spark: SparkSession, logPath: String): DataFrame = {
     import spark.implicits._
-    if (exists(spark, s"$logPath/_batches/has_data"))
+    if (BatchMarker.hasData(spark, logSink(logPath)))
       spark.read.parquet(logPath).filter(col("kept"))
         .select("doc_id", "url", "n_tokens")
     else Seq.empty[(Long, String, Long)].toDF("doc_id", "url", "n_tokens")
-  }
-
-  private def stampHasData(spark: SparkSession, logPath: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$logPath/_batches/has_data")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) { fs.mkdirs(p.getParent); fs.create(p, true).close() }
-  }
-
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 }

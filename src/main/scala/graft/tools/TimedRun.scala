@@ -74,7 +74,7 @@ object TimedRun {
   }
 
   /** Drop the SQL cache, then BLOCKING-unpersist every persistent RDD: the
-    * localCheckpoint blocks of the iterative kernels and sortOnce cuts are
+    * localCheckpoint blocks of the iterative kernels and pre-sort cuts are
     * outside the SQL cache and otherwise linger until the async
     * ContextCleaner gets to them (the query after a checkpoint-heavy one
     * ran up to 4× slow: events_anomaly 4.6 s in-suite vs 1.0 s standalone).
