@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -74,6 +75,94 @@ class SimilaritySpec extends SparkSpec {
     assert(pq.groupBy("query_id").count().filter(col("count") > 5).count() === 0)
   }
 
+  /** One persisted-index layout: how it is written under a root, how it
+    * is searched after a read from disk, the in-session search it must
+    * equal, and the pinned schema of every table it persists.
+    */
+  private case class Layout(name: String, write: String => Unit,
+      fromDisk: String => DataFrame, inSession: () => DataFrame,
+      tables: Seq[(String, String)])
+
+  private lazy val emb001 =
+    graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+  private def q001 = emb001.filter(col("vec_id") < 10)
+
+  private val centroidsSchema = "struct<cell:int,centroid:array<double>,n_corpus:bigint>"
+  private val codebooksSchema = "struct<subspace:int,centroid_id:int," +
+    "centroid:array<double>,n_corpus:bigint,residual:boolean>"
+  private def codesSchema(m: Int, cell: Boolean) = "struct<neighbor_id:bigint," +
+    (0 until m).map(j => s"code_$j:int,").mkString + "n_corpus:bigint" +
+    (if (cell) ",cell:int>" else ">")
+
+  private def layouts: Seq[Layout] = Seq(
+    Layout("flat IVF",
+      p => Similarity.writeIvfCentroids(emb001, p + "/ivf", nCells = 8),
+      p => Similarity.ivfTopKFromCentroids(p + "/ivf", emb001, q001, k = 5, nProbe = 4),
+      () => Similarity.ivfTopK(emb001, q001, k = 5, nCells = 8, nProbe = 4),
+      Seq("ivf/centroids" -> centroidsSchema)),
+    Layout("partitioned IVF",
+      p => Similarity.writeIvfPartitioned(emb001, p + "/ivf", nCells = 8),
+      p => Similarity.ivfTopKFromPartitioned(spark, p + "/ivf", q001, k = 5, nProbe = 4),
+      () => Similarity.ivfTopK(emb001, q001, k = 5, nCells = 8, nProbe = 4),
+      Seq("ivf/centroids" -> centroidsSchema, "ivf/vectors" ->
+        "struct<vec_id:bigint,embedding:array<double>,n_corpus:bigint,cell:int>")),
+    Layout("LSH planes",
+      p => Similarity.writeLshPlanes(emb001, p + "/lsh", dim = 64, bits = 4, tables = 16),
+      p => Similarity.lshTopKFromPlanes(p + "/lsh", emb001, q001, k = 5),
+      () => Similarity.lshTopK(emb001, q001, k = 5, dim = 64, bits = 4, tables = 16),
+      Seq("lsh/planes" -> "struct<tbl:int,bit:int,plane:array<double>,n_corpus:bigint>")),
+    Layout("IVF-PQ from two indexes",
+      { p =>
+        Similarity.writeIvfCentroids(emb001, p + "/ivf", nCells = 8)
+        Similarity.writePqIndex(emb001, p + "/pq")
+      },
+      p => Similarity.ivfPqTopKFromIndexes(p + "/ivf", p + "/pq", emb001, q001, k = 5,
+        nProbe = 4, refine = 32),
+      () => Similarity.ivfPqTopK(emb001, q001, k = 5, nCells = 8, nProbe = 4, refine = 32),
+      Seq("ivf/centroids" -> centroidsSchema, "pq/codebooks" -> codebooksSchema,
+        "pq/codes" -> codesSchema(8, cell = false))),
+    Layout("partitioned IVF-PQ (direct)",
+      p => Similarity.writeIvfPqPartitioned(emb001, p + "/ivfpq", nCells = 8),
+      p => Similarity.ivfPqTopKFromPartitioned(spark, p + "/ivfpq", emb001, q001, k = 5,
+        nProbe = 4, refine = 32),
+      () => Similarity.ivfPqTopK(emb001, q001, k = 5, nCells = 8, nProbe = 4, refine = 32),
+      Seq("ivfpq/centroids" -> centroidsSchema, "ivfpq/codebooks" -> codebooksSchema,
+        "ivfpq/codes" -> codesSchema(8, cell = true))),
+    Layout("partitioned IVF-PQ (residual)",
+      p => Similarity.writeIvfPqPartitioned(emb001, p + "/ivfpq", nCells = 8,
+        residual = true),
+      p => Similarity.ivfPqTopKFromPartitioned(spark, p + "/ivfpq", emb001, q001, k = 5,
+        nProbe = 4, refine = 32),
+      () => Similarity.ivfPqTopK(emb001, q001, k = 5, nCells = 8, nProbe = 4, refine = 32,
+        residual = true),
+      Seq("ivfpq/centroids" -> centroidsSchema, "ivfpq/codebooks" -> codebooksSchema,
+        "ivfpq/codes" -> codesSchema(8, cell = true))),
+    Layout("SemDeDup from centroids",
+      p => Similarity.writeIvfCentroids(emb001, p + "/ivf", nCells = 8),
+      p => Similarity.semanticPairsFromCentroids(p + "/ivf", emb001, threshold = 0.45,
+        assignProbes = 2),
+      () => Similarity.semanticPairs(emb001, threshold = 0.45, nCells = 8, assignProbes = 2),
+      Seq("ivf/centroids" -> centroidsSchema)))
+
+  private def roundTrip(l: Layout, path: String): Unit = {
+    l.write(path)
+    for ((t, schema) <- l.tables)
+      assert(spark.read.parquet(s"$path/$t").schema.simpleString === schema, t)
+    val fromDisk = l.fromDisk(path)
+    val inSession = l.inSession()
+    assert(fromDisk.count() > 0, s"${l.name}: empty search")
+    assert(fromDisk.exceptAll(inSession).count() === 0)
+    assert(inSession.exceptAll(fromDisk).count() === 0)
+  }
+
+  for (l <- layouts)
+    test(s"${l.name} index on disk: write/read round-trip returns the in-session answer") {
+      assume(new java.io.File("/root/testdata/sf0.001/embeddings.parquet").exists())
+      val idx = java.nio.file.Files.createTempDirectory("annidx").toFile
+      idx.deleteOnExit()
+      roundTrip(l, idx.getAbsolutePath + "/index")
+    }
+
   test("PQ index on disk: write/read round-trip returns the in-session answer") {
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/embeddings.parquet").exists())
@@ -83,7 +172,11 @@ class SimilaritySpec extends SparkSpec {
     idx.deleteOnExit()
     val path = idx.getAbsolutePath + "/index"
 
-    Similarity.writePqIndex(emb, path)
+    roundTrip(Layout("flat PQ",
+      p => Similarity.writePqIndex(emb, p),
+      p => Similarity.pqTopKFromIndex(p, emb, q, k = 5, refine = 32),
+      () => Similarity.pqTopK(emb, q, k = 5, refine = 32),
+      Seq("codebooks" -> codebooksSchema, "codes" -> codesSchema(8, cell = false))), path)
     // the persisted layout: small codebooks table + m-byte-per-row codes
     val cb = spark.read.parquet(path + "/codebooks")
     assert(cb.count() === 8L * 16L)
@@ -97,6 +190,51 @@ class SimilaritySpec extends SparkSpec {
     val inSession = Similarity.pqTopK(emb, q, k = 5, refine = 32)
     assert(fromIndex.exceptAll(inSession).count() === 0)
     assert(inSession.exceptAll(fromIndex).count() === 0)
+  }
+
+  /** Jobs started by `body`, counted by job group with a listener; a
+    * sentinel job in its own group flushes the listener bus.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"jobs-${System.nanoTime()}"
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(tag, "body")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$tag-sentinel", "sentinel")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      var n = 0
+      var g = groups.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (g != null && g != s"$tag-sentinel") {
+        if (g == tag) n += 1
+        g = groups.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(g != null, "the sentinel job never reached the listener")
+      n
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a partitioned IVF-PQ build counts its corpus once") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfpqjobs").toFile
+    dir.deleteOnExit()
+    val path = dir.getAbsolutePath + "/ivfpq"
+    val jobs = jobsOf(Similarity.writeIvfPqPartitioned(vecs, path, nCells = 3, m = 2, ksub = 2))
+    info(s"partitioned IVF-PQ build: $jobs jobs")
+    assert(jobs < 1000)
+    assert(spark.read.parquet(path + "/centroids").schema.simpleString === centroidsSchema)
+    assert(spark.read.parquet(path + "/codebooks").schema.simpleString === codebooksSchema)
+    assert(spark.read.parquet(path + "/codes").schema.simpleString ===
+      codesSchema(2, cell = true))
+    assert(spark.read.parquet(path + "/centroids").count() === 3L)
+    assert(spark.read.parquet(path + "/codes").count() === 5L)
   }
 
   test("ivfPqTopK: the composed index clears the recall@5 gate") {
