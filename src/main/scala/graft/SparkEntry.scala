@@ -2,7 +2,8 @@ package graft
 
 import graft.functions.{Cleaning, Doi, Fuzzy, PosTag, TextStats}
 import graft.operators.Checkpoints.LineageOps
-import graft.operators.{Bpe, Curation, Dedup, Expectations, Incremental, Multimodal, RangeJoin, Retrieval, Rounds, Similarity}
+import graft.operators.{Bpe, Curation, Dedup, Expectations, Incremental, Multimodal, RangeJoin, Retrieval, Rounds, Similarity, VectorIndex}
+import graft.operators.VectorIndex.{Ivf, IvfPq, Lsh, Pq}
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -5136,10 +5137,10 @@ object SparkEntry {
         .select(col("media_id").as("vec_id"),
           col("histogram").cast("array<double>").as("embedding"))
       val path = ensureIndex(s, docs, "ivfimg", "centroids") { p =>
-        Similarity.writeIvfCentroids(vecs, p, nCells = 8)
+        VectorIndex.fit(vecs, Ivf(8)).write(vecs, p)
       }
-      Similarity.ivfTopKFromCentroids(path, vecs, vecs.filter(col("vec_id") < 10),
-          k = 5, nProbe = 4)
+      VectorIndex.read(s, path).search(vecs.filter(col("vec_id") < 10), k = 5,
+          corpus = Some(vecs), nProbe = 4)
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("query_id", "rank")
     }),
@@ -5162,10 +5163,10 @@ object SparkEntry {
         .select(col("media_id").as("vec_id"),
           col("histogram").cast("array<double>").as("embedding"))
       val path = ensureIndex(s, docs, "ivfimgpart", "vectors") { p =>
-        Similarity.writeIvfPartitioned(vecs, p, nCells = 8)
+        VectorIndex.fit(vecs, Ivf(8)).write(vecs, p, partitioned = true)
       }
-      Similarity.ivfTopKFromPartitioned(s, path,
-          vecs.filter(col("vec_id") < 10), k = 5, nProbe = 4)
+      VectorIndex.read(s, path)
+          .search(vecs.filter(col("vec_id") < 10), k = 5, nProbe = 4)
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("query_id", "rank")
     }),
@@ -5301,7 +5302,7 @@ object SparkEntry {
         Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
           .parquet(s"$p/built")
       }
-      Similarity.ivfTopKFromPartitioned(s, path, vecs.filter(col("vec_id") < 10),
+      VectorIndex.read(s, path).search(vecs.filter(col("vec_id") < 10),
           k = 5, nProbe = 8)
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("query_id", "rank")
@@ -5930,9 +5931,9 @@ object SparkEntry {
     "ann_lsh_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = ensureIndex(s, emb, "lsh", "planes") { p =>
-        Similarity.writeLshPlanes(emb, p, dim = 64, bits = 4, tables = 16)
+        VectorIndex.fit(emb, Lsh(dim = 64, bits = 4, tables = 16)).write(emb, p)
       }
-      Similarity.lshTopKFromPlanes(path, emb, emb.filter(col("vec_id") < 10), k = 5)
+      VectorIndex.read(s, path).search(emb.filter(col("vec_id") < 10), k = 5, Some(emb))
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("query_id", "rank")
     }),
@@ -5946,10 +5947,10 @@ object SparkEntry {
     "ann_ivf_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = ensureIndex(s, emb, "ivf", "centroids") { p =>
-        Similarity.writeIvfCentroids(emb, p, nCells = 8)
+        VectorIndex.fit(emb, Ivf(8)).write(emb, p)
       }
-      Similarity.ivfTopKFromCentroids(path, emb, emb.filter(col("vec_id") < 10),
-          k = 5, nProbe = 4)
+      VectorIndex.read(s, path).search(emb.filter(col("vec_id") < 10), k = 5,
+          corpus = Some(emb), nProbe = 4)
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("query_id", "rank")
     }),
@@ -5965,9 +5966,9 @@ object SparkEntry {
     "ann_ivf_pruned" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = ensureIndex(s, emb, "ivfpart", "vectors") { p =>
-        Similarity.writeIvfPartitioned(emb, p, nCells = 8)
+        VectorIndex.fit(emb, Ivf(8)).write(emb, p, partitioned = true)
       }
-      Similarity.ivfTopKFromPartitioned(s, path, emb.filter(col("vec_id") < 10),
+      VectorIndex.read(s, path).search(emb.filter(col("vec_id") < 10),
           k = 5, nProbe = 4)
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("query_id", "rank")
@@ -5992,7 +5993,7 @@ object SparkEntry {
         Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
           .parquet(s"$p/built")
       }
-      Similarity.ivfTopKFromPartitioned(s, path, emb.filter(col("vec_id") < 10),
+      VectorIndex.read(s, path).search(emb.filter(col("vec_id") < 10),
           k = 5, nProbe = 8)
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("query_id", "rank")
@@ -6007,7 +6008,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 10)
       val brute = Similarity.bruteForceTopK(emb, q, k = 5)
-      val lsh = Similarity.lshTopK(emb, q, k = 5, dim = 64, bits = 4, tables = 16)
+      val lsh = VectorIndex.fit(emb, Lsh(dim = 64, bits = 4, tables = 16)).search(q, 5, Some(emb))
       Similarity.recallAtK(lsh, brute)
         .agg(count(lit(1)).as("n_queries"), (avg(col("recall")) >= 0.6).as("recall_ok"))
     }),
@@ -6016,8 +6017,8 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 10)
       val brute = Similarity.bruteForceTopK(emb, q, k = 5)
-      val ivf = Similarity.ivfTopK(emb, q, k = 5, nCells = 8, nProbe = 4,
-        corpusId = Some(dir))
+      val ivf = VectorIndex.fit(emb, Ivf(8), corpusId = Some(dir))
+        .search(q, k = 5, corpus = Some(emb), nProbe = 4)
       Similarity.recallAtK(ivf, brute)
         .agg(count(lit(1)).as("n_queries"), (avg(col("recall")) >= 0.6).as("recall_ok"))
     }),
@@ -6040,8 +6041,8 @@ object SparkEntry {
         .persist()
       val q = vecs.filter(col("vec_id") < 10)
       val brute = Similarity.bruteForceTopK(vecs, q, k = 5)
-      val ivf = Similarity.ivfTopK(vecs, q, k = 5, nCells = 8, nProbe = 4,
-        corpusId = Some(s"img:$dir"))
+      val ivf = VectorIndex.fit(vecs, Ivf(8), corpusId = Some(s"img:$dir"))
+        .search(q, k = 5, corpus = Some(vecs), nProbe = 4)
       Similarity.recallAtK(ivf, brute)
         .agg(count(lit(1)).as("n_queries"), (avg(col("recall")) >= 0.6).as("recall_ok"))
     }),
@@ -6055,10 +6056,10 @@ object SparkEntry {
     "ann_pq_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = ensureIndex(s, emb, "pq", "codes") { p =>
-        Similarity.writePqIndex(emb, p)
+        VectorIndex.fit(emb, Pq()).write(emb, p)
       }
-      Similarity.pqTopKFromIndex(path, emb, emb.filter(col("vec_id") < 10),
-          k = 5, refine = 32)
+      VectorIndex.read(s, path).search(emb.filter(col("vec_id") < 10),
+          k = 5, corpus = Some(emb), refine = 32)
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("query_id", "rank")
     }),
@@ -6067,7 +6068,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 10)
       val brute = Similarity.bruteForceTopK(emb, q, k = 5)
-      val pq = Similarity.pqTopK(emb, q, k = 5, refine = 32, corpusId = Some(dir))
+      val pq = VectorIndex.fit(emb, Pq(), corpusId = Some(dir)).search(q, 5, Some(emb), refine = 32)
       Similarity.recallAtK(pq, brute)
         .agg(count(lit(1)).as("n_queries"), (avg(col("recall")) >= 0.6).as("recall_ok"))
     }),
@@ -6081,19 +6082,19 @@ object SparkEntry {
     "ann_ivfpq_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val ivfPath = ensureIndex(s, emb, "ivf", "centroids") { p =>
-        Similarity.writeIvfCentroids(emb, p, nCells = 8)
+        VectorIndex.fit(emb, Ivf(8)).write(emb, p)
       }
       // the PQ half at the r12 accuracy budget: ksub=32 direct-coded
       // books (residual coding was A/B'd and REJECTED on this corpus —
       // near-isotropic unit vectors make residuals carry more energy
-      // than the vectors; see fitPqCodebooksResidual's scaladoc), and
+      // than the vectors; see VectorIndex.IvfPq's scaladoc), and
       // nProbe=6 because the probe-4 IVF ceiling is 0.78 recall@5 at
       // sf0.1 — no code quality can clear 0.80 under it
       val pqPath = ensureIndex(s, emb, "pq32", "codes") { p =>
-        Similarity.writePqIndex(emb, p, ksub = 32)
+        VectorIndex.fit(emb, Pq(ksub = 32)).write(emb, p)
       }
-      Similarity.ivfPqTopKFromIndexes(ivfPath, pqPath, emb,
-          emb.filter(col("vec_id") < 10), k = 5, nProbe = 6)
+      VectorIndex.read(s, ivfPath, pqPath).search(emb.filter(col("vec_id") < 10),
+          k = 5, corpus = Some(emb), nProbe = 6)
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("query_id", "rank")
     }),
@@ -6108,10 +6109,10 @@ object SparkEntry {
     "ann_ivfpq_pruned" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = ensureIndex(s, emb, "ivfpqpart32", "codes") { p =>
-        Similarity.writeIvfPqPartitioned(emb, p, nCells = 8, ksub = 32)
+        VectorIndex.fit(emb, IvfPq(ksub = 32)).write(emb, p, partitioned = true)
       }
-      Similarity.ivfPqTopKFromPartitioned(s, path, emb,
-          emb.filter(col("vec_id") < 10), k = 5, nProbe = 6)
+      VectorIndex.read(s, path).search(emb.filter(col("vec_id") < 10),
+          k = 5, corpus = Some(emb), nProbe = 6)
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("query_id", "rank")
     }),
@@ -6143,8 +6144,8 @@ object SparkEntry {
         Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
           .parquet(s"$p/built")
       }
-      Similarity.ivfPqTopKFromPartitioned(s, path, emb,
-          emb.filter(col("vec_id") < 10), k = 5, nProbe = 6)
+      VectorIndex.read(s, path).search(emb.filter(col("vec_id") < 10),
+          k = 5, corpus = Some(emb), nProbe = 6)
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("query_id", "rank")
     }),
@@ -6154,13 +6155,13 @@ object SparkEntry {
     // ceiling is 0.78 at sf0.1, so no code quality clears 0.8 under it).
     // Residual coding was A/B'd for this gate and rejected — on this
     // corpus's near-isotropic unit vectors it LOWERS recall (see
-    // fitPqCodebooksResidual).
+    // VectorIndex.IvfPq).
     "ann_ivfpq_recall" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 10)
       val brute = Similarity.bruteForceTopK(emb, q, k = 5)
-      val ivfpq = Similarity.ivfPqTopK(emb, q, k = 5, nProbe = 6, ksub = 32,
-        corpusId = Some(dir))
+      val ivfpq = VectorIndex.fit(emb, IvfPq(ksub = 32), corpusId = Some(dir))
+        .search(q, k = 5, corpus = Some(emb), nProbe = 6)
       Similarity.recallAtK(ivfpq, brute)
         .agg(count(lit(1)).as("n_queries"), (avg(col("recall")) >= 0.8).as("recall_ok"))
     }),
@@ -6175,9 +6176,9 @@ object SparkEntry {
     "dedup_semantic" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = ensureIndex(s, emb, "ivf", "centroids") { p =>
-        Similarity.writeIvfCentroids(emb, p, nCells = 8)
+        VectorIndex.fit(emb, Ivf(8)).write(emb, p)
       }
-      Similarity.semanticPairsFromCentroids(path, emb, threshold = 0.45,
+      Similarity.semanticPairs(VectorIndex.read(s, path), emb, threshold = 0.45,
           assignProbes = 2)
         .orderBy("doc_a", "doc_b")
     }),
@@ -6189,8 +6190,8 @@ object SparkEntry {
     "dedup_semantic_recall" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val exact = Similarity.cosinePairs(emb, threshold = 0.45)
-      val sem = Similarity.semanticPairs(emb, threshold = 0.45,
-        nCells = 8, corpusId = Some(dir), assignProbes = 2)
+      val sem = Similarity.semanticPairs(VectorIndex.fit(emb, Ivf(8), corpusId = Some(dir)),
+        emb, threshold = 0.45, assignProbes = 2)
       Similarity.pairRecall(sem, exact, bar = 0.5)
     }),
 
@@ -6776,9 +6777,9 @@ object SparkEntry {
     "curation_cluster_balance" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = ensureIndex(s, emb, "ivf", "centroids") { p =>
-        Similarity.writeIvfCentroids(emb, p, nCells = 8)
+        VectorIndex.fit(emb, Ivf(8)).write(emb, p)
       }
-      Similarity.clusterBalancedSample(path, emb, cap = 40)
+      Similarity.clusterBalancedSample(VectorIndex.read(s, path), emb, cap = 40)
         .orderBy("vec_id")
     }),
 

@@ -68,7 +68,7 @@ object Retrieval {
   }
 
   /** Persist the index under `path` (build-once / query-many, the same
-    * split as [[Similarity.writePqIndex]]). Tables are stamped with
+    * split as a persisted [[VectorIndex]]). Tables are stamped with
     * `n_corpus` so differently-sized corpora never collide and a replay
     * oracle can glob + filter. At 100 TB the postings write would add
     * `.bucketBy(token)` so searches prune to the buckets of their query

@@ -109,7 +109,7 @@ object BatchMarker {
     * markers only — for the bodies whose work would otherwise stamp
     * something from no rows.
     */
-  private[streaming] def ingest(batch: DataFrame, batchId: Long, sinks: Seq[Sink],
+  private[graft] def ingest(batch: DataFrame, batchId: Long, sinks: Seq[Sink],
       skipEmpty: Boolean)(body: Pending => Unit): Unit = {
     val spark = batch.sparkSession
     sinks.foreach(s => assertMarkeredSink(spark, s.root, s.batchDir("*")))

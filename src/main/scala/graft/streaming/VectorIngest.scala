@@ -1,36 +1,30 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Similarity
+import graft.operators.VectorIndex
 
-/** Streaming vector ingest into the cell-partitioned IVF layout — the ANN
-  * twin of [[IndexIngest.startPartitioned]] (embeddings of a daily crawl
-  * land on the 100 TB vector index without rebuilding it).
+/** Streaming vector ingest: each micro-batch appends to the
+  * cell-partitioned IVF layout of a [[VectorIndex]] (`centroids` +
+  * `vectors/cell=<c>/batch_id=<b>/`, see [[VectorIndex.append]]), so
+  * embeddings of a daily crawl land on the vector index without
+  * rebuilding it.
   *
-  * Contract, mirroring production IVF practice: the coarse quantizer is
-  * trained ONCE — by the first batch, on a seeded sample of itself — and
-  * every later batch is ASSIGNED to those fixed centroids (appending under
-  * the existing `cell=` directories; re-training on append would silently
-  * re-bucket history). The centroids table is the index's self-describing
-  * meta, exactly like the partitioned BM25 index's bucket count: the
-  * `nCells`/`seed` parameters are consulted only when no centroids exist
-  * yet.
+  * The coarse quantizer is trained ONCE, by the first non-empty batch on a
+  * seeded sample of itself, and every later batch is assigned to those
+  * fixed centroids (re-training on append would silently re-bucket
+  * history). The centroids table is the index's self-describing meta:
+  * `nCells`/`seed` are consulted only when none exists yet, and it carries
+  * no `n_corpus` stamp, because a batch is not the corpus. A first batch
+  * smaller than `nCells` fits one cell per vector.
   *
-  * Layout: `vectors/cell=<c>/batch_id=<b>/` — cell OUTER (the pruned
-  * scan's partition key and the per-cell compaction unit), batch inner.
-  * The vectors table is one sink of the [[BatchMarker.ingest]]
-  * exactly-once core.
-  *
-  * Search composes unchanged: [[Similarity.ivfTopKFromPartitioned]] reads
-  * `centroids` + `vectors` and projects only (id, vec, cell), so the inner
-  * `batch_id` partition column is ignored and the probed-cell partition
-  * prune works identically on the streamed layout.
+  * Search composes unchanged: [[VectorIndex.read]] finds the
+  * `cell=`-partitioned `vectors` and the search lists only the probed
+  * cells (the inner `batch_id` partition column is ignored).
   * [[graft.sinks.Compaction.compactPartitions]] recurses to the leaf
-  * `cell=/batch_id=` dirs, so small per-batch files compact per cell with
-  * the layout — and the pruned reader — intact.
+  * `cell=/batch_id=` dirs, so per-batch files compact per cell with the
+  * layout — and the pruned reader — intact.
   */
 object VectorIngest {
 
@@ -45,46 +39,17 @@ object VectorIngest {
   def processBatch(batch: DataFrame, batchId: Long, indexPath: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       nCells: Int = 8, seed: Long = 42L,
-      maxTrainSamples: Int = 100000): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val centroidsPath = s"$indexPath/centroids"
-    val vectors = BatchMarker.Sink(indexPath, "vectors", s"$indexPath/vectors",
-      outer = Some("cell"))
-    // an empty micro-batch (sources can advance offsets with no rows) has
-    // nothing to write and must NOT stamp a degenerate quantizer — the
-    // core's isEmpty probe lands it as a marker only
-    BatchMarker.ingest(batch, batchId, Seq(vectors), skipEmpty = true) { pending =>
-      // centroids first, overwrite-idempotent (the IndexIngest meta
-      // contract): a crash after centroids but before the vector append
-      // replays into the same overwrite; later batches never re-fit
-      val centers: Array[Array[Double]] = readCentroids(spark, centroidsPath)
-        .getOrElse {
-          // a stream doesn't control its batch sizes: a first batch
-          // smaller than nCells must clamp k rather than fail the KMeans
-          // fit — the centroids table is self-describing, so later
-          // (larger) batches stay consistent with whatever cell count was
-          // stamped. The count() runs only on this one first-ever batch.
-          val k = math.max(1L, math.min(nCells.toLong, batch.count())).toInt
-          val c = Similarity.fitQuantizer(batch, k, seed, maxTrainSamples,
-            vecCol)
-          c.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-            .toDF("cell", "centroid")
-            .coalesce(1).write.mode("overwrite").parquet(centroidsPath)
-          c
-        }
-      pending.append(vectors)(Similarity.assignToCells(batch, centers, idCol,
-        vecCol, idCol, vecCol, probes = 1))
+      maxTrainSamples: Int = 100000): Unit =
+    VectorIndex.append(batch, batchId, indexPath, "vectors", idCol, vecCol) {
+      val found = VectorIndex.read(batch.sparkSession, indexPath)
+      if (found.centers.nonEmpty) found
+      else {
+        // centroids first, overwrite-idempotent: a crash after them but
+        // before the vector append replays into the same overwrite
+        val fitted = VectorIndex.fit(batch, VectorIndex.Ivf(nCells), vecCol, seed,
+          maxTrainSamples).copy(nCorpus = None)
+        fitted.writeMeta(batch.sparkSession, indexPath)
+        fitted
+      }
     }
-  }
-
-  private def readCentroids(spark: SparkSession,
-      centroidsPath: String): Option[Array[Array[Double]]] = {
-    if (!BatchMarker.exists(spark, s"$centroidsPath/_SUCCESS")) None
-    else
-      Some(spark.read.parquet(centroidsPath)
-        .select(col("cell"), col("centroid")).collect()
-        .sortBy(_.getInt(0))
-        .map(_.getSeq[Double](1).toArray))
-  }
 }

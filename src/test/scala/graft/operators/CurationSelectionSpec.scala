@@ -68,7 +68,8 @@ class CurationSelectionSpec extends SparkSpec {
     val emb = ((1L to 6L).map(i => (i, Array(-10.0f + i * 0.1f, 1.0f)))
       ++ Seq((7L, Array(9.5f, 0.0f)), (8L, Array(10.5f, -1.0f))))
       .toDF("vec_id", "embedding")
-    val out = Similarity.clusterBalancedSample(dir, emb, cap = 4).collect()
+    val out = Similarity.clusterBalancedSample(VectorIndex.read(spark, dir), emb, cap = 4)
+      .collect()
       .map(r => r.getAs[Long]("vec_id") ->
         (r.getAs[Int]("cell"), r.getAs[Long]("cell_rank"),
           r.getAs[Boolean]("kept"))).toMap

@@ -519,10 +519,10 @@ class MultimodalSpec extends SparkSpec {
         col("histogram").cast("array<double>").as("embedding"))
     val dir = java.nio.file.Files.createTempDirectory("ivfimg").toFile
     dir.deleteOnExit()
-    Similarity.writeIvfCentroids(vecs, dir.getAbsolutePath, nCells = 4)
+    VectorIndex.fit(vecs, VectorIndex.Ivf(4)).write(vecs, dir.getAbsolutePath)
     val q = vecs.filter(col("vec_id") < 5)
-    val ivf = Similarity.ivfTopKFromCentroids(dir.getAbsolutePath, vecs, q,
-        k = 3, nProbe = 4)
+    val ivf = VectorIndex.read(spark, dir.getAbsolutePath).search(q,
+        k = 3, Some(vecs), nProbe = 4)
       .orderBy("query_id", "rank").collect().toSeq
     val brute = Similarity.bruteForceTopK(vecs, q, k = 3)
       .orderBy("query_id", "rank").collect().toSeq

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.operators.VectorIndex.{Ivf, IvfPq, Lsh, Pq}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -31,16 +32,16 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("lshTopK: same-bucket near-duplicate is found; ranking consistent with brute force") {
-    val r = Similarity.lshTopK(vecs, vecs.filter(col("vec_id") === 0), k = 4,
-      dim = 4, bits = 2)
+    val r = VectorIndex.fit(vecs, Lsh(dim = 4, bits = 2))
+      .search(vecs.filter(col("vec_id") === 0), k = 4, Some(vecs))
     val neighbors = r.select("neighbor_id").as[Long].collect().toSet
     // recall<1 by construction, but the near-identical vector must collide
     assert(neighbors.contains(1L))
   }
 
   test("ivfTopK: near-identical vector lands in the probed cell and is found") {
-    val r = Similarity.ivfTopK(vecs, vecs.filter(col("vec_id") === 0), k = 4,
-      nCells = 2, nProbe = 2, seed = 42L)
+    val r = VectorIndex.fit(vecs, Ivf(2), seed = 42L)
+      .search(vecs.filter(col("vec_id") === 0), k = 4, Some(vecs), nProbe = 2)
     val neighbors = r.select("neighbor_id").as[Long].collect().toSet
     assert(neighbors.contains(1L)) // v1 ≈ v0 must be probed with nProbe=nCells
   }
@@ -51,8 +52,8 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.sources.Tables.load(spark, dir, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val brute = Similarity.bruteForceTopK(emb, q, k = 5)
-    val lsh = Similarity.lshTopK(emb, q, k = 5, dim = 64, bits = 4, tables = 16)
-    val ivf = Similarity.ivfTopK(emb, q, k = 5, nCells = 8, nProbe = 4)
+    val lsh = VectorIndex.fit(emb, Lsh(dim = 64, bits = 4, tables = 16)).search(q, 5, Some(emb))
+    val ivf = VectorIndex.fit(emb, Ivf(8)).search(q, 5, Some(emb), nProbe = 4)
     val lshAvg = Similarity.recallAtK(lsh, brute).agg(avg("recall")).as[Double].head()
     val ivfAvg = Similarity.recallAtK(ivf, brute).agg(avg("recall")).as[Double].head()
     info(f"lsh avg recall@5 = $lshAvg%.2f, ivf avg recall@5 = $ivfAvg%.2f")
@@ -66,7 +67,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.sources.Tables.load(spark, dir, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val brute = Similarity.bruteForceTopK(emb, q, k = 5)
-    val pq = Similarity.pqTopK(emb, q, k = 5, refine = 32)
+    val pq = VectorIndex.fit(emb, Pq()).search(q, 5, Some(emb), refine = 32)
     val pqAvg = Similarity.recallAtK(pq, brute).agg(avg("recall")).as[Double].head()
     info(f"pq avg recall@5 = $pqAvg%.2f")
     assert(pqAvg >= 0.6, s"PQ recall regressed: $pqAvg")
@@ -83,8 +84,8 @@ class SimilaritySpec extends SparkSpec {
       fromDisk: String => DataFrame, inSession: () => DataFrame,
       tables: Seq[(String, String)])
 
-  private lazy val emb001 =
-    graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+  private val sf0001 = "/root/testdata/sf0.001" // the suite's fixture tables
+  private lazy val emb001 = graft.sources.Tables.load(spark, sf0001, "embeddings")
   private def q001 = emb001.filter(col("vec_id") < 10)
 
   private val centroidsSchema = "struct<cell:int,centroid:array<double>,n_corpus:bigint>"
@@ -96,52 +97,55 @@ class SimilaritySpec extends SparkSpec {
 
   private def layouts: Seq[Layout] = Seq(
     Layout("flat IVF",
-      p => Similarity.writeIvfCentroids(emb001, p + "/ivf", nCells = 8),
-      p => Similarity.ivfTopKFromCentroids(p + "/ivf", emb001, q001, k = 5, nProbe = 4),
-      () => Similarity.ivfTopK(emb001, q001, k = 5, nCells = 8, nProbe = 4),
+      p => VectorIndex.fit(emb001, Ivf(8)).write(emb001, p + "/ivf"),
+      p => VectorIndex.read(spark, p + "/ivf").search(q001, 5, Some(emb001), nProbe = 4),
+      () => VectorIndex.fit(emb001, Ivf(8)).search(q001, 5, Some(emb001), nProbe = 4),
       Seq("ivf/centroids" -> centroidsSchema)),
     Layout("partitioned IVF",
-      p => Similarity.writeIvfPartitioned(emb001, p + "/ivf", nCells = 8),
-      p => Similarity.ivfTopKFromPartitioned(spark, p + "/ivf", q001, k = 5, nProbe = 4),
-      () => Similarity.ivfTopK(emb001, q001, k = 5, nCells = 8, nProbe = 4),
+      p => VectorIndex.fit(emb001, Ivf(8)).write(emb001, p + "/ivf", partitioned = true),
+      p => VectorIndex.read(spark, p + "/ivf").search(q001, 5, nProbe = 4),
+      () => VectorIndex.fit(emb001, Ivf(8)).search(q001, 5, Some(emb001), nProbe = 4),
       Seq("ivf/centroids" -> centroidsSchema, "ivf/vectors" ->
         "struct<vec_id:bigint,embedding:array<double>,n_corpus:bigint,cell:int>")),
     Layout("LSH planes",
-      p => Similarity.writeLshPlanes(emb001, p + "/lsh", dim = 64, bits = 4, tables = 16),
-      p => Similarity.lshTopKFromPlanes(p + "/lsh", emb001, q001, k = 5),
-      () => Similarity.lshTopK(emb001, q001, k = 5, dim = 64, bits = 4, tables = 16),
+      p => VectorIndex.fit(emb001, Lsh(64, 4, 16)).write(emb001, p + "/lsh"),
+      p => VectorIndex.read(spark, p + "/lsh").search(q001, 5, Some(emb001)),
+      () => VectorIndex.fit(emb001, Lsh(64, 4, 16)).search(q001, 5, Some(emb001)),
       Seq("lsh/planes" -> "struct<tbl:int,bit:int,plane:array<double>,n_corpus:bigint>")),
     Layout("IVF-PQ from two indexes",
       { p =>
-        Similarity.writeIvfCentroids(emb001, p + "/ivf", nCells = 8)
-        Similarity.writePqIndex(emb001, p + "/pq")
+        VectorIndex.fit(emb001, Ivf(8)).write(emb001, p + "/ivf")
+        VectorIndex.fit(emb001, Pq()).write(emb001, p + "/pq")
       },
-      p => Similarity.ivfPqTopKFromIndexes(p + "/ivf", p + "/pq", emb001, q001, k = 5,
+      p => VectorIndex.read(spark, p + "/ivf", p + "/pq").search(q001, 5, Some(emb001),
         nProbe = 4, refine = 32),
-      () => Similarity.ivfPqTopK(emb001, q001, k = 5, nCells = 8, nProbe = 4, refine = 32),
+      () => VectorIndex.fit(emb001, IvfPq()).search(q001, 5, Some(emb001), nProbe = 4,
+        refine = 32),
       Seq("ivf/centroids" -> centroidsSchema, "pq/codebooks" -> codebooksSchema,
         "pq/codes" -> codesSchema(8, cell = false))),
     Layout("partitioned IVF-PQ (direct)",
-      p => Similarity.writeIvfPqPartitioned(emb001, p + "/ivfpq", nCells = 8),
-      p => Similarity.ivfPqTopKFromPartitioned(spark, p + "/ivfpq", emb001, q001, k = 5,
-        nProbe = 4, refine = 32),
-      () => Similarity.ivfPqTopK(emb001, q001, k = 5, nCells = 8, nProbe = 4, refine = 32),
+      p => VectorIndex.fit(emb001, IvfPq()).write(emb001, p + "/ivfpq", partitioned = true),
+      p => VectorIndex.read(spark, p + "/ivfpq").search(q001, 5, Some(emb001), nProbe = 4,
+        refine = 32),
+      () => VectorIndex.fit(emb001, IvfPq()).search(q001, 5, Some(emb001), nProbe = 4,
+        refine = 32),
       Seq("ivfpq/centroids" -> centroidsSchema, "ivfpq/codebooks" -> codebooksSchema,
         "ivfpq/codes" -> codesSchema(8, cell = true))),
     Layout("partitioned IVF-PQ (residual)",
-      p => Similarity.writeIvfPqPartitioned(emb001, p + "/ivfpq", nCells = 8,
-        residual = true),
-      p => Similarity.ivfPqTopKFromPartitioned(spark, p + "/ivfpq", emb001, q001, k = 5,
+      p => VectorIndex.fit(emb001, IvfPq(residual = true))
+        .write(emb001, p + "/ivfpq", partitioned = true),
+      p => VectorIndex.read(spark, p + "/ivfpq").search(q001, 5, Some(emb001), nProbe = 4,
+        refine = 32),
+      () => VectorIndex.fit(emb001, IvfPq(residual = true)).search(q001, 5, Some(emb001),
         nProbe = 4, refine = 32),
-      () => Similarity.ivfPqTopK(emb001, q001, k = 5, nCells = 8, nProbe = 4, refine = 32,
-        residual = true),
       Seq("ivfpq/centroids" -> centroidsSchema, "ivfpq/codebooks" -> codebooksSchema,
         "ivfpq/codes" -> codesSchema(8, cell = true))),
     Layout("SemDeDup from centroids",
-      p => Similarity.writeIvfCentroids(emb001, p + "/ivf", nCells = 8),
-      p => Similarity.semanticPairsFromCentroids(p + "/ivf", emb001, threshold = 0.45,
-        assignProbes = 2),
-      () => Similarity.semanticPairs(emb001, threshold = 0.45, nCells = 8, assignProbes = 2),
+      p => VectorIndex.fit(emb001, Ivf(8)).write(emb001, p + "/ivf"),
+      p => Similarity.semanticPairs(VectorIndex.read(spark, p + "/ivf"), emb001,
+        threshold = 0.45, assignProbes = 2),
+      () => Similarity.semanticPairs(VectorIndex.fit(emb001, Ivf(8)), emb001,
+        threshold = 0.45, assignProbes = 2),
       Seq("ivf/centroids" -> centroidsSchema)))
 
   private def roundTrip(l: Layout, path: String): Unit = {
@@ -157,7 +161,7 @@ class SimilaritySpec extends SparkSpec {
 
   for (l <- layouts)
     test(s"${l.name} index on disk: write/read round-trip returns the in-session answer") {
-      assume(new java.io.File("/root/testdata/sf0.001/embeddings.parquet").exists())
+      assume(new java.io.File(s"$sf0001/embeddings.parquet").exists())
       val idx = java.nio.file.Files.createTempDirectory("annidx").toFile
       idx.deleteOnExit()
       roundTrip(l, idx.getAbsolutePath + "/index")
@@ -173,9 +177,9 @@ class SimilaritySpec extends SparkSpec {
     val path = idx.getAbsolutePath + "/index"
 
     roundTrip(Layout("flat PQ",
-      p => Similarity.writePqIndex(emb, p),
-      p => Similarity.pqTopKFromIndex(p, emb, q, k = 5, refine = 32),
-      () => Similarity.pqTopK(emb, q, k = 5, refine = 32),
+      p => VectorIndex.fit(emb, Pq()).write(emb, p),
+      p => VectorIndex.read(spark, p).search(q, 5, Some(emb), refine = 32),
+      () => VectorIndex.fit(emb, Pq()).search(q, 5, Some(emb), refine = 32),
       Seq("codebooks" -> codebooksSchema, "codes" -> codesSchema(8, cell = false))), path)
     // the persisted layout: small codebooks table + m-byte-per-row codes
     val cb = spark.read.parquet(path + "/codebooks")
@@ -186,8 +190,8 @@ class SimilaritySpec extends SparkSpec {
       (Set("neighbor_id", "n_corpus") ++ (0 until 8).map(j => s"code_$j")))
 
     // same seed -> same codebooks -> row-identical results to pqTopK
-    val fromIndex = Similarity.pqTopKFromIndex(path, emb, q, k = 5, refine = 32)
-    val inSession = Similarity.pqTopK(emb, q, k = 5, refine = 32)
+    val fromIndex = VectorIndex.read(spark, path).search(q, 5, Some(emb), refine = 32)
+    val inSession = VectorIndex.fit(emb, Pq()).search(q, 5, Some(emb), refine = 32)
     assert(fromIndex.exceptAll(inSession).count() === 0)
     assert(inSession.exceptAll(fromIndex).count() === 0)
   }
@@ -226,9 +230,12 @@ class SimilaritySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivfpqjobs").toFile
     dir.deleteOnExit()
     val path = dir.getAbsolutePath + "/ivfpq"
-    val jobs = jobsOf(Similarity.writeIvfPqPartitioned(vecs, path, nCells = 3, m = 2, ksub = 2))
+    val jobs = jobsOf(VectorIndex.fit(vecs, IvfPq(nCells = 3, m = 2, ksub = 2))
+      .write(vecs, path, partitioned = true))
     info(s"partitioned IVF-PQ build: $jobs jobs")
-    assert(jobs < 1000)
+    // the same build with a count in each of the coarse fit, the codebook
+    // fit and the n_corpus stamp started 47 jobs
+    assert(jobs < 47)
     assert(spark.read.parquet(path + "/centroids").schema.simpleString === centroidsSchema)
     assert(spark.read.parquet(path + "/codebooks").schema.simpleString === codebooksSchema)
     assert(spark.read.parquet(path + "/codes").schema.simpleString ===
@@ -243,7 +250,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.sources.Tables.load(spark, dir, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val brute = Similarity.bruteForceTopK(emb, q, k = 5)
-    val ivfpq = Similarity.ivfPqTopK(emb, q, k = 5, nCells = 8, nProbe = 4, refine = 32)
+    val ivfpq = VectorIndex.fit(emb, IvfPq()).search(q, 5, Some(emb), nProbe = 4, refine = 32)
     val avgR = Similarity.recallAtK(ivfpq, brute).agg(avg("recall")).as[Double].head()
     info(f"ivfpq avg recall@5 = $avgR%.2f")
     assert(avgR >= 0.6, s"IVF-PQ recall regressed: $avgR")
@@ -254,7 +261,7 @@ class SimilaritySpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val emb = graft.sources.Tables.load(spark, dir, "embeddings")
     val exact = Similarity.cosinePairs(emb, threshold = 0.45)
-    val sem = Similarity.semanticPairs(emb, threshold = 0.45, nCells = 4,
+    val sem = Similarity.semanticPairs(VectorIndex.fit(emb, Ivf(4)), emb, threshold = 0.45,
       assignProbes = 2)
     // precision 1 by construction: every semantic pair is a true pair with
     // the identical rounded sim
@@ -304,17 +311,17 @@ class SimilaritySpec extends SparkSpec {
     dir.deleteOnExit()
     val flat = dir.getAbsolutePath + "/flat"
     val part = dir.getAbsolutePath + "/part"
-    Similarity.writeIvfCentroids(vecs, flat, nCells = 3)
-    Similarity.writeIvfPartitioned(vecs, part, nCells = 3)
+    VectorIndex.fit(vecs, Ivf(3)).write(vecs, flat)
+    VectorIndex.fit(vecs, Ivf(3)).write(vecs, part, partitioned = true)
 
     val cellDirs = new java.io.File(part + "/vectors")
       .listFiles().filter(_.getName.startsWith("cell="))
     assert(cellDirs.nonEmpty, "no cell= partition directories")
 
     val qs = vecs.filter(col("vec_id") < 2)
-    val a = Similarity.ivfTopKFromCentroids(flat, vecs, qs, k = 4, nProbe = 2)
+    val a = VectorIndex.read(spark, flat).search(qs, 4, Some(vecs), nProbe = 2)
       .orderBy("query_id", "rank").collect().toSeq
-    val b = Similarity.ivfTopKFromPartitioned(spark, part, qs, k = 4, nProbe = 2)
+    val b = VectorIndex.read(spark, part).search(qs, 4, nProbe = 2)
       .orderBy("query_id", "rank").collect().toSeq
     assert(a === b, "pruned IVF search diverged from the centroid replay")
   }
@@ -327,13 +334,13 @@ class SimilaritySpec extends SparkSpec {
     val ivf = dir.getAbsolutePath + "/ivf"
     val pq = dir.getAbsolutePath + "/pq"
     val part = dir.getAbsolutePath + "/part"
-    Similarity.writeIvfCentroids(vecs, ivf, nCells = 3)
+    VectorIndex.fit(vecs, Ivf(3)).write(vecs, ivf)
     // BOTH packages residual-coded here: the equality then also proves
     // the self-describing `residual` flag routes every reader onto the
     // residual ADC formula (the product queries run the direct default)
-    Similarity.writePqResidualIndex(vecs, ivf, pq, m = 2, ksub = 2)
-    Similarity.writeIvfPqPartitioned(vecs, part, nCells = 3, m = 2, ksub = 2,
-      residual = true)
+    val residual = VectorIndex.fit(vecs, IvfPq(nCells = 3, m = 2, ksub = 2, residual = true))
+    residual.write(vecs, pq)
+    residual.write(vecs, part, partitioned = true)
 
     val cellDirs = new java.io.File(part + "/codes")
       .listFiles().filter(_.getName.startsWith("cell="))
@@ -344,24 +351,27 @@ class SimilaritySpec extends SparkSpec {
       s"codes table stores vectors: $codeCols")
 
     val qs = vecs.filter(col("vec_id") < 2)
-    val a = Similarity.ivfPqTopKFromIndexes(ivf, pq, vecs, qs, k = 3,
-        nProbe = 2, refine = 2)
+    val a = VectorIndex.read(spark, ivf, pq).search(qs, 3, Some(vecs), nProbe = 2, refine = 2)
       .orderBy("query_id", "rank").collect().toSeq
-    val b = Similarity.ivfPqTopKFromPartitioned(spark, part, vecs, qs, k = 3,
-        nProbe = 2, refine = 2)
+    val b = VectorIndex.read(spark, part).search(qs, 3, Some(vecs), nProbe = 2, refine = 2)
       .orderBy("query_id", "rank").collect().toSeq
     assert(a === b, "pruned IVF-PQ search diverged from the two-index search")
   }
 
   test("partitioned loaders refuse a centroid table whose cells have a gap") {
+    import graft.streaming.{PqIngest, VectorIngest}
     val dir = java.nio.file.Files.createTempDirectory("ivfgap").toFile
     dir.deleteOnExit()
     val ivf = dir.getAbsolutePath + "/ivf"
     val ivfPq = dir.getAbsolutePath + "/ivfpq"
-    Similarity.writeIvfPartitioned(vecs, ivf, nCells = 3)
-    Similarity.writeIvfPqPartitioned(vecs, ivfPq, nCells = 3, m = 2, ksub = 2)
+    val stream = dir.getAbsolutePath + "/stream"
+    val pqStream = dir.getAbsolutePath + "/pqstream"
+    VectorIndex.fit(vecs, Ivf(3)).write(vecs, ivf, partitioned = true)
+    VectorIndex.fit(vecs, IvfPq(nCells = 3, m = 2, ksub = 2)).write(vecs, ivfPq, partitioned = true)
+    VectorIngest.processBatch(vecs, 0L, stream, nCells = 3)
+    PqIngest.bootstrap(vecs, pqStream, nCells = 3, m = 2, ksub = 2)
     // renumber cells 0,1,2 → 0,2,3
-    Seq(ivf, ivfPq).foreach { p =>
+    Seq(ivf, ivfPq, stream, pqStream).foreach { p =>
       val c = spark.read.parquet(p + "/centroids")
         .withColumn("cell", when(col("cell") > 0, col("cell") + 1).otherwise(col("cell")))
         .collect()
@@ -369,13 +379,46 @@ class SimilaritySpec extends SparkSpec {
         .write.mode("overwrite").parquet(p + "/centroids")
     }
     val qs = vecs.filter(col("vec_id") < 2)
-    val e1 = intercept[IllegalArgumentException](
-      Similarity.ivfTopKFromPartitioned(spark, ivf, qs, k = 4, nProbe = 2))
-    val e2 = intercept[IllegalArgumentException](
-      Similarity.ivfPqTopKFromPartitioned(spark, ivfPq, vecs, qs, k = 3, nProbe = 2, refine = 2))
-    Seq(e1, e2).foreach { e =>
+    val errors = Seq(
+      () => VectorIndex.read(spark, ivf).search(qs, 4, nProbe = 2),
+      () => VectorIndex.read(spark, ivfPq).search(qs, 3, Some(vecs), nProbe = 2, refine = 2),
+      () => VectorIngest.processBatch(vecs, 1L, stream, nCells = 3),
+      () => PqIngest.processBatch(vecs, 0L, pqStream),
+      () => Similarity.clusterBalancedSample(VectorIndex.read(spark, ivf), vecs, cap = 2))
+      .map(f => intercept[IllegalArgumentException](f()))
+    errors.foreach { e =>
       assert(e.getMessage.contains("must be 0..2, got 0,2,3"), e.getMessage)
     }
+    // no streamed row was assigned against the renumbered cells
+    assert(!new java.io.File(pqStream + "/codes").exists())
+    assert(spark.read.parquet(stream + "/vectors").count() === 5L)
+  }
+
+  test("a codebook gap or a missing index table fails by name") {
+    val dir = java.nio.file.Files.createTempDirectory("pqgap").toFile
+    dir.deleteOnExit()
+    val gap = dir.getAbsolutePath + "/gap"
+    val pq = dir.getAbsolutePath + "/pq"
+    VectorIndex.fit(vecs, Pq(m = 2, ksub = 2)).write(vecs, gap)
+    VectorIndex.fit(vecs, Pq(m = 2, ksub = 2)).write(vecs, pq)
+    // renumber subspaces 0,1 → 0,2
+    val c = spark.read.parquet(gap + "/codebooks")
+      .withColumn("subspace", when(col("subspace") > 0, col("subspace") + 1)
+        .otherwise(col("subspace")))
+      .collect()
+    spark.createDataFrame(java.util.Arrays.asList(c: _*), c.head.schema)
+      .write.mode("overwrite").parquet(gap + "/codebooks")
+    val e1 = intercept[IllegalArgumentException](VectorIndex.read(spark, gap))
+    assert(e1.getMessage.contains(s"subspace ids in $gap/codebooks must be 0..1, got 0,2"),
+      e1.getMessage)
+    val none = dir.getAbsolutePath + "/none"
+    val e2 = intercept[IllegalArgumentException](
+      VectorIndex.read(spark, none).search(vecs, 3, Some(vecs)))
+    assert(e2.getMessage.contains(s"no centroids, codebooks or planes table under $none"),
+      e2.getMessage)
+    val e3 = intercept[IllegalArgumentException](
+      Similarity.clusterBalancedSample(VectorIndex.read(spark, pq), vecs, cap = 1))
+    assert(e3.getMessage.contains(s"no centroids table under $pq"), e3.getMessage)
   }
 
   test("ensureIndex on an empty corpus fingerprints as n0 instead of NPEing") {

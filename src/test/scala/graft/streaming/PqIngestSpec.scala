@@ -3,7 +3,8 @@ package graft.streaming
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.operators.Similarity
+import graft.operators.VectorIndex
+import graft.operators.VectorIndex.IvfPq
 import org.apache.spark.sql.functions._
 
 class PqIngestSpec extends SparkSpec {
@@ -25,7 +26,8 @@ class PqIngestSpec extends SparkSpec {
     val flat = dir.getAbsolutePath + "/flat"
     val streamed = dir.getAbsolutePath + "/streamed"
 
-    Similarity.writeIvfPqPartitioned(corpus, flat, nCells = 2, m = 2, ksub = 4)
+    VectorIndex.fit(corpus, IvfPq(nCells = 2, m = 2, ksub = 4))
+      .write(corpus, flat, partitioned = true)
     PqIngest.bootstrap(corpus, streamed, nCells = 2, m = 2, ksub = 4)
     PqIngest.processBatch(batchA, 0L, streamed)
     PqIngest.processBatch(batchB, 1L, streamed)
@@ -38,8 +40,8 @@ class PqIngestSpec extends SparkSpec {
     assert(codes(streamed) === codes(flat))
 
     // therefore the full pruned search is row-identical
-    def search(p: String) = Similarity.ivfPqTopKFromPartitioned(spark, p,
-      corpus, queries, k = 3, nProbe = 2, refine = 4)
+    def search(p: String) = VectorIndex.read(spark, p)
+      .search(queries, k = 3, Some(corpus), nProbe = 2, refine = 4)
       .collect().map(_.toSeq).toSet
     assert(search(streamed) === search(flat))
   }
@@ -52,8 +54,8 @@ class PqIngestSpec extends SparkSpec {
     dir.deleteOnExit()
     val flat = dir.getAbsolutePath + "/flat"
     val streamed = dir.getAbsolutePath + "/streamed"
-    Similarity.writeIvfPqPartitioned(corpus, flat, nCells = 2, m = 2,
-      ksub = 4, residual = true)
+    VectorIndex.fit(corpus, IvfPq(nCells = 2, m = 2, ksub = 4, residual = true))
+      .write(corpus, flat, partitioned = true)
     PqIngest.bootstrap(corpus, streamed, nCells = 2, m = 2, ksub = 4,
       residual = true)
     PqIngest.processBatch(batchA, 0L, streamed)
@@ -62,8 +64,8 @@ class PqIngestSpec extends SparkSpec {
       .select("neighbor_id", "cell", "code_0", "code_1")
       .collect().map(_.toSeq).toSet
     assert(codes(streamed) === codes(flat))
-    def search(p: String) = Similarity.ivfPqTopKFromPartitioned(spark, p,
-      corpus, queries, k = 3, nProbe = 2, refine = 4)
+    def search(p: String) = VectorIndex.read(spark, p)
+      .search(queries, k = 3, Some(corpus), nProbe = 2, refine = 4)
       .collect().map(_.toSeq).toSet
     assert(search(streamed) === search(flat))
     // and the flag is actually set on both meta tables
@@ -91,13 +93,14 @@ class PqIngestSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
 
-    val streamed = Similarity.ivfPqTopKFromPartitioned(spark, idx,
-      corpus, queries, k = 3, nProbe = 2, refine = 4)
+    val streamed = VectorIndex.read(spark, idx)
+      .search(queries, k = 3, Some(corpus), nProbe = 2, refine = 4)
       .collect().map(_.toSeq).toSet
     val flat = dir.getAbsolutePath + "/flat"
-    Similarity.writeIvfPqPartitioned(corpus, flat, nCells = 2, m = 2, ksub = 4)
-    val batch = Similarity.ivfPqTopKFromPartitioned(spark, flat,
-      corpus, queries, k = 3, nProbe = 2, refine = 4)
+    VectorIndex.fit(corpus, IvfPq(nCells = 2, m = 2, ksub = 4))
+      .write(corpus, flat, partitioned = true)
+    val batch = VectorIndex.read(spark, flat)
+      .search(queries, k = 3, Some(corpus), nProbe = 2, refine = 4)
       .collect().map(_.toSeq).toSet
     assert(streamed === batch)
   }
@@ -127,9 +130,10 @@ class PqIngestSpec extends SparkSpec {
     }
     build(idx) // the reentrant block succeeds over the partial state
     val flat = dir.getAbsolutePath + "/flat"
-    Similarity.writeIvfPqPartitioned(corpus, flat, nCells = 2, m = 2, ksub = 4)
-    def search(p: String) = Similarity.ivfPqTopKFromPartitioned(spark, p,
-      corpus, queries, k = 3, nProbe = 2, refine = 4)
+    VectorIndex.fit(corpus, IvfPq(nCells = 2, m = 2, ksub = 4))
+      .write(corpus, flat, partitioned = true)
+    def search(p: String) = VectorIndex.read(spark, p)
+      .search(queries, k = 3, Some(corpus), nProbe = 2, refine = 4)
       .collect().map(_.toSeq).toSet
     assert(search(idx) === search(flat))
   }

@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.operators.Similarity
+import graft.operators.{Similarity, VectorIndex}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -35,7 +35,7 @@ class VectorIngestSpec extends SparkSpec {
       input.addData(batch1: _*)
       q.processAllAvailable()
       // searchable mid-stream over what has arrived so far
-      assert(Similarity.ivfTopKFromPartitioned(spark, idx, queries, k = 3,
+      assert(VectorIndex.read(spark, idx).search(queries, k = 3,
         nProbe = 4).count() > 0)
       input.addData(batch2: _*)
       q.processAllAvailable()
@@ -43,7 +43,7 @@ class VectorIngestSpec extends SparkSpec {
 
     // nProbe = nCells probes every cell → exact: equals brute force over
     // the accumulated corpus regardless of where the centroids landed
-    val streamed = Similarity.ivfTopKFromPartitioned(spark, idx, queries,
+    val streamed = VectorIndex.read(spark, idx).search(queries,
       k = 3, nProbe = 4).collect().map(_.toSeq).toSet
     val brute = Similarity.bruteForceTopK(union, queries, k = 3)
       .collect().map(_.toSeq).toSet
@@ -124,7 +124,7 @@ class VectorIngestSpec extends SparkSpec {
       nCells = 4)
     assert(spark.read.parquet(s"$idx/vectors").select("cell").distinct()
       .count() <= 2)
-    val res = Similarity.ivfTopKFromPartitioned(spark, idx,
+    val res = VectorIndex.read(spark, idx).search(
       batch1.take(2).toDF("vec_id", "embedding"), k = 3, nProbe = 2)
     assert(res.count() > 0)
   }
@@ -139,7 +139,7 @@ class VectorIngestSpec extends SparkSpec {
       nCells = 4)
 
     def scanLine(path: String): String = {
-      val p = Similarity.ivfTopKFromPartitioned(spark, path, queries, k = 3,
+      val p = VectorIndex.read(spark, path).search(queries, k = 3,
         nProbe = 1).queryExecution.executedPlan.toString
       p.linesIterator
         .find(l => l.contains("vectors") && l.contains("PartitionFilters"))
@@ -148,7 +148,7 @@ class VectorIngestSpec extends SparkSpec {
     val line = scanLine(idx)
     assert(line.contains("cell") && !line.contains("PartitionFilters: []"),
       s"vectors scan has no cell partition filter:\n$line")
-    val before = Similarity.ivfTopKFromPartitioned(spark, idx, queries,
+    val before = VectorIndex.read(spark, idx).search(queries,
       k = 3, nProbe = 1).collect().map(_.toSeq).toSet
 
     // compact the per-batch files per leaf dir into a sibling index:
@@ -161,7 +161,7 @@ class VectorIngestSpec extends SparkSpec {
     val lineAfter = scanLine(idx2)
     assert(lineAfter.contains("cell") &&
       !lineAfter.contains("PartitionFilters: []"))
-    val after = Similarity.ivfTopKFromPartitioned(spark, idx2, queries,
+    val after = VectorIndex.read(spark, idx2).search(queries,
       k = 3, nProbe = 1).collect().map(_.toSeq).toSet
     assert(after === before)
   }
