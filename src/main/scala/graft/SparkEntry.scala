@@ -10566,7 +10566,7 @@ object SparkEntry {
     // Replay oracle for the persisted-centroid SemDeDup pass: normalized
     // vectors, per-cell d2 ranking with the 2-probe overlap, intra-cell
     // exact cosine over a<b pairs, threshold, and the multi-cell pair
-    // dedup via max — row-identical to semanticSearchPairs.
+    // dedup via max — row-identical to Similarity.semanticPairs.
     "dedup_semantic" ->
       """WITH cent AS (
         |  SELECT cell, centroid

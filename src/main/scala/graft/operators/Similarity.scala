@@ -11,15 +11,16 @@ import org.apache.spark.sql.functions._
   * scale paths are one [[VectorIndex]] — fit in session or read from disk —
   * whose quantizer and layout pick what a search scans:
   *
-  * | quantizer | flat layout (meta; payload)         | cell-partitioned layout (`cell=`)         |
-  * |-----------|-------------------------------------|-------------------------------------------|
-  * | LSH       | `planes`; the corpus                | —                                         |
-  * | IVF       | `centroids`; the corpus             | `centroids`; `vectors/cell=`              |
-  * | PQ        | `codebooks`; `codes`                | —                                         |
-  * | IVF-PQ    | `centroids` + `codebooks`; `codes`  | `centroids` + `codebooks`; `codes/cell=`  |
+  * | quantizer | flat layout (meta; payload)           | cell-partitioned layout (`cell=`)        |
+  * |-----------|---------------------------------------|------------------------------------------|
+  * | LSH       | `planes`; the corpus                  | —                                        |
+  * | IVF       | `centroids`; the corpus               | `centroids`; `vectors/cell=`             |
+  * | PQ        | `codebooks`; `codes`                  | —                                        |
+  * | IVF-PQ    | `centroids` + `codebooks`; the corpus | `centroids` + `codebooks`; `codes/cell=` |
   *
-  * A flat payload is scanned whole (the corpus is re-assigned and re-encoded
-  * by the same kernel the writer used); a cell-partitioned one is listed
+  * A flat payload is scanned whole (where it is the corpus, the corpus is
+  * assigned and encoded by the same kernel a writer uses, so an IVF half
+  * and a PQ half written apart compose); a cell-partitioned one is listed
   * only for the query batch's probed cells (partition-local indexes with
   * global pruning, REPOSE). PQ codes are the compressed index the scan
   * reads, m small ints a vector, with an exact re-rank of a shortlist from

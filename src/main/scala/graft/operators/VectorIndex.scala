@@ -22,6 +22,10 @@ import Similarity.{asDouble, assignToCells, cosine, normalize, rankTopK}
   * [[VectorIndex.append]] (a micro-batch's payload rows), `encode` (the
   * stored payload) and [[search]] (probe and re-rank).
   *
+  * Only [[VectorIndex.fit]] and [[VectorIndex.read]] build one, so whether
+  * a search prunes a stored payload or recomputes it is decided by what
+  * `read` found on disk.
+  *
   * @param centers coarse centroids, cell id = array index (IVF, IVF-PQ)
   * @param books PQ codebooks `[m][ksub][dim/m]` (PQ, IVF-PQ)
   * @param residual the books quantize x̂ − ĉ(cell) rather than x̂ (see
@@ -32,12 +36,12 @@ import Similarity.{asDouble, assignToCells, cosine, normalize, rankTopK}
   * @param stored the payload table [[VectorIndex.read]] found
   * @param at the paths read, for error messages
   */
-final case class VectorIndex(
-    centers: Array[Array[Double]] = Array.empty,
-    books: Array[Array[Array[Double]]] = Array.empty,
+final class VectorIndex private (
+    private[graft] val centers: Array[Array[Double]] = Array.empty,
+    private[graft] val books: Array[Array[Array[Double]]] = Array.empty,
     residual: Boolean = false,
     planes: Array[Array[Array[Double]]] = Array.empty,
-    nCorpus: Option[Long] = None,
+    private[graft] val nCorpus: Option[Long] = None,
     stored: Option[VectorIndex.Stored] = None,
     at: Seq[String] = Nil) {
 
@@ -56,8 +60,8 @@ final case class VectorIndex(
     * table. IVF, PQ and IVF-PQ share one probe-and-rerank kernel:
     *   - Candidates come from the cell-partitioned payload [[read]] found
     *     (only the probed cells' directories are listed: the query batch's
-    *     cells become a scan-time `cell` PartitionFilter), from a flat
-    *     stored codes table, or else from `encode` over `corpus`. Stored
+    *     cells become a scan-time `cell` PartitionFilter), from the flat
+    *     codes table of a PQ index, or else from `encode` over `corpus`. Stored
     *     and recomputed payloads are the same kernel's output, so the two
     *     agree row for row.
     *   - IVF scores candidates in the query's `nProbe` nearest cells by
@@ -89,7 +93,7 @@ final case class VectorIndex(
           .select(col("*") +: adcTables(col("qvec")): _*)
       }
       val spark = queries.sparkSession
-      val rows = stored.filter(_.byCell == centers.nonEmpty) match {
+      val rows = stored match {
         case Some(s) if s.byCell =>
           val probed = probes.select(col("cell")).distinct()
             .collect().map(_.getInt(0)).toSeq
@@ -134,22 +138,27 @@ final case class VectorIndex(
     * `codebooks`, `planes`, each one small `coalesce(1)` file stamped with
     * `n_corpus`) and its payload — for the cell-partitioned layout,
     * `vectors` (IVF) or `codes` (IVF-PQ) hive-partitioned by assigned cell;
-    * for the flat layout, `codes` when the index has codebooks and nothing
-    * otherwise (the corpus is then the payload a search scans).
+    * for the flat layout, `codes` for a PQ index and nothing otherwise (the
+    * corpus is then the payload a search assigns and encodes).
     */
   def write(corpus: DataFrame, path: String, partitioned: Boolean = false,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     require(!partitioned || centers.nonEmpty,
       "a cell-partitioned layout needs coarse centroids")
-    val index = if (nCorpus.isDefined) this else copy(nCorpus = Some(corpus.count()))
+    val index = if (nCorpus.isDefined) this else stampedWith(Some(corpus.count()))
     index.writeMeta(corpus.sparkSession, path)
     if (partitioned)
       index.payload(corpus, idCol, vecCol).write.mode("overwrite").partitionBy("cell")
         .parquet(s"$path/${if (books.isEmpty) "vectors" else "codes"}")
-    else if (books.nonEmpty)
-      index.payload(corpus, idCol, vecCol).drop("cell")
-        .write.mode("overwrite").parquet(s"$path/codes")
+    else if (books.nonEmpty && centers.isEmpty)
+      index.payload(corpus, idCol, vecCol).write.mode("overwrite").parquet(s"$path/codes")
   }
+
+  /** This index with `n_corpus` stamp `n` (none for a streamed index fit
+    * on its first batch: a batch is not the corpus).
+    */
+  private[graft] def stampedWith(n: Option[Long]): VectorIndex =
+    new VectorIndex(centers, books, residual, planes, n, stored, at)
 
   /** The meta tables alone, stamped with `n_corpus` when the index knows
     * its corpus size (a streamed index fit on its first batch does not).
@@ -268,7 +277,7 @@ object VectorIndex {
   sealed trait Quantizer
 
   /** Seeded KMeans coarse quantizer: a query probes its `nProbe` nearest
-    * cells. A corpus smaller than `nCells` fits one cell per vector.
+    * cells.
     */
   final case class Ivf(nCells: Int) extends Quantizer
 
@@ -297,7 +306,7 @@ object VectorIndex {
   final case class Lsh(dim: Int, bits: Int, tables: Int = 8) extends Quantizer
 
   /** A payload table [[read]] found, and whether it is partitioned by cell. */
-  final case class Stored(dir: String, byCell: Boolean)
+  private[operators] final case class Stored(dir: String, byCell: Boolean)
 
   /** Fit memo: production indexes train once per corpus and serve every
     * query from that fit; a caller-supplied `corpusId` names a DATASET
@@ -323,17 +332,13 @@ object VectorIndex {
         corpus.sample(withReplacement = false, maxTrainSamples.toDouble / n, seed)
       else corpus
     def coarse(nCells: Int) = memo(("ivf", nCells)) {
-      val k = math.max(1L, math.min(nCells.toLong, n)).toInt
-      kmeans(train.select(array_to_vector(col(vecCol)).as("features")), k, seed)
+      kmeans(train.select(array_to_vector(col(vecCol)).as("features")), nCells, seed)
     }
-    // ksub sub-centroids per subspace need at least that many vectors
-    def enough(nCells: Int, ksub: Int): Unit = require(n >= math.max(nCells, ksub),
-      s"corpus has $n vectors — need >= max(nCells=$nCells, ksub=$ksub) to fit PQ codebooks")
     def codebooks(m: Int, ksub: Int, residualTo: Array[Array[Double]]) =
       memo(("pq", m, ksub, residualTo.length)) {
         val sub =
           if (residualTo.isEmpty) train.select(normalize(asDouble(col(vecCol))).as("v"))
-          else VectorIndex(residualTo, residual = true)
+          else new VectorIndex(residualTo, residual = true)
             .unitResiduals(train.withColumn("__rid", monotonically_increasing_id()), "__rid",
               vecCol)
             .select(col("rvec").as("v"))
@@ -350,17 +355,15 @@ object VectorIndex {
         fitted
       }
     quantizer match {
-      case Ivf(nCells) => VectorIndex(coarse(nCells), nCorpus = Some(n))
+      case Ivf(nCells) => new VectorIndex(coarse(nCells), nCorpus = Some(n))
       case Pq(m, ksub) =>
-        enough(0, ksub)
-        VectorIndex(books = codebooks(m, ksub, Array.empty), nCorpus = Some(n))
+        new VectorIndex(books = codebooks(m, ksub, Array.empty), nCorpus = Some(n))
       case IvfPq(nCells, m, ksub, residual) =>
-        enough(nCells, ksub)
         val centers = coarse(nCells)
-        VectorIndex(centers, codebooks(m, ksub, if (residual) centers else Array.empty),
+        new VectorIndex(centers, codebooks(m, ksub, if (residual) centers else Array.empty),
           residual, nCorpus = Some(n))
       case Lsh(dim, bits, tables) =>
-        VectorIndex(planes = Array.tabulate(tables)(t => (0 until bits).map { p =>
+        new VectorIndex(planes = Array.tabulate(tables)(t => (0 until bits).map { p =>
           val rnd = new java.util.Random((seed + t * 7919L) ^ (p + 1) * 0x9E3779B97F4A7C15L)
           Array.fill(dim)(rnd.nextGaussian())
         }.toArray))
@@ -378,13 +381,21 @@ object VectorIndex {
     * exactly 0..n-1, since searches index them by position — a gap fails
     * here instead of assigning rows to the wrong cells. A missing table
     * leaves its part empty; whatever needs it fails naming the table.
+    *
+    * The payload is read only beside the meta it was encoded against:
+    * `codes` beside the codebooks, `vectors` beside the centroids of an
+    * index without codebooks. Cell-partitioned codes also need their
+    * centroids from the same path. Flat codes beside centroids read from
+    * another path were encoded without cells, so the corpus is re-encoded
+    * instead.
     */
   def read(spark: SparkSession, paths: String*): VectorIndex = {
     def fs(p: String) = new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
     def exists(p: String) = fs(p).exists(new Path(p))
+    // (the path holding table t, its rows)
     def table(t: String): Option[(String, Array[Row])] =
-      paths.map(p => s"$p/$t").find(d => exists(s"$d/_SUCCESS"))
-        .map(d => d -> spark.read.parquet(d).collect())
+      paths.find(p => exists(s"$p/$t/_SUCCESS"))
+        .map(p => p -> spark.read.parquet(s"$p/$t").collect())
     def dense(what: String, ids: Seq[Int]): Unit =
       require(ids == ids.indices, s"$what must be 0..${ids.size - 1}, got ${ids.mkString(",")}")
     def nested(d: String, rows: Array[Row], outer: String, inner: String, v: String) = {
@@ -401,25 +412,31 @@ object VectorIndex {
     val centroids = table("centroids")
     val codebooks = table("codebooks")
     val planes = table("planes")
-    val centers = centroids.fold(Array.empty[Array[Double]]) { case (d, rows) =>
+    val centers = centroids.fold(Array.empty[Array[Double]]) { case (p, rows) =>
       val sorted = rows.sortBy(_.getAs[Int]("cell"))
-      dense(s"centroid cells in $d", sorted.map(_.getAs[Int]("cell")).toSeq)
+      dense(s"centroid cells in $p/centroids", sorted.map(_.getAs[Int]("cell")).toSeq)
       sorted.map(_.getAs[Seq[Double]]("centroid").toArray)
     }
     val stamped = Seq(centroids, codebooks, planes).flatten.map(_._2)
       .find(has(_, "n_corpus")).map(_.head.getAs[Long]("n_corpus"))
-    VectorIndex(
+    val cellsAt = centroids.map(_._1)
+    val home = codebooks.map(_._1 -> "codes").orElse(cellsAt.map(_ -> "vectors"))
+    val payload = home.map { case (p, t) => s"$p/$t" }.filter(exists).map(d =>
+      Stored(d, fs(d).listStatus(new Path(d)).exists(_.getPath.getName.startsWith("cell="))))
+    payload.filter(_.byCell).foreach(s => require(home.map(_._1) == cellsAt,
+      s"${s.dir} is partitioned by the cells of the centroids beside it, but the " +
+        s"centroids were read from ${cellsAt.getOrElse("no path")}"))
+    new VectorIndex(
       centers,
-      codebooks.fold(Array.empty[Array[Array[Double]]]) { case (d, rows) =>
-        nested(d, rows, "subspace", "centroid_id", "centroid") },
+      codebooks.fold(Array.empty[Array[Array[Double]]]) { case (p, rows) =>
+        nested(s"$p/codebooks", rows, "subspace", "centroid_id", "centroid") },
       // tables written before the flag existed are direct-coded
       codebooks.exists { case (_, rows) =>
         has(rows, "residual") && rows.head.getAs[Boolean]("residual") },
-      planes.fold(Array.empty[Array[Array[Double]]]) { case (d, rows) =>
-        nested(d, rows, "tbl", "bit", "plane") },
+      planes.fold(Array.empty[Array[Array[Double]]]) { case (p, rows) =>
+        nested(s"$p/planes", rows, "tbl", "bit", "plane") },
       stamped,
-      paths.flatMap(p => Seq(s"$p/vectors", s"$p/codes")).find(exists).map(d =>
-        Stored(d, fs(d).listStatus(new Path(d)).exists(_.getPath.getName.startsWith("cell=")))),
+      payload.filter(_.byCell == centers.nonEmpty),
       paths)
   }
 

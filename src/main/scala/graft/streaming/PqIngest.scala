@@ -41,8 +41,16 @@ object PqIngest {
         s"$indexPath already holds codes encoded against its existing " +
           "codebooks — bootstrap a fresh index path instead of " +
           "re-fitting over them")
-    VectorIndex.fit(snapshot, VectorIndex.IvfPq(nCells, m, ksub, residual), vecCol,
-      seed, maxTrainSamples).writeMeta(snapshot.sparkSession, indexPath)
+    val index = VectorIndex.fit(snapshot, VectorIndex.IvfPq(nCells, m, ksub, residual),
+      vecCol, seed, maxTrainSamples)
+    // a too-small snapshot is a caller error here (an in-session fit
+    // accepts it): ksub sub-centroids per subspace need at least that many
+    // training vectors, and a snapshot that small has no business
+    // bootstrapping a compressed index
+    val n = index.nCorpus.getOrElse(0L)
+    require(n >= math.max(nCells, ksub),
+      s"snapshot has $n vectors — need >= max(nCells=$nCells, ksub=$ksub) to bootstrap")
+    index.writeMeta(snapshot.sparkSession, indexPath)
   }
 
   def start(vecs: DataFrame, indexPath: String, checkpoint: String,

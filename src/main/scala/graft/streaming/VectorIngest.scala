@@ -45,9 +45,12 @@ object VectorIngest {
       if (found.centers.nonEmpty) found
       else {
         // centroids first, overwrite-idempotent: a crash after them but
-        // before the vector append replays into the same overwrite
-        val fitted = VectorIndex.fit(batch, VectorIndex.Ivf(nCells), vecCol, seed,
-          maxTrainSamples).copy(nCorpus = None)
+        // before the vector append replays into the same overwrite. A
+        // stream does not control its batch sizes, so k is clamped to the
+        // first batch's size (this count runs on that one batch only).
+        val k = math.max(1L, math.min(nCells.toLong, batch.count())).toInt
+        val fitted = VectorIndex.fit(batch, VectorIndex.Ivf(k), vecCol, seed,
+          maxTrainSamples).stampedWith(None)
         fitted.writeMeta(batch.sparkSession, indexPath)
         fitted
       }

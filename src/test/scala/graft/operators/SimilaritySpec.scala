@@ -189,7 +189,7 @@ class SimilaritySpec extends SparkSpec {
     assert(codes.columns.toSet ===
       (Set("neighbor_id", "n_corpus") ++ (0 until 8).map(j => s"code_$j")))
 
-    // same seed -> same codebooks -> row-identical results to pqTopK
+    // same seed -> same codebooks -> row-identical results to the in-session search
     val fromIndex = VectorIndex.read(spark, path).search(q, 5, Some(emb), refine = 32)
     val inSession = VectorIndex.fit(emb, Pq()).search(q, 5, Some(emb), refine = 32)
     assert(fromIndex.exceptAll(inSession).count() === 0)
@@ -419,6 +419,47 @@ class SimilaritySpec extends SparkSpec {
     val e3 = intercept[IllegalArgumentException](
       Similarity.clusterBalancedSample(VectorIndex.read(spark, pq), vecs, cap = 1))
     assert(e3.getMessage.contains(s"no centroids table under $pq"), e3.getMessage)
+  }
+
+  test("a payload is read only beside the meta it was encoded against") {
+    val dir = java.nio.file.Files.createTempDirectory("annhome").toFile
+    dir.deleteOnExit()
+    val ivf = dir.getAbsolutePath + "/ivf"
+    val pq = dir.getAbsolutePath + "/pq"
+    val ivfPq = dir.getAbsolutePath + "/ivfpq"
+    VectorIndex.fit(vecs, Ivf(3)).write(vecs, ivf, partitioned = true)
+    VectorIndex.fit(vecs, Pq(m = 2, ksub = 2)).write(vecs, pq)
+    VectorIndex.fit(vecs, IvfPq(nCells = 3, m = 2, ksub = 2)).write(vecs, ivfPq, partitioned = true)
+    val qs = vecs.filter(col("vec_id") < 2)
+    // the IVF half's stored vectors are no PQ payload: the corpus is
+    // encoded against the two halves, as for two flat indexes
+    val composed = VectorIndex.read(spark, ivf, pq)
+      .search(qs, 3, Some(vecs), nProbe = 2, refine = 2)
+    val inSession = VectorIndex.fit(vecs, IvfPq(nCells = 3, m = 2, ksub = 2))
+      .search(qs, 3, Some(vecs), nProbe = 2, refine = 2)
+    assert(composed.count() > 0)
+    assert(composed.exceptAll(inSession).count() === 0)
+    assert(inSession.exceptAll(composed).count() === 0)
+    // cell-partitioned codes are only read with the centroids beside them
+    val e = intercept[IllegalArgumentException](VectorIndex.read(spark, ivf, ivfPq))
+    assert(e.getMessage.contains(s"$ivfPq/codes is partitioned by the cells of the " +
+      s"centroids beside it, but the centroids were read from $ivf"), e.getMessage)
+  }
+
+  test("a corpus smaller than ksub searches in session; bootstrap refuses it") {
+    val r = VectorIndex.fit(vecs, Pq(m = 2, ksub = 16))
+      .search(vecs.filter(col("vec_id") === 0), 3, Some(vecs), refine = 2)
+      .orderBy("rank").collect()
+    assert(r.length === 3)
+    assert(r.head.getAs[Long]("neighbor_id") === 1L)
+    val dir = java.nio.file.Files.createTempDirectory("pqsmall").toFile
+    dir.deleteOnExit()
+    val path = dir.getAbsolutePath + "/index"
+    val e = intercept[IllegalArgumentException](
+      graft.streaming.PqIngest.bootstrap(vecs, path, nCells = 2, m = 2, ksub = 16))
+    assert(e.getMessage.contains(
+      "snapshot has 5 vectors — need >= max(nCells=2, ksub=16) to bootstrap"), e.getMessage)
+    assert(!new java.io.File(path + "/codebooks").exists())
   }
 
   test("ensureIndex on an empty corpus fingerprints as n0 instead of NPEing") {
