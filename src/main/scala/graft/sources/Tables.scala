@@ -139,7 +139,7 @@ object Tables {
     val md = java.security.MessageDigest.getInstance("MD5")
       .digest(roster.mkString("\n").getBytes("UTF-8"))
     // n = TOTAL BYTES, not file count: the sibling cleanup in
-    // SparkEntry.ensureIndexNamed keys on n, and two scale factors produce
+    // QueryCommon.ensureIndexNamed keys on n, and two scale factors produce
     // the same FILE count (16 segments each) — byte totals differ, so
     // sf0.01 and sf0.1 entries coexist instead of clobbering each other
     f"n${entries.map(_._2).sum}_x${java.nio.ByteBuffer.wrap(md).getLong}%016x"

@@ -17,7 +17,8 @@ class EnsureIndexSpec extends SparkSpec {
 
   private def build(kind: String, name: String): (String, Int) = {
     var builds = 0
-    val path = SparkEntry.ensureIndexNamed(spark, kind, name, "tbl") { p =>
+    val path = queries.QueryCommon.ensureIndexNamed(spark, SharedSpark.indexRoot, kind, name,
+        "tbl") { p =>
       builds += 1
       spark.range(1).toDF("x").write.mode("overwrite").parquet(s"$p/tbl")
     }

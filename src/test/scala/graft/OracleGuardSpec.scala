@@ -28,9 +28,23 @@ class OracleGuardSpec extends AnyFunSuite {
   }
 
   test("264 uniquely named queries, each with a non-empty oracle") {
-    val names = SparkEntry.queries.keySet
-    assert(names.size === 264)
-    assert(names === SparkEntry.oracleSql.keySet)
-    assert(SparkEntry.oracleSql.values.forall(_.trim.nonEmpty))
+    val specs = SparkEntry.specs()
+    assert(specs.size === 264)
+    assert(specs.map(_.name).distinct.size === 264)
+    assert(specs.forall(_.oracle.trim.nonEmpty))
+    assert(SparkEntry.queries.keySet === specs.map(_.name).toSet)
+  }
+
+  test("oracles at another index root read that root and never the default") {
+    val root = "/scratch/index_root"
+    val default = SparkEntry.specs()
+    val moved = SparkEntry.specs(root)
+    assert(moved.map(_.name) === default.map(_.name))
+    assert(moved.forall(!_.oracle.contains(SparkEntry.defaultIndexRoot)))
+    // every oracle that reads an index reads it under the root it was given
+    default.zip(moved).foreach { case (d, m) =>
+      assert(m.oracle === d.oracle.replace(SparkEntry.defaultIndexRoot, root), d.name)
+    }
+    assert(moved.count(_.oracle.contains(root)) === 16)
   }
 }

@@ -12,9 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanInvariantsSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   private val dir = "/root/testdata/sf0.001"
+  // the registry at the tests' own index root
+  private lazy val queries =
+    SparkEntry.specs(SharedSpark.indexRoot).map(q => q.name -> q.build).toMap
 
   private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString()
+    queries(name)(spark, dir).queryExecution.executedPlan.toString()
 
   private def available: Boolean = new java.io.File(s"$dir/lineitem.parquet").exists()
 
@@ -339,7 +342,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
     // join — one row per identified output is corpus-proportional, and a
     // forced broadcast is an OOM at 100× scale. AQE picking broadcast from
     // MEASURED sizes at sf0.001 is fine; the hint is what's banned.
-    val lp = SparkEntry.queries("etl_clean_outputs")(spark, dir)
+    val lp = queries("etl_clean_outputs")(spark, dir)
       .queryExecution.analyzed.toString()
     assert(!lp.contains("UnresolvedHint") && !lp.toLowerCase.contains("hint=(strategy=broadcast"),
       s"forced broadcast hint on the corpus-side join:\n$lp")
@@ -420,9 +423,9 @@ class PlanInvariantsSpec extends AnyFunSuite {
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
     val crossOffenders = Seq.newBuilder[String]
     val nestedOffenders = Seq.newBuilder[String]
-    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+    queries.keys.toSeq.sorted.foreach { name =>
       val df =
-        try SparkEntry.queries(name)(spark, dir)
+        try queries(name)(spark, dir)
         catch { case e: Throwable => fail(s"$name failed to build: ${e.getMessage}") }
       // the adjudicating harness sorts result rows by every column before
       // hashing — a top-level array/map/struct is unsortable there
@@ -468,7 +471,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
     val names = interactiveQueries
     assert(names.size === 20)
     val ranged = names.filter { n =>
-      val df = SparkEntry.queries(n)(spark, dir)
+      val df = queries(n)(spark, dir)
       graft.tools.TimedRun.once(spark)(df).orThrow
       helper.collect(df.queryExecution.executedPlan) {
         case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
@@ -487,7 +490,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
   // first) compiles each variant the first time it shows up. Spark's
   // rewrite of several `countDistinct`s in one aggregation orders the
   // columns by a hash of their expression ids, so a rebuilt query can plan
-  // them in another order (`SparkEntry.countDistincts` fixes the order).
+  // them in another order (`QueryCommon.countDistincts` fixes the order).
   // The queries run as three passes in one session, and each query's third
   // run must add 0 to Spark's compile count (`CodegenMetrics`, as
   // GraphSpec's hits test counts it). They are the benchmark's `interactive`
@@ -505,11 +508,11 @@ class PlanInvariantsSpec extends AnyFunSuite {
       "graph_pagerank", "graph_lpa", "pipeline_crawl_refresh",
       "pipeline_crawl_trap_score", "warc_main_dedup", "warc_canonical_dedup",
       "events_retention")
-    assert(interactive.size === 20 && names.forall(SparkEntry.queries.contains))
+    assert(interactive.size === 20 && names.forall(queries.contains))
     val passes = (1 to 3).map { _ =>
       names.map { n =>
         val c0 = METRIC_COMPILATION_TIME.getCount
-        graft.tools.TimedRun.once(spark)(SparkEntry.queries(n)(spark, dir)).orThrow
+        graft.tools.TimedRun.once(spark)(queries(n)(spark, dir)).orThrow
         n -> (METRIC_COMPILATION_TIME.getCount - c0)
       }
     }

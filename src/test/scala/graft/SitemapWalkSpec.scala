@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Guard-path contract of [[SparkEntry.sitemapWalk]] — the query-level
+/** Guard-path contract of [[queries.WarcQueries.sitemapWalk]] — the query-level
   * equivalence proof (`warc_sitemap_walk` ≡ flat) pins the happy path;
   * these pin what happens on HOSTILE input: a cycle with no leaves must
   * terminate empty, an unknown sitemap URL must contribute nothing, and
@@ -27,7 +27,7 @@ class SitemapWalkSpec extends SparkSpec {
       ("h", "a.xml", idx("b.xml")),
       ("h", "b.xml", idx("a.xml"))).toDF("host", "sm_url", "xml")
     val roots = Seq(("h", "a.xml")).toDF("host", "sm_url")
-    val out = SparkEntry.sitemapWalk(fetched, roots, maxDepth = 10)
+    val out = queries.WarcQueries.sitemapWalk(fetched, roots, maxDepth = 10)
     assert(out.count() === 0L)
   }
 
@@ -38,7 +38,7 @@ class SitemapWalkSpec extends SparkSpec {
       ("h", "b.xml", urlset("https://h/p1", "https://h/p2")))
       .toDF("host", "sm_url", "xml")
     val roots = Seq(("h", "a.xml")).toDF("host", "sm_url")
-    val out = SparkEntry.sitemapWalk(fetched, roots, maxDepth = 10)
+    val out = queries.WarcQueries.sitemapWalk(fetched, roots, maxDepth = 10)
     assert(out.select("loc").as[String].collect().sorted.toSeq
       === Seq("https://h/p1", "https://h/p2"))
   }
@@ -53,9 +53,9 @@ class SitemapWalkSpec extends SparkSpec {
       ("h", "c3.xml", urlset("https://h/deep")))
       .toDF("host", "sm_url", "xml")
     val roots = Seq(("h", "c0.xml")).toDF("host", "sm_url")
-    val cut = SparkEntry.sitemapWalk(fetched, roots, maxDepth = 3)
+    val cut = queries.WarcQueries.sitemapWalk(fetched, roots, maxDepth = 3)
     assert(cut.count() === 0L, "budget 3 must stop before the urlset level")
-    val full = SparkEntry.sitemapWalk(fetched, roots, maxDepth = 4)
+    val full = queries.WarcQueries.sitemapWalk(fetched, roots, maxDepth = 4)
     assert(full.select("loc").as[String].collect().toSeq
       === Seq("https://h/deep"))
   }
@@ -68,7 +68,7 @@ class SitemapWalkSpec extends SparkSpec {
       ("h2", "r.xml", idx("r.xml"))) // h2: cycle only
       .toDF("host", "sm_url", "xml")
     val roots = Seq(("h1", "r.xml"), ("h2", "r.xml")).toDF("host", "sm_url")
-    val out = SparkEntry.sitemapWalk(fetched, roots, maxDepth = 6)
+    val out = queries.WarcQueries.sitemapWalk(fetched, roots, maxDepth = 6)
       .select("host", "loc").as[(String, String)].collect().toSeq
     assert(out === Seq(("h1", "https://h1/p")))
   }

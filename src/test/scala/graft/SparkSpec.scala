@@ -12,6 +12,11 @@ object SharedSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** The index root tests build persisted indexes and fixtures under, apart
+    * from the registry's default root.
+    */
+  lazy val indexRoot: String = new java.io.File("target/graft_ann_index").getAbsolutePath
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -465,22 +465,24 @@ class SimilaritySpec extends SparkSpec {
   test("ensureIndex on an empty corpus fingerprints as n0 instead of NPEing") {
     import spark.implicits._
     val kind = "spec_empty_" + System.nanoTime()
+    val root = graft.SharedSpark.indexRoot
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val path = graft.SparkEntry.ensureIndex(spark, empty, kind, "m") { p =>
+    val path = graft.queries.QueryCommon.ensureIndex(spark, root, empty, kind, "m") { p =>
       empty.write.mode("overwrite").parquet(s"$p/m")
     }
     assert(path.contains("/n0_x0000000000000000"))
     org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(s"/tmp/graft_ann_index/$kind"), true)
+      .delete(new org.apache.hadoop.fs.Path(s"$root/$kind"), true)
   }
 
   test("ensureIndex fingerprints content: a same-count different-content " +
       "corpus rebuilds the index instead of reusing the stale one") {
     import spark.implicits._
-    val kind = "spec_fp_" + System.nanoTime() // private /tmp keyspace per run
+    val kind = "spec_fp_" + System.nanoTime() // private keyspace per run
+    val root = graft.SharedSpark.indexRoot
     var builds = 0
     def build(corpus: org.apache.spark.sql.DataFrame): String =
-      graft.SparkEntry.ensureIndex(spark, corpus, kind, "m") { p =>
+      graft.queries.QueryCommon.ensureIndex(spark, root, corpus, kind, "m") { p =>
         builds += 1
         corpus.write.mode("overwrite").parquet(s"$p/m")
       }
@@ -500,7 +502,7 @@ class SimilaritySpec extends SparkSpec {
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(pathA)),
       "stale same-count sibling must be deleted")
-    fs.delete(new org.apache.hadoop.fs.Path(s"/tmp/graft_ann_index/$kind"), true)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$root/$kind"), true)
   }
 
   test("crossCosinePairs: only cross-frame pairs above threshold emit; " +
