@@ -546,10 +546,8 @@ object TextQueries {
         .orderBy("doc_id")
     },
       // partial_ratio is windowed Levenshtein, which DuckDB can replicate
-      // directly. The harness corpora guarantee len(text) >= 44, so the
-      // 40-char prefix is always the longer side and the 23-char needle
-      // yields exactly 18 windows; round() never sees a .5 tie because
-      // 100*(23-d)/23 has no half-integer values.
+      // directly: the shorter of the 40-char prefix and the 23-char needle
+      // slides over the longer, every window as long as the shorter side.
       partialRatioOracle),
 
     // The SAME computation through the TEXTUAL SQL surface — temp view +
@@ -763,12 +761,26 @@ object TextQueries {
     }, keywordsOracle)
   )
 
+  /** `PartialRatio.compute(prefix, needle)` replayed: the shorter side
+    * slides over the longer (constant series + bound filter, as in
+    * `er_fuzzy_pairs`), so a prefix under 23 characters is scored against
+    * needle windows of its own length and a 23–39-character prefix never
+    * against a window cut short by its end; an empty prefix scores 0.
+    */
   private val partialRatioOracle: String =
-    """WITH pref AS (SELECT doc_id, substr(text,1,40) AS s FROM documents),
-      |win AS (SELECT doc_id,
-      |    round(100*(1.0 - levenshtein('spark table join filter', substr(s, i, 23))*1.0/23)) AS r
-      |  FROM pref, generate_series(1, 18) AS t(i))
-      |SELECT doc_id, CAST(max(r) AS INTEGER) AS score FROM win GROUP BY doc_id ORDER BY doc_id""".stripMargin
+    """WITH p AS (SELECT doc_id, substr(text, 1, 40) AS pre FROM documents),
+      |norm AS (
+      |  SELECT doc_id,
+      |    CASE WHEN len(pre) <= 23 THEN pre ELSE 'spark table join filter' END AS s,
+      |    CASE WHEN len(pre) <= 23 THEN 'spark table join filter' ELSE pre END AS l
+      |  FROM p WHERE len(pre) > 0),
+      |win AS (
+      |  SELECT doc_id,
+      |    round(100 * (1.0 - levenshtein(s, substr(l, i, len(s))) * 1.0 / len(s))) AS r
+      |  FROM norm, generate_series(1, 23) AS t(i)
+      |  WHERE i <= len(l) - len(s) + 1)
+      |SELECT p.doc_id, CAST(CASE WHEN len(p.pre) = 0 THEN 0 ELSE max(w.r) END AS INTEGER) AS score
+      |FROM p LEFT JOIN win w USING (doc_id) GROUP BY p.doc_id, p.pre ORDER BY p.doc_id""".stripMargin
 
   private val tokenTotalsOracle: String =
     """SELECT source,

@@ -44,6 +44,21 @@ class FuzzySpec extends SparkSpec {
     assert(PartialRatio.compute("completely different", "unrelated text entirely") < 80)
   }
 
+  // `fuzzy_partial_ratio` scores a text's first 40 characters against this
+  // 23-character needle. Every window is as long as the shorter side: a
+  // prefix under 23 characters slides over the needle, and a longer prefix
+  // is never scored on a window cut short by its own end.
+  Seq(
+    ("a prefix shorter than the needle", "table joins", 91),
+    ("a prefix of 23-39 characters", "the cold data spark table join", 39),
+    ("an empty prefix", "", 0)
+  ).foreach { case (name, prefix, score) =>
+    test(s"registry needle, $name: $score") {
+      assert(PartialRatio.compute(prefix, "spark table join filter") === score)
+      assert(PartialRatio.compute("spark table join filter", prefix) === score)
+    }
+  }
+
   test("works as a Column expression") {
     import spark.implicits._
     val r = Seq(("abc", "abc"), ("abc", "xyz")).toDF("a", "b")
