@@ -50,8 +50,6 @@ object SparkEntry {
     all
   }
 
-  private lazy val defaultQueries = specs().map(q => q.name -> q.build).toMap
-
   /** Flagship query (driver smoke-checks rows>0 on sf0.001): revenue per
     * nation — lineitem ⋈ orders ⋈ customer ⋈ broadcast(nation).
     */
@@ -71,6 +69,8 @@ object SparkEntry {
         count(lit(1)).as("n_lines"))
       .orderBy(col("n_name"))
   }
+
+  private lazy val defaultQueries = specs().map(q => q.name -> q.build).toMap
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = defaultQueries
 

@@ -49,7 +49,8 @@ object GraphQueries {
     * pipeline's warm-start input) each persist once and coexist. Content
     * keying here is for edges that are CHEAP to evaluate (the arithmetic
     * graphs); edges extracted from ingested state key off their ingest
-    * metadata instead ([[ranksForLinkIndex]], [[crawlIndexPath]]).
+    * metadata instead (`PipelineQueries.ranksForLinkIndex`,
+    * `PipelineQueries.crawlIndexPath`).
     */
   private def ranksFor(s: SparkSession, root: String, edges: DataFrame): DataFrame = {
     val path = ensureIndex(s, root, edges, "crawlrank", "ranks") { p =>

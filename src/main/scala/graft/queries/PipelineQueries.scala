@@ -18,8 +18,8 @@ import QueryCommon._
 object PipelineQueries {
 
   /** The SECOND-snapshot archive (`changeSalt = 1`): the same corpus
-    * re-fetched 14 days after [[warcFixturePath]]'s crawl, where exactly
-    * the `d % 4 == 3` 200-status class changed content and every other
+    * re-fetched 14 days after `QueryCommon.warcFixturePath`'s crawl, where
+    * exactly the `d % 4 == 3` 200-status class changed content and every other
     * byte is identical — the observation pair the change-rate estimator
     * (`pipeline_crawl_change_rate`) compares digests across.
     */

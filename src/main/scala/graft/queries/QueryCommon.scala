@@ -359,8 +359,8 @@ object QueryCommon {
     }
   }
 
-  /** As [[warcPages]], over an already-HTTP-parsed frame (shared with the
-    * segment fixture, where the parse also feeds the link ingest).
+  /** As `WarcQueries.warcPages`, over an already-HTTP-parsed frame (shared
+    * with the segment fixture, where the parse also feeds the link ingest).
     */
   private[queries] def warcPagesFromParsed(parsed: DataFrame): DataFrame =
     parsed

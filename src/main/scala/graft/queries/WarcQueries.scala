@@ -14,8 +14,8 @@ import QueryCommon._
   */
 object WarcQueries {
 
-  /** The SAME corpus as [[warcFixturePath]] compressed as `.warc.zst`
-    * (zstd whole-file members — Common Crawl's successor compression
+  /** The SAME corpus as `QueryCommon.warcFixturePath` compressed as
+    * `.warc.zst` (zstd whole-file members — Common Crawl's successor compression
     * for WARC-at-rest; the zstd-jni shipping with Spark decodes it).
     * Byte-identical records behind a different codec, so `warc_read_zstd`
     * shares `warc_read`'s oracle verbatim.

@@ -19,7 +19,7 @@ import graft.streaming.BatchMarker.Sink
   * crawl-frontier semantics, and the reason appends must not resolve.
   *
   * This ordering makes the end state equal to batch extraction over the
-  * full archive (`SparkEntry.warcLinkEdges`): accumulated-distinct pairs
+  * full archive (`QueryCommon.warcLinkEdges`): accumulated-distinct pairs
   * resolved against accumulated URLs ≡ whole-corpus pairs resolved
   * against the whole-corpus URL table — which is what lets
   * `warc_links_streamed` share `warc_links`' oracle verbatim (the

@@ -59,7 +59,7 @@ object WarcIngest {
     logPath, sentinel = Some(s"$logPath/_batches/has_data"))
 
   /** One micro-batch. `pages` must carry unique `doc_id` plus `url`,
-    * `n_tokens`, `text_md5` (the `SparkEntry.warcPages` shape).
+    * `n_tokens`, `text_md5` (the `WarcQueries.warcPages` shape).
     */
   def processBatch(pages: DataFrame, batchId: Long, logPath: String,
       minTokens: Int = 3): Unit = {

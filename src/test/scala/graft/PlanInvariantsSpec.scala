@@ -16,8 +16,14 @@ class PlanInvariantsSpec extends AnyFunSuite {
   private lazy val queries =
     SparkEntry.specs(SharedSpark.indexRoot).map(q => q.name -> q.build).toMap
 
-  private def plan(name: String): String =
-    queries(name)(spark, dir).queryExecution.executedPlan.toString()
+  // A scan's Location prints only its first maxMetadataStringLength (100)
+  // characters, and a path under the tests' root can run past the table
+  // name that the partition-filter checks look for.
+  private def plan(name: String): String = {
+    spark.conf.set("spark.sql.maxMetadataStringLength", 1000L)
+    try queries(name)(spark, dir).queryExecution.executedPlan.toString()
+    finally spark.conf.unset("spark.sql.maxMetadataStringLength")
+  }
 
   private def available: Boolean = new java.io.File(s"$dir/lineitem.parquet").exists()
 
