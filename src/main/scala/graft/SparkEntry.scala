@@ -5,7 +5,7 @@ import graft.queries.QueryCommon.t
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract (SURVEY §7 + builder prompt): one `queries` entry per
+/** Registry contract (SURVEY §7): one `queries` entry per
   * implemented operator from SURVEY §2, each with a DuckDB-equivalent
   * `oracleSql` where the semantics are ANSI-SQL-expressible.
   *
@@ -50,7 +50,7 @@ object SparkEntry {
     all
   }
 
-  /** Flagship query (driver smoke-checks rows>0 on sf0.001): revenue per
+  /** Flagship query (smoke-checked for rows > 0 on sf0.001): revenue per
     * nation — lineitem ⋈ orders ⋈ customer ⋈ broadcast(nation).
     */
   def entry(spark: SparkSession): DataFrame = {

@@ -1,7 +1,7 @@
 package graft
 import graft.queries.QuerySpec
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each registry query's result → parquet,
+/** Correctness dump: each registry query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {

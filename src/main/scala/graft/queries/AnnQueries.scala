@@ -432,7 +432,7 @@ object AnnQueries {
     // Per-vector int8 quantization (4x embedding storage cut) with the
     // reconstruction-error bound proven per row. The quantized vector is
     // emitted as its JSON text (both engines print int lists as compact
-    // `[1,-2,...]`) so the driver's row-sort compares a plain string —
+    // `[1,-2,...]`) so the oracle compare's row sort compares a plain string —
     // an array column crashes pandas' sort_values in the harness.
     QuerySpec("embed_quantize", (s, dir) => {
       Similarity.quantizeInt8(t(s, dir, "embeddings"))
@@ -602,7 +602,7 @@ object AnnQueries {
       // detection surfaces tok_bucket as a column the query simply ignores
       bm25TopkOracle(root, "bm25part", "postings/*/*.parquet")),
 
-    // The STREAMED partitioned BM25 index as a driver-oracled row (it was
+    // The STREAMED partitioned BM25 index as an oracled registry row (it was
     // spec-verified only): two doc-disjoint micro-batches append their
     // postings under the tok_bucket= dirs via IndexIngest, then the
     // pruned searcher runs over the accumulation. The oracle recomputes
@@ -630,11 +630,7 @@ object AnnQueries {
       graft.streaming.IndexIngest.bm25TopKPruned(s, path, q, k = 10)
         .orderBy("query_id", "rank")
     },
-      // replays from the STREAMED index's own tables. The ingest layout
-      // carries no n_corpus column (a stream doesn't know its final corpus
-      // size), so the oracle disambiguates the sibling index dirs by the
-      // ensureIndex dir name instead: filename must contain /n<count>_x
-      // (contains(), not LIKE — `_` is a LIKE wildcard)
+      // replays from the STREAMED index's own tables
       bm25TopkOracle(root, "bm25stream", "postings/*/*/*.parquet", "doclens/*/*.parquet",
         streamed = true)),
 

@@ -17,7 +17,7 @@ object DedupQueries {
 
   /** The testdata corpus has no NULL text, so the NULL-digest contract
     * (NULL dedups against NULL under the `<null-text>` sentinel, and never
-    * against `''`) would go unexercised by the driver compare. This
+    * against `''`) would go unexercised by the oracle compare. This
     * appends three synthetic rows — a NULL-text + an empty-text doc in the
     * batch source and a NULL-text doc in the corpus — and the oracle
     * appends the SAME literals (see `nullFixtureSql`), so the green row
@@ -53,7 +53,7 @@ object DedupQueries {
       |    t(doc_id, text, lang, source, n_chars)""".stripMargin
 
   def specs(root: String): Seq[QuerySpec] = Seq(
-    // --- LLM-data-pipeline operators (builder brief) ---
+    // --- LLM-data-pipeline operators ---
 
     // Exact dedup groups over md5(text) — one shuffle, map-side combine.
     QuerySpec("dedup_exact", (s, dir) => {
@@ -584,7 +584,7 @@ object DedupQueries {
   /** Shared by `dedup_incremental` and `dedup_incremental_bloom`: the bloom
     * prefilter is output-transparent (false positives die in the exact
     * semi-join, false negatives are impossible), so one oracle checks both
-    * implementations — the driver's green row IS the equivalence proof.
+    * implementations — the green oracle row IS the equivalence proof.
     */
   private val incrementalDedupOracle: String =
     // the coalesce replays the Spark side's `<null-text>` digest sentinel

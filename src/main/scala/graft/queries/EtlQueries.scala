@@ -287,7 +287,7 @@ object EtlQueries {
       (projects, users, userGuids, callTable, specMapping, countryMapping, aliases)
   }
 
-  /** The driver-facing projection of the visitor-project table (shared by
+  /** The registry-facing projection of the visitor-project table (shared by
     * both id paths; ids cast BIGINT so INT window ids and BIGINT
     * distributed ids hash identically).
     */

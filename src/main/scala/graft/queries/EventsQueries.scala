@@ -471,7 +471,7 @@ object EventsQueries {
         .select(col("event_type"), unix_micros(col("h")).as("hour_us"),
           col("n"), col("z"), (abs(col("z")) > 2.5).as("is_anomaly"))
         // ORACLE-DETERMINISM SORT, NOT THE PRODUCTION CONTRACT: the tail
-        // orderBy exists so the driver's hash compare sees one row order;
+        // orderBy exists so the oracle's hash compare sees one row order;
         // the operator itself is the unordered frame above it. At 100 TB
         // ship the unordered form — a global sort of per-hour rows would
         // be a pure artifact of the test harness. (COVERAGE.md "Ordered
@@ -526,7 +526,7 @@ object EventsQueries {
         // ORACLE-DETERMINISM SORT, NOT THE PRODUCTION CONTRACT: a global
         // sort of per-USER rows is the single worst tail to ship at
         // 100 TB — the operator ends at the unordered join above; this
-        // orderBy exists solely for the driver's hash compare.
+        // orderBy exists solely for the oracle's hash compare.
         // (COVERAGE.md "Ordered outputs" note.)
         .orderBy("user_id")
     },

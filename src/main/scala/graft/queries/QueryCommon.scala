@@ -328,7 +328,7 @@ object QueryCommon {
     * `pipeline_crawl_refresh` keeps its time-travel history on the
     * uncompacted one. Kind "warcingestl2qr" (r15 bumps for the unquoted
     * and relative anchor classes): the
-    * segment payloads now carry anchors and the builder grew the
+    * segment payloads now carry anchors and the fixture grew the
     * compacted index.
     */
   private[queries] def warcIngestPath(s: SparkSession, root: String, dir: String): String =

@@ -753,7 +753,7 @@ object TextQueries {
 
     // Same keywords through the bounded SmallestK heap aggregate (map-side
     // partial top-k, no per-group sort) — same oracle as text_keywords, so
-    // the driver's green row proves the aggregate agrees with the window.
+    // the green oracle row proves the aggregate agrees with the window.
     QuerySpec("text_keywords_topk", (s, dir) => {
       Curation.distinctiveKeywordsViaTopKAgg(t(s, dir, "documents"), "text", "doc_id",
           k = 3, maxDfFrac = 0.8)

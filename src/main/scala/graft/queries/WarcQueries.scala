@@ -1346,7 +1346,7 @@ object WarcQueries {
     // millions of in-links can never blow an aggregation buffer —
     // each partial carries ≤ k anchors. Output scalarized
     // (array_join) — the registry's no-top-level-array contract
-    // (pinned by PlanInvariantsSpec), and what the driver's
+    // (pinned by PlanInvariantsSpec), and what the
     // oracle compare can sort.
     QuerySpec("warc_anchor_text", (s, dir) => {
       val resp = graft.sources.Warc.responses(graft.sources.Warc.readRecords(
