@@ -1,7 +1,10 @@
 package graft.operators
 
+import java.awt.image.BufferedImage
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import scala.reflect.runtime.universe.TypeTag
+import scala.util.control.NonFatal
 
 /** Multimodal columns (builder brief): image/audio/video as opaque `binary`
   * columns with typed metadata, batch-decoded per partition.
@@ -20,11 +23,14 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
   * [[decodeMp4Meta]] byte-walks the box structure (ftyp brand, mvhd
   * timescale/duration in both the v0 and v1 layouts, trak/hdlr track
   * split) with no codec; only the H.264-class FRAME decode remains out
-  * of scope (no codec libraries in this container) — for that,
-  * [[DecodeStub]]/[[sampleFrames]] stay as the clearly-marked
-  * byte-chunk stubs; swapping in a real codec changes no plan shape —
-  * decode stays a `mapPartitions` over binary payloads, metadata stays
-  * columnar.
+  * of scope (no codec libraries in this container). Swapping in a real
+  * codec changes no plan shape — decode stays a `mapPartitions` over
+  * binary payloads, metadata stays columnar.
+  *
+  * Every decoder runs on one core: [[payloads]] reads the media rows,
+  * and [[decodeRows]] opens one per-partition decoder and applies the
+  * poison rule. Every synthesizer runs on [[synthesize]], which spreads
+  * the ids and calls one per-partition encoder per id.
   *
   * Scale notes: payloads never pass through a shuffle here — decode is
   * map-side; downstream joins should carry only (id, features/meta) with the
@@ -42,91 +48,137 @@ object Multimodal {
   /** One media row: id + opaque payload + declared type. */
   case class MediaRow(media_id: Long, payload: Array[Byte], media_type: String)
 
-  /** Decoded metadata — the stand-in for width/height/duration etc. */
-  case class MediaMeta(media_id: Long, media_type: String, byte_len: Int,
-                       checksum: Long, width: Int, height: Int)
-
-  /** STUB decoder: deterministic pseudo-metadata derived from the payload
-    * bytes. A real implementation would parse the container format here —
-    * per-partition, so codec state is reused across a batch.
+  /** The fixture core behind every `synthesize*`: the ids of `idCol`,
+    * spread over the session's parallelism, each encoded to one payload
+    * of `mediaType` by the encoder `encoder()` opens once per partition
+    * (so its buffers, writers and digests are reused across a batch).
+    *
+    * The id table is one parquet file = ONE partition; the per-row codec
+    * work is the cost here, so the ids are spread across the session's
+    * parallelism before the map-side encode (a shuffle of a few hundred
+    * longs buys parallel frame work). The partition count is EXPLICIT: a
+    * bare repartition(col) is AQE-coalescible, and AQE folds these few
+    * kilobytes straight back into one partition — serializing the codec
+    * work AND letting an ordered consumer's range-sampling pass recompute
+    * it single-threaded a second time (measured 5.5 s vs 0.3 s for the
+    * `multimodal_video` pipeline at explicit 32).
     */
-  object DecodeStub {
-    def decode(r: MediaRow): MediaMeta = {
-      val bytes = if (r.payload == null) Array.emptyByteArray else r.payload
-      var h = 1125899906842597L // deterministic FNV-ish rolling checksum
-      var i = 0
-      while (i < bytes.length) { h = 31 * h + bytes(i); i += 1 }
-      // fake dimensions from the checksum — replace with real header parse
-      MediaMeta(r.media_id, r.media_type, bytes.length, h,
-        width = 16 + (math.abs(h) % 1920).toInt,
-        height = 16 + (math.abs(h / 7) % 1080).toInt)
-    }
-  }
+  private def synthesize(ids: DataFrame, idCol: String, mediaType: String)(
+      encoder: () => Long => Array[Byte]): DataFrame =
+    ids.repartition(ids.sparkSession.sparkContext.defaultParallelism, col(idCol))
+      .select(col(idCol).cast("long").as("media_id"))
+      .as(Encoders.scalaLong)
+      .mapPartitions { it: Iterator[Long] =>
+        val encode = encoder()
+        it.map(id => MediaRow(id, encode(id), mediaType))
+      }(Encoders.product[MediaRow])
+      .toDF()
 
-  /** Batch decode: binary-typed DataFrame → typed metadata Dataset.
-    * mapPartitions so a real codec initializes once per partition, not per
-    * row (the Pandas-UDF batch-shape analog in Scala).
-    */
-  def decodeMeta(media: DataFrame): Dataset[MediaMeta] = {
-    implicit val enc = Encoders.product[MediaMeta]
+  /** The media rows of `media` (`media_id`, `payload`, `media_type`), typed. */
+  private def payloads(media: DataFrame): Dataset[MediaRow] =
     media
       .select(col("media_id").cast("long"), col("payload").cast("binary"),
         col("media_type").cast("string"))
       .as(Encoders.product[MediaRow])
-      .mapPartitions { it: Iterator[MediaRow] => it.map(DecodeStub.decode) }
-  }
 
-  /** Frame-sampling plumbing: emit `every`-th chunk index of the payload as
-    * (media_id, frame_no, offset) — the row-multiplying shape of real frame
-    * extraction with the codec stubbed to fixed-size chunks.
+  /** The decoder core: `decoder()` opens once per partition (reader state
+    * is per batch, the Pandas-UDF batch shape) and maps each payload to
+    * its rows. The POISON RULE lives here, once: a null or empty payload,
+    * or one the decoder throws on, yields `failed(media_id)` — one
+    * corrupt object must not kill a 100 TB scan, and must not masquerade
+    * as data either. NonFatal, not just IOException: the JDK's format
+    * readers throw unchecked exceptions on malformed headers too. A
+    * decoder's rows must be materialized when it returns, so its throws
+    * land inside the rule.
     */
-  def sampleFrames(media: DataFrame, chunkSize: Int, every: Int): DataFrame =
-    media
-      .select(col("media_id"), length(col("payload").cast("binary")).as("n_bytes"))
-      .select(col("media_id"),
-        explode(sequence(lit(0),
-          greatest((col("n_bytes") / chunkSize).cast("int") - 1, lit(0)),
-          lit(every))).as("frame_no"))
-      .withColumn("offset", col("frame_no") * chunkSize)
-
-  /** A resized media row: id + transformed payload + the target dims. */
-  case class ResizedMedia(media_id: Long, payload: Array[Byte],
-                          width: Int, height: Int)
-
-  /** Resize plumbing: payload → payload at (`targetW`, `targetH`), batch
-    * per partition — binary in, binary out, the transform-in-place shape
-    * of a real thumbnailing pass (decoder + scaler would initialize once
-    * per partition). The scaler is a deterministic STUB: the output
-    * payload is the input sampled at a stride proportional to the area
-    * ratio (so output size tracks target area the way a real re-encode
-    * roughly would), which keeps downstream size accounting and the plan
-    * shape honest without codecs in the container.
-    */
-  def resizeStub(media: DataFrame, targetW: Int, targetH: Int): Dataset[ResizedMedia] = {
-    require(targetW > 0 && targetH > 0, "target dims must be positive")
-    implicit val enc = Encoders.product[ResizedMedia]
-    media
-      .select(col("media_id").cast("long"), col("payload").cast("binary"),
-        col("media_type").cast("string"))
-      .as(Encoders.product[MediaRow])
-      .mapPartitions { it: Iterator[MediaRow] =>
-        it.map { r =>
-          val bytes = if (r.payload == null) Array.emptyByteArray else r.payload
-          val meta = DecodeStub.decode(r)
-          val areaRatio = (targetW.toLong * targetH).toDouble /
-            (meta.width.toLong * meta.height)
-          val outLen = math.max(1, math.min(bytes.length,
-            math.round(bytes.length * areaRatio).toInt))
-          val out = new Array[Byte](if (bytes.isEmpty) 0 else outLen)
-          var i = 0
-          while (i < out.length) {
-            out(i) = bytes((i.toLong * bytes.length / out.length).toInt)
-            i += 1
-          }
-          ResizedMedia(r.media_id, out, targetW, targetH)
-        }
+  private def decodeRows[T <: Product : TypeTag](media: DataFrame,
+      failed: Long => Iterator[T])(
+      decoder: () => (Long, Array[Byte]) => Iterator[T]): Dataset[T] =
+    payloads(media).mapPartitions { it: Iterator[MediaRow] =>
+      val decode = decoder()
+      it.flatMap { r =>
+        if (r.payload == null || r.payload.isEmpty) failed(r.media_id)
+        else
+          try decode(r.media_id, r.payload)
+          catch { case NonFatal(_) => failed(r.media_id) }
       }
+    }(Encoders.product[T])
+
+  /** [[decodeRows]] for the one-row-per-payload decoders: `failed` is the
+    * decoder's `decoded = false` row with zeroed stats.
+    */
+  private def decode[T <: Product : TypeTag](media: DataFrame, failed: Long => T)(
+      decoder: () => (Long, Array[Byte]) => T): Dataset[T] =
+    decodeRows(media, id => Iterator.single(failed(id))) { () =>
+      val d = decoder()
+      (id, bytes) => Iterator.single(d(id, bytes))
+    }
+
+  /** The image opener: `javax.imageio` parses whatever the JDK's readers
+    * handle (PNG/JPEG/GIF/BMP); a payload no reader accepts throws.
+    */
+  private def readImage(bytes: Array[Byte]): BufferedImage = {
+    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+    if (img == null) throw new IllegalArgumentException("no image reader accepts the payload")
+    img
   }
+
+  /** One PNG writer: `img` encoded losslessly. */
+  private def png(img: BufferedImage): Array[Byte] = {
+    val baos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", baos)
+    baos.toByteArray
+  }
+
+  /** A `w × h` gray PNG whose pixel `(x, y)` is `px(x, y)` in every channel. */
+  private def grayPng(w: Int, h: Int)(px: (Int, Int) => Int): Array[Byte] = {
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val p = px(x, y)
+        img.setRGB(x, y, (p << 16) | (p << 8) | p)
+        x += 1
+      }
+      y += 1
+    }
+    png(img)
+  }
+
+  /** `img` bilinearly scaled to `w × h` (TYPE_INT_RGB). */
+  private def scaled(img: BufferedImage, w: Int, h: Int): BufferedImage = {
+    val out = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    val g = out.createGraphics()
+    try {
+      g.setRenderingHint(
+        java.awt.RenderingHints.KEY_INTERPOLATION,
+        java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+      g.drawImage(img, 0, 0, w, h, null)
+    } finally g.dispose()
+    out
+  }
+
+  /** Red-channel pixel sum of `img`, row-major. */
+  private def redSum(img: BufferedImage): Long = {
+    var sum = 0L
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) {
+        sum += (img.getRGB(x, y) >> 16) & 0xff
+        x += 1
+      }
+      y += 1
+    }
+    sum
+  }
+
+  /** Half-up rounding to 4 dp, the precision the SQL oracles replay
+    * float stats at.
+    */
+  private def round4(d: Double): Double =
+    BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Decoded IMAGE metadata — real dimensions and a replayable pixel sum
     * (red channel, row-major). `decoded=false` rows carry zeroed stats: a
@@ -140,117 +192,38 @@ object Multimodal {
     * `(id·31 + x·7 + y·13) mod 256` in every channel — dimensions and
     * pixel sums are pure arithmetic in id, so a DuckDB oracle can replay
     * what [[decodeImageMeta]] recovers from the actual encoded bytes.
-    * mapPartitions: the encoder's buffers are reused across a batch.
     */
-  def synthesizeImages(ids: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    implicit val enc = Encoders.product[MediaRow]
-    ids.select(col(idCol).cast("long").as("media_id"))
-      .as(Encoders.scalaLong)
-      .mapPartitions { it: Iterator[Long] =>
-        it.map { id =>
-          val w = 4 + (id % 13).toInt
-          val h = 3 + (id % 7).toInt
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val p = ((id * 31 + x * 7 + y * 13) % 256).toInt
-              img.setRGB(x, y, (p << 16) | (p << 8) | p)
-              x += 1
-            }
-            y += 1
-          }
-          val baos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", baos)
-          MediaRow(id, baos.toByteArray, "image/png")
-        }
-      }
-      .toDF()
-  }
+  def synthesizeImages(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
+    synthesize(ids, idCol, "image/png") { () => id =>
+      grayPng(4 + (id % 13).toInt, 3 + (id % 7).toInt)((x, y) =>
+        ((id * 31 + x * 7 + y * 13) % 256).toInt)
+    }
 
-  /** REAL image decode: `javax.imageio` parses the payload (PNG/JPEG/GIF/
-    * BMP — whatever the JDK's readers handle), yielding actual dimensions
-    * and the red-channel pixel sum. Unparseable or null payloads decode to
-    * `decoded=false` with zeroed stats — the poison-file posture of a
-    * 100 TB media scan: one corrupt object must not kill the stage, and
-    * must not masquerade as data either. mapPartitions so reader state is
-    * per-batch, exactly the Pandas-UDF batch shape the brief asks for.
+  /** REAL image decode: `javax.imageio` parses the payload, yielding
+    * actual dimensions and the red-channel pixel sum. Unparseable or null
+    * payloads decode to `decoded=false` with zeroed stats.
     */
-  def decodeImageMeta(media: DataFrame): Dataset[ImageMeta] = {
-    implicit val enc = Encoders.product[ImageMeta]
-    media
-      .select(col("media_id").cast("long"), col("payload").cast("binary"),
-        col("media_type").cast("string"))
-      .as(Encoders.product[MediaRow])
-      .mapPartitions { it: Iterator[MediaRow] =>
-        it.map { r =>
-          // NonFatal, not just IOException: the JDK's format readers throw
-          // unchecked exceptions on malformed headers too, and one corrupt
-          // object must not kill a 100 TB scan
-          val img =
-            if (r.payload == null || r.payload.isEmpty) null
-            else
-              try javax.imageio.ImageIO.read(
-                new java.io.ByteArrayInputStream(r.payload))
-              catch { case scala.util.control.NonFatal(_) => null }
-          if (img == null) ImageMeta(r.media_id, 0, 0, 0L, decoded = false)
-          else {
-            var sum = 0L
-            var y = 0
-            while (y < img.getHeight) {
-              var x = 0
-              while (x < img.getWidth) {
-                sum += (img.getRGB(x, y) >> 16) & 0xff
-                x += 1
-              }
-              y += 1
-            }
-            ImageMeta(r.media_id, img.getWidth, img.getHeight, sum,
-              decoded = true)
-          }
-        }
-      }
-  }
+  def decodeImageMeta(media: DataFrame): Dataset[ImageMeta] =
+    decode(media, ImageMeta(_, 0, 0, 0L, decoded = false)) { () => (id, bytes) =>
+      val img = readImage(bytes)
+      ImageMeta(id, img.getWidth, img.getHeight, redSum(img), decoded = true)
+    }
+
+  /** A resized media row: id + transformed payload + the target dims. */
+  case class ResizedMedia(media_id: Long, payload: Array[Byte],
+                          width: Int, height: Int)
 
   /** REAL image resize: decode → `Graphics2D` bilinear scale to the target
-    * dims → PNG re-encode. Non-decodable payloads pass through the
-    * deterministic [[resizeStub]] path semantics (reported via width=0 —
-    * callers filter); binary in, binary out, per-partition batches.
+    * dims → PNG re-encode; binary in, binary out, per-partition batches.
+    * Non-decodable payloads come back with an empty payload and width=0
+    * (callers filter).
     */
   def resizeImage(media: DataFrame, targetW: Int, targetH: Int): Dataset[ResizedMedia] = {
     require(targetW > 0 && targetH > 0, "target dims must be positive")
-    implicit val enc = Encoders.product[ResizedMedia]
-    media
-      .select(col("media_id").cast("long"), col("payload").cast("binary"),
-        col("media_type").cast("string"))
-      .as(Encoders.product[MediaRow])
-      .mapPartitions { it: Iterator[MediaRow] =>
-        it.map { r =>
-          val img =
-            if (r.payload == null || r.payload.isEmpty) null
-            else
-              try javax.imageio.ImageIO.read(
-                new java.io.ByteArrayInputStream(r.payload))
-              catch { case scala.util.control.NonFatal(_) => null }
-          if (img == null) ResizedMedia(r.media_id, Array.emptyByteArray, 0, 0)
-          else {
-            val out = new java.awt.image.BufferedImage(
-              targetW, targetH, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val g = out.createGraphics()
-            try {
-              g.setRenderingHint(
-                java.awt.RenderingHints.KEY_INTERPOLATION,
-                java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-              g.drawImage(img, 0, 0, targetW, targetH, null)
-            } finally g.dispose()
-            val baos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(out, "png", baos)
-            ResizedMedia(r.media_id, baos.toByteArray, targetW, targetH)
-          }
-        }
-      }
+    decode(media, ResizedMedia(_, Array.emptyByteArray, 0, 0)) { () => (id, bytes) =>
+      ResizedMedia(id, png(scaled(readImage(bytes), targetW, targetH)),
+        targetW, targetH)
+    }
   }
 
   /** Decoded AUDIO metadata — real sample rate, frame count, integer
@@ -260,11 +233,7 @@ object Multimodal {
   case class AudioMeta(media_id: Long, sample_rate: Int, n_samples: Int,
                        duration_us: Long, sample_sum: Long, decoded: Boolean)
 
-  /** Deterministic REAL-WAV synthesis: id → 16-bit signed mono PCM WAV at
-    * `8000 + (id % 3)·4000` Hz with `40 + id % 101` samples of value
-    * `(id·31 + i·17) mod 2048 − 1024` — rate, length and sample sum are
-    * pure arithmetic in id, so a DuckDB oracle can replay what
-    * [[decodeAudioMeta]] recovers from the actual RIFF container bytes.
+  /** One 16-bit mono PCM WAV at `rate` Hz of `n` samples `sample(i)`.
     *
     * The container is byte-assembled against the RIFF/WAVE spec here
     * (44-byte header + little-endian PCM), NOT via `AudioSystem.write`:
@@ -273,36 +242,52 @@ object Multimodal {
     * sidesteps `AudioSystem.write`'s per-call provider lookup, which
     * measurably convoyed under 32-way partition parallelism.
     */
-  def synthesizeWavs(ids: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    implicit val enc = Encoders.product[MediaRow]
-    ids.select(col(idCol).cast("long").as("media_id"))
-      .as(Encoders.scalaLong)
-      .mapPartitions { it: Iterator[Long] =>
-        it.map { id =>
-          val rate = 8000 + (id % 3).toInt * 4000
-          val n = 40 + (id % 101).toInt
-          val dataLen = n * 2
-          val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-            .put("WAVE".getBytes("US-ASCII"))
-            .put("fmt ".getBytes("US-ASCII")).putInt(16)
-            .putShort(1)                 // PCM
-            .putShort(1)                 // mono
-            .putInt(rate)
-            .putInt(rate * 2)            // byte rate
-            .putShort(2)                 // block align
-            .putShort(16)                // bits per sample
-            .put("data".getBytes("US-ASCII")).putInt(dataLen)
-          var i = 0
-          while (i < n) {
-            bb.putShort((((id * 31 + i * 17) % 2048) - 1024).toShort)
-            i += 1
-          }
-          MediaRow(id, bb.array(), "audio/wav")
-        }
-      }
-      .toDF()
+  private def wav(rate: Int, n: Int)(sample: Int => Int): Array[Byte] = {
+    val dataLen = n * 2
+    val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
+      .put("WAVE".getBytes("US-ASCII"))
+      .put("fmt ".getBytes("US-ASCII")).putInt(16)
+      .putShort(1)                 // PCM
+      .putShort(1)                 // mono
+      .putInt(rate)
+      .putInt(rate * 2)            // byte rate
+      .putShort(2)                 // block align
+      .putShort(16)                // bits per sample
+      .put("data".getBytes("US-ASCII")).putInt(dataLen)
+    var i = 0
+    while (i < n) {
+      bb.putShort(sample(i).toShort)
+      i += 1
+    }
+    bb.array()
+  }
+
+  /** Deterministic REAL-WAV synthesis: id → 16-bit signed mono PCM WAV at
+    * `8000 + (id % 3)·4000` Hz with `40 + id % 101` samples of value
+    * `(id·31 + i·17) mod 2048 − 1024` — rate, length and sample sum are
+    * pure arithmetic in id, so a DuckDB oracle can replay what
+    * [[decodeAudioMeta]] recovers from the actual RIFF container bytes.
+    */
+  def synthesizeWavs(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
+    synthesize(ids, idCol, "audio/wav") { () => id =>
+      wav(8000 + (id % 3).toInt * 4000, 40 + (id % 101).toInt)(i =>
+        (((id * 31 + i * 17) % 2048) - 1024).toInt)
+    }
+
+  /** A container's decoded PCM: its format fields and raw sample bytes. */
+  private final class Pcm(val rate: Int, val channels: Int, bits: Int,
+      bigEndian: Boolean, val bytes: Array[Byte]) {
+    val is16 = bits == 16
+    /** Frames (one sample per channel) the bytes hold. */
+    val frames: Int = if (bits >= 8 && channels > 0) bytes.length / (bits / 8 * channels) else 0
+    /** Signed 16-bit sample `i` of the channel-interleaved stream: the
+      * high byte sign-extends through Int.
+      */
+    def sample16(i: Int): Int =
+      if (bigEndian) (bytes(2 * i) << 8) | (bytes(2 * i + 1) & 0xff)
+      else (bytes(2 * i + 1) << 8) | (bytes(2 * i) & 0xff)
   }
 
   /** One stateful audio opener per PARTITION: the JDK's registered
@@ -314,9 +299,9 @@ object Multimodal {
     * change measurably dominated the decode stage (~0.7 s of the 2 s
     * audio queries at sf0.1; a media partition is format-homogeneous in
     * practice, so after the first row the preferred reader hits first
-    * try). Returns null when no reader accepts the payload.
+    * try). Throws when no reader accepts the payload.
     */
-  private def audioOpener(): Array[Byte] => javax.sound.sampled.AudioInputStream = {
+  private def audioOpener(): Array[Byte] => Pcm = {
     val readers = {
       val sl = java.util.ServiceLoader.load(
         classOf[javax.sound.sampled.spi.AudioFileReader])
@@ -325,25 +310,25 @@ object Multimodal {
       b.result()
     }
     var preferred = -1
+    def tryRead(i: Int, bytes: Array[Byte]) =
+      try readers(i).getAudioInputStream(new java.io.ByteArrayInputStream(bytes))
+      catch { case NonFatal(_) => null }
     bytes => {
-      var out: javax.sound.sampled.AudioInputStream = null
-      if (preferred >= 0)
-        out =
-          try readers(preferred).getAudioInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          catch { case scala.util.control.NonFatal(_) => null }
+      var ais = if (preferred >= 0) tryRead(preferred, bytes) else null
       var i = 0
-      while (out == null && i < readers.length) {
+      while (ais == null && i < readers.length) {
         if (i != preferred) {
-          out =
-            try readers(i).getAudioInputStream(
-              new java.io.ByteArrayInputStream(bytes))
-            catch { case scala.util.control.NonFatal(_) => null }
-          if (out != null) preferred = i
+          ais = tryRead(i, bytes)
+          if (ais != null) preferred = i
         }
         i += 1
       }
-      out
+      if (ais == null) throw new IllegalArgumentException("no audio reader accepts the payload")
+      try {
+        val fmt = ais.getFormat
+        new Pcm(fmt.getSampleRate.toInt, fmt.getChannels, fmt.getSampleSizeInBits,
+          fmt.isBigEndian, ais.readAllBytes())
+      } finally ais.close()
     }
   }
 
@@ -362,65 +347,33 @@ object Multimodal {
     * `decoded=false`, zeroed stats, gate false.
     */
   def audioQuality(media: DataFrame, clipThreshold: Int = 32000,
-      minRms: Double = 10.0, maxClipRatio: Double = 0.1): Dataset[AudioQualityRow] = {
-    implicit val enc = Encoders.product[AudioQualityRow]
-    media
-      .select(col("media_id").cast("long"), col("payload").cast("binary"),
-        col("media_type").cast("string"))
-      .as(Encoders.product[MediaRow])
-      .mapPartitions { it: Iterator[MediaRow] =>
-        val open = audioOpener()
-        it.map { r =>
-          val ais =
-            if (r.payload == null || r.payload.isEmpty) null
-            else open(r.payload)
-          if (ais == null)
-            AudioQualityRow(r.media_id, decoded = false, 0L, 0L, 0.0, 0.0,
-              quality_ok = false)
-          else
-            try {
-              val fmt = ais.getFormat
-              val bytes = ais.readAllBytes()
-              val bytesPer = fmt.getSampleSizeInBits / 8
-              val ch = fmt.getChannels
-              val n =
-                if (bytesPer > 0 && ch > 0) bytes.length / (bytesPer * ch)
-                else 0
-              var peak = 0L
-              var s2 = 0L
-              var clipped = 0L
-              val total = n.toLong * ch
-              if (fmt.getSampleSizeInBits == 16) {
-                var i = 0
-                while (i < total) {
-                  val v =
-                    if (fmt.isBigEndian)
-                      (bytes(2 * i) << 8) | (bytes(2 * i + 1) & 0xff)
-                    else
-                      (bytes(2 * i + 1) << 8) | (bytes(2 * i) & 0xff)
-                  val a = math.abs(v.toLong)
-                  if (a > peak) peak = a
-                  s2 += v.toLong * v
-                  if (a >= clipThreshold) clipped += 1L
-                  i += 1
-                }
-              }
-              def r4(d: Double) = BigDecimal(d)
-                .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-              val rms =
-                if (total > 0) r4(math.sqrt(s2.toDouble / total)) else 0.0
-              val ratio =
-                if (total > 0) r4(clipped.toDouble / total) else 0.0
-              AudioQualityRow(r.media_id, decoded = true, total, peak, rms,
-                ratio, quality_ok = rms >= minRms && ratio <= maxClipRatio)
-            } catch {
-              case scala.util.control.NonFatal(_) =>
-                AudioQualityRow(r.media_id, decoded = false, 0L, 0L, 0.0, 0.0,
-                  quality_ok = false)
-            } finally ais.close()
+      minRms: Double = 10.0, maxClipRatio: Double = 0.1): Dataset[AudioQualityRow] =
+    decode(media, AudioQualityRow(_, decoded = false, 0L, 0L, 0.0, 0.0,
+        quality_ok = false)) { () =>
+      val open = audioOpener()
+      (id, bytes) => {
+        val pcm = open(bytes)
+        var peak = 0L
+        var s2 = 0L
+        var clipped = 0L
+        val total = pcm.frames.toLong * pcm.channels
+        if (pcm.is16) {
+          var i = 0
+          while (i < total) {
+            val v = pcm.sample16(i)
+            val a = math.abs(v.toLong)
+            if (a > peak) peak = a
+            s2 += v.toLong * v
+            if (a >= clipThreshold) clipped += 1L
+            i += 1
+          }
         }
+        val rms = if (total > 0) round4(math.sqrt(s2.toDouble / total)) else 0.0
+        val ratio = if (total > 0) round4(clipped.toDouble / total) else 0.0
+        AudioQualityRow(id, decoded = true, total, peak, rms, ratio,
+          quality_ok = rms >= minRms && ratio <= maxClipRatio)
       }
-  }
+    }
 
   /** Deterministic mixed-class WAV synthesis for [[audioQuality]]'s gate:
     * `id % 5 = 0` → silence (all-zero samples — dead air, fails the RMS
@@ -431,98 +384,40 @@ object Multimodal {
     * `n = 40 + id % 101` length everywhere, so one SQL CASE replays every
     * class.
     */
-  def synthesizeQualityWavs(ids: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    implicit val enc = Encoders.product[MediaRow]
-    ids.select(col(idCol).cast("long").as("media_id"))
-      .as(Encoders.scalaLong)
-      .mapPartitions { it: Iterator[Long] =>
-        it.map { id =>
-          val n = 40 + (id % 101).toInt
-          val dataLen = n * 2
-          val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-            .put("WAVE".getBytes("US-ASCII"))
-            .put("fmt ".getBytes("US-ASCII")).putInt(16)
-            .putShort(1)                 // PCM
-            .putShort(1)                 // mono
-            .putInt(8000)
-            .putInt(16000)               // byte rate
-            .putShort(2)                 // block align
-            .putShort(16)                // bits per sample
-            .put("data".getBytes("US-ASCII")).putInt(dataLen)
-          var i = 0
-          while (i < n) {
-            val v: Long = (id % 5).toInt match {
-              case 0 => 0L
-              case 1 => if (i % 2 == 0) 32767L else -32768L
-              case _ => ((id * 31 + i * 17) % 2048) - 1024
-            }
-            bb.putShort(v.toShort)
-            i += 1
-          }
-          MediaRow(id, bb.array(), "audio/wav")
-        }
-      }
-      .toDF()
-  }
+  def synthesizeQualityWavs(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
+    synthesize(ids, idCol, "audio/wav") { () => id =>
+      wav(8000, 40 + (id % 101).toInt)(i => (id % 5).toInt match {
+        case 0 => 0
+        case 1 => if (i % 2 == 0) 32767 else -32768
+        case _ => (((id * 31 + i * 17) % 2048) - 1024).toInt
+      })
+    }
 
   /** REAL audio decode: `javax.sound.sampled` parses the container
     * (WAV/AIFF/AU — the JDK's readers), yielding the actual sample rate,
     * frame count, integer-microsecond duration and the signed 16-bit
     * sample sum across all channels. Unparseable or null payloads decode
-    * to `decoded=false` with zeroed stats — same poison-file posture as
-    * [[decodeImageMeta]]: one corrupt object must not kill a 100 TB scan,
-    * and must not masquerade as data. mapPartitions so reader state is
-    * per-batch.
+    * to `decoded=false` with zeroed stats.
     */
-  def decodeAudioMeta(media: DataFrame): Dataset[AudioMeta] = {
-    implicit val enc = Encoders.product[AudioMeta]
-    media
-      .select(col("media_id").cast("long"), col("payload").cast("binary"),
-        col("media_type").cast("string"))
-      .as(Encoders.product[MediaRow])
-      .mapPartitions { it: Iterator[MediaRow] =>
-        val open = audioOpener()
-        it.map { r =>
-          val ais =
-            if (r.payload == null || r.payload.isEmpty) null
-            else open(r.payload)
-          if (ais == null) AudioMeta(r.media_id, 0, 0, 0L, 0L, decoded = false)
-          else
-            try {
-              val fmt = ais.getFormat
-              val bytes = ais.readAllBytes()
-              val bytesPer = fmt.getSampleSizeInBits / 8
-              val ch = fmt.getChannels
-              val n =
-                if (bytesPer > 0 && ch > 0) bytes.length / (bytesPer * ch)
-                else 0
-              var sum = 0L
-              if (fmt.getSampleSizeInBits == 16) {
-                var i = 0
-                while (i < n * ch) {
-                  // signed 16-bit: the high byte sign-extends through Int
-                  val v =
-                    if (fmt.isBigEndian)
-                      (bytes(2 * i) << 8) | (bytes(2 * i + 1) & 0xff)
-                    else
-                      (bytes(2 * i + 1) << 8) | (bytes(2 * i) & 0xff)
-                  sum += v
-                  i += 1
-                }
-              }
-              val rate = fmt.getSampleRate.toInt
-              AudioMeta(r.media_id, rate, n,
-                if (rate > 0) n.toLong * 1000000L / rate else 0L,
-                sum, decoded = true)
-            } catch {
-              case scala.util.control.NonFatal(_) =>
-                AudioMeta(r.media_id, 0, 0, 0L, 0L, decoded = false)
-            } finally ais.close()
+  def decodeAudioMeta(media: DataFrame): Dataset[AudioMeta] =
+    decode(media, AudioMeta(_, 0, 0, 0L, 0L, decoded = false)) { () =>
+      val open = audioOpener()
+      (id, bytes) => {
+        val pcm = open(bytes)
+        val n = pcm.frames
+        var sum = 0L
+        if (pcm.is16) {
+          var i = 0
+          while (i < n * pcm.channels) {
+            sum += pcm.sample16(i)
+            i += 1
+          }
         }
+        AudioMeta(id, pcm.rate, n,
+          if (pcm.rate > 0) n.toLong * 1000000L / pcm.rate else 0L,
+          sum, decoded = true)
       }
-  }
+    }
 
   /** Spectral analysis of one decoded audio payload: the dominant
     * frequency among a candidate set (real DFT energies via the Goertzel
@@ -543,46 +438,18 @@ object Multimodal {
   /** Deterministic REAL-WAV tone synthesis: id → 16-bit mono PCM at 8 kHz,
     * 400 samples of a pure sine at `toneCandidatesHz(id % 4)` with
     * amplitude `5000 + (id % 7)·1000`. The byte-assembled RIFF container
-    * (same no-shared-code posture as [[synthesizeWavs]]) carries a signal
-    * whose DOMINANT FREQUENCY is pure arithmetic in id — the oracle
-    * states it, and [[audioSpectrum]] must recover it from the encoded
-    * bytes by actually measuring the spectrum.
+    * carries a signal whose DOMINANT FREQUENCY is pure arithmetic in id —
+    * the oracle states it, and [[audioSpectrum]] must recover it from the
+    * encoded bytes by actually measuring the spectrum.
     */
-  def synthesizeToneWavs(ids: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    implicit val enc = Encoders.product[MediaRow]
-    ids.select(col(idCol).cast("long").as("media_id"))
-      .as(Encoders.scalaLong)
-      .mapPartitions { it: Iterator[Long] =>
-        val rate = 8000
-        val n = 400
-        it.map { id =>
-          val freq = toneCandidatesHz((id % 4).toInt)
-          val amp = 5000 + (id % 7).toInt * 1000
-          val dataLen = n * 2
-          val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-            .put("WAVE".getBytes("US-ASCII"))
-            .put("fmt ".getBytes("US-ASCII")).putInt(16)
-            .putShort(1)                 // PCM
-            .putShort(1)                 // mono
-            .putInt(rate)
-            .putInt(rate * 2)            // byte rate
-            .putShort(2)                 // block align
-            .putShort(16)                // bits per sample
-            .put("data".getBytes("US-ASCII")).putInt(dataLen)
-          var i = 0
-          while (i < n) {
-            val s = math.round(
-              amp * math.sin(2.0 * math.Pi * freq * i / rate)).toInt
-            bb.putShort(s.toShort)
-            i += 1
-          }
-          MediaRow(id, bb.array(), "audio/wav")
-        }
-      }
-      .toDF()
-  }
+  def synthesizeToneWavs(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
+    synthesize(ids, idCol, "audio/wav") { () => id =>
+      val rate = 8000
+      val freq = toneCandidatesHz((id % 4).toInt)
+      val amp = 5000 + (id % 7).toInt * 1000
+      wav(rate, 400)(i =>
+        math.round(amp * math.sin(2.0 * math.Pi * freq * i / rate)).toInt)
+    }
 
   /** REAL spectral measurement from encoded bytes: container parse via
     * the JDK readers ([[decodeAudioMeta]]'s provider path), channel-mixed
@@ -590,90 +457,62 @@ object Multimodal {
     * — an O(candidates × samples) exact DFT-bin energy, the standard
     * tone-detection kernel (cheaper than a full FFT when only a known
     * candidate set matters, and branch-free inside the sample loop).
-    * Corrupt/null payloads → `decoded=false`, zeroed stats.
+    * Corrupt/null payloads and non-16-bit PCM → `decoded=false`, zeroed
+    * stats.
     */
   def audioSpectrum(media: DataFrame,
       candidates: Array[Int] = toneCandidatesHz): Dataset[AudioSpectrum] = {
     require(candidates.nonEmpty, "candidate set must be non-empty")
-    implicit val enc = Encoders.product[AudioSpectrum]
-    media
-      .select(col("media_id").cast("long"), col("payload").cast("binary"),
-        col("media_type").cast("string"))
-      .as(Encoders.product[MediaRow])
-      .mapPartitions { it: Iterator[MediaRow] =>
-        val open = audioOpener()
-        it.map { r =>
-          val ais =
-            if (r.payload == null || r.payload.isEmpty) null
-            else open(r.payload)
-          if (ais == null)
-            AudioSpectrum(r.media_id, 0L, 0L, 0L, peak_ok = false,
-              decoded = false)
-          else
-            try {
-              val fmt = ais.getFormat
-              val bytes = ais.readAllBytes()
-              val ch = fmt.getChannels
-              val rate = fmt.getSampleRate.toInt
-              if (fmt.getSampleSizeInBits != 16 || ch <= 0 || rate <= 0)
-                AudioSpectrum(r.media_id, 0L, 0L, 0L, peak_ok = false,
-                  decoded = false)
-              else {
-                val n = bytes.length / (2 * ch)
-                // channel-mix to one mono series (sum across channels —
-                // identity for mono, preserves each tone's energy)
-                val x = new Array[Double](n)
-                var i = 0
-                while (i < n) {
-                  var c = 0
-                  var acc = 0.0
-                  while (c < ch) {
-                    val j = 2 * (i * ch + c)
-                    val v =
-                      if (fmt.isBigEndian)
-                        (bytes(j) << 8) | (bytes(j + 1) & 0xff)
-                      else
-                        (bytes(j + 1) << 8) | (bytes(j) & 0xff)
-                    acc += v
-                    c += 1
-                  }
-                  x(i) = acc
-                  i += 1
-                }
-                // Goertzel per candidate: energy of the DFT bin nearest f
-                var best = 0
-                var bestP = -1.0
-                var total = 0.0
-                var k = 0
-                while (k < candidates.length) {
-                  val w = 2.0 * math.Pi * candidates(k) / rate
-                  val coeff = 2.0 * math.cos(w)
-                  var s1 = 0.0
-                  var s2 = 0.0
-                  var j = 0
-                  while (j < n) {
-                    val s = x(j) + coeff * s1 - s2
-                    s2 = s1
-                    s1 = s
-                    j += 1
-                  }
-                  val p = s1 * s1 + s2 * s2 - coeff * s1 * s2
-                  total += p
-                  if (p > bestP) { bestP = p; best = k }
-                  k += 1
-                }
-                AudioSpectrum(r.media_id, rate.toLong, n.toLong,
-                  candidates(best).toLong,
-                  peak_ok = total > 0.0 && bestP >= 0.5 * total,
-                  decoded = true)
-              }
-            } catch {
-              case scala.util.control.NonFatal(_) =>
-                AudioSpectrum(r.media_id, 0L, 0L, 0L, peak_ok = false,
-                  decoded = false)
-            } finally ais.close()
+    decode(media, AudioSpectrum(_, 0L, 0L, 0L, peak_ok = false,
+        decoded = false)) { () =>
+      val open = audioOpener()
+      (id, bytes) => {
+        val pcm = open(bytes)
+        val ch = pcm.channels
+        val rate = pcm.rate
+        if (!pcm.is16 || ch <= 0 || rate <= 0)
+          throw new IllegalArgumentException("not 16-bit PCM")
+        val n = pcm.frames
+        // channel-mix to one mono series (sum across channels —
+        // identity for mono, preserves each tone's energy)
+        val x = new Array[Double](n)
+        var i = 0
+        while (i < n) {
+          var c = 0
+          var acc = 0.0
+          while (c < ch) {
+            acc += pcm.sample16(i * ch + c)
+            c += 1
+          }
+          x(i) = acc
+          i += 1
         }
+        // Goertzel per candidate: energy of the DFT bin nearest f
+        var best = 0
+        var bestP = -1.0
+        var total = 0.0
+        var k = 0
+        while (k < candidates.length) {
+          val w = 2.0 * math.Pi * candidates(k) / rate
+          val coeff = 2.0 * math.cos(w)
+          var s1 = 0.0
+          var s2 = 0.0
+          var j = 0
+          while (j < n) {
+            val s = x(j) + coeff * s1 - s2
+            s2 = s1
+            s1 = s
+            j += 1
+          }
+          val p = s1 * s1 + s2 * s2 - coeff * s1 * s2
+          total += p
+          if (p > bestP) { bestP = p; best = k }
+          k += 1
+        }
+        AudioSpectrum(id, rate.toLong, n.toLong, candidates(best).toLong,
+          peak_ok = total > 0.0 && bestP >= 0.5 * total, decoded = true)
       }
+    }
   }
 
   /** Decoded VIDEO (multi-frame container) metadata. */
@@ -687,6 +526,20 @@ object Multimodal {
   private def grayPalette: java.awt.image.IndexColorModel = {
     val g = Array.tabulate(256)(_.toByte)
     new java.awt.image.IndexColorModel(8, 256, g, g, g)
+  }
+
+  /** The GIF opener: one JDK GIF reader per PARTITION, pointed at each
+    * payload in turn (so a caller must read what it needs before the next
+    * payload). MemoryCache, never ImageIO.createImageInputStream: the
+    * factory wraps streams in a FileCache stream — a temp FILE per row.
+    */
+  private def gifOpener(): Array[Byte] => javax.imageio.ImageReader = {
+    val reader = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
+    bytes => {
+      reader.setInput(new javax.imageio.stream.MemoryCacheImageInputStream(
+        new java.io.ByteArrayInputStream(bytes)))
+      reader
+    }
   }
 
   /** Deterministic REAL-ANIMATION synthesis: id → animated GIF of
@@ -703,97 +556,84 @@ object Multimodal {
     * into.
     */
   def synthesizeGifs(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
-    synthesizeGifsWith(ids, idCol,
+    gifs(ids, idCol, gifDims,
       (id, x, y, f) => ((id * 31 + x * 7 + y * 13 + f * 101) % 256).toInt)
 
-  /** [[synthesizeGifs]] with a caller-chosen per-(id,x,y,f) gray formula —
-    * the shared writer core; the quality fixture switches the formula per
-    * id class to plant static clips.
-    */
-  private def synthesizeGifsWith(ids: DataFrame, idCol: String,
-      px: (Long, Int, Int, Int) => Int): DataFrame =
-    synthesizeGifsWithDims(ids, idCol,
-      dims = id => (4 + (id % 9).toInt, 3 + (id % 5).toInt, 2 + (id % 5).toInt),
-      px = px)
+  /** [[synthesizeGifs]]' per-id (w, h, nFrames). */
+  private val gifDims: Long => (Int, Int, Int) =
+    id => (4 + (id % 9).toInt, 3 + (id % 5).toInt, 2 + (id % 5).toInt)
 
-  /** The writer core with caller-chosen per-id (w, h, nFrames) too — the
-    * video-dedup fixture needs dHash-grid frames and family-determined
-    * frame counts.
+  /** The GIF writer behind every GIF fixture: per id, `nFrames` frames of
+    * `w × h` from `dims(id)`, frame `f`'s pixel `(x, y)` the gray value
+    * `px(id, x, y, f)`.
     */
-  private def synthesizeGifsWithDims(ids: DataFrame, idCol: String,
+  private def gifs(ids: DataFrame, idCol: String,
       dims: Long => (Int, Int, Int),
-      px: (Long, Int, Int, Int) => Int): DataFrame = {
-    implicit val enc = Encoders.product[MediaRow]
-    ids.select(col(idCol).cast("long").as("media_id"))
-      .as(Encoders.scalaLong)
-      .mapPartitions { it: Iterator[Long] =>
-        val cm = grayPalette // palette + writer reused across the batch
-        val writer =
-          javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-        val param = writer.getDefaultWriteParam
-        // interlaceFlag MUST be forced FALSE: the JDK GIF writer defaults
-        // to interlaced output and mis-lays rows for images shorter than
-        // the 8-row interlace pass stride (verified: a 4×3 gradient
-        // round-trips wrong interlaced, exact non-interlaced). The
-        // metadata tree build (getAsTree → edit → setFromTree) costs more
-        // than the pixel work at these frame sizes, so it is cached per
-        // dimension across the batch — the object is reusable: the writer
-        // only READS it per writeToSequence call
-        val metaCache =
-          scala.collection.mutable.HashMap.empty[(Int, Int), javax.imageio.metadata.IIOMetadata]
-        def nonInterlacedMeta(img: java.awt.image.BufferedImage) =
-          metaCache.getOrElseUpdate((img.getWidth, img.getHeight), {
-            val md = writer.getDefaultImageMetadata(
-              new javax.imageio.ImageTypeSpecifier(img), param)
-            val fmt = md.getNativeMetadataFormatName
-            val root = md.getAsTree(fmt)
-              .asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
-            val desc = root.getElementsByTagName("ImageDescriptor").item(0)
-              .asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
-            desc.setAttribute("interlaceFlag", "FALSE")
-            md.setFromTree(fmt, root)
-            md
-          })
-        val out = it.map { id =>
-          val (w, h, nf) = dims(id)
-          val baos = new java.io.ByteArrayOutputStream()
-          // MemoryCache, never ImageIO.createImageOutputStream: the
-          // factory wraps OutputStreams in a FileCache stream — a temp
-          // FILE per row, which dominated the whole query (~6 ms/frame
-          // of disk churn for kilobyte payloads)
-          val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(baos)
-          writer.setOutput(ios)
-          writer.prepareWriteSequence(null)
-          var f = 0
-          while (f < nf) {
-            val img = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, cm)
-            val raster = img.getRaster
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                raster.setSample(x, y, 0, px(id, x, y, f))
-                x += 1
-              }
-              y += 1
+      px: (Long, Int, Int, Int) => Int): DataFrame =
+    synthesize(ids, idCol, "video/gif") { () =>
+      val cm = grayPalette // palette + writer reused across the batch
+      val writer =
+        javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
+      val param = writer.getDefaultWriteParam
+      // interlaceFlag MUST be forced FALSE: the JDK GIF writer defaults
+      // to interlaced output and mis-lays rows for images shorter than
+      // the 8-row interlace pass stride (verified: a 4×3 gradient
+      // round-trips wrong interlaced, exact non-interlaced). The
+      // metadata tree build (getAsTree → edit → setFromTree) costs more
+      // than the pixel work at these frame sizes, so it is cached per
+      // dimension across the batch — the object is reusable: the writer
+      // only READS it per writeToSequence call
+      val metaCache =
+        scala.collection.mutable.HashMap.empty[(Int, Int), javax.imageio.metadata.IIOMetadata]
+      def nonInterlacedMeta(img: BufferedImage) =
+        metaCache.getOrElseUpdate((img.getWidth, img.getHeight), {
+          val md = writer.getDefaultImageMetadata(
+            new javax.imageio.ImageTypeSpecifier(img), param)
+          val fmt = md.getNativeMetadataFormatName
+          val root = md.getAsTree(fmt)
+            .asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
+          val desc = root.getElementsByTagName("ImageDescriptor").item(0)
+            .asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
+          desc.setAttribute("interlaceFlag", "FALSE")
+          md.setFromTree(fmt, root)
+          md
+        })
+      // writer.dispose() is owed after the batch, but Iterator has no
+      // close hook here; the writer is unreachable after the partition
+      // and carries no native state in the JDK GIF plugin
+      id => {
+        val (w, h, nf) = dims(id)
+        val baos = new java.io.ByteArrayOutputStream()
+        // MemoryCache, never ImageIO.createImageOutputStream: the
+        // factory wraps OutputStreams in a FileCache stream — a temp
+        // FILE per row, which dominated the whole query (~6 ms/frame
+        // of disk churn for kilobyte payloads)
+        val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(baos)
+        writer.setOutput(ios)
+        writer.prepareWriteSequence(null)
+        var f = 0
+        while (f < nf) {
+          val img = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_INDEXED, cm)
+          val raster = img.getRaster
+          var y = 0
+          while (y < h) {
+            var x = 0
+            while (x < w) {
+              raster.setSample(x, y, 0, px(id, x, y, f))
+              x += 1
             }
-            writer.writeToSequence(
-              new javax.imageio.IIOImage(img, null, nonInterlacedMeta(img)),
-              param)
-            f += 1
+            y += 1
           }
-          writer.endWriteSequence()
-          ios.close()
-          MediaRow(id, baos.toByteArray, "video/gif")
+          writer.writeToSequence(
+            new javax.imageio.IIOImage(img, null, nonInterlacedMeta(img)),
+            param)
+          f += 1
         }
-        // writer.dispose() is owed after the batch, but Iterator has no
-        // close hook here; the writer is unreachable after the partition
-        // and carries no native state in the JDK GIF plugin
-        out
+        writer.endWriteSequence()
+        ios.close()
+        baos.toByteArray
       }
-      .toDF()
-  }
+    }
 
   /** Mixed-class GIF synthesis for [[videoQuality]]'s gate: `id % 5 = 0`
     * clips drop the frame term (every frame identical — the static
@@ -802,7 +642,7 @@ object Multimodal {
     * dimensions and frame counts, so one SQL CASE replays both classes.
     */
   def synthesizeQualityGifs(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
-    synthesizeGifsWith(ids, idCol, (id, x, y, f) =>
+    gifs(ids, idCol, gifDims, (id, x, y, f) =>
       ((id * 31 + x * 7 + y * 13 +
         (if (id % 5 == 0) 0 else f * 101)) % 256).toInt)
 
@@ -826,9 +666,7 @@ object Multimodal {
   }
 
   def synthesizeDupGifs(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
-    synthesizeGifsWithDims(ids, idCol,
-      dims = id => (dhashW, dhashH, 2 + ((id / 4) % 3).toInt),
-      px = dupGifPx)
+    gifs(ids, idCol, id => (dhashW, dhashH, 2 + ((id / 4) % 3).toInt), dupGifPx)
 
   /** LONG-clip variant of [[synthesizeDupGifs]]: identical family/pixel
     * arithmetic, but 64–66 frames per clip (`64 + family % 3`) — the
@@ -839,9 +677,7 @@ object Multimodal {
     * the full-frame pair set on this class.
     */
   def synthesizeLongDupGifs(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
-    synthesizeGifsWithDims(ids, idCol,
-      dims = id => (dhashW, dhashH, 64 + ((id / 4) % 3).toInt),
-      px = dupGifPx)
+    gifs(ids, idCol, id => (dhashW, dhashH, 64 + ((id / 4) % 3).toInt), dupGifPx)
 
   private val dupGifPx: (Long, Int, Int, Int) => Int = (id, x, y, f) => {
     val family = id / 4
@@ -859,9 +695,7 @@ object Multimodal {
     * is the degenerate one-shot case). 8–10 frames per clip.
     */
   def synthesizeSceneGifs(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
-    synthesizeGifsWithDims(ids, idCol,
-      dims = id => (dhashW, dhashH, 8 + ((id / 4) % 3).toInt),
-      px = sceneGifPx)
+    gifs(ids, idCol, id => (dhashW, dhashH, 8 + ((id / 4) % 3).toInt), sceneGifPx)
 
   private val sceneGifPx: (Long, Int, Int, Int) => Int = (id, x, y, f) =>
     md5Pool.get.digest(s"${id}_${x}_${y}_${f / 3}".getBytes("UTF-8"))(0) & 0xff
@@ -878,96 +712,56 @@ object Multimodal {
     * pixels, so a SQL oracle replays motion at 4 dp from the synthesis
     * arithmetic. Corrupt payloads → `decoded=false`, gate false.
     */
-  def videoQuality(media: DataFrame, minMotion: Double = 1.0): Dataset[VideoQualityRow] = {
-    implicit val enc = Encoders.product[VideoQualityRow]
-    media
-      .select(col("media_id").cast("long"), col("payload").cast("binary"),
-        col("media_type").cast("string"))
-      .as(Encoders.product[MediaRow])
-      .mapPartitions { it: Iterator[MediaRow] =>
-        val reader =
-          javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-        it.map { r =>
-          try {
-            if (r.payload == null || r.payload.isEmpty)
-              VideoQualityRow(r.media_id, decoded = false, 0L, 0.0,
-                quality_ok = false)
-            else {
-              reader.setInput(new javax.imageio.stream.MemoryCacheImageInputStream(
-                new java.io.ByteArrayInputStream(r.payload)))
-              val n = reader.getNumImages(true)
-              var diff = 0L
-              var px = 0L
-              var prev: java.awt.image.BufferedImage = null
-              var f = 0
-              while (f < n) {
-                val img = reader.read(f)
-                if (prev != null) {
-                  var y = 0
-                  while (y < img.getHeight) {
-                    var x = 0
-                    while (x < img.getWidth) {
-                      val a = (img.getRGB(x, y) >> 16) & 0xff
-                      val b = (prev.getRGB(x, y) >> 16) & 0xff
-                      diff += math.abs(a - b).toLong
-                      x += 1
-                    }
-                    y += 1
-                  }
-                  px += img.getWidth.toLong * img.getHeight
-                }
-                prev = img
-                f += 1
+  def videoQuality(media: DataFrame, minMotion: Double = 1.0): Dataset[VideoQualityRow] =
+    decode(media, VideoQualityRow(_, decoded = false, 0L, 0.0,
+        quality_ok = false)) { () =>
+      val open = gifOpener()
+      (id, bytes) => {
+        val reader = open(bytes)
+        val n = reader.getNumImages(true)
+        var diff = 0L
+        var px = 0L
+        var prev: BufferedImage = null
+        var f = 0
+        while (f < n) {
+          val img = reader.read(f)
+          if (prev != null) {
+            var y = 0
+            while (y < img.getHeight) {
+              var x = 0
+              while (x < img.getWidth) {
+                val a = (img.getRGB(x, y) >> 16) & 0xff
+                val b = (prev.getRGB(x, y) >> 16) & 0xff
+                diff += math.abs(a - b).toLong
+                x += 1
               }
-              val motion =
-                if (px > 0) BigDecimal(diff.toDouble / px)
-                  .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-                else 0.0
-              VideoQualityRow(r.media_id, decoded = true, n.toLong, motion,
-                quality_ok = n >= 2 && motion >= minMotion)
+              y += 1
             }
-          } catch {
-            case scala.util.control.NonFatal(_) =>
-              VideoQualityRow(r.media_id, decoded = false, 0L, 0.0,
-                quality_ok = false)
+            px += img.getWidth.toLong * img.getHeight
           }
+          prev = img
+          f += 1
         }
+        val motion = if (px > 0) round4(diff.toDouble / px) else 0.0
+        VideoQualityRow(id, decoded = true, n.toLong, motion,
+          quality_ok = n >= 2 && motion >= minMotion)
       }
-  }
+    }
 
   /** REAL multi-frame container decode: frame count + first-frame
     * dimensions from the actual GIF bytes (`ImageReader.getNumImages`
     * walks the container directory). Corrupt/null payloads →
-    * `decoded=false`, zeroed stats — the poison-file posture.
+    * `decoded=false`, zeroed stats.
     */
-  def decodeVideoMeta(media: DataFrame): Dataset[VideoMeta] = {
-    implicit val enc = Encoders.product[VideoMeta]
-    media
-      .select(col("media_id").cast("long"), col("payload").cast("binary"),
-        col("media_type").cast("string"))
-      .as(Encoders.product[MediaRow])
-      .mapPartitions { it: Iterator[MediaRow] =>
-        val reader =
-          javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-        it.map { r =>
-          try {
-            if (r.payload == null || r.payload.isEmpty)
-              VideoMeta(r.media_id, 0, 0, 0, decoded = false)
-            else {
-              // MemoryCache for the same no-temp-file reason as the writer
-              reader.setInput(new javax.imageio.stream.MemoryCacheImageInputStream(
-                new java.io.ByteArrayInputStream(r.payload)))
-              val n = reader.getNumImages(true)
-              VideoMeta(r.media_id, n, reader.getWidth(0),
-                reader.getHeight(0), decoded = true)
-            }
-          } catch {
-            case scala.util.control.NonFatal(_) =>
-              VideoMeta(r.media_id, 0, 0, 0, decoded = false)
-          }
-        }
+  def decodeVideoMeta(media: DataFrame): Dataset[VideoMeta] =
+    decode(media, VideoMeta(_, 0, 0, 0, decoded = false)) { () =>
+      val open = gifOpener()
+      (id, bytes) => {
+        val reader = open(bytes)
+        val n = reader.getNumImages(true)
+        VideoMeta(id, n, reader.getWidth(0), reader.getHeight(0), decoded = true)
       }
-  }
+    }
 
   /** MP4/ISO-BMFF CONTAINER metadata (ISO/IEC 14496-12 §4.2 box
     * structure): major brand from `ftyp`, movie timescale + duration
@@ -979,6 +773,13 @@ object Multimodal {
                      n_video_tracks: Int, n_audio_tracks: Int,
                      decoded: Boolean)
 
+  /** Big-endian unsigned 32-bit and 64-bit reads at `b(i)`. */
+  private def beU32(b: Array[Byte], i: Int): Long =
+    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
+      ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
+  private def beU64(b: Array[Byte], i: Int): Long =
+    (beU32(b, i) << 32) | beU32(b, i + 4)
+
   /** The child boxes of `b[from, to)` as (type, payloadStart, payloadEnd)
     * — one pass of the ISO-BMFF size/type walk. Handles the three size
     * encodings (plain 32-bit, `size==1` + 64-bit largesize, `size==0` =
@@ -988,21 +789,16 @@ object Multimodal {
     */
   private def mp4Children(b: Array[Byte], from: Int, to: Int)
       : List[(String, Int, Int)] = {
-    def beU32(i: Int): Long =
-      ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-        ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-    def beU64(i: Int): Long =
-      (0 until 8).foldLeft(0L)((a, k) => (a << 8) | (b(i + k) & 0xffL))
     val out = List.newBuilder[(String, Int, Int)]
     var i = from
     while (i < to) {
       if (i + 8 > to) throw new IllegalArgumentException("truncated box header")
-      val sz = beU32(i)
+      val sz = beU32(b, i)
       val tp = new String(b, i + 4, 4, "US-ASCII")
       val (payloadStart, end: Long) =
         if (sz == 1L) {
           if (i + 16 > to) throw new IllegalArgumentException("truncated largesize")
-          (i + 16, i + beU64(i + 8))
+          (i + 16, i + beU64(b, i + 8))
         } else if (sz == 0L) (i + 8, to.toLong)
         else (i + 8, i + sz)
       if (end > to || end < payloadStart)
@@ -1015,12 +811,10 @@ object Multimodal {
 
   /** MP4 container-metadata decode WITHOUT a codec — a pure byte-walk of
     * the box structure in the same `mapPartitions` decode shape as every
-    * other modality, so the (separate, documented) H.264 frame-decode
-    * stub is the only thing a codec binding would replace. Requires
-    * `ftyp`, `moov`/`mvhd` (v0 or v1), and counts `trak` boxes by their
-    * `mdia`/`hdlr` handler (`vide`/`soun`). Corrupt, truncated, or
-    * non-BMFF payloads → `decoded=false`, zeroed stats — the
-    * poison-file posture of [[decodeVideoMeta]].
+    * other modality, so a codec binding would only add a frame decoder.
+    * Requires `ftyp`, `moov`/`mvhd` (v0 or v1), and counts `trak` boxes
+    * by their `mdia`/`hdlr` handler (`vide`/`soun`). Corrupt, truncated,
+    * or non-BMFF payloads → `decoded=false`, zeroed stats.
     *
     * FRAGMENTED MP4 (streaming-era files, ISO/IEC 14496-12 §8.8): when
     * `mvhd.duration == 0` the true duration lives in the fragments, so
@@ -1036,118 +830,97 @@ object Multimodal {
     * `mdia`/`mdhd`. A traf with no duration source anywhere is malformed
     * → the poison posture.
     */
-  def decodeMp4Meta(media: DataFrame): Dataset[Mp4Meta] = {
-    implicit val enc = Encoders.product[Mp4Meta]
-    media
-      .select(col("media_id").cast("long"), col("payload").cast("binary"),
-        col("media_type").cast("string"))
-      .as(Encoders.product[MediaRow])
-      .mapPartitions { it: Iterator[MediaRow] =>
-        it.map { r =>
-          try {
-            val b = r.payload
-            if (b == null || b.length < 8)
-              throw new IllegalArgumentException("no box header")
-            def beU32(i: Int): Long =
-              ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-                ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-            def beU64(i: Int): Long =
-              (0 until 8).foldLeft(0L)((a, k) => (a << 8) | (b(i + k) & 0xffL))
-            val top = mp4Children(b, 0, b.length)
-            val brand = top.collectFirst {
-              case ("ftyp", s, e) if e - s >= 4 => new String(b, s, 4, "US-ASCII")
-            }.getOrElse(throw new IllegalArgumentException("no ftyp"))
-            val (moovS, moovE) = top.collectFirst { case ("moov", s, e) => (s, e) }
-              .getOrElse(throw new IllegalArgumentException("no moov"))
-            val kids = mp4Children(b, moovS, moovE)
-            val (ts, du) = kids.collectFirst { case ("mvhd", s, e) =>
-              val v = b(s) & 0xff
-              if (v == 1) {
-                if (s + 32 > e) throw new IllegalArgumentException("short mvhd v1")
-                (beU32(s + 20), beU64(s + 24))
-              } else {
-                if (s + 20 > e) throw new IllegalArgumentException("short mvhd")
-                (beU32(s + 12), beU32(s + 16))
-              }
-            }.getOrElse(throw new IllegalArgumentException("no mvhd"))
-            if (ts <= 0) throw new IllegalArgumentException("zero timescale")
-            // trex defaults per track_ID (moov/mvex/trex) — consulted only
-            // when a fragment's tfhd carries no default_sample_duration
-            val trexDefaults: Map[Long, Long] = kids.collect {
-              case ("mvex", ms, me) => mp4Children(b, ms, me).collect {
-                case ("trex", xs, xe) if xe - xs >= 24 =>
-                  beU32(xs + 4) -> beU32(xs + 12)
-              }
-            }.flatten.toMap
-            // fMP4: an empty movie-level duration defers to the fragments
-            val effDu = if (du != 0L) du else top.collect {
-              case ("moof", ms, me) => mp4Children(b, ms, me).collect {
-                case ("traf", fs, fe) =>
-                  val traf = mp4Children(b, fs, fe)
-                  val (trackId, tfhdDefault) = traf.collectFirst {
-                    case ("tfhd", hs, he) =>
-                      if (hs + 8 > he)
-                        throw new IllegalArgumentException("short tfhd")
-                      val flags = beU32(hs) & 0xffffffL
-                      val tid = beU32(hs + 4)
-                      var o = hs + 8
-                      if ((flags & 0x1) != 0) o += 8  // base_data_offset
-                      if ((flags & 0x2) != 0) o += 4  // sample_descr_index
-                      val d =
-                        if ((flags & 0x8) == 0) None
-                        else if (o + 4 > he)
-                          throw new IllegalArgumentException("short tfhd fields")
-                        else Some(beU32(o))
-                      (tid, d)
-                  }.getOrElse(
-                    throw new IllegalArgumentException("traf without tfhd"))
-                  val default = tfhdDefault.orElse(trexDefaults.get(trackId))
-                  traf.collect { case ("trun", rs, re) =>
-                    if (rs + 8 > re)
-                      throw new IllegalArgumentException("short trun")
-                    val flags = beU32(rs) & 0xffffffL
-                    val n = beU32(rs + 4)
-                    var o = rs + 8
-                    if ((flags & 0x1) != 0) o += 4    // data_offset
-                    if ((flags & 0x4) != 0) o += 4    // first_sample_flags
-                    if ((flags & 0x100) != 0) {
-                      // per-sample durations: step the FULL per-sample
-                      // stride (duration + any size/flags/cts fields)
-                      val stride = 4 +
-                        (if ((flags & 0x200) != 0) 4 else 0) +
-                        (if ((flags & 0x400) != 0) 4 else 0) +
-                        (if ((flags & 0x800) != 0) 4 else 0)
-                      if (o + n * stride > re)
-                        throw new IllegalArgumentException("short trun samples")
-                      (0L until n).map(k => beU32(o + (k * stride).toInt)).sum
-                    } else n * default.getOrElse(throw
-                      new IllegalArgumentException("trun without any duration"))
-                  }.sum
-              }.sum
+  def decodeMp4Meta(media: DataFrame): Dataset[Mp4Meta] =
+    decode(media, Mp4Meta(_, "", 0L, 0L, 0.0, 0, 0, 0, decoded = false)) { () => (id, b) =>
+      val top = mp4Children(b, 0, b.length)
+      val brand = top.collectFirst {
+        case ("ftyp", s, e) if e - s >= 4 => new String(b, s, 4, "US-ASCII")
+      }.getOrElse(throw new IllegalArgumentException("no ftyp"))
+      val (moovS, moovE) = top.collectFirst { case ("moov", s, e) => (s, e) }
+        .getOrElse(throw new IllegalArgumentException("no moov"))
+      val kids = mp4Children(b, moovS, moovE)
+      val (ts, du) = kids.collectFirst { case ("mvhd", s, e) =>
+        val v = b(s) & 0xff
+        if (v == 1) {
+          if (s + 32 > e) throw new IllegalArgumentException("short mvhd v1")
+          (beU32(b, s + 20), beU64(b, s + 24))
+        } else {
+          if (s + 20 > e) throw new IllegalArgumentException("short mvhd")
+          (beU32(b, s + 12), beU32(b, s + 16))
+        }
+      }.getOrElse(throw new IllegalArgumentException("no mvhd"))
+      if (ts <= 0) throw new IllegalArgumentException("zero timescale")
+      // trex defaults per track_ID (moov/mvex/trex) — consulted only
+      // when a fragment's tfhd carries no default_sample_duration
+      val trexDefaults: Map[Long, Long] = kids.collect {
+        case ("mvex", ms, me) => mp4Children(b, ms, me).collect {
+          case ("trex", xs, xe) if xe - xs >= 24 =>
+            beU32(b, xs + 4) -> beU32(b, xs + 12)
+        }
+      }.flatten.toMap
+      // fMP4: an empty movie-level duration defers to the fragments
+      val effDu = if (du != 0L) du else top.collect {
+        case ("moof", ms, me) => mp4Children(b, ms, me).collect {
+          case ("traf", fs, fe) =>
+            val traf = mp4Children(b, fs, fe)
+            val (trackId, tfhdDefault) = traf.collectFirst {
+              case ("tfhd", hs, he) =>
+                if (hs + 8 > he)
+                  throw new IllegalArgumentException("short tfhd")
+                val flags = beU32(b, hs) & 0xffffffL
+                val tid = beU32(b, hs + 4)
+                var o = hs + 8
+                if ((flags & 0x1) != 0) o += 8  // base_data_offset
+                if ((flags & 0x2) != 0) o += 4  // sample_descr_index
+                val d =
+                  if ((flags & 0x8) == 0) None
+                  else if (o + 4 > he)
+                    throw new IllegalArgumentException("short tfhd fields")
+                  else Some(beU32(b, o))
+                (tid, d)
+            }.getOrElse(
+              throw new IllegalArgumentException("traf without tfhd"))
+            val default = tfhdDefault.orElse(trexDefaults.get(trackId))
+            traf.collect { case ("trun", rs, re) =>
+              if (rs + 8 > re)
+                throw new IllegalArgumentException("short trun")
+              val flags = beU32(b, rs) & 0xffffffL
+              val n = beU32(b, rs + 4)
+              var o = rs + 8
+              if ((flags & 0x1) != 0) o += 4    // data_offset
+              if ((flags & 0x4) != 0) o += 4    // first_sample_flags
+              if ((flags & 0x100) != 0) {
+                // per-sample durations: step the FULL per-sample
+                // stride (duration + any size/flags/cts fields)
+                val stride = 4 +
+                  (if ((flags & 0x200) != 0) 4 else 0) +
+                  (if ((flags & 0x400) != 0) 4 else 0) +
+                  (if ((flags & 0x800) != 0) 4 else 0)
+                if (o + n * stride > re)
+                  throw new IllegalArgumentException("short trun samples")
+                (0L until n).map(k => beU32(b, o + (k * stride).toInt)).sum
+              } else n * default.getOrElse(throw
+                new IllegalArgumentException("trun without any duration"))
             }.sum
-            val traks = kids.filter(_._1 == "trak")
-            var nVideo = 0
-            var nAudio = 0
-            traks.foreach { case (_, s, e) =>
-              for {
-                (_, ms, me) <- mp4Children(b, s, e).find(_._1 == "mdia")
-                (_, hs, he) <- mp4Children(b, ms, me).find(_._1 == "hdlr")
-                if he - hs >= 12
-              } new String(b, hs + 8, 4, "US-ASCII") match {
-                case "vide" => nVideo += 1
-                case "soun" => nAudio += 1
-                case _ => ()
-              }
-            }
-            Mp4Meta(r.media_id, brand, ts, effDu, effDu.toDouble / ts,
-              traks.size, nVideo, nAudio, decoded = true)
-          } catch {
-            case scala.util.control.NonFatal(_) =>
-              Mp4Meta(r.media_id, "", 0L, 0L, 0.0, 0, 0, 0, decoded = false)
-          }
+        }.sum
+      }.sum
+      val traks = kids.filter(_._1 == "trak")
+      var nVideo = 0
+      var nAudio = 0
+      traks.foreach { case (_, s, e) =>
+        for {
+          (_, ms, me) <- mp4Children(b, s, e).find(_._1 == "mdia")
+          (_, hs, he) <- mp4Children(b, ms, me).find(_._1 == "hdlr")
+          if he - hs >= 12
+        } new String(b, hs + 8, 4, "US-ASCII") match {
+          case "vide" => nVideo += 1
+          case "soun" => nAudio += 1
+          case _ => ()
         }
       }
-  }
+      Mp4Meta(id, brand, ts, effDu, effDu.toDouble / ts,
+        traks.size, nVideo, nAudio, decoded = true)
+    }
 
   /** Minimal-but-real ISO-BMFF fixtures from id arithmetic: `ftyp(isom)`
     * + a `free` decoy + `moov(mvhd + trak* + udta decoy)` + `mdat`.
@@ -1166,164 +939,129 @@ object Multimodal {
     * the trex 150 must apply. duration_units =
     * 450 + (id%2)·600 + (3+id%3)·200·(1+id%3) — every term replayable.
     */
-  def synthesizeMp4s(ids: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    implicit val enc = Encoders.product[MediaRow]
-    ids.select(col(idCol).cast("long").as("media_id"))
-      .as(Encoders.scalaLong)
-      .mapPartitions { it: Iterator[Long] =>
-        def box(tp: String, payload: Array[Byte]): Array[Byte] = {
-          val bb = java.nio.ByteBuffer.allocate(8 + payload.length)
-          bb.putInt(8 + payload.length).put(tp.getBytes("US-ASCII")).put(payload)
-          bb.array()
+  def synthesizeMp4s(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
+    synthesize(ids, idCol, "video/mp4")(() => mp4Fixture)
+
+  private def mp4Fixture(id: Long): Array[Byte] = {
+    def box(tp: String, payload: Array[Byte]): Array[Byte] = {
+      val bb = java.nio.ByteBuffer.allocate(8 + payload.length)
+      bb.putInt(8 + payload.length).put(tp.getBytes("US-ASCII")).put(payload)
+      bb.array()
+    }
+    if (id % 11 == 0) {
+      // declared size 4096 over a 16-byte payload: the walk overruns
+      val bb = java.nio.ByteBuffer.allocate(16)
+      bb.putInt(4096).put("moov".getBytes("US-ASCII")).putLong(id)
+      bb.array()
+    } else {
+      val timescale = 1000
+      val frag = id % 13 == 6
+      val dur = if (frag) 0L else ((id % 9) + 1) * 500
+      val mvhd =
+        if (id % 7 == 3) {
+          val bb = java.nio.ByteBuffer.allocate(112)
+          bb.putInt(0x01000000)            // version 1, flags 0
+            .putLong(0L).putLong(0L)       // creation, modification
+            .putInt(timescale).putLong(dur)
+          box("mvhd", bb.array())          // trailing 80 bytes zeroed
+        } else {
+          val bb = java.nio.ByteBuffer.allocate(100)
+          bb.putInt(0).putInt(0).putInt(0) // v0, creation, modification
+            .putInt(timescale).putInt(dur.toInt)
+          box("mvhd", bb.array())
         }
-        it.map { id =>
-          if (id % 11 == 0) {
-            // declared size 4096 over a 16-byte payload: the walk overruns
-            val bb = java.nio.ByteBuffer.allocate(16)
-            bb.putInt(4096).put("moov".getBytes("US-ASCII")).putLong(id)
-            MediaRow(id, bb.array(), "video/mp4")
-          } else {
-            val timescale = 1000
-            val frag = id % 13 == 6
-            val dur = if (frag) 0L else ((id % 9) + 1) * 500
-            val mvhd =
-              if (id % 7 == 3) {
-                val bb = java.nio.ByteBuffer.allocate(112)
-                bb.putInt(0x01000000)            // version 1, flags 0
-                  .putLong(0L).putLong(0L)       // creation, modification
-                  .putInt(timescale).putLong(dur)
-                box("mvhd", bb.array())          // trailing 80 bytes zeroed
-              } else {
-                val bb = java.nio.ByteBuffer.allocate(100)
-                bb.putInt(0).putInt(0).putInt(0) // v0, creation, modification
-                  .putInt(timescale).putInt(dur.toInt)
-                box("mvhd", bb.array())
-              }
-            def trak(handler: String): Array[Byte] = {
-              val bb = java.nio.ByteBuffer.allocate(25)
-              bb.putInt(0).putInt(0)             // version/flags, pre_defined
-                .put(handler.getBytes("US-ASCII")) // then 12+1 zeroed bytes
-              box("trak", box("mdia", box("hdlr", bb.array())))
-            }
-            val handlers = Seq("vide", "soun", "vide").take(1 + (id % 3).toInt)
-            val mvex = if (!frag) Array.emptyByteArray else {
-              val bb = java.nio.ByteBuffer.allocate(24)
-              bb.putInt(0)           // version/flags
-                .putInt(1)           // track_ID
-                .putInt(1)           // default_sample_description_index
-                .putInt(150)         // default_sample_duration (moof 3's)
-                .putInt(0).putInt(0) // default size, flags
-              box("mvex", box("trex", bb.array()))
-            }
-            val moov = box("moov",
-              mvhd ++ handlers.flatMap(trak).toArray ++ mvex ++
-                box("udta", Array[Byte](1, 2, 3, 4)))
-            val ftypBody = java.nio.ByteBuffer.allocate(12)
-            ftypBody.put("isom".getBytes("US-ASCII")).putInt(512)
-              .put("mp41".getBytes("US-ASCII"))
-            val fragTail = if (!frag) Array.emptyByteArray else {
-              def tfhd(flags: Int, defaultDur: Option[Int]): Array[Byte] = {
-                val bb = java.nio.ByteBuffer
-                  .allocate(8 + (if (defaultDur.isDefined) 4 else 0))
-                bb.putInt(flags).putInt(1) // version 0 + flags, track_ID 1
-                defaultDur.foreach(bb.putInt)
-                box("tfhd", bb.array())
-              }
-              // flags 0x301: data-offset + per-sample duration AND size —
-              // the decode must step the 8-byte stride, not assume 4
-              def trunPerSample(durs: Seq[Int]): Array[Byte] = {
-                val bb = java.nio.ByteBuffer.allocate(12 + 8 * durs.length)
-                bb.putInt(0x000301).putInt(durs.length).putInt(0)
-                durs.zipWithIndex.foreach { case (d, k) =>
-                  bb.putInt(d).putInt(1000 + k) }
-                box("trun", bb.array())
-              }
-              def trunCount(n: Int): Array[Byte] = {
-                val bb = java.nio.ByteBuffer.allocate(12)
-                bb.putInt(0x000001).putInt(n).putInt(0)
-                box("trun", bb.array())
-              }
-              def moof(seq: Int, traf: Array[Byte]): Array[Byte] = {
-                val bb = java.nio.ByteBuffer.allocate(8)
-                bb.putInt(0).putInt(seq)
-                box("moof", box("mfhd", bb.array()) ++ traf)
-              }
-              val n0 = 2 + (id % 2).toInt
-              val ds = 200 * (1 + (id % 3).toInt)
-              val n1 = 3 + (id % 3).toInt
-              val m1 = moof(1, box("traf",
-                tfhd(0x000008, Some(999)) ++ // decoy: per-sample durs win
-                  trunPerSample((0 until n0).map(k => 200 + 50 * k))))
-              val m2 = moof(2, box("traf",
-                tfhd(0x000008, Some(ds)) ++ trunCount(n1)))
-              val m3 =
-                if (id % 2 == 1)
-                  moof(3, box("traf", tfhd(0, None) ++ trunCount(2)))
-                else Array.emptyByteArray
-              m1 ++ box("mdat", Array.fill(4)(0x66.toByte)) ++
-                m2 ++ box("mdat", Array.fill(4)(0x66.toByte)) ++ m3
-            }
-            val bytes =
-              box("ftyp", ftypBody.array()) ++
-                box("free", Array[Byte](9, 9, 9, 9)) ++ moov ++
-                box("mdat", Array.fill((id % 5).toInt)(0x55.toByte)) ++
-                fragTail
-            MediaRow(id, bytes, "video/mp4")
-          }
-        }
+      def trak(handler: String): Array[Byte] = {
+        val bb = java.nio.ByteBuffer.allocate(25)
+        bb.putInt(0).putInt(0)             // version/flags, pre_defined
+          .put(handler.getBytes("US-ASCII")) // then 12+1 zeroed bytes
+        box("trak", box("mdia", box("hdlr", bb.array())))
       }
-      .toDF()
+      val handlers = Seq("vide", "soun", "vide").take(1 + (id % 3).toInt)
+      val mvex = if (!frag) Array.emptyByteArray else {
+        val bb = java.nio.ByteBuffer.allocate(24)
+        bb.putInt(0)           // version/flags
+          .putInt(1)           // track_ID
+          .putInt(1)           // default_sample_description_index
+          .putInt(150)         // default_sample_duration (moof 3's)
+          .putInt(0).putInt(0) // default size, flags
+        box("mvex", box("trex", bb.array()))
+      }
+      val moov = box("moov",
+        mvhd ++ handlers.flatMap(trak).toArray ++ mvex ++
+          box("udta", Array[Byte](1, 2, 3, 4)))
+      val ftypBody = java.nio.ByteBuffer.allocate(12)
+      ftypBody.put("isom".getBytes("US-ASCII")).putInt(512)
+        .put("mp41".getBytes("US-ASCII"))
+      val fragTail = if (!frag) Array.emptyByteArray else {
+        def tfhd(flags: Int, defaultDur: Option[Int]): Array[Byte] = {
+          val bb = java.nio.ByteBuffer
+            .allocate(8 + (if (defaultDur.isDefined) 4 else 0))
+          bb.putInt(flags).putInt(1) // version 0 + flags, track_ID 1
+          defaultDur.foreach(bb.putInt)
+          box("tfhd", bb.array())
+        }
+        // flags 0x301: data-offset + per-sample duration AND size —
+        // the decode must step the 8-byte stride, not assume 4
+        def trunPerSample(durs: Seq[Int]): Array[Byte] = {
+          val bb = java.nio.ByteBuffer.allocate(12 + 8 * durs.length)
+          bb.putInt(0x000301).putInt(durs.length).putInt(0)
+          durs.zipWithIndex.foreach { case (d, k) =>
+            bb.putInt(d).putInt(1000 + k) }
+          box("trun", bb.array())
+        }
+        def trunCount(n: Int): Array[Byte] = {
+          val bb = java.nio.ByteBuffer.allocate(12)
+          bb.putInt(0x000001).putInt(n).putInt(0)
+          box("trun", bb.array())
+        }
+        def moof(seq: Int, traf: Array[Byte]): Array[Byte] = {
+          val bb = java.nio.ByteBuffer.allocate(8)
+          bb.putInt(0).putInt(seq)
+          box("moof", box("mfhd", bb.array()) ++ traf)
+        }
+        val n0 = 2 + (id % 2).toInt
+        val ds = 200 * (1 + (id % 3).toInt)
+        val n1 = 3 + (id % 3).toInt
+        val m1 = moof(1, box("traf",
+          tfhd(0x000008, Some(999)) ++ // decoy: per-sample durs win
+            trunPerSample((0 until n0).map(k => 200 + 50 * k))))
+        val m2 = moof(2, box("traf",
+          tfhd(0x000008, Some(ds)) ++ trunCount(n1)))
+        val m3 =
+          if (id % 2 == 1)
+            moof(3, box("traf", tfhd(0, None) ++ trunCount(2)))
+          else Array.emptyByteArray
+        m1 ++ box("mdat", Array.fill(4)(0x66.toByte)) ++
+          m2 ++ box("mdat", Array.fill(4)(0x66.toByte)) ++ m3
+      }
+      box("ftyp", ftypBody.array()) ++
+        box("free", Array[Byte](9, 9, 9, 9)) ++ moov ++
+        box("mdat", Array.fill((id % 5).toInt)(0x55.toByte)) ++
+        fragTail
+    }
   }
 
   /** REAL frame sampling: every `every`-th frame of the container is
     * decoded and reduced to (dims, gray pixel sum) — the row-multiplying
     * extraction shape of a production video pipeline, run on actual
-    * encoded frames (compare [[sampleFrames]], the byte-chunk stub for
-    * codec-less formats). One reader per partition, reused across rows;
+    * encoded frames. One reader per partition, reused across rows;
     * corrupt payloads contribute zero rows (callers join
     * [[decodeVideoMeta]] for the poison-file report).
     */
   def sampleVideoFrames(media: DataFrame, every: Int = 1): Dataset[VideoFrame] = {
     require(every > 0, "every must be positive")
-    implicit val enc = Encoders.product[VideoFrame]
-    media
-      .select(col("media_id").cast("long"), col("payload").cast("binary"),
-        col("media_type").cast("string"))
-      .as(Encoders.product[MediaRow])
-      .mapPartitions { it: Iterator[MediaRow] =>
-        val reader =
-          javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-        it.flatMap { r =>
-          try {
-            if (r.payload == null || r.payload.isEmpty) Iterator.empty
-            else {
-              // MemoryCache for the same no-temp-file reason as the writer
-              reader.setInput(new javax.imageio.stream.MemoryCacheImageInputStream(
-                new java.io.ByteArrayInputStream(r.payload)))
-              val n = reader.getNumImages(true)
-              // materialized eagerly: the shared reader's input is reset
-              // by the next row, so the frames must be read NOW, not when
-              // a downstream consumer pulls the iterator
-              (0 until n by every).map { f =>
-                val img = reader.read(f)
-                var sum = 0L
-                var y = 0
-                while (y < img.getHeight) {
-                  var x = 0
-                  while (x < img.getWidth) {
-                    sum += (img.getRGB(x, y) >> 16) & 0xff
-                    x += 1
-                  }
-                  y += 1
-                }
-                VideoFrame(r.media_id, f, img.getWidth, img.getHeight, sum)
-              }.iterator
-            }
-          } catch {
-            case scala.util.control.NonFatal(_) => Iterator.empty
-          }
-        }
+    decodeRows(media, _ => Iterator.empty[VideoFrame]) { () =>
+      val open = gifOpener()
+      (id, bytes) => {
+        val reader = open(bytes)
+        // a strict map: the shared reader's input is reset by the next
+        // row, so the frames must be read NOW
+        (0 until reader.getNumImages(true) by every).map { f =>
+          val img = reader.read(f)
+          VideoFrame(id, f, img.getWidth, img.getHeight, redSum(img))
+        }.iterator
       }
+    }
   }
 
   /** One extracted frame as a standalone image payload. */
@@ -1342,51 +1080,32 @@ object Multimodal {
     */
   def extractFrameImages(media: DataFrame, every: Int = 1): Dataset[FrameImage] = {
     require(every > 0, "every must be positive")
-    implicit val enc = Encoders.product[FrameImage]
-    media
-      .select(col("media_id").cast("long"), col("payload").cast("binary"),
-        col("media_type").cast("string"))
-      .as(Encoders.product[MediaRow])
-      .mapPartitions { it: Iterator[MediaRow] =>
-        val reader =
-          javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-        it.flatMap { r =>
-          try {
-            if (r.payload == null || r.payload.isEmpty) Iterator.empty
-            else {
-              // MemoryCache for the same no-temp-file reason as the writer
-              reader.setInput(new javax.imageio.stream.MemoryCacheImageInputStream(
-                new java.io.ByteArrayInputStream(r.payload)))
-              val n = reader.getNumImages(true)
-              // eager for the same shared-reader reason as sampleVideoFrames
-              (0 until n by every).map { f =>
-                val frame = reader.read(f)
-                // re-encode via TYPE_INT_RGB: a palette/gray frame written
-                // straight to PNG comes back TYPE_BYTE_GRAY, whose getRGB
-                // applies a linear→sRGB conversion and silently shifts
-                // every pixel value — RGB PNG round-trips exactly
-                val rgb = new java.awt.image.BufferedImage(
-                  frame.getWidth, frame.getHeight,
-                  java.awt.image.BufferedImage.TYPE_INT_RGB)
-                val gfx = rgb.createGraphics()
-                try gfx.drawImage(frame, 0, 0, null) finally gfx.dispose()
-                val baos = new java.io.ByteArrayOutputStream()
-                javax.imageio.ImageIO.write(rgb, "png", baos)
-                FrameImage(r.media_id, f, baos.toByteArray, "image/png")
-              }.iterator
-            }
-          } catch {
-            case scala.util.control.NonFatal(_) => Iterator.empty
-          }
-        }
+    decodeRows(media, _ => Iterator.empty[FrameImage]) { () =>
+      val open = gifOpener()
+      (id, bytes) => {
+        val reader = open(bytes)
+        // strict for the same shared-reader reason as sampleVideoFrames
+        (0 until reader.getNumImages(true) by every).map { f =>
+          val frame = reader.read(f)
+          // re-encode via TYPE_INT_RGB: a palette/gray frame written
+          // straight to PNG comes back TYPE_BYTE_GRAY, whose getRGB
+          // applies a linear→sRGB conversion and silently shifts
+          // every pixel value — RGB PNG round-trips exactly
+          val rgb = new BufferedImage(frame.getWidth, frame.getHeight,
+            BufferedImage.TYPE_INT_RGB)
+          val gfx = rgb.createGraphics()
+          try gfx.drawImage(frame, 0, 0, null) finally gfx.dispose()
+          FrameImage(id, f, png(rgb), "image/png")
+        }.iterator
       }
+    }
   }
 
   /** Per-image 64-bit difference-hash, split into two 32-bit words so the
     * value never touches a BIGINT sign bit in either engine (`hash_hi` =
     * rows 4-7, `hash_lo` = rows 0-3; bit `y*8+x` within a word compares
     * pixel (x+1,y) against (x,y)). `decoded=false` rows carry zeroed
-    * hashes — same poison-file posture as [[decodeImageMeta]].
+    * hashes.
     */
   case class PhashRow(media_id: Long, hash_hi: Long, hash_lo: Long,
                       decoded: Boolean)
@@ -1410,39 +1129,20 @@ object Multimodal {
     * `(md5(s"${id/4}_${x}_${y}")[0] + perturbation) mod 256` in every
     * channel.
     */
-  def synthesizePhashImages(ids: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    implicit val enc = Encoders.product[MediaRow]
-    ids.select(col(idCol).cast("long").as("media_id"))
-      .as(Encoders.scalaLong)
-      .mapPartitions { it: Iterator[Long] =>
-        // one digest instance per partition (MessageDigest is not
-        // thread-safe; digest() resets it for reuse across the batch)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { id =>
-          val family = id / 4
-          val v = (id % 4).toInt
-          val img = new java.awt.image.BufferedImage(
-            dhashW, dhashH, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < dhashH) {
-            var x = 0
-            while (x < dhashW) {
-              val base = md.digest(
-                s"${family}_${x}_${y}".getBytes("UTF-8"))(0) & 0xff
-              val p =
-                if (v > 0 && x == v && y == v) (base + v * 3) % 256 else base
-              img.setRGB(x, y, (p << 16) | (p << 8) | p)
-              x += 1
-            }
-            y += 1
-          }
-          val baos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", baos)
-          MediaRow(id, baos.toByteArray, "image/png")
+  def synthesizePhashImages(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
+    synthesize(ids, idCol, "image/png") { () =>
+      // one digest instance per partition (MessageDigest is not
+      // thread-safe; digest() resets it for reuse across the batch)
+      val md = java.security.MessageDigest.getInstance("MD5")
+      id => {
+        val family = id / 4
+        val v = (id % 4).toInt
+        grayPng(dhashW, dhashH) { (x, y) =>
+          val base = md.digest(s"${family}_${x}_${y}".getBytes("UTF-8"))(0) & 0xff
+          if (v > 0 && x == v && y == v) (base + v * 3) % 256 else base
         }
       }
-      .toDF()
-  }
+    }
 
   /** REAL perceptual hash from encoded bytes: `javax.imageio` decode →
     * (if needed) bilinear downsample to the 9×8 dHash grid → 64 bits of
@@ -1450,61 +1150,32 @@ object Multimodal {
     * grid size skip the resample, so a lossless source round-trips
     * bit-exactly (what the oracle relies on); arbitrary-size images take
     * the resize path like any production thumbnail pass. Corrupt/null
-    * payloads → `decoded=false`, zeroed hash — one bad object must not
-    * kill a 100 TB scan.
+    * payloads → `decoded=false`, zeroed hash.
     */
-  def imageDHash(media: DataFrame): Dataset[PhashRow] = {
-    implicit val enc = Encoders.product[PhashRow]
-    media
-      .select(col("media_id").cast("long"), col("payload").cast("binary"),
-        col("media_type").cast("string"))
-      .as(Encoders.product[MediaRow])
-      .mapPartitions { it: Iterator[MediaRow] =>
-        it.map { r =>
-          val decoded0 =
-            if (r.payload == null || r.payload.isEmpty) null
-            else
-              try javax.imageio.ImageIO.read(
-                new java.io.ByteArrayInputStream(r.payload))
-              catch { case scala.util.control.NonFatal(_) => null }
-          if (decoded0 == null) PhashRow(r.media_id, 0L, 0L, decoded = false)
-          else {
-            val img =
-              if (decoded0.getWidth == dhashW && decoded0.getHeight == dhashH)
-                decoded0
-              else {
-                val out = new java.awt.image.BufferedImage(
-                  dhashW, dhashH, java.awt.image.BufferedImage.TYPE_INT_RGB)
-                val g = out.createGraphics()
-                try {
-                  g.setRenderingHint(
-                    java.awt.RenderingHints.KEY_INTERPOLATION,
-                    java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-                  g.drawImage(decoded0, 0, 0, dhashW, dhashH, null)
-                } finally g.dispose()
-                out
-              }
-            var hi = 0L
-            var lo = 0L
-            var y = 0
-            while (y < dhashH) {
-              var x = 0
-              while (x < dhashW - 1) {
-                val a = (img.getRGB(x, y) >> 16) & 0xff
-                val b = (img.getRGB(x + 1, y) >> 16) & 0xff
-                if (b > a) {
-                  if (y < 4) lo |= 1L << (y * 8 + x)
-                  else hi |= 1L << ((y - 4) * 8 + x)
-                }
-                x += 1
-              }
-              y += 1
-            }
-            PhashRow(r.media_id, hi, lo, decoded = true)
+  def imageDHash(media: DataFrame): Dataset[PhashRow] =
+    decode(media, PhashRow(_, 0L, 0L, decoded = false)) { () => (id, bytes) =>
+      val decoded0 = readImage(bytes)
+      val img =
+        if (decoded0.getWidth == dhashW && decoded0.getHeight == dhashH) decoded0
+        else scaled(decoded0, dhashW, dhashH)
+      var hi = 0L
+      var lo = 0L
+      var y = 0
+      while (y < dhashH) {
+        var x = 0
+        while (x < dhashW - 1) {
+          val a = (img.getRGB(x, y) >> 16) & 0xff
+          val b = (img.getRGB(x + 1, y) >> 16) & 0xff
+          if (b > a) {
+            if (y < 4) lo |= 1L << (y * 8 + x)
+            else hi |= 1L << ((y - 4) * 8 + x)
           }
+          x += 1
         }
+        y += 1
       }
-  }
+      PhashRow(id, hi, lo, decoded = true)
+    }
 
   /** REAL image feature vector: the red-channel intensity histogram of
     * the decoded pixels — integer counts, so the features (and anything
@@ -1526,36 +1197,21 @@ object Multimodal {
   def imageFeatures(media: DataFrame, bins: Int = 16): Dataset[ImageFeatureRow] = {
     require(bins > 0 && 256 % bins == 0, "bins must divide 256")
     val width = 256 / bins
-    implicit val enc = Encoders.product[ImageFeatureRow]
-    media
-      .select(col("media_id").cast("long"), col("payload").cast("binary"),
-        col("media_type").cast("string"))
-      .as(Encoders.product[MediaRow])
-      .mapPartitions { it: Iterator[MediaRow] =>
-        it.map { r =>
-          val img =
-            if (r.payload == null || r.payload.isEmpty) null
-            else
-              try javax.imageio.ImageIO.read(
-                new java.io.ByteArrayInputStream(r.payload))
-              catch { case scala.util.control.NonFatal(_) => null }
-          if (img == null)
-            ImageFeatureRow(r.media_id, new Array[Long](bins), decoded = false)
-          else {
-            val h = new Array[Long](bins)
-            var y = 0
-            while (y < img.getHeight) {
-              var x = 0
-              while (x < img.getWidth) {
-                h(((img.getRGB(x, y) >> 16) & 0xff) / width) += 1L
-                x += 1
-              }
-              y += 1
-            }
-            ImageFeatureRow(r.media_id, h, decoded = true)
+    decode(media, ImageFeatureRow(_, new Array[Long](bins), decoded = false)) { () =>
+      (id, bytes) =>
+        val img = readImage(bytes)
+        val h = new Array[Long](bins)
+        var y = 0
+        while (y < img.getHeight) {
+          var x = 0
+          while (x < img.getWidth) {
+            h(((img.getRGB(x, y) >> 16) & 0xff) / width) += 1L
+            x += 1
           }
+          y += 1
         }
-      }
+        ImageFeatureRow(id, h, decoded = true)
+    }
   }
 
   case class ImageQualityRow(media_id: Long, decoded: Boolean, n_px: Long,
@@ -1570,66 +1226,47 @@ object Multimodal {
     * All three stats are exact functions of integer pixel sums (sum,
     * sum-of-squares, bin counts), so a SQL oracle replays them from the
     * same pixel arithmetic bit-for-bit at 4 dp. Corrupt payloads →
-    * `decoded = false`, zeroed stats, gate false — poison-file posture.
-    * Map-side only; entropy folds bins in ascending order (deterministic
-    * float association).
+    * `decoded = false`, zeroed stats, gate false. Map-side only; entropy
+    * folds bins in ascending order (deterministic float association).
     */
   def imageQuality(media: DataFrame, bins: Int = 16,
       minContrast: Double = 8.0, minEntropy: Double = 1.5): Dataset[ImageQualityRow] = {
     require(bins > 0 && 256 % bins == 0, "bins must divide 256")
     val width = 256 / bins
-    implicit val enc = Encoders.product[ImageQualityRow]
-    media
-      .select(col("media_id").cast("long"), col("payload").cast("binary"),
-        col("media_type").cast("string"))
-      .as(Encoders.product[MediaRow])
-      .mapPartitions { it: Iterator[MediaRow] =>
-        it.map { r =>
-          val img =
-            if (r.payload == null || r.payload.isEmpty) null
-            else
-              try javax.imageio.ImageIO.read(
-                new java.io.ByteArrayInputStream(r.payload))
-              catch { case scala.util.control.NonFatal(_) => null }
-          if (img == null)
-            ImageQualityRow(r.media_id, decoded = false, 0L, 0.0, 0.0, 0.0,
-              quality_ok = false)
-          else {
-            val h = new Array[Long](bins)
-            var s = 0L
-            var s2 = 0L
-            var y = 0
-            while (y < img.getHeight) {
-              var x = 0
-              while (x < img.getWidth) {
-                val p = (img.getRGB(x, y) >> 16) & 0xff
-                s += p; s2 += p.toLong * p; h(p / width) += 1L
-                x += 1
-              }
-              y += 1
-            }
-            val n = img.getWidth.toLong * img.getHeight
-            val mean = s.toDouble / n
-            val contrast = math.sqrt(math.max(0.0, s2.toDouble / n - mean * mean))
-            var ent = 0.0
-            var b = 0
-            while (b < bins) {
-              if (h(b) > 0L) {
-                val p = h(b).toDouble / n
-                ent -= p * math.log(p)
-              }
-              b += 1
-            }
-            def r4(v: Double) = BigDecimal(v)
-              .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-            // + 0.0 turns the single-bin case's -0.0 into 0.0 (parquet
-            // bit-compares against the oracle's +0.0)
-            val (cR, eR) = (r4(contrast + 0.0), r4(ent + 0.0))
-            ImageQualityRow(r.media_id, decoded = true, n, r4(mean), cR, eR,
-              quality_ok = cR >= minContrast && eR >= minEntropy)
-          }
+    decode(media, ImageQualityRow(_, decoded = false, 0L, 0.0, 0.0, 0.0,
+        quality_ok = false)) { () => (id, bytes) =>
+      val img = readImage(bytes)
+      val h = new Array[Long](bins)
+      var s = 0L
+      var s2 = 0L
+      var y = 0
+      while (y < img.getHeight) {
+        var x = 0
+        while (x < img.getWidth) {
+          val p = (img.getRGB(x, y) >> 16) & 0xff
+          s += p; s2 += p.toLong * p; h(p / width) += 1L
+          x += 1
         }
+        y += 1
       }
+      val n = img.getWidth.toLong * img.getHeight
+      val mean = s.toDouble / n
+      val contrast = math.sqrt(math.max(0.0, s2.toDouble / n - mean * mean))
+      var ent = 0.0
+      var b = 0
+      while (b < bins) {
+        if (h(b) > 0L) {
+          val p = h(b).toDouble / n
+          ent -= p * math.log(p)
+        }
+        b += 1
+      }
+      // + 0.0 turns the single-bin case's -0.0 into 0.0 (parquet
+      // bit-compares against the oracle's +0.0)
+      val (cR, eR) = (round4(contrast + 0.0), round4(ent + 0.0))
+      ImageQualityRow(id, decoded = true, n, round4(mean), cR, eR,
+        quality_ok = cR >= minContrast && eR >= minEntropy)
+    }
   }
 
   /** Deterministic flat-frame synthesis (the failing class for
@@ -1637,30 +1274,10 @@ object Multimodal {
     * blank-thumbnail/solid-placeholder shape a crawl curation pass drops.
     */
   def synthesizeFlatImages(ids: DataFrame, gray: Int = 128,
-      idCol: String = "doc_id"): DataFrame = {
-    implicit val enc = Encoders.product[MediaRow]
-    ids.select(col(idCol).cast("long").as("media_id"))
-      .as(Encoders.scalaLong)
-      .mapPartitions { it: Iterator[Long] =>
-        it.map { id =>
-          val img = new java.awt.image.BufferedImage(
-            dhashW, dhashH, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < dhashH) {
-            var x = 0
-            while (x < dhashW) {
-              img.setRGB(x, y, (gray << 16) | (gray << 8) | gray)
-              x += 1
-            }
-            y += 1
-          }
-          val baos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", baos)
-          MediaRow(id, baos.toByteArray, "image/png")
-        }
-      }
-      .toDF()
-  }
+      idCol: String = "doc_id"): DataFrame =
+    synthesize(ids, idCol, "image/png") { () => _ =>
+      grayPng(dhashW, dhashH)((_, _) => gray)
+    }
 
   /** One media embedding row — shaped exactly like the `embeddings` table
     * (`vec_id`, `embedding: Array[Float]`) so the output plugs straight
@@ -1675,30 +1292,24 @@ object Multimodal {
     * L2-normalized, so downstream ANN/dedup results are reproducible. The
     * output feeds [[Similarity]] unchanged — the multimodal →
     * embedding → near-dup/ANN pipeline is a composition, not a new
-    * operator.
+    * operator. Every payload embeds, a null or empty one included.
     */
-  def featureStub(media: DataFrame, dim: Int): Dataset[MediaVec] = {
-    implicit val enc = Encoders.product[MediaVec]
-    media
-      .select(col("media_id").cast("long"), col("payload").cast("binary"),
-        col("media_type").cast("string"))
-      .as(Encoders.product[MediaRow])
-      .mapPartitions { it: Iterator[MediaRow] =>
-        it.map { r =>
-          val bytes = if (r.payload == null) Array.emptyByteArray else r.payload
-          val v = new Array[Float](dim)
-          var d = 0
-          while (d < dim) {
-            var h = 1125899906842597L ^ (d * 0x9E3779B97F4A7C15L)
-            var i = 0
-            while (i < bytes.length) { h = 31 * h + bytes(i); i += 1 }
-            v(d) = ((h % 1000003L).toFloat / 1000003f)
-            d += 1
-          }
-          val norm = math.sqrt(v.map(x => x.toDouble * x).sum)
-          val unit = if (norm == 0) v else v.map(x => (x / norm).toFloat)
-          MediaVec(r.media_id, unit)
+  def featureStub(media: DataFrame, dim: Int): Dataset[MediaVec] =
+    payloads(media).mapPartitions { it: Iterator[MediaRow] =>
+      it.map { r =>
+        val bytes = if (r.payload == null) Array.emptyByteArray else r.payload
+        val v = new Array[Float](dim)
+        var d = 0
+        while (d < dim) {
+          var h = 1125899906842597L ^ (d * 0x9E3779B97F4A7C15L)
+          var i = 0
+          while (i < bytes.length) { h = 31 * h + bytes(i); i += 1 }
+          v(d) = ((h % 1000003L).toFloat / 1000003f)
+          d += 1
         }
+        val norm = math.sqrt(v.map(x => x.toDouble * x).sum)
+        val unit = if (norm == 0) v else v.map(x => (x / norm).toFloat)
+        MediaVec(r.media_id, unit)
       }
-  }
+    }(Encoders.product[MediaVec])
 }

@@ -4,6 +4,7 @@ package queries
 import graft.operators.{Dedup, Multimodal, Similarity, VectorIndex}
 import graft.operators.Checkpoints.LineageOps
 import graft.operators.VectorIndex.Ivf
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import QueryCommon._
@@ -15,8 +16,8 @@ import QueryCommon._
   */
 object MultimodalQueries {
   def specs(root: String): Seq[QuerySpec] = Seq(
-    // Multimodal plumbing — opaque binary column + byte-level metadata
-    // (decode itself is the stubbed stage, see graft.operators.Multimodal).
+    // Multimodal: opaque binary payload columns, decoded map-side (see
+    // graft.operators.Multimodal).
     // REAL image decode round-trip (javax.imageio — no stub in this path):
     // per doc, synthesize an actual PNG whose dimensions and pixels are
     // arithmetic in doc_id, then recover width/height/pixel-sum from the
@@ -25,11 +26,8 @@ object MultimodalQueries {
     // formula. byte_len/content_md5 of the payload are encoder-dependent
     // and deliberately not compared.
     QuerySpec("multimodal_meta", (s, dir) => {
-      // single-file id table → repartition so codec work is 32-way (see
-      // multimodal_video)
       val media = Multimodal.synthesizeImages(
-        t(s, dir, "documents").select("doc_id")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
+        t(s, dir, "documents").select("doc_id"))
       Multimodal.decodeImageMeta(media).toDF()
         .select(col("media_id").as("doc_id"), col("width"), col("height"),
           col("pixel_sum"), col("decoded"))
@@ -58,14 +56,11 @@ object MultimodalQueries {
     // doc_id, then recover sample rate, frame count, integer-microsecond
     // duration and the signed-sample sum from the ENCODED RIFF CONTAINER
     // BYTES. The oracle replays the arithmetic — a green row proves the
-    // encode→container-parse→PCM-decode loop, not the formula. Video
-    // remains the one documented decode stub (no codec libs here).
+    // encode→container-parse→PCM-decode loop, not the formula. Only the
+    // H.264-class video frame decode stays out of scope (no codec libs).
     QuerySpec("multimodal_audio", (s, dir) => {
-      // single-file id table → repartition so codec work is 32-way (see
-      // multimodal_video)
       val media = Multimodal.synthesizeWavs(
-        t(s, dir, "documents").select("doc_id")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
+        t(s, dir, "documents").select("doc_id"))
       Multimodal.decodeAudioMeta(media).toDF()
         .select(col("media_id").as("doc_id"),
           col("sample_rate").cast("bigint").as("sample_rate"),
@@ -99,8 +94,7 @@ object MultimodalQueries {
     // the winning bin (peak_ok) — detection, not argmax luck.
     QuerySpec("multimodal_audio_spectrum", (s, dir) => {
       val media = Multimodal.synthesizeToneWavs(
-        t(s, dir, "documents").select("doc_id")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
+        t(s, dir, "documents").select("doc_id"))
       Multimodal.audioSpectrum(media).toDF()
         .select(col("media_id").as("doc_id"), col("sample_rate"),
           col("n_samples"), col("dominant_hz"), col("peak_ok"),
@@ -131,18 +125,8 @@ object MultimodalQueries {
     // replays the arithmetic over (doc, frame, x, y); green proves the
     // encode→container-walk→frame-decode loop.
     QuerySpec("multimodal_video", (s, dir) => {
-      // the id table is one parquet file = ONE partition; the per-row
-      // codec work is the cost here, so spread it across the session's
-      // parallelism before the map-side encode/decode (a shuffle of 500
-      // longs buys 32-way frame work). The partition count is EXPLICIT:
-      // a bare repartition(col) is AQE-coalescible, and AQE folds these
-      // few kilobytes straight back into one partition — serializing the
-      // codec work AND letting the oracle sort's range-sampling pass
-      // recompute it single-threaded a second time (measured 5.5 s vs
-      // 0.3 s for the identical pipeline at explicit 32)
       val media = Multimodal.synthesizeGifs(
-        t(s, dir, "documents").select("doc_id")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
+        t(s, dir, "documents").select("doc_id"))
       Multimodal.sampleVideoFrames(media, every = 2).toDF()
         .select(col("media_id").as("doc_id"),
           col("frame_no").cast("bigint").as("frame_no"),
@@ -180,11 +164,8 @@ object MultimodalQueries {
     // the encode→decode→hash loop recovers the ground truth from actual
     // PNG bytes.
     QuerySpec("multimodal_phash", (s, dir) => {
-      // single-file id table → repartition so codec work is 32-way (see
-      // multimodal_video)
       val media = Multimodal.synthesizePhashImages(
-        t(s, dir, "documents").select("doc_id")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
+        t(s, dir, "documents").select("doc_id"))
       Multimodal.imageDHash(media).toDF()
         .select(col("media_id").as("doc_id"), col("hash_hi"),
           col("hash_lo"), col("decoded"))
@@ -210,8 +191,7 @@ object MultimodalQueries {
     // dedup family end-to-end.
     QuerySpec("dedup_phash_pairs", (s, dir) => {
       val media = Multimodal.synthesizePhashImages(
-        t(s, dir, "documents").select("doc_id")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
+        t(s, dir, "documents").select("doc_id"))
       val sigs = Multimodal.imageDHash(media).toDF()
         .filter(col("decoded"))
         .select(col("media_id").as("doc_id"), col("hash_hi"), col("hash_lo"))
@@ -237,7 +217,6 @@ object MultimodalQueries {
     // assignment if it survived, and the final kept flag.
     QuerySpec("pipeline_multimodal", (s, dir) => {
       val docs = t(s, dir, "documents").select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       // cut the synthesized media ONCE (r17): it feeds TWO decode passes
       // (quality gate + dHash), and without the cut the md5-pixel + PNG
       // encode synthesis ran once per consumer; the payload frame is a few
@@ -337,8 +316,7 @@ object MultimodalQueries {
     // corpus without retuning while staying hash-exact here.
     QuerySpec("multimodal_video_quality", (s, dir) => {
       val media = Multimodal.synthesizeQualityGifs(
-        t(s, dir, "documents").select("doc_id")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
+        t(s, dir, "documents").select("doc_id"))
       val st = Multimodal.videoQuality(media).toDF()
         .filter(col("decoded"))
         .select(col("media_id").as("doc_id"), col("n_frames"), col("motion"))
@@ -398,8 +376,7 @@ object MultimodalQueries {
     // default-less traf) to report the true duration and PASS the gate.
     QuerySpec("multimodal_video_meta", (s, dir) => {
       val media = Multimodal.synthesizeMp4s(
-        t(s, dir, "documents").select("doc_id")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
+        t(s, dir, "documents").select("doc_id"))
       Multimodal.decodeMp4Meta(media).toDF()
         .select(col("media_id").as("doc_id"), col("major_brand"),
           col("timescale"), col("duration_units"), col("duration_s"),
@@ -451,8 +428,7 @@ object MultimodalQueries {
     // classes in both engines.
     QuerySpec("multimodal_audio_quality", (s, dir) => {
       val media = Multimodal.synthesizeQualityWavs(
-        t(s, dir, "documents").select("doc_id")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
+        t(s, dir, "documents").select("doc_id"))
       val st = Multimodal.audioQuality(media).toDF()
         .filter(col("decoded"))
         .select(col("media_id").as("doc_id"), col("n_samples"), col("peak"),
@@ -504,7 +480,6 @@ object MultimodalQueries {
     // replays them from the md5 pixel arithmetic at 4 dp.
     QuerySpec("multimodal_quality", (s, dir) => {
       val docs = t(s, dir, "documents").select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       val media = Multimodal.synthesizePhashImages(
           docs.filter(col("doc_id") % 5 =!= 0))
         .unionByName(Multimodal.synthesizeFlatImages(
@@ -560,8 +535,7 @@ object MultimodalQueries {
 
     QuerySpec("multimodal_features", (s, dir) => {
       val media = Multimodal.synthesizePhashImages(
-        t(s, dir, "documents").select("doc_id")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
+        t(s, dir, "documents").select("doc_id"))
       Multimodal.imageFeatures(media, bins = 16).toDF()
         .select(col("media_id").as("doc_id"),
           posexplode(col("histogram")).as(Seq("bin", "n")))
@@ -583,14 +557,9 @@ object MultimodalQueries {
     // composition with every stage oracled (integer histograms make the
     // cosine exactly replayable).
     QuerySpec("ann_image_topk", (s, dir) => {
-      val media = Multimodal.synthesizePhashImages(
-        t(s, dir, "documents").select("doc_id")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
-      val vecs = Multimodal.imageFeatures(media, bins = 16).toDF()
-        .filter(col("decoded"))
-        .select(col("media_id").as("vec_id"),
-          col("histogram").cast("array<double>").as("embedding"))
-      Similarity.bruteForceTopK(vecs, vecs.filter(col("vec_id") < 10), k = 5)
+      val docs = t(s, dir, "documents").select("doc_id")
+      Similarity.bruteForceTopK(imageVecs(docs),
+          imageVecs(docs.filter(col("doc_id") < 10)), k = 5)
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("query_id", "rank")
     },
@@ -610,17 +579,12 @@ object MultimodalQueries {
     // and replays assignment → probe → cosine row-for-row.
     QuerySpec("ann_image_ivf", (s, dir) => {
       val docs = t(s, dir, "documents").select("doc_id")
-      val media = Multimodal.synthesizePhashImages(
-        docs.repartition(s.sparkContext.defaultParallelism, col("doc_id")))
-      val vecs = Multimodal.imageFeatures(media, bins = 16).toDF()
-        .filter(col("decoded"))
-        .select(col("media_id").as("vec_id"),
-          col("histogram").cast("array<double>").as("embedding"))
+      val vecs = imageVecs(docs)
       val path = ensureIndex(s, root, docs, "ivfimg", "centroids") { p =>
         VectorIndex.fit(vecs, Ivf(8)).write(vecs, p)
       }
-      VectorIndex.read(s, path).search(vecs.filter(col("vec_id") < 10), k = 5,
-          corpus = Some(vecs), nProbe = 4)
+      VectorIndex.read(s, path).search(imageVecs(docs.filter(col("doc_id") < 10)),
+          k = 5, corpus = Some(vecs), nProbe = 4)
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("query_id", "rank")
     },
@@ -641,17 +605,12 @@ object MultimodalQueries {
     // centroids table.
     QuerySpec("ann_image_pruned", (s, dir) => {
       val docs = t(s, dir, "documents").select("doc_id")
-      val media = Multimodal.synthesizePhashImages(
-        docs.repartition(s.sparkContext.defaultParallelism, col("doc_id")))
-      val vecs = Multimodal.imageFeatures(media, bins = 16).toDF()
-        .filter(col("decoded"))
-        .select(col("media_id").as("vec_id"),
-          col("histogram").cast("array<double>").as("embedding"))
+      val vecs = imageVecs(docs)
       val path = ensureIndex(s, root, docs, "ivfimgpart", "vectors") { p =>
         VectorIndex.fit(vecs, Ivf(8)).write(vecs, p, partitioned = true)
       }
       VectorIndex.read(s, path)
-          .search(vecs.filter(col("vec_id") < 10), k = 5, nProbe = 4)
+          .search(imageVecs(docs.filter(col("doc_id") < 10)), k = 5, nProbe = 4)
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("query_id", "rank")
     },
@@ -670,7 +629,6 @@ object MultimodalQueries {
     // brute-forces the aligned comparison.
     QuerySpec("dedup_video_pairs", (s, dir) => {
       val docs = t(s, dir, "documents").select("doc_id")
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       val media = Multimodal.synthesizeDupGifs(docs)
       val frames = Multimodal.extractFrameImages(media, every = 1).toDF()
       val sigs = Multimodal.imageDHash(
@@ -742,7 +700,6 @@ object MultimodalQueries {
       // what sampling must neutralize
       val docs = t(s, dir, "documents").select("doc_id")
         .filter(col("doc_id") < 200)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       val media = Multimodal.synthesizeLongDupGifs(docs)
       val frames = Multimodal.extractFrameImages(media, every = 8).toDF()
       val sigs = Multimodal.imageDHash(
@@ -811,7 +768,6 @@ object MultimodalQueries {
     QuerySpec("multimodal_video_scenes", (s, dir) => {
       val docs = t(s, dir, "documents").select("doc_id")
         .filter(col("doc_id") < 100)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       val media = Multimodal.synthesizeSceneGifs(docs)
       val frames = Multimodal.extractFrameImages(media, every = 1).toDF()
       val sigs = Multimodal.imageDHash(
@@ -885,12 +841,7 @@ object MultimodalQueries {
     QuerySpec("ann_image_streamed", (s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents").select("doc_id")
-      val media = Multimodal.synthesizePhashImages(
-        docs.repartition(s.sparkContext.defaultParallelism, col("doc_id")))
-      val vecs = Multimodal.imageFeatures(media, bins = 16).toDF()
-        .filter(col("decoded"))
-        .select(col("media_id").as("vec_id"),
-          col("histogram").cast("array<double>").as("embedding"))
+      val vecs = imageVecs(docs)
       val path = ensureIndex(s, root, docs, "ivfimgstream", "built") { p =>
         graft.streaming.VectorIngest.processBatch(
           vecs.filter(pmod(col("vec_id"), lit(2)) === 0), 0L, p, nCells = 8)
@@ -899,7 +850,7 @@ object MultimodalQueries {
         Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
           .parquet(s"$p/built")
       }
-      VectorIndex.read(s, path).search(vecs.filter(col("vec_id") < 10),
+      VectorIndex.read(s, path).search(imageVecs(docs.filter(col("doc_id") < 10)),
           k = 5, nProbe = 8)
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("query_id", "rank")
@@ -918,8 +869,7 @@ object MultimodalQueries {
     // set (completeness restricted to the emitted scope).
     QuerySpec("dedup_phash_incremental", (s, dir) => {
       val media = Multimodal.synthesizePhashImages(
-        t(s, dir, "documents").select("doc_id")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
+        t(s, dir, "documents").select("doc_id"))
       val sigs = Multimodal.imageDHash(media).toDF()
         .filter(col("decoded"))
         .select(col("media_id").as("doc_id"), col("hash_hi"), col("hash_lo"))
@@ -955,8 +905,7 @@ object MultimodalQueries {
     QuerySpec("dedup_phash_streamed", (s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents").select("doc_id")
-      val media = Multimodal.synthesizePhashImages(
-        docs.repartition(s.sparkContext.defaultParallelism, col("doc_id")))
+      val media = Multimodal.synthesizePhashImages(docs)
       val path = ensureIndex(s, root, docs, "phashstream", "built") { p =>
         graft.streaming.PhashIngest.processBatch(
           media.filter(col("media_id") % 7 =!= 3), 0L, p)
@@ -984,9 +933,7 @@ object MultimodalQueries {
     // recursive CTE — labels, sizes and keepers checked end-to-end.
     QuerySpec("dedup_phash_clusters", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val media = Multimodal.synthesizePhashImages(
-        docs.select("doc_id")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
+      val media = Multimodal.synthesizePhashImages(docs.select("doc_id"))
       val sigs = Multimodal.imageDHash(media).toDF()
         .filter(col("decoded"))
         .select(col("media_id").as("doc_id"), col("hash_hi"), col("hash_lo"))
@@ -1007,9 +954,7 @@ object MultimodalQueries {
     // equivalence proof. Per-crawl cost = new pairs + touched history.
     QuerySpec("dedup_phash_clusters_incremental", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val media = Multimodal.synthesizePhashImages(
-        docs.select("doc_id")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
+      val media = Multimodal.synthesizePhashImages(docs.select("doc_id"))
       val sigs = Multimodal.imageDHash(media).toDF()
         .filter(col("decoded"))
         .select(col("media_id").as("doc_id"), col("hash_hi"), col("hash_lo"))
@@ -1036,16 +981,9 @@ object MultimodalQueries {
     // same 0.6 floor as the text-embedding IVF gate. A regression in the
     // decode → feature → quantizer chain becomes a hash mismatch.
     QuerySpec("ann_image_recall", (s, dir) => {
-      val media = Multimodal.synthesizePhashImages(
-        t(s, dir, "documents").select("doc_id")
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
       // persist: the decode → feature pass feeds both arms' corpus AND
       // query sides (4 consumers); Verify/Bench clearCache per query
-      val vecs = Multimodal.imageFeatures(media, bins = 16).toDF()
-        .filter(col("decoded"))
-        .select(col("media_id").as("vec_id"),
-          col("histogram").cast("array<double>").as("embedding"))
-        .persist()
+      val vecs = imageVecs(t(s, dir, "documents").select("doc_id")).persist()
       val q = vecs.filter(col("vec_id") < 10)
       val brute = Similarity.bruteForceTopK(vecs, q, k = 5)
       val ivf = VectorIndex.fit(vecs, Ivf(8), corpusId = Some(s"img:$dir"))
@@ -1055,6 +993,18 @@ object MultimodalQueries {
     },
       "SELECT count(DISTINCT doc_id) AS n_queries, TRUE AS recall_ok FROM documents WHERE doc_id < 10")
   )
+
+  /** The decoded 16-bin histogram features of the phash fixture for the
+    * `doc_id`s of `ids`, as (`vec_id`, `embedding`). Pixels are a pure
+    * function of `doc_id`, so a query batch is `imageVecs` of its own ids:
+    * filtering the ids decodes only the batch, where filtering the
+    * decoded corpus decodes all of it.
+    */
+  private def imageVecs(ids: DataFrame): DataFrame =
+    Multimodal.imageFeatures(Multimodal.synthesizePhashImages(ids), bins = 16).toDF()
+      .filter(col("decoded"))
+      .select(col("media_id").as("vec_id"),
+        col("histogram").cast("array<double>").as("embedding"))
 
   // Replay of synthesizePhashImages' md5 pixel formula over the 9x8 grid
   // — the shared head of every image-pipeline oracle (dHash signatures

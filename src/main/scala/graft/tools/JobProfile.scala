@@ -7,8 +7,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * JIT/codegen warmup and any cold index build), then a per-job breakdown
   * of its LAST run — wall ms, task time ms, task count and callsite per
   * job, including the jobs query CONSTRUCTION starts (persist+count,
-  * cutLineage) — and the executed plan's per-operator metrics.
-  * Usage: JobProfile <sfDir> <q[,q...]> [runs=2]
+  * cutLineage) — and the executed plan's per-operator metrics. The
+  * queries build under the index root `root` (default
+  * [[SparkEntry.defaultIndexRoot]]).
+  * Usage: JobProfile <sfDir> <q[,q...]> [runs=2] [root]
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
@@ -16,6 +18,8 @@ object JobProfile {
     val names = args(1).split(",")
     val runs  = if (args.length > 2) args(2).toInt else 2
     require(runs >= 1, "runs must be >= 1")
+    val queries = SparkEntry.specs(args.lift(3).getOrElse(SparkEntry.defaultIndexRoot))
+      .map(q => q.name -> q.build).toMap
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.get(s"local[$cpus]", shufflePartitions = cpus)
 
@@ -69,7 +73,7 @@ object JobProfile {
     names.foreach { name =>
       var lastDf: org.apache.spark.sql.DataFrame = null
       def once(): Double = TimedRun.once(spark) {
-        lastDf = SparkEntry.queries(name)(spark, sfDir); lastDf
+        lastDf = queries(name)(spark, sfDir); lastDf
       }.orThrow.sec
       val warm = (1 until runs).map(_ => once())
       jobs.clear(); stageToJob.clear()

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class MultimodalSpec extends SparkSpec {
@@ -47,17 +48,6 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
-  test("decodeImageMeta reports corrupt payloads instead of faking stats") {
-    val bad = Seq(
-      (1L, "not a png at all".getBytes("UTF-8"), "image/png"),
-      (2L, Array.emptyByteArray, "image/png"),
-      (3L, null.asInstanceOf[Array[Byte]], "image/png"))
-      .toDF("media_id", "payload", "media_type")
-    val ms = Multimodal.decodeImageMeta(bad).collect()
-    assert(ms.length === 3 && ms.forall(m =>
-      !m.decoded && m.width === 0 && m.height === 0 && m.pixel_sum === 0L))
-  }
-
   test("resizeImage: real scaled re-encode round-trips through the decoder") {
     val media = Multimodal.synthesizeImages(Seq(40L).toDF("doc_id"))
     val out = Multimodal.resizeImage(media, targetW = 4, targetH = 3).collect().head
@@ -65,11 +55,6 @@ class MultimodalSpec extends SparkSpec {
     val back = javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(out.payload))
     assert(back.getWidth === 4 && back.getHeight === 3)
-    // corrupt input -> zeroed row, not an exception
-    val bad = Seq((9L, "junk".getBytes("UTF-8"), "image/png"))
-      .toDF("media_id", "payload", "media_type")
-    val r = Multimodal.resizeImage(bad, 4, 3).collect().head
-    assert(r.width === 0 && r.payload.isEmpty)
   }
 
   test("synthesizePhashImages -> imageDHash recovers the md5 formula bit-for-bit") {
@@ -104,9 +89,7 @@ class MultimodalSpec extends SparkSpec {
     assert(d <= 2, s"variant drift $d > 2 bits")
   }
 
-  test("imageDHash: corrupt payloads report, arbitrary sizes take the resize path") {
-    val ph = Multimodal.imageDHash(media).collect().map(r => r.media_id -> r).toMap
-    assert(ph.values.forall(r => !r.decoded && r.hash_hi === 0L && r.hash_lo === 0L))
+  test("imageDHash: arbitrary sizes take the resize path, deterministically") {
     // non-grid-size real PNGs (synthesizeImages emits 4..16 x 3..9) go
     // through the bilinear downsample; deterministic across calls
     val ids = Seq(5L, 6L, 40L).toDF("doc_id")
@@ -229,29 +212,6 @@ class MultimodalSpec extends SparkSpec {
     assert(Seq(500L, 1000L, 2000L).contains(r.dominant_hz))
   }
 
-  test("audioSpectrum reports corrupt payloads instead of faking stats") {
-    val bad = Seq(
-      (1L, "not audio".getBytes("UTF-8"), "audio/wav"),
-      (2L, Array.emptyByteArray, "audio/wav"),
-      (3L, null.asInstanceOf[Array[Byte]], "audio/wav"))
-      .toDF("media_id", "payload", "media_type")
-    val rs = Multimodal.audioSpectrum(bad).collect()
-    assert(rs.length === 3 && rs.forall(r =>
-      !r.decoded && !r.peak_ok && r.dominant_hz === 0L))
-  }
-
-  test("decodeAudioMeta reports corrupt payloads instead of faking stats") {
-    val bad = Seq(
-      (1L, "definitely not a wav".getBytes("UTF-8"), "audio/wav"),
-      (2L, Array.emptyByteArray, "audio/wav"),
-      (3L, null.asInstanceOf[Array[Byte]], "audio/wav"))
-      .toDF("media_id", "payload", "media_type")
-    val ms = Multimodal.decodeAudioMeta(bad).collect()
-    assert(ms.length === 3 && ms.forall(m =>
-      !m.decoded && m.sample_rate === 0 && m.n_samples === 0 &&
-        m.sample_sum === 0L && m.duration_us === 0L))
-  }
-
   test("synthesizeGifs -> decodeVideoMeta/sampleVideoFrames round-trip the container") {
     val ids = Seq(0L, 1L, 7L, 44L, 253L)
     val media = Multimodal.synthesizeGifs(ids.toDF("doc_id"))
@@ -303,58 +263,6 @@ class MultimodalSpec extends SparkSpec {
     // and the frames feed the feature extractor -> embedding shape
     val vecs = Multimodal.featureStub(frames, dim = 8).collect()
     assert(vecs.nonEmpty && vecs.forall(_.embedding.length === 8))
-  }
-
-  test("corrupt video payloads: meta reports, frame sampling yields no rows") {
-    val bad = Seq(
-      (1L, "not a gif".getBytes("UTF-8"), "video/gif"),
-      (2L, Array.emptyByteArray, "video/gif"),
-      (3L, null.asInstanceOf[Array[Byte]], "video/gif"))
-      .toDF("media_id", "payload", "media_type")
-    val ms = Multimodal.decodeVideoMeta(bad).collect()
-    assert(ms.length === 3 && ms.forall(m => !m.decoded && m.n_frames === 0))
-    assert(Multimodal.sampleVideoFrames(bad).collect().isEmpty)
-    // a corrupt row mixed among good ones poisons nothing
-    val mixed = Multimodal.synthesizeGifs(Seq(9L).toDF("doc_id")).unionByName(bad)
-    val ok = Multimodal.sampleVideoFrames(mixed).collect()
-    assert(ok.nonEmpty && ok.forall(_.media_id === 9L))
-  }
-
-  test("decodeMeta: per-partition batch decode produces typed metadata, deterministic") {
-    val m1 = Multimodal.decodeMeta(media).collect().map(m => m.media_id -> m).toMap
-    val m2 = Multimodal.decodeMeta(media).collect().map(m => m.media_id -> m).toMap
-    assert(m1(1L).byte_len === "fake-image-bytes-aaaa".length)
-    assert(m1(3L).byte_len === 0)
-    assert(m1(1L).checksum === m2(1L).checksum) // stub decode is deterministic
-    assert(m1(1L).width >= 16 && m1(1L).height >= 16)
-  }
-
-  test("sampleFrames: chunk-index explosion shape") {
-    val frames = Multimodal.sampleFrames(media, chunkSize = 8, every = 1)
-      .filter(col("media_id") === 2L).collect()
-    assert(frames.length === 4) // 39 bytes / 8 ≈ 4 full chunks
-    assert(frames.map(_.getAs[Int]("offset")).toSet === Set(0, 8, 16, 24))
-  }
-
-  test("resizeStub: binary-in binary-out, size tracks target area, deterministic") {
-    val small = Multimodal.resizeStub(media, targetW = 16, targetH = 16).toDF()
-    assert(small.count() === media.count())
-    // every output row carries the target dims; payload emptiness and the
-    // shrink bound track the input (empty in -> empty out)
-    val rows = small.collect()
-    assert(rows.forall(r => r.getAs[Int]("width") === 16 && r.getAs[Int]("height") === 16))
-    val inSizes = media.collect().map(r =>
-      r.getAs[Long]("media_id") ->
-        Option(r.getAs[Array[Byte]]("payload")).map(_.length).getOrElse(0)).toMap
-    rows.foreach { r =>
-      val out = r.getAs[Array[Byte]]("payload").length
-      val in = inSizes(r.getAs[Long]("media_id"))
-      assert(out <= in, s"resize grew ${r.getAs[Long]("media_id")}: $in -> $out")
-      assert((out > 0) === (in > 0), "payload emptiness must track the input")
-    }
-    // pure function of the input: identical payloads on recompute
-    val again = Multimodal.resizeStub(media, 16, 16).toDF()
-    assert(small.exceptAll(again).count() === 0)
   }
 
   test("featureStub composes with the similarity operators end-to-end") {
@@ -654,5 +562,79 @@ class MultimodalSpec extends SparkSpec {
       got(1L).duration_units == 1200L && got(1L).duration_s == 2.0 &&
       got(1L).n_tracks == 1 && got(1L).n_video_tracks == 1)
     assert(!got(2L).decoded && !got(3L).decoded && !got(4L).decoded)
+  }
+
+  // The poison rule, table-driven over every decoder: a null, an empty, a
+  // 16-random-byte and a truncated (first 20 bytes of a valid) payload each
+  // give the decoder's zeroed decoded=false row — no rows for the frame
+  // extractors — and never throw, while a valid payload in the same
+  // partition (id 5) still decodes.
+  private val junk = {
+    val b = new Array[Byte](16)
+    new scala.util.Random(42).nextBytes(b)
+    b
+  }
+  private def poisoned(valid: DataFrame): DataFrame = {
+    val ok = valid.select("payload", "media_type").as[(Array[Byte], String)].collect().head
+    Seq((1L, null.asInstanceOf[Array[Byte]]), (2L, Array.emptyByteArray),
+        (3L, junk), (4L, ok._1.take(20)), (5L, ok._1))
+      .map { case (id, b) => (id, b, ok._2) }
+      .toDF("media_id", "payload", "media_type").coalesce(1)
+  }
+  /** Every field after `media_id` is zero, false, empty or all-zero. */
+  private def zeroed(row: Product): Boolean = row.productIterator.drop(1).forall {
+    case b: Boolean => !b
+    case n: Int => n == 0
+    case n: Long => n == 0L
+    case d: Double => d == 0.0
+    case s: String => s.isEmpty
+    case a: Array[Long] => a.forall(_ == 0L)
+    case a: Array[Byte] => a.isEmpty
+    case other => fail(s"unexpected field $other")
+  }
+
+  private val one = Seq(5L).toDF("doc_id")
+  private val rowDecoders: Seq[(String, DataFrame, DataFrame => Seq[Product])] = Seq(
+    ("decodeImageMeta", Multimodal.synthesizeImages(one),
+      m => Multimodal.decodeImageMeta(m).collect().toSeq),
+    ("resizeImage", Multimodal.synthesizeImages(one),
+      m => Multimodal.resizeImage(m, 4, 3).collect().toSeq),
+    ("imageDHash", Multimodal.synthesizePhashImages(one),
+      m => Multimodal.imageDHash(m).collect().toSeq),
+    ("imageFeatures", Multimodal.synthesizePhashImages(one),
+      m => Multimodal.imageFeatures(m).collect().toSeq),
+    ("imageQuality", Multimodal.synthesizePhashImages(one),
+      m => Multimodal.imageQuality(m).collect().toSeq),
+    ("decodeAudioMeta", Multimodal.synthesizeWavs(one),
+      m => Multimodal.decodeAudioMeta(m).collect().toSeq),
+    ("audioQuality", Multimodal.synthesizeQualityWavs(one),
+      m => Multimodal.audioQuality(m).collect().toSeq),
+    ("audioSpectrum", Multimodal.synthesizeToneWavs(one),
+      m => Multimodal.audioSpectrum(m).collect().toSeq),
+    ("decodeVideoMeta", Multimodal.synthesizeGifs(one),
+      m => Multimodal.decodeVideoMeta(m).collect().toSeq),
+    ("videoQuality", Multimodal.synthesizeQualityGifs(one),
+      m => Multimodal.videoQuality(m).collect().toSeq),
+    ("decodeMp4Meta", Multimodal.synthesizeMp4s(one),
+      m => Multimodal.decodeMp4Meta(m).collect().toSeq))
+
+  rowDecoders.foreach { case (name, valid, run) =>
+    test(s"$name reports corrupt payloads instead of faking stats") {
+      val rows = run(poisoned(valid))
+        .map(r => r.productElement(0).asInstanceOf[Long] -> r).toMap
+      assert(rows.keySet === Set(1L, 2L, 3L, 4L, 5L))
+      for (id <- 1L to 4L) assert(zeroed(rows(id)), s"poison input $id: ${rows(id)}")
+      assert(!zeroed(rows(5L)), "the valid payload did not decode")
+    }
+  }
+
+  Seq[(String, DataFrame => Seq[Long])](
+    "sampleVideoFrames" -> (m => Multimodal.sampleVideoFrames(m).collect().map(_.media_id).toSeq),
+    "extractFrameImages" -> (m => Multimodal.extractFrameImages(m).collect().map(_.media_id).toSeq)
+  ).foreach { case (name, run) =>
+    test(s"$name yields no rows for corrupt payloads") {
+      val ids = run(poisoned(Multimodal.synthesizeGifs(one)))
+      assert(ids.nonEmpty && ids.forall(_ == 5L))
+    }
   }
 }
