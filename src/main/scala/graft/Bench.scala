@@ -47,6 +47,9 @@ import graft.tools.TimedRun.{Run, num}
   *     (`gc_detail`), host 1-min load at each run's end (`load_runs`).
   *     These files are what a judge should read; the stdout line exists
   *     to make the driver's tail capture parse.
+  *
+  * Usage: Bench [root] — the queries build under the index root `root`
+  * (default [[SparkEntry.defaultIndexRoot]]), as Verify's 4th argument.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -54,6 +57,8 @@ object Bench {
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val runs  = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val warm  = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "1") == "1"
+    val queries = SparkEntry.specs(args.headOption.getOrElse(SparkEntry.defaultIndexRoot))
+      .map(q => q.name -> q.build)
     val spark = GraftSession.get(s"local[$cpus]", shufflePartitions = cpus)
 
     // one timed execution plus its steal/GC/load triple (TimedRun.once)
@@ -69,7 +74,7 @@ object Bench {
     val loadStart = TimedRun.loadAvg
     val suite = new TimedRun.Mark
     val noRun = Run(Double.NaN, -1L, -1L, Double.NaN)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = queries.sortBy(_._1).map { case (name, fn) =>
       val loadBefore = TimedRun.loadAvg
       // warm pass: untimed-for-the-headline but RECORDED — the cold/warm
       // gap is itself adjudication evidence (a query whose cold run is 7×

@@ -29,8 +29,32 @@ import org.apache.spark.sql.DataFrame
   * the LogicalRDD they return), so the iterative kernels' reuse of the
   * node/src hash layout across rounds — the no-reshuffle-per-round
   * invariant — holds under either tier.
+  *
+  * [[materialized]] is the in-memory sibling for a frame with several
+  * consumers in one query: persist and count, lineage kept.
   */
 object Checkpoints {
+  /** Persist AND eagerly materialize a frame that has several downstream
+    * consumers. persist() alone is lazy: when one action has three stages
+    * reading the cache, the first tasks of each stage race to compute the
+    * same blocks (`Block rdd_N already exists` churn — observed tripling
+    * the most expensive map stage of the r4 minhash plan). The count()
+    * forces a single computation before any consumer starts. At scale this
+    * is the in-session analog of writing an intermediate table.
+    *
+    * Lifetime contract: the cache lives until the session drops it — the
+    * returned frame feeds lazy consumers, so this function cannot
+    * unpersist. Verify/Bench call `spark.catalog.clearCache()` after
+    * every query; a long-lived caller looping over corpora must do the
+    * same (or unpersist the operator's result lineage) or caches
+    * accumulate.
+    */
+  private[operators] def materialized(df: DataFrame): DataFrame = {
+    val p = df.persist()
+    p.count()
+    p
+  }
+
   implicit final class LineageOps(private val df: DataFrame) extends AnyVal {
     /** Eagerly materialize and truncate lineage — reliable when the
       * context has a checkpoint dir, local otherwise.

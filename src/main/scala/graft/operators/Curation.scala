@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.TextStats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
+import graft.operators.Checkpoints.materialized
 import org.apache.spark.sql.functions._
 
 /** Corpus-curation operators for the LLM-data-pipeline surface: rule-based
@@ -160,8 +161,8 @@ object Curation {
       explode(split(lower(trim(col(textCol))), " ")).as("token"))
     // persisted + eagerly counted: feeds BOTH the vocab count table and the
     // scoring join (lazy persist lets the two consumers race — see
-    // Dedup.materialized)
-    val t = toks.persist(); t.count()
+    // Checkpoints.materialized)
+    val t = materialized(toks)
     val counts = t.groupBy(col("token")).agg(count(lit(1)).as("tf_corpus"))
     val totals = counts.agg(sum(col("tf_corpus")).as("total"))
     t.join(counts, Seq("token"))
@@ -209,7 +210,7 @@ object Curation {
     // persist + eager count BEFORE the explode: the bigram expression must
     // not be re-inlined into a Generate-inferred scan filter (the
     // InferFiltersFromGenerate trap measured on the shingle operators)
-    val m = withBigrams.persist(); m.count()
+    val m = materialized(withBigrams)
     val e = m.select(col("doc_id"), explode(col("bgs")).as("bg"))
     val bgCounts = e.groupBy(col("bg")).agg(count(lit(1)).as("c2"))
     // c(w1·) = occurrences of w1 as a bigram context — derived from the
@@ -394,7 +395,7 @@ object Curation {
   /** Shared head of the keyword queries: per-(doc, token) term frequencies
     * with corpus-common tokens removed (document frequency above
     * `maxDfFrac`). The tf frame feeds BOTH the doc-frequency table and the
-    * ranking stage — persist + eager count (Dedup.materialized shape).
+    * ranking stage — persist + eager count (Checkpoints.materialized shape).
     */
   private def dfCappedTf(docs: DataFrame, textCol: String, idCol: String,
       maxDfFrac: Double, minLen: Int): DataFrame = {
@@ -729,7 +730,7 @@ object Curation {
     // 12 s at sf0.1. (The old 0.5 s bench reading was an artifact of
     // count()-time join elimination, not of this pipeline being cheap —
     // see Bench.timeOnce.)
-    val sh = Dedup.materialized(
+    val sh = materialized(
       Dedup.shingled(Dedup.spread(docs, idCol), textCol, idCol, n))
     val ex = sh.select(col("doc_id"), explode(col("shingles")).as("span"))
     // distinct-doc count per span; shingles are distinct within a doc, so
@@ -824,7 +825,7 @@ object Curation {
     // InferFiltersFromGenerate trap): the feature table feeds the
     // source/target counts, the totals and the scoring join
     val f = {
-      val m = base.persist(); m.count()
+      val m = materialized(base)
       val e = m.select(col("doc_id"), col("is_target"),
           explode(col("bgs")).as("bg"))
         .select(col("doc_id"), col("is_target"),
@@ -891,7 +892,7 @@ object Curation {
     // InferFiltersFromGenerate trap); the gram table feeds the hot-gram
     // counts and the positional semi-join
     val f = {
-      val m = toks.persist(); m.count()
+      val m = materialized(toks)
       val e = m.select(col("doc_id"), explode(col("sh")).as("s"))
         .select(col("doc_id"), col("s.i").as("i"), col("s.g").as("g"))
         .persist()

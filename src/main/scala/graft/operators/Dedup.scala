@@ -3,7 +3,7 @@ package graft.operators
 import graft.functions.TextStats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
-import graft.operators.Checkpoints.LineageOps
+import graft.operators.Checkpoints.{LineageOps, materialized}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for the LLM-data-pipeline surface (builder brief;
@@ -31,27 +31,6 @@ object Dedup {
     val target = docs.sparkSession.sparkContext.defaultParallelism
     if (docs.rdd.getNumPartitions < target) docs.repartition(target, col(idCol))
     else docs
-  }
-
-  /** Persist AND eagerly materialize a frame that has several downstream
-    * consumers. persist() alone is lazy: when one action has three stages
-    * reading the cache, the first tasks of each stage race to compute the
-    * same blocks (`Block rdd_N already exists` churn — observed tripling
-    * the most expensive map stage of the r4 minhash plan). The count()
-    * forces a single computation before any consumer starts. At scale this
-    * is the in-session analog of writing an intermediate table.
-    *
-    * Lifetime contract: the cache lives until the session drops it — the
-    * returned frame feeds lazy consumers, so this function cannot
-    * unpersist. Verify/Bench call `spark.catalog.clearCache()` after
-    * every query; a long-lived caller looping over corpora must do the
-    * same (or unpersist the operator's result lineage) or caches
-    * accumulate.
-    */
-  private[operators] def materialized(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    p.count()
-    p
   }
 
   /** Exact dedup: group on md5(text). One shuffle, map-side partial

@@ -3,6 +3,7 @@ package queries
 
 import graft.operators.{Retrieval, Similarity, VectorIndex}
 import graft.operators.VectorIndex.{Ivf, IvfPq, Lsh, Pq}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import QueryCommon._
 
@@ -12,6 +13,38 @@ import QueryCommon._
   * One [[QuerySpec]] per query: the Spark body beside its DuckDB oracle.
   */
 object AnnQueries {
+
+  /** The persisted IVF centroids over `embeddings` — one build for
+    * `ann_ivf_topk`, `ann_ivfpq_topk`, `dedup_semantic` and
+    * `curation_cluster_balance`, whose oracles all read this table.
+    */
+  private[queries] def ivfPath(s: SparkSession, root: String, dir: String): String = {
+    val emb = t(s, dir, "embeddings")
+    ensureIndex(s, root, emb, "ivf") { p =>
+      VectorIndex.fit(emb, Ivf(8)).write(emb, p)
+    }
+  }
+
+  /** The flat persisted BM25 index over `documents`, shared by
+    * `text_bm25_topk` and `text_bm25_incremental`'s shared oracle.
+    */
+  private def bm25Path(s: SparkSession, root: String, dir: String): String = {
+    val docs = t(s, dir, "documents")
+    ensureIndex(s, root, docs, "bm25") { p =>
+      Retrieval.writeIndex(docs, "text", "doc_id", p)
+    }
+  }
+
+  /** The token-bucket-partitioned BM25 index, shared by
+    * `text_bm25_pruned` and `hybrid_rrf_topk`'s lexical leg.
+    */
+  private def bm25PartPath(s: SparkSession, root: String, dir: String): String = {
+    val docs = t(s, dir, "documents")
+    ensureIndex(s, root, docs, "bm25part") { p =>
+      Retrieval.writeIndexPartitioned(docs, "text", "doc_id", p, nBuckets = 16)
+    }
+  }
+
   def specs(root: String): Seq[QuerySpec] = Seq(
     // Brute-force cosine top-k over embeddings (ANN baseline).
     QuerySpec("ann_cosine_topk", (s, dir) => {
@@ -29,7 +62,7 @@ object AnnQueries {
     // and the cosine top-5 row-for-row. Recall gated by ann_lsh_recall.
     QuerySpec("ann_lsh_topk", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val path = ensureIndex(s, root, emb, "lsh", "planes") { p =>
+      val path = ensureIndex(s, root, emb, "lsh") { p =>
         VectorIndex.fit(emb, Lsh(dim = 64, bits = 4, tables = 16)).write(emb, p)
       }
       VectorIndex.read(s, path).search(emb.filter(col("vec_id") < 10), k = 5, Some(emb))
@@ -71,9 +104,7 @@ object AnnQueries {
     // row-for-row. Recall vs brute force is gated by ann_ivf_recall.
     QuerySpec("ann_ivf_topk", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val path = ensureIndex(s, root, emb, "ivf", "centroids") { p =>
-        VectorIndex.fit(emb, Ivf(8)).write(emb, p)
-      }
+      val path = ivfPath(s, root, dir)
       VectorIndex.read(s, path).search(emb.filter(col("vec_id") < 10), k = 5,
           corpus = Some(emb), nProbe = 4)
         .withColumn("rank", col("rank").cast("bigint"))
@@ -97,7 +128,7 @@ object AnnQueries {
     // ann_ivf_topk read from the partitioned index's centroids.
     QuerySpec("ann_ivf_pruned", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val path = ensureIndex(s, root, emb, "ivfpart", "vectors") { p =>
+      val path = ensureIndex(s, root, emb, "ivfpart") { p =>
         VectorIndex.fit(emb, Ivf(8)).write(emb, p, partitioned = true)
       }
       VectorIndex.read(s, path).search(emb.filter(col("vec_id") < 10),
@@ -116,18 +147,14 @@ object AnnQueries {
     // search runs over the accumulation. nProbe = nCells probes every
     // cell, making the search EXACT — so the brute-force oracle verifies
     // the accumulation itself: every batch's vectors present exactly
-    // once, correctly assigned and scored. A one-row sentinel is written
-    // LAST so ensureIndex's marker can never see a half-built stream.
+    // once, correctly assigned and scored.
     QuerySpec("ann_ivf_streamed", (s, dir) => {
-      import s.implicits._
       val emb = t(s, dir, "embeddings")
-      val path = ensureIndex(s, root, emb, "ivfstream", "built") { p =>
+      val path = ensureIndex(s, root, emb, "ivfstream") { p =>
         graft.streaming.VectorIngest.processBatch(
           emb.filter(pmod(col("vec_id"), lit(2)) === 0), 0L, p, nCells = 8)
         graft.streaming.VectorIngest.processBatch(
           emb.filter(pmod(col("vec_id"), lit(2)) === 1), 1L, p, nCells = 8)
-        Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
-          .parquet(s"$p/built")
       }
       VectorIndex.read(s, path).search(emb.filter(col("vec_id") < 10),
           k = 5, nProbe = 8)
@@ -178,7 +205,7 @@ object AnnQueries {
     // whole search row-for-row. Recall is gated by ann_pq_recall.
     QuerySpec("ann_pq_topk", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val path = ensureIndex(s, root, emb, "pq", "codes") { p =>
+      val path = ensureIndex(s, root, emb, "pq") { p =>
         VectorIndex.fit(emb, Pq()).write(emb, p)
       }
       VectorIndex.read(s, path).search(emb.filter(col("vec_id") < 10),
@@ -256,19 +283,17 @@ object AnnQueries {
     // the composition row-for-row. Recall gated by ann_ivfpq_recall.
     QuerySpec("ann_ivfpq_topk", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val ivfPath = ensureIndex(s, root, emb, "ivf", "centroids") { p =>
-        VectorIndex.fit(emb, Ivf(8)).write(emb, p)
-      }
+      val centroids = ivfPath(s, root, dir)
       // the PQ half at the r12 accuracy budget: ksub=32 direct-coded
       // books (residual coding was A/B'd and REJECTED on this corpus —
       // near-isotropic unit vectors make residuals carry more energy
       // than the vectors; see VectorIndex.IvfPq's scaladoc), and
       // nProbe=6 because the probe-4 IVF ceiling is 0.78 recall@5 at
       // sf0.1 — no code quality can clear 0.80 under it
-      val pqPath = ensureIndex(s, root, emb, "pq32", "codes") { p =>
+      val pqPath = ensureIndex(s, root, emb, "pq32") { p =>
         VectorIndex.fit(emb, Pq(ksub = 32)).write(emb, p)
       }
-      VectorIndex.read(s, ivfPath, pqPath).search(emb.filter(col("vec_id") < 10),
+      VectorIndex.read(s, centroids, pqPath).search(emb.filter(col("vec_id") < 10),
           k = 5, corpus = Some(emb), nProbe = 6)
         .withColumn("rank", col("rank").cast("bigint"))
         .orderBy("query_id", "rank")
@@ -290,7 +315,7 @@ object AnnQueries {
     // ann_ivfpq_topk, read from this index's own tables.
     QuerySpec("ann_ivfpq_pruned", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val path = ensureIndex(s, root, emb, "ivfpqpart32", "codes") { p =>
+      val path = ensureIndex(s, root, emb, "ivfpqpart32") { p =>
         VectorIndex.fit(emb, IvfPq(ksub = 32)).write(emb, p, partitioned = true)
       }
       VectorIndex.read(s, path).search(emb.filter(col("vec_id") < 10),
@@ -313,23 +338,16 @@ object AnnQueries {
     // ann_ivfpq_pruned, so the same replay oracle verifies that a
     // streamed index can never drift from its batch-built twin.
     QuerySpec("ann_ivfpq_streamed", (s, dir) => {
-      import s.implicits._
       val emb = t(s, dir, "embeddings")
-      val path = ensureIndex(s, root, emb, "ivfpqstream32", "built") { p =>
-        // crash-reentrant: a run killed between the first processBatch and
-        // the built sentinel leaves codes/ behind, and bootstrap
-        // (correctly) refuses to re-fit meta over live codes — so a
-        // re-entered build clears the partial index first; the seeded
-        // fits make the rebuild byte-identical.
-        val fsP = new org.apache.hadoop.fs.Path(p)
-        fsP.getFileSystem(s.sessionState.newHadoopConf()).delete(fsP, true)
+      // crash-reentrant through ensureIndex's cleanup: bootstrap refuses
+      // to re-fit meta over live codes, and an interrupted build starts
+      // again from an empty entry
+      val path = ensureIndex(s, root, emb, "ivfpqstream32") { p =>
         graft.streaming.PqIngest.bootstrap(emb, p, nCells = 8, ksub = 32)
         graft.streaming.PqIngest.processBatch(
           emb.filter(pmod(col("vec_id"), lit(2)) === 0), 0L, p)
         graft.streaming.PqIngest.processBatch(
           emb.filter(pmod(col("vec_id"), lit(2)) === 1), 1L, p)
-        Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
-          .parquet(s"$p/built")
       }
       VectorIndex.read(s, path).search(emb.filter(col("vec_id") < 10),
           k = 5, corpus = Some(emb), nProbe = 6)
@@ -369,9 +387,7 @@ object AnnQueries {
     // construction (precision 1); recall measured by dedup_semantic_recall.
     QuerySpec("dedup_semantic", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val path = ensureIndex(s, root, emb, "ivf", "centroids") { p =>
-        VectorIndex.fit(emb, Ivf(8)).write(emb, p)
-      }
+      val path = ivfPath(s, root, dir)
       Similarity.semanticPairs(VectorIndex.read(s, path), emb, threshold = 0.45,
           assignProbes = 2)
         .orderBy("doc_a", "doc_b")
@@ -559,9 +575,7 @@ object AnnQueries {
     // tables and replays the per-term rounded-decimal scoring row-for-row.
     QuerySpec("text_bm25_topk", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val path = ensureIndex(s, root, docs, "bm25", "stats") { p =>
-        Retrieval.writeIndex(docs, "text", "doc_id", p)
-      }
+      val path = bm25Path(s, root, dir)
       val q = docs.filter(pmod(col("doc_id"), lit(100)) === 7)
         .select(col("doc_id").as("query_id"),
           array_join(slice(split(lower(trim(col("text"))), " "), 1, 8), " ")
@@ -587,9 +601,7 @@ object AnnQueries {
     // from the partitioned files.
     QuerySpec("text_bm25_pruned", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val path = ensureIndex(s, root, docs, "bm25part", "stats") { p =>
-        Retrieval.writeIndexPartitioned(docs, "text", "doc_id", p, nBuckets = 16)
-      }
+      val path = bm25PartPath(s, root, dir)
       val q = docs.filter(pmod(col("doc_id"), lit(100)) === 7)
         .select(col("doc_id").as("query_id"),
           array_join(slice(split(lower(trim(col("text"))), " "), 1, 8), " ")
@@ -611,17 +623,14 @@ object AnnQueries {
     // search. Same query set as text_bm25_pruned: equal rows = the
     // streamed index answers exactly like the batch-built one.
     QuerySpec("text_bm25_streamed", (s, dir) => {
-      import s.implicits._
       val docs = t(s, dir, "documents")
-      val path = ensureIndex(s, root, docs, "bm25stream", "built") { p =>
+      val path = ensureIndex(s, root, docs, "bm25stream") { p =>
         graft.streaming.IndexIngest.processBatchPartitioned(
           docs.filter(pmod(col("doc_id"), lit(2)) === 0), 0L, p,
           "text", "doc_id", nBuckets = 16)
         graft.streaming.IndexIngest.processBatchPartitioned(
           docs.filter(pmod(col("doc_id"), lit(2)) === 1), 1L, p,
           "text", "doc_id", nBuckets = 16)
-        Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
-          .parquet(s"$p/built")
       }
       val q = docs.filter(pmod(col("doc_id"), lit(100)) === 7)
         .select(col("doc_id").as("query_id"),
@@ -647,9 +656,7 @@ object AnnQueries {
       // the SHARED oracle replays from the persisted index — ensure it
       // exists so this query verifies standalone, not only after its
       // sibling happens to have built the index
-      ensureIndex(s, root, docs, "bm25", "stats") { p =>
-        Retrieval.writeIndex(docs, "text", "doc_id", p)
-      }
+      bm25Path(s, root, dir)
       val (p1, d1) = Retrieval.invertedIndex(
         docs.filter(pmod(col("doc_id"), lit(2)) === 0), "text", "doc_id")
       val (p2, d2) = Retrieval.invertedIndex(
@@ -674,9 +681,7 @@ object AnnQueries {
       // query-term buckets prune the postings listing before any file
       // opens; row-identical to the flat search (Retrieval scaladoc +
       // shared oracle shape), just with the 100 TB-shaped scan
-      val path = ensureIndex(s, root, docs, "bm25part", "stats") { p =>
-        Retrieval.writeIndexPartitioned(docs, "text", "doc_id", p, nBuckets = 16)
-      }
+      val path = bm25PartPath(s, root, dir)
       val q = docs.filter(pmod(col("doc_id"), lit(100)) === 7)
         .select(col("doc_id").as("query_id"),
           array_join(slice(split(lower(trim(col("text"))), " "), 1, 8), " ")

@@ -3,7 +3,6 @@ package queries
 
 import graft.functions.TextStats
 import graft.operators.{Curation, Dedup, Expectations, Similarity, VectorIndex}
-import graft.operators.VectorIndex.Ivf
 import org.apache.spark.sql.functions._
 import QueryCommon._
 
@@ -401,10 +400,8 @@ object CurationQueries {
     // row-for-row from the same centroid table the ANN queries use.
     QuerySpec("curation_cluster_balance", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val path = ensureIndex(s, root, emb, "ivf", "centroids") { p =>
-        VectorIndex.fit(emb, Ivf(8)).write(emb, p)
-      }
-      Similarity.clusterBalancedSample(VectorIndex.read(s, path), emb, cap = 40)
+      Similarity.clusterBalancedSample(VectorIndex.read(s, AnnQueries.ivfPath(s, root, dir)),
+          emb, cap = 40)
         .orderBy("vec_id")
     },
       // Same persisted-centroid assignment replay as ann_ivf_topk (cr = 1),

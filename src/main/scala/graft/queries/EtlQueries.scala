@@ -4,7 +4,6 @@ package queries
 import graft.functions.{Doi, Fuzzy}
 import graft.operators.Dedup
 import graft.operators.Checkpoints.LineageOps
-import graft.sources.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -37,6 +36,18 @@ object EtlQueries {
     (base, updates)
   }
 
+  /** The uncompacted two-batch changelog of [[upsertFixture]] (batch id =
+    * version), shared by the time-travel, change and change-feed queries:
+    * the history they read is still on disk.
+    */
+  private def upsertAsOfPath(s: SparkSession, root: String, dir: String): String = {
+    val (base, updates) = upsertFixture(s, dir)
+    ensureIndex(s, root, t(s, dir, "customer"), "upsertasof") { p =>
+      graft.streaming.UpsertIngest.processBatch(base, 0L, p)
+      graft.streaming.UpsertIngest.processBatch(updates, 1L, p)
+    }
+  }
+
   /** CASSETTE-RECORDED HTTP fixtures for S7 (DOI-metadata enrichment,
     * reference `synth/resources.py:184-218`) and S8 (bibliographic
     * search, `:259-302`) — the VCR pattern: responses are captured ONCE
@@ -53,79 +64,76 @@ object EtlQueries {
     * posture: the cache TABLE is the interface, network happens once per
     * novel key, downstream is pure joins.
     */
-  private def httpCassettePath(s: SparkSession, root: String, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("httpcassette", root, dir, Tables.listingKey(s, dir)), _ => {
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      ensureIndex(s, root, docs, "httpcassette", "built") { p =>
-        import s.implicits._
-        val server = com.sun.net.httpserver.HttpServer.create(
-          new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-        // S7 endpoint: metadata JSON, every field derivable from the key
-        // (the oracle recomputes them in SQL); keys ending in '3' 404 —
-        // the failure leg lands in the cassette as ok=false
-        server.createContext("/works/", { exchange =>
-          val doi = java.net.URLDecoder.decode(
-            exchange.getRequestURI.getRawPath.stripPrefix("/works/"), "UTF-8")
-          if (doi.endsWith("3")) exchange.sendResponseHeaders(404, -1)
-          else {
-            val len = doi.length
-            val body = (s"""{"DOI":"$doi","publisher":"P${len % 7}",""" +
-              s""""cited":${len * 3 + doi.count(_ == '7')}}""").getBytes("UTF-8")
-            exchange.getResponseHeaders.add("Content-Type", "application/json")
-            exchange.sendResponseHeaders(200, body.length)
-            exchange.getResponseBody.write(body)
-          }
-          exchange.close()
-        })
-        // S8 endpoint: candidate list for a title query — the exact title
-        // plus two static decoys; every 7th (topic+volume) query omits the
-        // exact title, so the downstream fuzzy gate has a real miss leg
-        server.createContext("/search/", { exchange =>
-          val q = java.net.URLDecoder.decode(
-            exchange.getRequestURI.getRawPath.stripPrefix("/search/"), "UTF-8")
-          val tv = "study of topic (\\d+) volume (\\d+)".r
-          val omit = q match {
-            case tv(t, v) => (t.toInt + v.toInt) % 7 == 0
-            case _        => true
-          }
-          val cands = (if (omit) Seq.empty else Seq(q)) ++
-            Seq("archive record alpha", "unrelated catalog entry beta")
-          val body = cands.mkString("|").getBytes("UTF-8")
+  private def httpCassettePath(s: SparkSession, root: String, dir: String): String = {
+    val docs = t(s, dir, "documents").select(col("doc_id"))
+    ensureIndex(s, root, docs, "httpcassette") { p =>
+      import s.implicits._
+      val server = com.sun.net.httpserver.HttpServer.create(
+        new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+      // S7 endpoint: metadata JSON, every field derivable from the key
+      // (the oracle recomputes them in SQL); keys ending in '3' 404 —
+      // the failure leg lands in the cassette as ok=false
+      server.createContext("/works/", { exchange =>
+        val doi = java.net.URLDecoder.decode(
+          exchange.getRequestURI.getRawPath.stripPrefix("/works/"), "UTF-8")
+        if (doi.endsWith("3")) exchange.sendResponseHeaders(404, -1)
+        else {
+          val len = doi.length
+          val body = (s"""{"DOI":"$doi","publisher":"P${len % 7}",""" +
+            s""""cited":${len * 3 + doi.count(_ == '7')}}""").getBytes("UTF-8")
+          exchange.getResponseHeaders.add("Content-Type", "application/json")
           exchange.sendResponseHeaders(200, body.length)
           exchange.getResponseBody.write(body)
-          exchange.close()
-        })
-        // daemon-flagged pool AND an explicit shutdown: server.stop does
-        // NOT shut a user-supplied executor down, and its non-daemon
-        // threads would pin the JVM open after main returns
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(8,
-          (r: Runnable) => { val th = new Thread(r); th.setDaemon(true); th })
-        server.setExecutor(pool)
-        server.start()
-        try {
-          val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-          val emptyCache = Seq.empty[(String, String)].toDF("key", "value")
-          val doiKeys = docs.filter(pmod(col("doc_id"), lit(5)) =!= 4)
-            .select(concat(lit("10."),
-              (pmod(col("doc_id"), lit(900)) + 100).cast("string"),
-              lit("/k"), col("doc_id").cast("string")).as("key"))
-          graft.sources.HttpEnrichment.fetchMisses(doiKeys, emptyCache,
-              new graft.sources.HttpFetcher(k => s"$base/works/$k"),
-              maxPerSecond = 1e9)
-            .toDF().write.mode("overwrite").parquet(s"$p/works")
-          val qKeys = docs.select(concat(lit("study of topic "),
-            pmod(col("doc_id"), lit(50)).cast("string"), lit(" volume "),
-            pmod(col("doc_id"), lit(9)).cast("string")).as("key"))
-          graft.sources.HttpEnrichment.fetchMisses(qKeys, emptyCache,
-              new graft.sources.HttpFetcher(k => s"$base/search/" +
-                java.net.URLEncoder.encode(k, "UTF-8")),
-              maxPerSecond = 1e9)
-            .toDF().write.mode("overwrite").parquet(s"$p/search")
-          s.range(1).select(lit(1L).as("ok")).write.mode("overwrite")
-            .parquet(s"$p/built")
-        } finally { server.stop(0); pool.shutdownNow() }
-      }
-    })
+        }
+        exchange.close()
+      })
+      // S8 endpoint: candidate list for a title query — the exact title
+      // plus two static decoys; every 7th (topic+volume) query omits the
+      // exact title, so the downstream fuzzy gate has a real miss leg
+      server.createContext("/search/", { exchange =>
+        val q = java.net.URLDecoder.decode(
+          exchange.getRequestURI.getRawPath.stripPrefix("/search/"), "UTF-8")
+        val tv = "study of topic (\\d+) volume (\\d+)".r
+        val omit = q match {
+          case tv(t, v) => (t.toInt + v.toInt) % 7 == 0
+          case _        => true
+        }
+        val cands = (if (omit) Seq.empty else Seq(q)) ++
+          Seq("archive record alpha", "unrelated catalog entry beta")
+        val body = cands.mkString("|").getBytes("UTF-8")
+        exchange.sendResponseHeaders(200, body.length)
+        exchange.getResponseBody.write(body)
+        exchange.close()
+      })
+      // daemon-flagged pool AND an explicit shutdown: server.stop does
+      // NOT shut a user-supplied executor down, and its non-daemon
+      // threads would pin the JVM open after main returns
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8,
+        (r: Runnable) => { val th = new Thread(r); th.setDaemon(true); th })
+      server.setExecutor(pool)
+      server.start()
+      try {
+        val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+        val emptyCache = Seq.empty[(String, String)].toDF("key", "value")
+        val doiKeys = docs.filter(pmod(col("doc_id"), lit(5)) =!= 4)
+          .select(concat(lit("10."),
+            (pmod(col("doc_id"), lit(900)) + 100).cast("string"),
+            lit("/k"), col("doc_id").cast("string")).as("key"))
+        graft.sources.HttpEnrichment.fetchMisses(doiKeys, emptyCache,
+            new graft.sources.HttpFetcher(k => s"$base/works/$k"),
+            maxPerSecond = 1e9)
+          .toDF().write.mode("overwrite").parquet(s"$p/works")
+        val qKeys = docs.select(concat(lit("study of topic "),
+          pmod(col("doc_id"), lit(50)).cast("string"), lit(" volume "),
+          pmod(col("doc_id"), lit(9)).cast("string")).as("key"))
+        graft.sources.HttpEnrichment.fetchMisses(qKeys, emptyCache,
+            new graft.sources.HttpFetcher(k => s"$base/search/" +
+              java.net.URLEncoder.encode(k, "UTF-8")),
+            maxPerSecond = 1e9)
+          .toDF().write.mode("overwrite").parquet(s"$p/search")
+      } finally { server.stop(0); pool.shutdownNow() }
+    }
+  }
 
   /** The four resource sheets of `s4_xlsx`, in `Schemas.xlsx*` column
     * order, derived from TPC-H rows: categories from region, institutions
@@ -174,15 +182,13 @@ object EtlQueries {
     val sheets = xlsxFixtureSheets(s, dir)
     val corpus = sheets.map { case (_, df) => df.select(xlsxRowText(df).as("row")) }
       .reduce(_ union _)
-    ensureIndex(s, root, corpus, "xlsxs4", "built") { p =>
+    ensureIndex(s, root, corpus, "xlsxs4") { p =>
       val bytes = graft.sources.Xlsx.writeBytes(sheets.map { case (name, df) =>
         (name, df.columns.toSeq, df.orderBy(df.columns.head).collect().toSeq.map(_.toSeq))
       })
       val out = new org.apache.hadoop.fs.Path(s"$p/access_request_rebuild.xlsx")
       val os = out.getFileSystem(s.sparkContext.hadoopConfiguration).create(out, true)
       try os.write(bytes) finally os.close()
-      s.range(1).select(lit(bytes.length).as("bytes")).write.mode("overwrite")
-        .parquet(s"$p/built")
     }
   }
 
@@ -1076,16 +1082,12 @@ object EtlQueries {
     // Shares etl_upsert's oracle VERBATIM — green = changelog resolve ≡
     // copy-on-write MERGE row-for-row, through a compaction cycle.
     QuerySpec("etl_upsert_streamed", (s, dir) => {
-      import s.implicits._
       val (base, updates) = upsertFixture(s, dir)
-      val path = ensureIndex(s, root, t(s, dir, "customer"), "upsertstreamc", "built") { p =>
-        // crash-reentrant (the ann_ivfpq_streamed pattern): a run killed
-        // between the compaction and the built sentinel would otherwise
-        // re-enter with the log ALREADY collapsed to depth 1 — the
-        // markers short-circuit both processBatch calls — and the
-        // depth-2 assert below would fail forever
-        val fsP = new org.apache.hadoop.fs.Path(p)
-        fsP.getFileSystem(s.sessionState.newHadoopConf()).delete(fsP, true)
+      // crash-reentrant through ensureIndex's cleanup: a build interrupted
+      // after the compaction restarts from an empty entry, not from a log
+      // already collapsed to depth 1 (where the markers would short-circuit
+      // both processBatch calls and the depth-2 assert would fail forever)
+      val path = ensureIndex(s, root, t(s, dir, "customer"), "upsertstreamc") { p =>
         graft.streaming.UpsertIngest.processBatch(base, 0L, p)
         graft.streaming.UpsertIngest.processBatch(updates, 1L, p)
         assert(graft.streaming.UpsertIngest.maybeCompact(s, p, "cust_id",
@@ -1093,8 +1095,6 @@ object EtlQueries {
         assert(graft.streaming.UpsertIngest.logStats(s, p).nBatches == 1,
           "log must be collapsed to one batch")
         graft.streaming.UpsertIngest.processBatch(updates, 1L, p) // replay
-        Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
-          .parquet(s"$p/built")
       }
       graft.streaming.UpsertIngest.readLatest(s, path, "cust_id")
         .select("cust_id", "c_acctbal", "c_mktsegment")
@@ -1113,14 +1113,7 @@ object EtlQueries {
     // horizon see an empty state, the lakehouse cleaning contract
     // (spec-pinned in UpsertIngestSpec).
     QuerySpec("etl_upsert_asof", (s, dir) => {
-      import s.implicits._
-      val (base, updates) = upsertFixture(s, dir)
-      val path = ensureIndex(s, root, t(s, dir, "customer"), "upsertasof", "built") { p =>
-        graft.streaming.UpsertIngest.processBatch(base, 0L, p)
-        graft.streaming.UpsertIngest.processBatch(updates, 1L, p)
-        Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
-          .parquet(s"$p/built")
-      }
+      val path = upsertAsOfPath(s, root, dir)
       graft.streaming.UpsertIngest.readAsOf(s, path, "cust_id", asOfBatch = 0L)
         .select("cust_id", "c_acctbal", "c_mktsegment")
         .orderBy("cust_id")
@@ -1136,14 +1129,7 @@ object EtlQueries {
     // downstream pipeline processes deltas instead of rescanning.
     // Shares the upsertasof index.
     QuerySpec("etl_upsert_changes", (s, dir) => {
-      import s.implicits._
-      val (base, updates) = upsertFixture(s, dir)
-      val path = ensureIndex(s, root, t(s, dir, "customer"), "upsertasof", "built") { p =>
-        graft.streaming.UpsertIngest.processBatch(base, 0L, p)
-        graft.streaming.UpsertIngest.processBatch(updates, 1L, p)
-        Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
-          .parquet(s"$p/built")
-      }
+      val path = upsertAsOfPath(s, root, dir)
       graft.streaming.UpsertIngest.readChanges(s, path, "cust_id",
           fromBatch = 0L, toBatch = 1L)
         .select("cust_id", "c_acctbal", "c_mktsegment")
@@ -1164,14 +1150,7 @@ object EtlQueries {
     // delta-shaped plan as etl_upsert_changes; shares the upsertasof
     // index.
     QuerySpec("etl_upsert_cdc", (s, dir) => {
-      import s.implicits._
-      val (base, updates) = upsertFixture(s, dir)
-      val path = ensureIndex(s, root, t(s, dir, "customer"), "upsertasof", "built") { p =>
-        graft.streaming.UpsertIngest.processBatch(base, 0L, p)
-        graft.streaming.UpsertIngest.processBatch(updates, 1L, p)
-        Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
-          .parquet(s"$p/built")
-      }
+      val path = upsertAsOfPath(s, root, dir)
       graft.streaming.UpsertIngest.readChangeFeed(s, path, "cust_id",
           fromBatch = 0L, toBatch = 1L)
         .select(col("cust_id"), col("c_acctbal"), col("c_mktsegment"),
@@ -1204,14 +1183,7 @@ object EtlQueries {
     // equivalence proof. At 100 TB this is the only sane consumption
     // shape: O(delta) rows move per refresh, never O(table).
     QuerySpec("etl_upsert_incr_agg", (s, dir) => {
-      import s.implicits._
-      val (base, updates) = upsertFixture(s, dir)
-      val path = ensureIndex(s, root, t(s, dir, "customer"), "upsertasof", "built") { p =>
-        graft.streaming.UpsertIngest.processBatch(base, 0L, p)
-        graft.streaming.UpsertIngest.processBatch(updates, 1L, p)
-        Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
-          .parquet(s"$p/built")
-      }
+      val path = upsertAsOfPath(s, root, dir)
       val dec = col("c_acctbal").cast("decimal(18,2)")
       val v0 = graft.streaming.UpsertIngest.readAsOf(s, path, "cust_id", 0L)
         .groupBy(col("c_mktsegment"))

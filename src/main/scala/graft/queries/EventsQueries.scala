@@ -20,15 +20,12 @@ object EventsQueries {
     * one set-union accumulation, every distinct-user statistic.
     */
   private def activityPath(s: SparkSession, root: String, dir: String): String = {
-    import s.implicits._
     val ev = t(s, dir, "events")
-    ensureIndex(s, root, ev, "evdaustream", "built") { p =>
+    ensureIndex(s, root, ev, "evdaustream") { p =>
       graft.streaming.EventIngest.processActivityBatch(
         ev.filter(pmod(col("event_id"), lit(2)) === 0), 0L, p)
       graft.streaming.EventIngest.processActivityBatch(
         ev.filter(pmod(col("event_id"), lit(2)) === 1), 1L, p)
-      Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
-        .parquet(s"$p/built")
     }
   }
 
@@ -39,17 +36,12 @@ object EventsQueries {
     * open-session state.
     */
   private def sessionsStreamPath(s: SparkSession, root: String, dir: String): String = {
-    import s.implicits._
     val ev = t(s, dir, "events")
-    ensureIndex(s, root, ev, "evsessstream", "built") { p =>
+    ensureIndex(s, root, ev, "evsessstream") { p =>
       val mm = ev.agg(min(unix_micros(col("ts"))).as("lo"),
         max(unix_micros(col("ts"))).as("hi")).first()
-      if (mm.isNullAt(0)) {
-        // empty events table: both aggregates are NULL — no slices to
-        // fold; write the marker with zero batches instead of NPEing
-        Seq(0).toDF("n_batches").coalesce(1).write.mode("overwrite")
-          .parquet(s"$p/built")
-      } else {
+      // empty events table: both aggregates are NULL — no slices to fold
+      if (!mm.isNullAt(0)) {
         val (lo, hi) = (mm.getLong(0), mm.getLong(1))
         val step = (hi - lo) / 4 + 1
         val sliced = ev.withColumn("slice",
@@ -59,8 +51,6 @@ object EventsQueries {
             sliced.filter(col("slice") === i).drop("slice"), i.toLong, p,
             gapMinutes = 30)
         }
-        Seq(4).toDF("n_batches").coalesce(1).write.mode("overwrite")
-          .parquet(s"$p/built")
       }
     }
   }
@@ -72,15 +62,12 @@ object EventsQueries {
     * consumers (the `activityPath` pattern).
     */
   private def sketchPath(s: SparkSession, root: String, dir: String): String = {
-    import s.implicits._
     val ev = t(s, dir, "events")
-    ensureIndex(s, root, ev, "evsketchstream", "built") { p =>
+    ensureIndex(s, root, ev, "evsketchstream") { p =>
       graft.streaming.EventIngest.processSketchBatch(
         ev.filter(pmod(col("event_id"), lit(2)) === 0), 0L, p)
       graft.streaming.EventIngest.processSketchBatch(
         ev.filter(pmod(col("event_id"), lit(2)) === 1), 1L, p)
-      Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
-        .parquet(s"$p/built")
     }
   }
 
@@ -106,15 +93,12 @@ object EventsQueries {
     * tables coexist.
     */
   private def churnSketchPath(s: SparkSession, root: String, dir: String): String = {
-    import s.implicits._
     val ev = churnEvents(t(s, dir, "events"))
-    ensureIndex(s, root, ev, "evsketchchurn", "built") { p =>
+    ensureIndex(s, root, ev, "evsketchchurn") { p =>
       graft.streaming.EventIngest.processSketchBatch(
         ev.filter(pmod(col("event_id"), lit(2)) === 0), 0L, p)
       graft.streaming.EventIngest.processSketchBatch(
         ev.filter(pmod(col("event_id"), lit(2)) === 1), 1L, p)
-      Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
-        .parquet(s"$p/built")
     }
   }
 
@@ -259,15 +243,12 @@ object EventsQueries {
     // events_hourly's oracle verbatim — green = the accumulated rollup is
     // row-identical to the batch aggregate (decimal partials merge exact).
     QuerySpec("events_hourly_streamed", (s, dir) => {
-      import s.implicits._
       val ev = t(s, dir, "events")
-      val path = ensureIndex(s, root, ev, "evhourlystream", "built") { p =>
+      val path = ensureIndex(s, root, ev, "evhourlystream") { p =>
         graft.streaming.EventIngest.processBatch(
           ev.filter(pmod(col("event_id"), lit(2)) === 0), 0L, p)
         graft.streaming.EventIngest.processBatch(
           ev.filter(pmod(col("event_id"), lit(2)) === 1), 1L, p)
-        Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
-          .parquet(s"$p/built")
       }
       graft.streaming.EventIngest.hourlyFromAccumulated(s, path)
         .select(fmt(col("window_start")).as("window_start"), col("event_type"),

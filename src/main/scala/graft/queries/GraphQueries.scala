@@ -53,7 +53,7 @@ object GraphQueries {
     * `PipelineQueries.crawlIndexPath`).
     */
   private def ranksFor(s: SparkSession, root: String, edges: DataFrame): DataFrame = {
-    val path = ensureIndex(s, root, edges, "crawlrank", "ranks") { p =>
+    val path = ensureIndex(s, root, edges, "crawlrank") { p =>
       graft.operators.Graph.pageRank(edges, "src", "dst", iterations = 10)
         .write.mode("overwrite").parquet(s"$p/ranks")
     }

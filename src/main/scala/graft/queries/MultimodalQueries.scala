@@ -580,7 +580,7 @@ object MultimodalQueries {
     QuerySpec("ann_image_ivf", (s, dir) => {
       val docs = t(s, dir, "documents").select("doc_id")
       val vecs = imageVecs(docs)
-      val path = ensureIndex(s, root, docs, "ivfimg", "centroids") { p =>
+      val path = ensureIndex(s, root, docs, "ivfimg") { p =>
         VectorIndex.fit(vecs, Ivf(8)).write(vecs, p)
       }
       VectorIndex.read(s, path).search(imageVecs(docs.filter(col("doc_id") < 10)),
@@ -606,7 +606,7 @@ object MultimodalQueries {
     QuerySpec("ann_image_pruned", (s, dir) => {
       val docs = t(s, dir, "documents").select("doc_id")
       val vecs = imageVecs(docs)
-      val path = ensureIndex(s, root, docs, "ivfimgpart", "vectors") { p =>
+      val path = ensureIndex(s, root, docs, "ivfimgpart") { p =>
         VectorIndex.fit(vecs, Ivf(8)).write(vecs, p, partitioned = true)
       }
       VectorIndex.read(s, path)
@@ -839,16 +839,13 @@ object MultimodalQueries {
     // flat / pruned / streamed index symmetry between the text and image
     // families.
     QuerySpec("ann_image_streamed", (s, dir) => {
-      import s.implicits._
       val docs = t(s, dir, "documents").select("doc_id")
       val vecs = imageVecs(docs)
-      val path = ensureIndex(s, root, docs, "ivfimgstream", "built") { p =>
+      val path = ensureIndex(s, root, docs, "ivfimgstream") { p =>
         graft.streaming.VectorIngest.processBatch(
           vecs.filter(pmod(col("vec_id"), lit(2)) === 0), 0L, p, nCells = 8)
         graft.streaming.VectorIngest.processBatch(
           vecs.filter(pmod(col("vec_id"), lit(2)) === 1), 1L, p, nCells = 8)
-        Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
-          .parquet(s"$p/built")
       }
       VectorIndex.read(s, path).search(imageVecs(docs.filter(col("doc_id") < 10)),
           k = 5, nProbe = 8)
@@ -903,16 +900,13 @@ object MultimodalQueries {
     // the green row proves the streamed accumulation loses nothing and
     // double-emits nothing.
     QuerySpec("dedup_phash_streamed", (s, dir) => {
-      import s.implicits._
       val docs = t(s, dir, "documents").select("doc_id")
       val media = Multimodal.synthesizePhashImages(docs)
-      val path = ensureIndex(s, root, docs, "phashstream", "built") { p =>
+      val path = ensureIndex(s, root, docs, "phashstream") { p =>
         graft.streaming.PhashIngest.processBatch(
           media.filter(col("media_id") % 7 =!= 3), 0L, p)
         graft.streaming.PhashIngest.processBatch(
           media.filter(col("media_id") % 7 === 3), 1L, p)
-        Seq(2).toDF("n_batches").coalesce(1).write.mode("overwrite")
-          .parquet(s"$p/built")
       }
       graft.streaming.PhashIngest.readPairs(s, path)
         .orderBy("doc_a", "doc_b")

@@ -24,16 +24,7 @@ object PipelineQueries {
     * (`pipeline_crawl_change_rate`) compares digests across.
     */
   private def warcSnapFixturePath(s: SparkSession, root: String, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warcsnap1", root, dir, Tables.listingKey(s, dir)), _ => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      ensureIndex(s, root, ids, "warcsnap1", "built") { p =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$p/files"), true)
-        val n = graft.sources.Warc.synthesizeFiles(s, ids, "doc_id", s"$p/files",
-          nFiles = 16, linkSpace = ids.count(), changeSalt = 1L)
-        s.range(1).select(lit(n).as("n_records")).write.mode("overwrite").parquet(s"$p/built")
-      }
-    })
+    warcArchivePath(s, root, dir, "warcsnap1", changeSalt = 1L)
 
   /** Per-url change-rate estimates across the two crawl snapshots —
     * shared by `pipeline_crawl_change_rate` (the estimator table) and
@@ -89,13 +80,12 @@ object PipelineQueries {
     * at crawl-refresh cadence); scheduling queries read two parquet
     * tables and pay only their own joins. Oracles are UNCHANGED — they
     * replay the full chain, so a stale or drifted index shows up as a
-    * red row, not a silent skew. Marker = "ranks", the LAST table the
-    * build writes.
+    * red row, not a silent skew.
     */
   private def crawlIndexPath(s: SparkSession, root: String, dir: String): String = {
     val fixture = warcFixturePath(s, root, dir)
     ensureIndexNamed(s, root, "crawlsched",
-        Tables.listingKey(s, s"$fixture/files"), "ranks") { p =>
+        Tables.listingKey(s, s"$fixture/files")) { p =>
       val resp = graft.sources.Warc.responses(
         graft.sources.Warc.readRecords(s, s"$fixture/files")).toDF()
       // the discovered-URL table: one row per canonical url with its
@@ -154,7 +144,7 @@ object PipelineQueries {
     // same cross-SF coexistence rationale as Tables.listingKey
     val name = f"n${roster.map(_.length + 1L).sum}" +
       f"_x${java.nio.ByteBuffer.wrap(md).getLong}%016x"
-    val path = ensureIndexNamed(s, root, "crawlrankm", name, "ranks") { p =>
+    val path = ensureIndexNamed(s, root, "crawlrankm", name) { p =>
       graft.operators.Graph.pageRank(
           graft.streaming.LinkIngest.edges(s, idx, upToBatch, nodeOf),
           "src", "dst", iterations = 10)

@@ -39,17 +39,14 @@ object QueryCommon {
 
   /** Session memo for [[ensureIndex]]'s content fingerprint: the (count,
     * bit_xor) aggregate is a full corpus scan, and every index-backed query
-    * re-derived it PER CALL — four times per query under Bench's warm +
-    * median-of-3, ~47 call sites. The memo key is the index root, the
-    * kind, the corpus frame's analyzed-plan semantic hash and the
-    * [[Tables.listingKey]] (names + sizes) of every file-source root the plan reads — the same O(listing) freshness
-    * model `fixturePathMemo` and the crawl-scheduling index already use, so
-    * an in-place fixture regeneration (new sizes/names) re-fingerprints
-    * instead of serving a stale key. Corpora with no file source (derived /
-    * in-memory frames) skip the memo and scan as before. At 100 TB this is
-    * the difference between an O(listing) freshness check and a corpus
-    * scan per scheduling decision — the r16-blessed pattern, now applied
-    * to every content-keyed index.
+    * would re-derive it per call — four times per query under Bench's warm
+    * + median-of-3. The memo key is the index root, the kind, the corpus
+    * frame's analyzed-plan semantic hash and the [[Tables.listingKey]]
+    * (names, sizes, mtimes) of every file-source root the plan reads, so an
+    * in-place fixture regeneration re-fingerprints instead of serving a
+    * stale key. Corpora with no file source (derived / in-memory frames)
+    * skip the memo and scan as before. A warm call therefore costs one
+    * listing per root and no Spark job.
     */
   private[queries] val fingerprintMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
@@ -64,40 +61,26 @@ object QueryCommon {
     (agg.getLong(0), if (agg.isNullAt(1)) 0L else agg.getLong(1))
   }
 
-  /** Build-once guard for the persisted ANN indexes the replay oracles
-    * read: index lives under `<root>/<kind>/`, in a dir keyed by corpus
-    * size AND a content fingerprint (xor of per-row xxhash64 over every
-    * column — order-free, one corpus pass shared with the row count), so
-    * sf0.01/sf0.1 runs
-    * never clobber each other, the oracle can glob + filter on the
-    * stamped n_corpus, and a REGENERATED same-size corpus forces a
-    * rebuild instead of silently reusing a stale index. Stale siblings
-    * with the same row count but a different fingerprint (or the old
-    * count-only naming) are deleted so the oracle's wildcard glob +
-    * n_corpus filter can never double-read. An existing matching index is
-    * reused — the fit is seeded, so rebuilding would produce
-    * byte-identical tables.
-    *
-    * `marker` MUST name the LAST table the writer emits (ivf/ivfpart →
-    * "centroids"/"vectors", pq/ivfpqpart → "codes", bm25/bm25part →
-    * "stats"): completeness is judged by that table's _SUCCESS, so a
-    * crash mid-build leaves the marker absent and the next run rebuilds,
-    * instead of a half-built index being treated as complete forever.
+  /** The one build path for every persisted index, streamed sink and
+    * generated fixture: the entry `<root>/<kind>/n<rows>_x<fingerprint>`,
+    * keyed by the corpus size AND a content fingerprint (xor of per-row
+    * xxhash64 over every column — order-free, one corpus pass shared with
+    * the row count), so sf0.01/sf0.1 entries coexist, the oracles can glob
+    * + filter on the stamped n_corpus, and a regenerated same-size corpus
+    * forces a rebuild. The build contract is [[ensureIndexNamed]]'s.
     *
     * SCALE NOTE on the key itself: this content fingerprint is ONE
-    * pushed-down column scan of the raw corpus — acceptable for the ANN
-    * family because the oracle contract pins the `n<rows>` naming (the
-    * replay globs filter on it) and the cost amortizes per session. It
-    * is NOT acceptable when the "corpus" is itself an expensive derived
-    * computation — fingerprinting the extracted link graph cost a WARC
-    * parse + resolution join per scheduling query (the r13 defect) —
-    * which is what [[ensureIndexNamed]] + [[Tables.listingKey]] exist for:
-    * key such indexes off their INGEST METADATA. At production scale
-    * the listing key generalizes to the table's snapshot/commit id
-    * (the changelog family's landed-batch convention).
+    * pushed-down column scan of the raw corpus — acceptable because the
+    * oracle contract pins the `n<rows>` naming and the cost amortizes per
+    * session. It is NOT acceptable when the "corpus" is itself an expensive
+    * derived computation — fingerprinting the extracted link graph cost a
+    * WARC parse + resolution join per scheduling query — which is what
+    * [[ensureIndexNamed]] + [[Tables.listingKey]] exist for: key such
+    * indexes off their INGEST METADATA. At production scale the listing key
+    * generalizes to the table's snapshot/commit id.
     */
-  private[graft] def ensureIndex(s: SparkSession, root: String, corpus: DataFrame, kind: String,
-      marker: String)(write: String => Unit): String = {
+  private[graft] def ensureIndex(s: SparkSession, root: String, corpus: DataFrame,
+      kind: String)(write: String => Unit): String = {
     val analyzed = corpus.queryExecution.analyzed
     val roots: Seq[String] = analyzed.collect {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
@@ -113,18 +96,30 @@ object QueryCommon {
         s"$root|$kind|${analyzed.semanticHash()}|" +
           roots.sorted.map(r => s"$r=${Tables.listingKey(s, r)}").mkString(","),
         _ => fingerprintScan(corpus))
-    ensureIndexNamed(s, root, kind, f"n${n}_x$fp%016x", marker)(write)
+    ensureIndexNamed(s, root, kind, f"n${n}_x$fp%016x")(write)
   }
 
-  /** [[ensureIndex]] with a caller-supplied key name — the entry point for
-    * indexes whose freshness key is INGEST METADATA (a file listing, a
-    * landed-batch roster) rather than a corpus-content fingerprint, so an
+  /** [[ensureIndex]] with a caller-supplied entry name — for indexes whose
+    * freshness key is INGEST METADATA (a file listing, a landed-batch
+    * roster) rather than a corpus-content fingerprint, so an
     * unchanged-state check costs O(listing) instead of a corpus scan.
-    * Same layout, same stale-sibling cleanup, same crash posture (marker
-    * table's `_SUCCESS` judges completeness).
+    *
+    * The build contract, owned here and nowhere else:
+    *  - an entry is complete when `<entry>/built/_SUCCESS` exists, and a
+    *    complete entry is reused as is (every writer is seeded, so a
+    *    rebuild would write the same rows);
+    *  - on a miss the entry directory is deleted first, so `write` always
+    *    starts from an empty directory, whatever an interrupted build left;
+    *  - `write(path)` writes the entry's tables, and only after it returns
+    *    is the `built` marker written — a crash inside `write` leaves no
+    *    marker and the next call rebuilds;
+    *  - siblings with the same row count but another name (a regenerated
+    *    corpus, or an older naming) are deleted, so an oracle's wildcard
+    *    glob + n_corpus filter never double-reads; entries with another
+    *    row count (another scale factor) coexist.
     */
   private[graft] def ensureIndexNamed(s: SparkSession, root: String, kind: String,
-      name: String, marker: String)(write: String => Unit): String = {
+      name: String)(write: String => Unit): String = {
     val n = name.stripPrefix("n").takeWhile(_.isDigit)
     val base = s"$root/$kind"
     val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
@@ -136,58 +131,47 @@ object QueryCommon {
           fs.delete(st.getPath, true)
       }
     val path = s"$base/$name"
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/$marker/_SUCCESS")))
+    val marker = new org.apache.hadoop.fs.Path(s"$path/built/_SUCCESS")
+    if (!fs.exists(marker)) {
+      fs.delete(new org.apache.hadoop.fs.Path(path), true)
       write(path)
+      fs.create(marker, true).close()
+    }
     path
   }
 
-  /** Shared WARC fixture for the `warc_*` queries: 16 gzipped archive
-    * files synthesized from the documents ids (ensureIndex-keyed, so
-    * sf0.01/sf0.1 coexist and a regenerated corpus forces a rebuild; the
-    * `built` marker parquet is written LAST, after the raw files), read
-    * back through the Content-Length record walk.
+  /** Shared WARC fixture for the `warc_*` queries, read back through the
+    * Content-Length record walk.
     */
   private[queries] def warcRecords(s: SparkSession, root: String, dir: String)
       : org.apache.spark.sql.Dataset[graft.sources.WarcRecord] =
     graft.sources.Warc.readRecords(s, s"${warcFixturePath(s, root, dir)}/files")
 
-  /** Session-scoped memo for fixture index paths: the ensureIndex
-    * fingerprint (count+xor over the documents ids) is a corpus-column
-    * scan, and every warc/crawl query re-derived it per CALL — including
-    * three times per query under Bench's median-of-3. The memo key
-    * includes the index root and the sf dir's [[Tables.listingKey]]
-    * (names+sizes of the parquet tables — an O(listing) stat, no data
-    * read), NOT just the path
-    * string: a long-lived session that regenerates a fixture dir in
-    * place gets a fresh resolution instead of a stale path, so the
-    * "testdata never changes within a JVM" assumption is checked per
-    * call rather than assumed forever.
+  /** A synthesized WARC archive: 16 files under `<entry>/files`, written by
+    * `Warc.synthesizeFiles` from the documents ids — the default crawl page
+    * with anchors into the corpus, or the page class `recordFor` makes. One
+    * kind per archive; a payload change bumps its kind.
     */
-  private[queries] val fixturePathMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String, String), String]()
-
-  /** The archive fixture's index dir — exposed separately from
-    * [[warcRecords]] so the crawl scheduling index can key itself off the
-    * fixture's SEGMENT LISTING (`$path/files` names+sizes) instead of
-    * parsed content.
-    */
-  private[queries] def warcFixturePath(s: SparkSession, root: String, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warclqr", root, dir, Tables.listingKey(s, dir)), _ =>
-      warcFixturePathUncached(s, root, dir))
-
-  private[queries] def warcFixturePathUncached(s: SparkSession, root: String, dir: String): String = {
+  private[queries] def warcArchivePath(s: SparkSession, root: String, dir: String,
+      kind: String, zstd: Boolean = false, changeSalt: Long = 0L,
+      recordFor: Long => String = null): String = {
     val ids = t(s, dir, "documents").select(col("doc_id"))
-    // kind "warclqr" (r15 bumps: q = unquoted anchors, r = relative
-    // same-host anchors with dot segments) — payload-content changes
-    // always bump the kind so a stale cache can never serve new oracles
-    ensureIndex(s, root, ids, "warclqr", "built") { p =>
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$p/files"), true) // crash debris
-      val n = graft.sources.Warc.synthesizeFiles(s, ids, "doc_id", s"$p/files",
-        nFiles = 16, linkSpace = ids.count())
-      s.range(1).select(lit(n).as("n_records")).write.mode("overwrite").parquet(s"$p/built")
+    ensureIndex(s, root, ids, kind) { p =>
+      // only the default crawl page links into the corpus
+      graft.sources.Warc.synthesizeFiles(s, ids, "doc_id", s"$p/files", nFiles = 16,
+        gzip = !zstd, zstd = zstd, changeSalt = changeSalt, recordFor = recordFor,
+        linkSpace = if (recordFor == null) ids.count() else 0L)
     }
   }
+
+  /** The archive fixture most `warc_*` queries read — kind "warclqr" (q =
+    * unquoted anchors, r = relative same-host anchors with dot segments).
+    * Exposed apart from [[warcRecords]] so the crawl scheduling index can
+    * key itself off the fixture's SEGMENT LISTING (`$path/files`
+    * names+sizes) instead of parsed content.
+    */
+  private[queries] def warcFixturePath(s: SparkSession, root: String, dir: String): String =
+    warcArchivePath(s, root, dir, "warclqr")
 
   /** Node id of a canonical fixture URL — the path id the oracles'
     * arithmetic is stated in (a real corpus would use LinkIngest's
@@ -331,15 +315,9 @@ object QueryCommon {
     * segment payloads now carry anchors and the fixture grew the
     * compacted index.
     */
-  private[queries] def warcIngestPath(s: SparkSession, root: String, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warcingestl2qr", root, dir, Tables.listingKey(s, dir)),
-      _ => warcIngestPathUncached(s, root, dir))
-
-  private[queries] def warcIngestPathUncached(s: SparkSession, root: String, dir: String): String = {
+  private[queries] def warcIngestPath(s: SparkSession, root: String, dir: String): String = {
     val ids = t(s, dir, "documents").select(col("doc_id"))
-    ensureIndex(s, root, ids, "warcingestl2qr", "built") { p =>
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$p/warc"), true) // crash debris
+    ensureIndex(s, root, ids, "warcingestl2qr") { p =>
       graft.sources.Warc.synthesizeFiles(s, ids, "doc_id", s"$p/warc",
         nFiles = 16, rangePartition = true, linkSpace = ids.count())
       (0 until 4).foreach { b =>
@@ -353,9 +331,6 @@ object QueryCommon {
         graft.streaming.LinkIngest.processBatch(resp, b.toLong, s"$p/links_compact")
       }
       graft.streaming.LinkIngest.compact(s, s"$p/links_compact")
-      import s.implicits._
-      Seq(4).toDF("n_batches").coalesce(1).write.mode("overwrite")
-        .parquet(s"$p/built")
     }
   }
 

@@ -534,11 +534,9 @@ object SqlQueries {
       // fingerprint the FULL frame: the round-trip's content is every
       // column, and two sf dirs share the same doc_id set — an id-only
       // key would serve one dir's ORC to the other
-      val path = ensureIndex(s, root, docs, "orcdocs", "built") { p =>
+      val path = ensureIndex(s, root, docs, "orcdocs") { p =>
         docs.write.mode("overwrite").option("compression", "zlib")
           .orc(s"$p/docs")
-        s.range(1).select(lit(1L).as("ok")).write.mode("overwrite")
-          .parquet(s"$p/built")
       }
       s.read.orc(s"$path/docs")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),

@@ -1,7 +1,6 @@
 package graft
 package queries
 
-import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -21,87 +20,41 @@ object WarcQueries {
     * shares `warc_read`'s oracle verbatim.
     */
   private def warcZstdFixturePath(s: SparkSession, root: String, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warczstdlqr", root, dir, Tables.listingKey(s, dir)), _ => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      ensureIndex(s, root, ids, "warczstdlqr", "built") { p =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$p/files"), true)
-        val n = graft.sources.Warc.synthesizeFiles(s, ids, "doc_id", s"$p/files",
-          nFiles = 16, gzip = false, zstd = true, linkSpace = ids.count())
-        s.range(1).select(lit(n).as("n_records")).write.mode("overwrite").parquet(s"$p/built")
-      }
-    })
+    warcArchivePath(s, root, dir, "warczstdlqr", zstd = true)
 
   /** The MIME-class archive (`Warc.mimeResponseRecordString`): separate
     * fixture for the WET content-type gate.
     */
   private def warcMimeFixturePath(s: SparkSession, root: String, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warcmime", root, dir, Tables.listingKey(s, dir)), _ => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      ensureIndex(s, root, ids, "warcmime", "built") { p =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$p/files"), true)
-        val n = graft.sources.Warc.synthesizeFiles(s, ids, "doc_id", s"$p/files",
-          nFiles = 16,
-          recordFor = d => graft.sources.Warc.mimeResponseRecordString(d))
-        s.range(1).select(lit(n).as("n_records")).write.mode("overwrite").parquet(s"$p/built")
-      }
-    })
+    warcArchivePath(s, root, dir, "warcmime",
+      recordFor = d => graft.sources.Warc.mimeResponseRecordString(d))
 
   /** The LYING-HEADER archive (`Warc.sniffResponseRecordString`):
     * separate fixture for the magic-byte sniff tier, so the truthful
     * mime fixture's gate oracle stays untouched.
     */
   private def warcSniffFixturePath(s: SparkSession, root: String, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warcsniff", root, dir, Tables.listingKey(s, dir)), _ => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      ensureIndex(s, root, ids, "warcsniff", "built") { p =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$p/files"), true)
-        val n = graft.sources.Warc.synthesizeFiles(s, ids, "doc_id", s"$p/files",
-          nFiles = 16,
-          recordFor = d => graft.sources.Warc.sniffResponseRecordString(d))
-        s.range(1).select(lit(n).as("n_records")).write.mode("overwrite").parquet(s"$p/built")
-      }
-    })
+    warcArchivePath(s, root, dir, "warcsniff",
+      recordFor = d => graft.sources.Warc.sniffResponseRecordString(d))
 
   /** The rel=canonical archive (`Warc.canonicalResponseRecordString`):
     * separate fixture so the flat fixture's payload-level oracles stay
     * untouched.
     */
   private def warcCanonFixturePath(s: SparkSession, root: String, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warccanonh2", root, dir, Tables.listingKey(s, dir)), _ => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      ensureIndex(s, root, ids, "warccanonh2", "built") { p =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$p/files"), true)
-        val n = graft.sources.Warc.synthesizeFiles(s, ids, "doc_id", s"$p/files",
-          nFiles = 16,
-          recordFor = d => graft.sources.Warc.canonicalResponseRecordString(d))
-        s.range(1).select(lit(n).as("n_records")).write.mode("overwrite").parquet(s"$p/built")
-      }
-    })
+    warcArchivePath(s, root, dir, "warccanonh2",
+      recordFor = d => graft.sources.Warc.canonicalResponseRecordString(d))
 
   /** The BLOCK-STRUCTURED archive (`Warc.bpResponseRecordString`): pages
     * wrapped in sitewide chrome for the main-content extraction query —
     * separate fixture so the flat fixture's 24 payload-level oracles stay
-    * untouched.
+    * untouched. Kind "warcbphcenns": h = host-keyed footer token, c =
+    * charset declaration classes, e = ENCODING classes (latin-1,
+    * UTF-8-BOM, UTF-16LE bodies; decoy, late and conflicting metas).
     */
   private def warcBpFixturePath(s: SparkSession, root: String, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warcbphcenns", root, dir, Tables.listingKey(s, dir)), _ => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      // "warcbphcenns" (h = host-keyed footer token, c = charset declaration
-      // classes, e = r16 ENCODING classes: latin-1/UTF-8-BOM/UTF-16LE
-      // bodies, decoy + late + conflicting metas) — payload changes bump
-      // the kind so a stale cache can never serve new oracles
-      ensureIndex(s, root, ids, "warcbphcenns", "built") { p =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$p/files"), true)
-        val n = graft.sources.Warc.synthesizeFiles(s, ids, "doc_id", s"$p/files",
-          nFiles = 16, recordFor = d => graft.sources.Warc.bpResponseRecordString(d))
-        s.range(1).select(lit(n).as("n_records")).write.mode("overwrite").parquet(s"$p/built")
-      }
-    })
+    warcArchivePath(s, root, dir, "warcbphcenns",
+      recordFor = d => graft.sources.Warc.bpResponseRecordString(d))
 
   /** The block-structured archive's scored block rows — one row per
     * `<p>`/`<div>` block of every 200-status page, with its text, token
@@ -163,28 +116,22 @@ object WarcQueries {
     * chrome-stripped main frame ([[bpMainPages]]). Kind carries the bp
     * payload classes (h = host-keyed footer, c = charset declarations).
     */
-  private def warcBpIngestPath(s: SparkSession, root: String, dir: String): String =
-    fixturePathMemo.computeIfAbsent(("warcbpingesthcenns", root, dir, Tables.listingKey(s, dir)), _ => {
-      val ids = t(s, dir, "documents").select(col("doc_id"))
-      ensureIndex(s, root, ids, "warcbpingesthcenns", "built") { p =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$p/warc"), true)
-        graft.sources.Warc.synthesizeFiles(s, ids, "doc_id", s"$p/warc",
-          nFiles = 16, rangePartition = true,
-          recordFor = d => graft.sources.Warc.bpResponseRecordString(d))
-        (0 until 4).foreach { b =>
-          val files = (4 * b until 4 * b + 4)
-            .map(f => f"part-$f%05d.warc.gz").mkString("{", ",", "}")
-          val parsed = graft.sources.Warc.httpParsed(graft.sources.Warc.responses(
-            graft.sources.Warc.readRecords(s, s"$p/warc/$files")).toDF())
-          graft.streaming.WarcIngest.processBatch(
-            bpMainPages(bpScoredBlocksFromParsed(parsed)), b.toLong, s"$p/log")
-        }
-        import s.implicits._
-        Seq(4).toDF("n_batches").coalesce(1).write.mode("overwrite")
-          .parquet(s"$p/built")
+  private def warcBpIngestPath(s: SparkSession, root: String, dir: String): String = {
+    val ids = t(s, dir, "documents").select(col("doc_id"))
+    ensureIndex(s, root, ids, "warcbpingesthcenns") { p =>
+      graft.sources.Warc.synthesizeFiles(s, ids, "doc_id", s"$p/warc",
+        nFiles = 16, rangePartition = true,
+        recordFor = d => graft.sources.Warc.bpResponseRecordString(d))
+      (0 until 4).foreach { b =>
+        val files = (4 * b until 4 * b + 4)
+          .map(f => f"part-$f%05d.warc.gz").mkString("{", ",", "}")
+        val parsed = graft.sources.Warc.httpParsed(graft.sources.Warc.responses(
+          graft.sources.Warc.readRecords(s, s"$p/warc/$files")).toDF())
+        graft.streaming.WarcIngest.processBatch(
+          bpMainPages(bpScoredBlocksFromParsed(parsed)), b.toLong, s"$p/log")
       }
-    })
+    }
+  }
 
   /** RECURSIVE sitemap discovery — the iterative fetch-parse loop a real
     * crawler runs over index-of-index nesting (seen in the wild for
@@ -813,7 +760,7 @@ object WarcQueries {
     // of it, with per-file surt min/max pruning inside each bucket.
     QuerySpec("warc_cdx_pruned", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"))
-      val path = ensureIndex(s, root, docs, "cdxidx", "built") { p =>
+      val path = ensureIndex(s, root, docs, "cdxidx") { p =>
         val parsed = graft.sources.Warc.httpParsed(
           graft.sources.Warc.responses(warcRecords(s, root, dir)).toDF())
         val canon = graft.functions.Url.canonicalizeUrl(col("uri"))
@@ -830,8 +777,6 @@ object WarcQueries {
           .sortWithinPartitions("surt_key", "doc_id")
           .write.mode("overwrite").partitionBy("host_bucket")
           .parquet(s"$p/cdx")
-        s.range(1).select(lit(1L).as("ok")).write.mode("overwrite")
-          .parquet(s"$p/built")
       }
       import s.implicits._
       val hosts = Seq("d1.ex.test", "d4.ex.test")
@@ -923,12 +868,9 @@ object WarcQueries {
     // pointer fields (WARC-Refers-To / WARC-Payload-Digest) byte-level.
     QuerySpec("warc_rewrite_dedup", (s, dir) => {
       val ids = t(s, dir, "documents").select(col("doc_id"))
-      val path = ensureIndex(s, root, ids, "warcdd", "built") { p =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$p/files"), true)
-        val n = graft.sources.Warc.writeRecordsDeduped(
+      val path = ensureIndex(s, root, ids, "warcdd") { p =>
+        graft.sources.Warc.writeRecordsDeduped(
           graft.sources.Warc.responses(warcRecords(s, root, dir)), s"$p/files", nFiles = 8)
-        s.range(1).select(lit(n).as("n_records")).write.mode("overwrite").parquet(s"$p/built")
       }
       graft.sources.Warc.readRecords(s, s"$path/files").toDF()
         .filter(col("warc_type").isin("response", "revisit"))
@@ -1430,9 +1372,7 @@ object WarcQueries {
       val ids = t(s, dir, "documents").select(col("doc_id"))
       // "warclqrrw" (re-export twin of warclqr): embeds the source
       // fixture's payload bytes incl. the unquoted + relative anchors
-      val path = ensureIndex(s, root, ids, "warclqrrw", "built") { p =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$p/files"), true)
+      val path = ensureIndex(s, root, ids, "warclqrrw") { p =>
         import s.implicits._
         val pages = graft.sources.Warc.httpParsed(
             graft.sources.Warc.responses(warcRecords(s, root, dir)).toDF())
@@ -1445,8 +1385,7 @@ object WarcQueries {
           .select("path", "warc_type", "record_id", "uri", "content_length",
             "payload", "truncated")
           .as[graft.sources.WarcRecord]
-        val n = graft.sources.Warc.writeRecords(pages, s"$p/files", nFiles = 8)
-        s.range(1).select(lit(n).as("n_records")).write.mode("overwrite").parquet(s"$p/built")
+        graft.sources.Warc.writeRecords(pages, s"$p/files", nFiles = 8)
       }
       graft.sources.Warc.responses(graft.sources.Warc.readRecords(s, s"$path/files")).toDF()
         .select(regexp_extract(col("record_id"), "doc-(\\d+)", 1).cast("long").as("doc_id"),
@@ -1830,15 +1769,10 @@ object WarcQueries {
     QuerySpec("warc_truncated_export", (s, dir) => {
       import graft.sources.Warc
       val docs = t(s, dir, "documents").select(col("doc_id"))
-      val path = ensureIndex(s, root, docs, "warctrunca", "built") { p =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$p/files"), true)
+      val path = ensureIndex(s, root, docs, "warctrunca") { p =>
         Warc.writeRecords(
           Warc.capPayloads(Warc.responses(warcRecords(s, root, dir)), maxBytes = 64),
           s"$p/files", nFiles = 8)
-        s.range(1).select(lit(1L).as("ok")).write.mode("overwrite")
-          .parquet(s"$p/built")
       }
       Warc.readRecords(s, s"$path/files").toDF()
         .filter(col("warc_type") === "response")
@@ -1873,10 +1807,7 @@ object WarcQueries {
     QuerySpec("warc_wet_roundtrip", (s, dir) => {
       import graft.sources.{Warc, WarcRecord}
       val docs = t(s, dir, "documents").select(col("doc_id"))
-      val path = ensureIndex(s, root, docs, "wetsinka", "built") { p =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$p/files"), true)
+      val path = ensureIndex(s, root, docs, "wetsinka") { p =>
         val resp = Warc.responses(warcRecords(s, root, dir)).toDF()
         val (cs, _) = graft.functions.Charset.detect(
           col("content_type"), col("body_bytes"))
@@ -1895,8 +1826,6 @@ object WarcQueries {
             lit(false).as("truncated"))
           .as[WarcRecord]
         Warc.writeRecords(conv, s"$p/files", nFiles = 8)
-        s.range(1).select(lit(1L).as("ok")).write.mode("overwrite")
-          .parquet(s"$p/built")
       }
       Warc.readRecords(s, s"$path/files").toDF()
         .filter(col("warc_type") === "conversion")

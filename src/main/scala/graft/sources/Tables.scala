@@ -12,11 +12,6 @@ import org.apache.spark.sql.types.StructType
   * `spark.sql.files.maxPartitionBytes` with no code change.
   */
 object Tables {
-  val tpch: Seq[String] =
-    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
-  val extra: Seq[String] = Seq("events", "documents", "embeddings")
-  val all: Seq[String] = tpch ++ extra
-
   /** Inferred schema per table path, tagged with the [[listingKey]] it was
     * inferred under. One entry per path: a rewrite replaces it.
     */
@@ -92,22 +87,6 @@ object Tables {
       .option("numPartitions", numPartitions)
       .options(props)
       .load()
-
-  /** Loads every table into a name->DataFrame map through [[load]], so each
-    * table's schema is inferred once per listing key (a Spark job only on
-    * its first load or after a rewrite); no data scan until an action runs.
-    * Missing tables are skipped rather than failing the whole load.
-    * Existence goes through the path's own Hadoop FileSystem — a
-    * java.io.File test is local-only and would silently skip every table on
-    * hdfs:///s3a:// dirs.
-    */
-  def loadAll(spark: SparkSession, dir: String): Map[String, DataFrame] = {
-    val conf = spark.sessionState.newHadoopConf()
-    all.filter { n =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$n.parquet")
-      p.getFileSystem(conf).exists(p)
-    }.map(n => n -> load(spark, dir, n)).toMap
-  }
 
   /** O(listing) content key for a directory of landed files: total bytes
     * plus an md5 over the sorted (relative name, size, mtime) roster.

@@ -104,17 +104,9 @@ object IndexIngest {
     * batch and every later batch re-reads it (the `nBuckets` parameter is
     * only consulted when no meta exists yet), so batches can never be
     * bucketed inconsistently — same self-describing-layout contract as the
-    * batch-built index's stats table.
-    */
-  def startPartitioned(docs: DataFrame, indexPath: String, checkpoint: String,
-      textCol: String = "text", idCol: String = "doc_id",
-      nBuckets: Int = 16): StreamingQuery =
-    BatchMarker.stream(docs, checkpoint)(
-      processBatchPartitioned(_, _, indexPath, textCol, idCol, nBuckets))
-
-  /** One partitioned micro-batch, callable from tests directly. Postings
-    * nest tok_bucket OUTER (the pruned scan's partition key and the
-    * per-bucket compaction unit) with batch_id INNER.
+    * batch-built index's stats table. Postings nest tok_bucket OUTER (the
+    * pruned scan's partition key and the per-bucket compaction unit) with
+    * batch_id INNER.
     */
   def processBatchPartitioned(batch: DataFrame, batchId: Long,
       indexPath: String, textCol: String = "text", idCol: String = "doc_id",

@@ -1,11 +1,12 @@
 package graft
 
 /** ensureIndexNamed: the build-once/reuse contract and the stale-sibling
-  * cleanup that r14's listingKey change depends on — same-`n` different-
+  * cleanup that the listingKey keys depend on — same-`n` different-
   * fingerprint siblings are deleted (a regenerated state must never
   * double-read), different-`n` entries COEXIST (the cross-SF contract:
-  * sf0.01 and sf0.1 keys must not clobber each other), and a missing
-  * marker `_SUCCESS` forces a rebuild.
+  * sf0.01 and sf0.1 keys must not clobber each other), a missing
+  * `built/_SUCCESS` marker forces a rebuild, and a rebuild starts from an
+  * empty entry.
   */
 class EnsureIndexSpec extends SparkSpec {
 
@@ -17,8 +18,8 @@ class EnsureIndexSpec extends SparkSpec {
 
   private def build(kind: String, name: String): (String, Int) = {
     var builds = 0
-    val path = queries.QueryCommon.ensureIndexNamed(spark, SharedSpark.indexRoot, kind, name,
-        "tbl") { p =>
+    val path = queries.QueryCommon.ensureIndexNamed(spark, SharedSpark.indexRoot, kind,
+        name) { p =>
       builds += 1
       spark.range(1).toDF("x").write.mode("overwrite").parquet(s"$p/tbl")
     }
@@ -28,12 +29,23 @@ class EnsureIndexSpec extends SparkSpec {
   test("build once, reuse after; a deleted marker forces a rebuild") {
     val kind = s"spec_${System.nanoTime()}"
     val (p1, b1) = build(kind, "n100_xaaaa")
-    assert(b1 === 1 && exists(s"$p1/tbl/_SUCCESS"))
+    assert(b1 === 1 && exists(s"$p1/built/_SUCCESS"))
     val (p2, b2) = build(kind, "n100_xaaaa")
     assert(p2 === p1 && b2 === 0, "an intact index must be reused")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$p1/tbl/_SUCCESS"), false)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$p1/built/_SUCCESS"), false)
     val (_, b3) = build(kind, "n100_xaaaa")
     assert(b3 === 1, "a half-built index (no marker _SUCCESS) must rebuild")
+  }
+
+  test("a marker-less entry is cleared before the build: a stray file is gone") {
+    val kind = s"spec_${System.nanoTime()}"
+    // debris in a table the writer does not overwrite, as an interrupted
+    // streamed build leaves its batch log
+    val stray = s"${SharedSpark.indexRoot}/$kind/n100_xaaaa/log/batch=0/part-stray.parquet"
+    fs.create(new org.apache.hadoop.fs.Path(stray)).close()
+    val (p, b) = build(kind, "n100_xaaaa")
+    assert(b === 1 && exists(s"$p/built/_SUCCESS") && exists(s"$p/tbl/_SUCCESS"))
+    assert(!exists(stray), "crash debris in a marker-less entry survived the build")
   }
 
   test("listingKey re-fingerprints an in-place same-size edit (mtime rides " +

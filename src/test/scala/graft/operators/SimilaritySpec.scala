@@ -467,7 +467,7 @@ class SimilaritySpec extends SparkSpec {
     val kind = "spec_empty_" + System.nanoTime()
     val root = graft.SharedSpark.indexRoot
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val path = graft.queries.QueryCommon.ensureIndex(spark, root, empty, kind, "m") { p =>
+    val path = graft.queries.QueryCommon.ensureIndex(spark, root, empty, kind) { p =>
       empty.write.mode("overwrite").parquet(s"$p/m")
     }
     assert(path.contains("/n0_x0000000000000000"))
@@ -482,7 +482,7 @@ class SimilaritySpec extends SparkSpec {
     val root = graft.SharedSpark.indexRoot
     var builds = 0
     def build(corpus: org.apache.spark.sql.DataFrame): String =
-      graft.queries.QueryCommon.ensureIndex(spark, root, corpus, kind, "m") { p =>
+      graft.queries.QueryCommon.ensureIndex(spark, root, corpus, kind) { p =>
         builds += 1
         corpus.write.mode("overwrite").parquet(s"$p/m")
       }

@@ -106,10 +106,10 @@ class PqIngestSpec extends SparkSpec {
   }
 
   test("a build killed mid-ingest re-enters cleanly after clearing the path") {
-    // the ann_ivfpq_streamed ensureIndex block's crash window: bootstrap +
-    // first batch land, then the run dies before the built sentinel. The
-    // re-entered block must not trip bootstrap's codes-exist guard — it
-    // clears the partial index first, and the seeded fits + shared
+    // the ann_ivfpq_streamed build's crash window: bootstrap + first batch
+    // land, then the run dies before the built marker. The re-entered
+    // build must not trip bootstrap's codes-exist guard — ensureIndex
+    // clears the partial entry first, and the seeded fits + shared
     // encoding kernels make the rebuild identical to an uninterrupted one.
     val dir = Files.createTempDirectory("pqreenter").toFile
     dir.deleteOnExit()
