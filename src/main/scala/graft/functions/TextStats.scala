@@ -63,18 +63,6 @@ object TextStats {
     */
   def tokenCount(c: Column): Column = size(split(trim(c), "\\s+"))
 
-  /** BPE-ish subword count estimator: words + punctuation runs counted
-    * separately (a word of length n contributes ceil(n/4) pieces — a
-    * deterministic stand-in for a real BPE vocab, which isn't available
-    * offline).
-    */
-  def bpeishCount(c: Column): Column =
-    aggregate(
-      transform(split(trim(c), "\\s+"), w => ceil(length(w) / lit(4.0)).cast("long")),
-      lit(0L),
-      (acc, x) => acc + x
-    )
-
   /** Stopword ratio over whitespace tokens, given a stopword array column
     * (e.g. `typedLit(Seq("the","a","and"))`).
     */
@@ -119,17 +107,10 @@ object TextStats {
     cascade
   }
 
-  /** Document fingerprint: 64-bit rolling-hash-style signature — xxhash64 of
-    * the normalized token stream. Deterministic, shuffle-free, and the join
-    * key for exact near-canonical dedup.
-    */
-  def fingerprint(c: Column): Column =
-    xxhash64(array_join(tokenize(c), " "))
-
-  /** Cross-engine-checkable fingerprint variant: md5 of the same normalized
-    * token stream. xxhash64 is the fast join-key choice inside Spark, but
-    * no other engine reproduces Spark's seed — md5 is the portable form a
-    * mixed-engine pipeline (or the DuckDB oracle) can verify byte-for-byte.
+  /** Document fingerprint: md5 of the normalized token stream. md5, not
+    * Spark's seeded xxhash64, because any engine reproduces it — a
+    * mixed-engine pipeline (or the DuckDB oracle) can verify it
+    * byte-for-byte.
     */
   def fingerprintMd5(c: Column): Column =
     md5(array_join(tokenize(c), " ").cast("binary"))

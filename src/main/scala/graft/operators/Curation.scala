@@ -75,18 +75,10 @@ object Curation {
       .select(col("col.id").as(idCol), col(sourceCol),
         (col("pos") + 1).cast("bigint").as("sample_rank"))
 
-  /** Gopher-style rule-based quality flags (Rae et al. 2021, §A1.1.1 — the
-    * published heuristics, re-expressed as codegen'd columns): word count
-    * bounds, mean word length bounds, alphabetic-word ratio, minimum
-    * stopword hits. Emits the measurements AND the individual flags so a
-    * pipeline can tune thresholds without recomputing; `quality_pass` is the
-    * conjunction. Pure map-side — zero shuffle.
-    */
   /** The [[gopherFlags]] rule conjunction as ONE boolean column — the
-    * filter-shaped form a streaming ingest stage (or any projection that
-    * must keep its payload columns) applies directly. Same raw
-    * measurements, same bounds; CurationSpec asserts it equal to
-    * `gopherFlags(...).quality_pass` row-for-row.
+    * filter-shaped form a projection that must keep its payload columns
+    * applies directly. Same raw measurements, same bounds; CurationSpec
+    * asserts it equal to `gopherFlags(...).quality_pass` row-for-row.
     */
   def gopherPass(textCol: Column,
       stopwords: Seq[String] = Seq("the", "be", "to", "of", "and", "that", "have", "with"),
@@ -104,6 +96,13 @@ object Curation {
       (alphaRatio >= minAlphaRatio) && (stopHits >= minStopwordHits)
   }
 
+  /** Gopher-style rule-based quality flags (Rae et al. 2021, §A1.1.1 — the
+    * published heuristics, re-expressed as codegen'd columns): word count
+    * bounds, mean word length bounds, alphabetic-word ratio, minimum
+    * stopword hits. Emits the measurements AND the individual flags so a
+    * pipeline can tune thresholds without recomputing; `quality_pass` is the
+    * conjunction. Pure map-side — zero shuffle.
+    */
   def gopherFlags(
       docs: DataFrame, textCol: String, idCol: String,
       stopwords: Seq[String] = Seq("the", "be", "to", "of", "and", "that", "have", "with"),

@@ -41,12 +41,6 @@ object Dedup {
       .groupBy(md5(col(textCol)).as("text_hash"))
       .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keeper_id"))
 
-  /** Exact dedup keeping one row per content hash (the "apply" form). */
-  def dropExactDuplicates(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val w = Window.partitionBy(md5(col(textCol))).orderBy(col(idCol))
-    docs.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-  }
-
   /** Word n-gram shingles of the normalized token stream — the unit both
     * Jaccard variants operate on. One fused codegen'd call per document
     * (tokenize + distinct n-grams in the same pass, graft.functions

@@ -226,13 +226,11 @@ object EventsQueries {
 
   def specs(root: String): Seq[QuerySpec] = Seq(
     // Streaming-batch parity — tumbling 1h window counts over events
-    // (SURVEY §2.9; the streaming twin lives in graft.streaming).
+    // (SURVEY §2.9): the streaming operator run over the batch frame, whose
+    // plan drops the watermark.
     QuerySpec("events_hourly", (s, dir) => {
-      t(s, dir, "events")
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-        .select(fmt(col("w.start")).as("window_start"), col("event_type"),
+      graft.streaming.EventStreams.hourlyCounts(t(s, dir, "events"))
+        .select(fmt(col("window_start")).as("window_start"), col("event_type"),
           col("n"), col("total_value"))
         .orderBy("window_start", "event_type")
     }, eventsHourlyOracle),

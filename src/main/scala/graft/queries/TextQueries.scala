@@ -520,9 +520,8 @@ object TextQueries {
 
     // --- rows-only entries (not ANSI-SQL-expressible; weaker check) ---
 
-    // Document fingerprint of the normalized token stream (md5 form — the
-    // cross-engine-checkable variant; TextStats.fingerprint is the xxhash64
-    // join-key form, same normalization, oracle-equivalent by construction).
+    // Document fingerprint of the normalized token stream (md5, so the
+    // oracle can recompute it).
     QuerySpec("text_fingerprint", (s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"), TextStats.fingerprintMd5(col("text")).as("fp"))

@@ -1,32 +1,20 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Keyed upsert (MERGE) over parquet tables — the third leg of the table
-  * maintenance triad beside [[Tombstones]] (delete) and [[Compaction]]
-  * (file layout): new versions of existing keys replace the stored rows,
-  * unseen keys insert.
+/** Keyed upsert (MERGE) over parquet tables: new versions of existing keys
+  * replace the stored rows, unseen keys insert.
   *
-  * Two deployment shapes, same semantics:
+  * This is the copy-on-write shape ([[merged]] → overwrite): rewrite the
+  * base minus updated keys, union the updates. One anti-join (the updates'
+  * key set broadcasts when batch-sized); the read path stays a plain scan.
+  * The merge-on-read shape, version-stamped appends resolved per key at
+  * read time, is the streamed changelog [[graft.streaming.UpsertIngest]].
   *
-  *  - **copy-on-write** ([[merged]] → overwrite): rewrite the base minus
-  *    updated keys, union the updates. One anti-join (the updates' key
-  *    set broadcasts when batch-sized); read path stays a plain scan. The
-  *    OPTIMIZE-style shape for read-heavy tables.
-  *  - **merge-on-read** ([[appendVersion]] + [[readLatest]]): appends are
-  *    cheap (each batch lands as its own partition files, stamped with a
-  *    monotonically increasing version); the read resolves each key to
-  *    its highest-version row with one per-key window. The write-heavy /
-  *    streaming-ingest shape — compact back to copy-on-write with
-  *    [[merged]] when read amplification grows.
-  *
-  * Version resolution is deterministic: (version, then key) — there are
-  * no same-key ties WITHIN a version because a single upsert batch
-  * carries one row per key (enforced nowhere here — last-writer rows in
-  * one batch are the caller's bug, flagged by [[Expectations]]-style
-  * uniqueness checks upstream).
+  * The updates carry one row per key (enforced nowhere here — duplicate
+  * keys in one batch are the caller's bug, flagged by
+  * [[graft.operators.Expectations]]-style uniqueness checks upstream).
   */
 object Upsert {
 
@@ -36,22 +24,4 @@ object Upsert {
   def merged(base: DataFrame, updates: DataFrame, keyCol: String): DataFrame =
     base.join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
       .unionByName(updates)
-
-  /** Merge-on-read append: stamp the batch with `version` and land it as
-    * its own files under `path`.
-    */
-  def appendVersion(updates: DataFrame, path: String, version: Long): Unit =
-    updates.withColumn("__version", lit(version))
-      .write.mode("append").parquet(path)
-
-  /** Merge-on-read resolve: latest version per key. One shuffle on the
-    * key; the window ranks the few versions of one key, never the table.
-    */
-  def readLatest(spark: SparkSession, path: String, keyCol: String): DataFrame = {
-    val w = Window.partitionBy(col(keyCol)).orderBy(col("__version").desc)
-    spark.read.parquet(path)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "__version")
-  }
 }

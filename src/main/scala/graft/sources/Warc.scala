@@ -52,10 +52,10 @@ case class WarcRecord(
   *    100 TB). Records stream out of a single pass; nothing is held
   *    beyond one record.
   *
-  * Failure posture mirrors `Xlsx.readSheetDistributedPermissive`: a
-  * malformed file yields the records parsed up to the corruption plus ONE
-  * `warc_type = "ingest_error"` quarantine row, and never fails the job —
-  * at crawl scale some truncated/corrupt members are a certainty.
+  * Failure posture: a malformed file yields the records parsed up to the
+  * corruption plus ONE `warc_type = "ingest_error"` quarantine row, and
+  * never fails the job — at crawl scale some truncated/corrupt members are
+  * a certainty.
   *
   * The synthesis half ([[synthesizeFiles]]) is fixture machinery for the
   * oracle loop, same posture as `Multimodal.synthesizeWavs`: every header
@@ -77,7 +77,7 @@ object Warc {
   /** The synthetic response record for one doc id — messy-URL variants,
     * HTTP status, and an HTML-ish body, all arithmetic in `d` (mirrored
     * verbatim by the `warc_read` / `warc_text` / `warc_urls` oracles in
-    * `SparkEntry`):
+    * [[graft.queries.WarcQueries]]):
     *
     *  - `v = d % 4` picks URL messiness: v=1 uppercases scheme+host and
     *    adds `:443` + `utm_source=news`, v=2 appends `#frag` and scrambles
@@ -524,14 +524,17 @@ object Warc {
     *
     * Returns the record count written. Same task-side streaming shape as
     * [[synthesizeFiles]]: nothing held beyond one record, parallelism =
-    * `nFiles`.
+    * `nFiles`. Records are dealt to files on their content alone: the
+    * round robin orders rows by a hash of their bytes, so `path` (never
+    * written) is cleared first, or the output bytes would depend on where
+    * the source archive lives.
     */
   def writeRecords(records: Dataset[WarcRecord], dir: String,
       nFiles: Int = 16, gzip: Boolean = true): Long = {
     import records.sparkSession.implicits._
     val target = dir
     val doGzip = gzip
-    val written = records
+    val written = records.withColumn("path", lit("")).as[WarcRecord]
       .repartition(nFiles)
       .mapPartitions { it =>
         val conf = new Configuration()

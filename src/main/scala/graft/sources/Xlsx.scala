@@ -1,15 +1,14 @@
 package graft.sources
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.zip.{ZipEntry, ZipFile, ZipInputStream, ZipOutputStream}
+import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
-import scala.collection.immutable.ListMap
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,16 +26,11 @@ import org.apache.spark.sql.types._
   *
   * All cell values surface as strings (`RawSheet`); `applySchema` casts to
   * a declared `StructType` by header name, which is how the Rebuild CLI
-  * consumes the four resource sheets. Two entry points:
-  *
-  *  - driver-side (`readSheets` / `readAllSheets`): the reference's shape —
-  *    ONE resource workbook, thousands of rows; parsed on the driver like
-  *    pandas, then `createDataFrame`. Reads through the Hadoop FileSystem,
-  *    so `hdfs://`/`s3a://` resource dirs work unchanged.
-  *  - distributed (`readSheetDistributed`): MANY workbooks (a glob) fanned
-  *    out over executors via the `binaryFile` source, each file parsed in
-  *    place and aligned to the declared schema by its own header row — the
-  *    100 TB shape when workbooks arrive in bulk.
+  * consumes the four resource sheets (`Rebuild.resourceSheet`). The read
+  * is driver-side (`readSheets`), the reference's shape: ONE resource
+  * workbook, thousands of rows, parsed on the driver like pandas, then
+  * `createDataFrame`. It reads through the Hadoop FileSystem, so
+  * `hdfs://`/`s3a://` resource dirs work unchanged.
   *
   * Style interpretation (r17): DATE-styled numeric cells render as ISO
   * strings instead of raw serials — `xl/styles.xml`'s `cellXfs` resolves
@@ -341,18 +335,8 @@ object Xlsx {
     }
   }
 
-  /** Parse from a local file path (random-access zip — only the needed
-    * entries are decompressed; styles/themes/customXml are skipped).
-    */
-  def readRaw(localPath: String, fillMerged: Boolean = false): Seq[RawSheet] = {
-    val zf = new ZipFile(localPath)
-    try parse({ name =>
-      Option(zf.getEntry(name)).map(e => readAll(zf.getInputStream(e)))
-    }, fillMerged) finally zf.close()
-  }
-
-  /** Parse from in-memory bytes (executor path / remote filesystems): one
-    * sequential pass buffers only the OOXML parts the parser consumes.
+  /** Parse from in-memory bytes: one sequential pass buffers only the
+    * OOXML parts the parser consumes.
     */
   def readRawBytes(bytes: Array[Byte], fillMerged: Boolean = false): Seq[RawSheet] = {
     val wanted = mutable.Map.empty[String, Array[Byte]]
@@ -364,15 +348,11 @@ object Xlsx {
         if (n == "xl/workbook.xml" || n == "xl/_rels/workbook.xml.rels" ||
             n == "xl/sharedStrings.xml" || n == "xl/styles.xml" ||
             n.startsWith("xl/worksheets/"))
-          wanted(n) = readAll(zin)
+          wanted(n) = zin.readAllBytes()
         e = zin.getNextEntry
       }
     } finally zin.close()
     parse(wanted.get, fillMerged)
-  }
-
-  private def readAll(in: InputStream): Array[Byte] = {
-    try in.readAllBytes() finally () // caller owns closing for ZipInputStream
   }
 
   /** Read a workbook through the input path's Hadoop FileSystem (local,
@@ -387,19 +367,6 @@ object Xlsx {
     val in = fs.open(p)
     val bytes = try in.readAllBytes() finally in.close()
     readRawBytes(bytes, fillMerged)
-  }
-
-  /** `pd.read_excel(path, sheet_name=None)`: every sheet as a DataFrame
-    * (all columns string-typed; cast with `applySchema`), workbook order.
-    */
-  def readAllSheets(spark: SparkSession, path: String): ListMap[String, DataFrame] =
-    ListMap(readSheets(spark, path).map(s => s.name -> s.toDF(spark)): _*)
-
-  /** One named sheet cast to a declared schema. */
-  def readSheet(spark: SparkSession, path: String, sheet: String, schema: StructType): DataFrame = {
-    val raw = readSheets(spark, path).find(_.name == sheet)
-      .getOrElse(throw new IllegalArgumentException(s"no sheet '$sheet' in $path"))
-    applySchema(raw.toDF(spark), schema)
   }
 
   /** Cast raw string columns to a declared schema by header name. Integral
@@ -491,85 +458,5 @@ object Xlsx {
     case c if c < ' ' && c != '\t' && c != '\n' =>
       throw new IllegalArgumentException(f"cell text has control character \\u${c.toInt}%04x")
     case c => c.toString
-  }
-
-  /** Distributed bulk ingest: a glob of workbooks → one DataFrame with the
-    * declared schema plus `source_file`. Each executor parses its own
-    * files (binaryFile splits the listing, not the zips — a workbook is
-    * one task's unit of work) and aligns values to the declared schema BY
-    * ITS OWN HEADER ROW, so column order may vary across workbooks.
-    */
-  def readSheetDistributed(
-      spark: SparkSession,
-      glob: String,
-      sheet: String,
-      schema: StructType): DataFrame = {
-    val names = schema.fieldNames.toSeq
-    val rawSchema = StructType(
-      names.map(StructField(_, StringType)) :+ StructField("source_file", StringType))
-    val bin = spark.read.format("binaryFile").load(glob)
-      .select(col("path"), col("content"))
-    val raw = bin.flatMap { row =>
-      val path = row.getString(0)
-      val bytes = row.getAs[Array[Byte]](1)
-      alignOne(path, bytes, sheet, names).map(vals => Row.fromSeq(vals :+ path))
-    }(Encoders.row(rawSchema))
-    applySchema(raw.toDF(), StructType(
-      schema.fields :+ StructField("source_file", StringType)))
-  }
-
-  /** Parse one workbook's `sheet` and align each data row to `names` by the
-    * file's own header. Shared by the strict and permissive bulk paths.
-    */
-  private def alignOne(
-      path: String, bytes: Array[Byte], sheet: String,
-      names: Seq[String]): Iterator[Seq[String]] = {
-    val s = readRawBytes(bytes).find(_.name == sheet)
-      .getOrElse(throw new IllegalArgumentException(s"no sheet '$sheet' in $path"))
-    val pos = names.map { n =>
-      val i = s.header.indexOf(n)
-      require(i >= 0, s"$path sheet '$sheet' is missing column '$n'")
-      i
-    }
-    s.rows.iterator.map(r => pos.map(i => if (i < r.length) r(i) else null))
-  }
-
-  /** Bulk ingest that QUARANTINES bad workbooks instead of failing the job:
-    * same shape as [[readSheetDistributed]] plus an `ingest_error` column —
-    * NULL on good rows; a corrupt zip / missing sheet / missing column /
-    * corrupt sheet part yields ONE row for the whole file with the error
-    * message and every data column NULL. At bulk scale (a glob of millions
-    * of third-party workbooks) one poison file must not kill the ingest;
-    * callers split on `ingest_error IS NULL` and route the remainder to a
-    * dead-letter table. Fatal errors (OOM et al.) still propagate.
-    */
-  def readSheetDistributedPermissive(
-      spark: SparkSession,
-      glob: String,
-      sheet: String,
-      schema: StructType): DataFrame = {
-    val names = schema.fieldNames.toSeq
-    val rawSchema = StructType(
-      names.map(StructField(_, StringType)) :+
-        StructField("source_file", StringType) :+
-        StructField("ingest_error", StringType))
-    val bin = spark.read.format("binaryFile").load(glob)
-      .select(col("path"), col("content"))
-    val raw = bin.flatMap { row =>
-      val path = row.getString(0)
-      try {
-        val bytes = row.getAs[Array[Byte]](1)
-        alignOne(path, bytes, sheet, names)
-          .map(vals => Row.fromSeq(vals :+ path :+ null))
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          Iterator.single(Row.fromSeq(
-            names.map(_ => null) :+ path :+
-              s"${e.getClass.getSimpleName}: ${e.getMessage}"))
-      }
-    }(Encoders.row(rawSchema))
-    applySchema(raw.toDF(), StructType(
-      schema.fields :+ StructField("source_file", StringType) :+
-        StructField("ingest_error", StringType)))
   }
 }

@@ -1,17 +1,16 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.DataFrame
 
 /** Structured Streaming over the events stream (SURVEY §2.9 — greenfield:
   * the reference has no streaming; the driver testdata ships `events`).
   *
   * The transformations are defined against a generic DataFrame so the SAME
-  * code runs batch (events.parquet → [[graft.SparkEntry]] "events_hourly")
-  * and streaming (`readStream` source) — Spark's unified model. Watermarks
-  * bound state; at 100 TB/day the windowed aggregation state is
-  * O(windows × event types), not O(events).
+  * code runs batch (events.parquet → the `events_hourly` registry query in
+  * [[graft.queries.EventsQueries]]) and streaming (`readStream` source) —
+  * Spark's unified model. Watermarks bound state; at 100 TB/day the
+  * windowed aggregation state is O(windows × event types), not O(events).
   */
 object EventStreams {
 
@@ -64,8 +63,7 @@ object EventStreams {
     * both windows in one Window exec. Gaps compare in integral
     * MICROSECONDS (`unix_micros`) so the oracle comparison is exact — a
     * seconds-truncated diff disagrees across engines on sub-second
-    * fractions. The streaming analog is [[userSessions]] with a
-    * GroupStateTimeout; this is the batch twin for historical data.
+    * fractions.
     */
   def sessionize(events: DataFrame, gapMinutes: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -80,47 +78,5 @@ object EventStreams {
         w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
           org.apache.spark.sql.expressions.Window.currentRow)))
       .drop("brk")
-  }
-
-  /** Streaming exact dedup — the streaming analog of
-    * [[graft.operators.Dedup.exactGroups]]: drop rows whose key re-appears
-    * within the watermark horizon. `dropDuplicatesWithinWatermark` keeps
-    * per-key state only until the watermark passes it, so state is bounded
-    * by (key arrival rate × watermark), not by stream history — the only
-    * formulation that survives an unbounded 100 TB/day stream. Exactly-once
-    * pipelines pair it with an idempotent sink keyed on the same column.
-    */
-  def dedupedEvents(events: DataFrame, keyCol: String = "event_id",
-      watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(keyCol)
-
-  case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
-                   event_type: String, value: Double)
-  case class SessionState(nEvents: Long, total: Double, lastTs: Long)
-  case class UserSession(user_id: Long, n_events: Long, total_value: Double)
-
-  /** Custom state: per-user running session via mapGroupsWithState — the
-    * KeyValueGroupedDataset stateful-op surface (SURVEY §2.9 / builder
-    * brief). State is O(active users); eviction would hang off a timeout
-    * (GroupStateTimeout) in a production session window.
-    */
-  def userSessions(events: Dataset[Event]): Dataset[UserSession] = {
-    implicit val stateEnc   = Encoders.product[SessionState]
-    implicit val outEnc     = Encoders.product[UserSession]
-    events
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .mapGroupsWithState[SessionState, UserSession](GroupStateTimeout.NoTimeout) {
-        case (userId, rows, state: GroupState[SessionState]) =>
-          val prev = state.getOption.getOrElse(SessionState(0L, 0.0, 0L))
-          var n = prev.nEvents; var total = prev.total; var last = prev.lastTs
-          rows.foreach { e =>
-            n += 1; total += e.value
-            last = math.max(last, e.ts.getTime)
-          }
-          state.update(SessionState(n, total, last))
-          UserSession(userId, n, total)
-      }
   }
 }

@@ -140,7 +140,7 @@ object LinkIngest {
     * [[BatchMarker.collapse]] (staged under `_compact_tmp/<table>`, intent
     * `_batches/compact<table>_<id>`) — semantics-preserving because
     * [[edges]] distincts anyway. RETENTION: like
-    * `UpsertIngest.compactLog`, history collapses into the highest landed
+    * `UpsertIngest.maybeCompact`, history collapses into the highest landed
     * id — `edges(upToBatch = N)` for N older than the horizon sees an
     * empty state, never a stale one. Tables compact independently — a
     * half-done pass (one table collapsed, the other not) reads correctly

@@ -6,16 +6,16 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Streamed keyed upsert as a CHANGELOG table — the merge-on-read shape
-  * of [[graft.sinks.Upsert]] under the [[BatchMarker]] exactly-once
-  * protocol: each micro-batch of (key, attrs) rows appends verbatim under
-  * `log/batch_id=<b>/` (the batch id IS the version — monotone by the
-  * streaming engine's contract), and the serving read resolves each key
-  * to its highest-batch row with one per-key window. This is the
-  * Hudi/Iceberg-style ingest posture: writes are pure appends at any
-  * rate; read amplification grows with log depth and is paid back by
-  * compacting the resolved view over the log
-  * ([[graft.sinks.Upsert.merged]] of latest → fresh log).
+/** Streamed keyed upsert as a CHANGELOG table — the merge-on-read
+  * counterpart of [[graft.sinks.Upsert]]'s copy-on-write merge, under the
+  * [[BatchMarker]] exactly-once protocol: each micro-batch of (key, attrs)
+  * rows appends verbatim under `log/batch_id=<b>/` (the batch id IS the
+  * version — monotone by the streaming engine's contract), and the
+  * serving read resolves each key to its highest-batch row with one
+  * per-key window. This is the Hudi/Iceberg-style ingest posture: writes
+  * are pure appends at any rate; read amplification grows with log depth
+  * and is paid back by compacting the resolved view into a fresh log
+  * ([[maybeCompact]]).
   *
   * Within one batch the caller owes one row per key (the same contract
   * as [[graft.sinks.Upsert]] — enforce upstream with an
@@ -196,7 +196,7 @@ object UpsertIngest {
   }
 
   /** Latest-batch-per-key resolve — the one window both [[readLatest]]
-    * and [[compactLog]] use, so a compaction can never change which row
+    * and the compaction use, so a compaction can never change which row
     * a key resolves to. Within one batch the caller owes one row per key;
     * a violation still resolves DETERMINISTICALLY (content-hash order
     * over the sorted column list, not file/task order), so reruns and
@@ -228,14 +228,31 @@ object UpsertIngest {
     LogStats(dirs.size, files.size, files.map(_.getLen).sum, maxId)
   }
 
-  /** The compaction POLICY — the scheduler shape around [[compactLog]]:
-    * collapse the changelog whenever its depth exceeds `maxBatches` OR its
-    * file count exceeds `maxFiles`. Called between batches (foreachBatch
-    * is serial per query, so the writer is quiesced exactly then — wire it
-    * into the stream via [[startWithCompaction]] or call it from a
-    * maintenance schedule). Returns whether a compaction ran. At crawl
-    * cadence this bounds [[readLatest]]'s read amplification to
-    * O(maxBatches) versions per key instead of O(all batches ever).
+  /** The compaction POLICY: collapse the changelog whenever its depth
+    * exceeds `maxBatches` OR its file count exceeds `maxFiles`
+    * (`maxBatches = 0` compacts any non-empty log). Called between batches
+    * (foreachBatch is serial per query, so the writer is quiesced exactly
+    * then) or from a maintenance schedule. Returns whether a compaction
+    * ran. At crawl cadence this bounds [[readLatest]]'s read amplification
+    * to O(maxBatches) versions per key instead of O(all batches ever).
+    *
+    * The pass collapses the changelog to ONE batch holding the resolved
+    * view — the shared per-key window → fresh log, the merge-on-read debt
+    * payment, through [[BatchMarker.collapse]] (staged under
+    * `_compact_tmp`, intent `_batches/compactlog_<id>`). The resolved rows
+    * land under the HIGHEST landed batch id and the markers below it
+    * collapse into the horizon, so the exactly-once replay contract
+    * survives: a replayed pre-compaction batch short-circuits (its effects
+    * are already inside the resolved view), and post-compaction batches
+    * keep winning on their higher ids. [[recoverCompaction]] — called by
+    * [[processBatch]] and every read — rolls an interrupted pass forward;
+    * all of them serialize on the table's monitor. Caller contract: the
+    * writer is quiescent, and one process owns the table's maintenance.
+    *
+    * Output file sizing follows [[graft.sinks.Compaction]]: file count
+    * from on-disk log bytes over `targetBytes` (an upper bound on the
+    * resolved size — resolve only drops rows), via a shuffle-free
+    * coalesce.
     */
   def maybeCompact(spark: SparkSession, tablePath: String, keyCol: String,
       maxBatches: Int = 16, maxFiles: Int = 256,
@@ -245,60 +262,15 @@ object UpsertIngest {
       // stats AFTER recovery (a rolled-forward swap changes both axes)
       val st = logStats(spark, tablePath)
       val due = st.nBatches > maxBatches || st.nFiles > maxFiles
-      if (due) compactLogResolved(spark, tablePath, keyCol, targetBytes)
+      // the shared window, not readLatest: recovery already ran above, and
+      // readLatest would re-enter it
+      if (due)
+        BatchMarker.collapse(spark, logSink(tablePath), targetBytes)(n =>
+          latestPerKey(readLog(spark, tablePath), keyCol).coalesce(n))
       due
     }
 
-  /** [[start]] with the maintenance policy folded into the ingest loop:
-    * after each batch lands, the policy check runs while the writer is
-    * quiescent (foreachBatch delivers batches serially).
-    */
-  def startWithCompaction(updates: DataFrame, tablePath: String,
-      checkpoint: String, keyCol: String, maxBatches: Int = 16,
-      maxFiles: Int = 256, validateUnique: Boolean = false): StreamingQuery =
-    BatchMarker.stream(updates, checkpoint) { (batch, batchId) =>
-      processBatch(batch, batchId, tablePath,
-        if (validateUnique) Some(keyCol) else None)
-      maybeCompact(batch.sparkSession, tablePath, keyCol, maxBatches, maxFiles)
-      ()
-    }
-
-  /** Collapse the changelog to ONE batch holding the resolved view —
-    * [[readLatest]] → fresh log, the merge-on-read debt payment, through
-    * [[BatchMarker.collapse]] (staged under `_compact_tmp`, intent
-    * `_batches/compactlog_<id>`). The resolved rows land under the
-    * HIGHEST landed batch id and the markers below it collapse into the
-    * horizon, so the exactly-once replay contract survives: a replayed
-    * pre-compaction batch short-circuits (its effects are already inside
-    * the resolved view), and post-compaction batches keep winning on
-    * their higher ids. [[recoverCompaction]] — called by [[processBatch]]
-    * and every read — rolls an interrupted pass forward; all of them
-    * serialize on the table's monitor. Caller contract: the writer is
-    * quiescent (run it from the foreachBatch loop or a paused-stream
-    * maintenance window), and one process owns the table's maintenance.
-    *
-    * Output file sizing follows [[graft.sinks.Compaction]]: file count
-    * from on-disk log bytes over `targetBytes` (an upper bound on the
-    * resolved size — resolve only drops rows), via a shuffle-free
-    * coalesce.
-    */
-  def compactLog(spark: SparkSession, tablePath: String, keyCol: String,
-      targetBytes: Long = 128L << 20): Unit =
-    BatchMarker.locked(tablePath) {
-      recoverCompaction(spark, tablePath)
-      compactLogResolved(spark, tablePath, keyCol, targetBytes)
-    }
-
-  /** The pass proper — callers hold the table lock and have recovered.
-    * Resolves via the shared window (not readLatest: keeps this pass free
-    * of the recovery re-entrance).
-    */
-  private def compactLogResolved(spark: SparkSession, tablePath: String,
-      keyCol: String, targetBytes: Long): Unit =
-    BatchMarker.collapse(spark, logSink(tablePath), targetBytes)(n =>
-      latestPerKey(readLog(spark, tablePath), keyCol).coalesce(n))
-
-  /** Roll forward an interrupted [[compactLog]] from its intent marker.
+  /** Roll forward an interrupted compaction from its intent marker.
     * No-op in O(1) listing when no intent marker exists.
     */
   def recoverCompaction(spark: SparkSession, tablePath: String): Unit =

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Streamed crawl-curation ingest — the incremental twin of the batch
-  * `pipeline_warc` pipeline (SparkEntry), for WARC segments arriving as
-  * micro-batches at crawl cadence.
+  * `pipeline_warc` pipeline ([[graft.queries.WarcQueries]]), for WARC
+  * segments arriving as micro-batches at crawl cadence.
   *
   * Per batch of parsed pages `(doc_id, url, n_tokens, text_md5)`, replay
   * the batch pipeline's tiers incrementally against ONE accumulated log

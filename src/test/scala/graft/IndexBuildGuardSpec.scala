@@ -10,14 +10,13 @@ import scala.jdk.CollectionConverters._
   * Spark-hidden `_`/`.` names. Its rows are the rows of each parquet or ORC
   * file under it, each prefixed with the file's directory relative to the
   * table (partition placement counts), plus every other file's bytes under
-  * its relative path, except for two formats whose bytes are not stable:
+  * its relative path, except for two formats digested by what a reader
+  * sees:
   *  - a WARC file's rows are its name and its records, read back through
   *    `Warc.readRecords` without the `path` they were read from, under the
-  *    file's directory. `Warc.writeRecords` deals records to its files
-  *    round-robin in the order of their row bytes, source `path` included,
-  *    so which file holds a record depends on where the checkout lives;
+  *    file's directory;
   *  - a workbook's rows are its sheets' rows, read back through
-  *    `Xlsx.readRaw`: its zip entries carry the time of the write.
+  *    `Xlsx.readSheets`: its zip entries carry the time of the write.
   * A writer edit that moves any kind's rows
   * fails here, by name; a change made on purpose updates that line in the
   * same diff. Every run writes what it computed to
@@ -73,7 +72,7 @@ class IndexBuildGuardSpec extends SparkSpec {
   /** One line per row (or per non-table file) under `table`, sorted. */
   private def rows(table: Path): Seq[String] =
     if (table.toString.endsWith(".xlsx"))
-      graft.sources.Xlsx.readRaw(table.toString).flatMap { sh =>
+      graft.sources.Xlsx.readSheets(spark, table.toString).flatMap { sh =>
         (sh.header +: sh.rows.map(_.toSeq)).map(r => s"${sh.name}\t${render(r)}")
       }.sorted
     else if (Files.isRegularFile(table))

@@ -39,12 +39,6 @@ class TextStatsSpec extends SparkSpec {
     assert(r === 3)
   }
 
-  test("bpeishCount: ceil(len/4) pieces per word") {
-    val r = Seq("abcd efghij x").toDF("v") // 1 + 2 + 1
-      .select(TextStats.bpeishCount(col("v"))).as[Long].head()
-    assert(r === 4L)
-  }
-
   test("stopwordRatio and qualityScore bounded in [0,1]") {
     val stops = typedLit(Seq("the", "a"))
     val r = Seq("the cat sat on a mat", "").toDF("v")
@@ -60,13 +54,6 @@ class TextStatsSpec extends SparkSpec {
     val r = Seq("the cat the dog le chat", "le chat le chien", "xyzzy")
       .toDF("v").select(TextStats.langIdRules(col("v"), profiles)).as[String].collect()
     assert(r.toSeq === Seq("en", "fr", "und"))
-  }
-
-  test("fingerprint: normalization-invariant (case/punct), content-sensitive") {
-    val r = Seq("The Quick Fox!", "the quick fox", "the slow fox").toDF("v")
-      .select(TextStats.fingerprint(col("v"))).as[Long].collect()
-    assert(r(0) === r(1))
-    assert(r(0) !== r(2))
   }
 
   test("scrubPii: redacts emails, phones and IPv4s, leaves clean text alone") {

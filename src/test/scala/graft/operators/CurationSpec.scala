@@ -217,6 +217,22 @@ class CurationSpec extends SparkSpec {
     assert(flags(1L).getAs[Double]("alpha_ratio") === 1.0)
   }
 
+  test("gopherPass column is row-identical to gopherFlags' quality_pass") {
+    val docs = Seq(
+      (1L, "the quick brown fox and the dog ran over a hill today", "s"),
+      (2L, "x", "s"), (3L, "a b", "s"),
+      (4L, "the data and the plan and the scan and a key here now", "s"))
+      .toDF("doc_id", "text", "source")
+    val viaFlags = Curation.gopherFlags(docs, "text", "doc_id",
+        stopwords = Seq("the", "a", "and"), minWords = 5)
+      .select(col("doc_id"), col("quality_pass"))
+    val viaColumn = docs.select(col("doc_id"),
+      Curation.gopherPass(col("text"),
+        stopwords = Seq("the", "a", "and"), minWords = 5).as("quality_pass"))
+    assert(viaFlags.exceptAll(viaColumn).count() === 0)
+    assert(viaColumn.exceptAll(viaFlags).count() === 0)
+  }
+
   test("repeatedSpanStats counts corpus-repeated spans per doc") {
     val corpus = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),

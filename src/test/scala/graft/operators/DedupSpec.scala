@@ -21,12 +21,6 @@ class DedupSpec extends SparkSpec {
     assert(dup.getAs[Long]("keeper_id") === 1L)
   }
 
-  test("dropExactDuplicates keeps one row per content hash") {
-    val kept = Dedup.dropExactDuplicates(docs, "text", "doc_id")
-    assert(kept.count() === 4)
-    assert(kept.filter(col("doc_id") === 2).count() === 0)
-  }
-
   test("ngramJaccardPairs finds the near-dup pair and not the unrelated one") {
     val pairs = Dedup.ngramJaccardPairs(docs, "text", "doc_id", n = 3, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

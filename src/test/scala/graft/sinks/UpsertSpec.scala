@@ -1,7 +1,6 @@
 package graft.sinks
 
 import graft.SparkSpec
-import java.nio.file.Files
 
 class UpsertSpec extends SparkSpec {
   import spark.implicits._
@@ -16,22 +15,5 @@ class UpsertSpec extends SparkSpec {
       .map(r => r.getLong(0) -> ((r.getString(1), r.getDouble(2)))).toMap
     assert(m === Map(1L -> (("a", 10.0)), 2L -> (("B2", 99.0)),
       3L -> (("c", 30.0)), 4L -> (("d", 40.0))))
-  }
-
-  test("merge-on-read: versioned appends resolve to the latest per key") {
-    val dir = Files.createTempDirectory("upsert").toString + "/t"
-    Upsert.appendVersion(base, dir, version = 0L)
-    Upsert.appendVersion(updates, dir, version = 1L)
-    Upsert.appendVersion(Seq((2L, "B3", 7.0)).toDF("k", "v", "x"), dir, 2L)
-    val got = Upsert.readLatest(spark, dir, "k").collect()
-      .map(r => r.getLong(0) -> ((r.getString(1), r.getDouble(2)))).toMap
-    assert(got === Map(1L -> (("a", 10.0)), 2L -> (("B3", 7.0)),
-      3L -> (("c", 30.0)), 4L -> (("d", 40.0))))
-    // and resolving then compacting copy-on-write equals merged state
-    val compacted = Upsert.merged(
-      Upsert.merged(base, updates, "k"),
-      Seq((2L, "B3", 7.0)).toDF("k", "v", "x"), "k")
-      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getDouble(2)))).toMap
-    assert(got === compacted)
   }
 }

@@ -176,6 +176,26 @@ class WarcSpec extends SparkSpec {
       Warc.writeRecords(crlf, tmp("warc_w_bad2")))
   }
 
+  test("writeRecords output bytes do not depend on where the source archive lives") {
+    val root = tmp("warc_place")
+    val a = s"$root/a/archive"; val b = s"$root/bb/archive"
+    synth(a, 40)
+    Files.createDirectories(Paths.get(b))
+    Files.list(Paths.get(a)).forEach(f => Files.copy(f, Paths.get(b).resolve(f.getFileName)))
+    // file name -> md5 of its bytes
+    def export(src: String, out: String): Map[String, String] = {
+      Warc.writeRecords(Warc.readRecords(spark, src), out, nFiles = 3)
+      Files.list(Paths.get(out)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.startsWith("part-"))
+        .map(f => f.getFileName.toString ->
+          org.apache.commons.codec.digest.DigestUtils.md5Hex(Files.readAllBytes(f)))
+        .toMap
+    }
+    val fromA = export(a, s"$root/outa")
+    assert(fromA.size === 3)
+    assert(export(b, s"$root/outb") === fromA)
+  }
+
   test("writeRecordsDeduped: one stored response per distinct payload, revisit pointers " +
       "carry WARC-Refers-To + WARC-Payload-Digest, and the read-back ledger balances") {
     val src = tmp("warc_dd_src"); val out = tmp("warc_dd_out")

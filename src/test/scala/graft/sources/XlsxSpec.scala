@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{ByteArrayOutputStream, FileOutputStream}
+import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
@@ -167,7 +167,7 @@ class XlsxSpec extends SparkSpec {
 
   test("reference workbook reads end-to-end with the declared schemas") {
     assume(new java.io.File(refXlsx).exists(), "reference workbook not present")
-    val sheets = Xlsx.readRaw(refXlsx)
+    val sheets = Xlsx.readSheets(spark, refXlsx)
     assert(sheets.map(_.name).toSet ==
       Set("AccessRequest", "InstallationFacility", "Category", "Institution"))
 
@@ -175,18 +175,22 @@ class XlsxSpec extends SparkSpec {
     assert(ar.header == Schemas.xlsxAccessRequest.fieldNames.toSeq)
     assert(ar.rows.length == 22748)
 
-    val df = Xlsx.readSheet(spark, refXlsx, "AccessRequest", Schemas.xlsxAccessRequest)
+    val res = new java.io.File(refXlsx).getParent
+    def sheet(name: String, fixture: String, schema: org.apache.spark.sql.types.StructType) =
+      graft.etl.Rebuild.resourceSheet(spark, res, name, fixture, schema)
+    val df = sheet("AccessRequest", "access_request", Schemas.xlsxAccessRequest)
     assert(df.schema == Schemas.xlsxAccessRequest)
     val first = df.orderBy("AccessRequest_ID").first()
     assert(first.getInt(0) == 1 && first.getInt(1) == 141 && first.getInt(2) == 4)
     assert(df.filter(col("AccessRequest_ID").isNull).isEmpty)
 
     // the resource steps the Rebuild CLI runs over these sheets (S4 → tables)
-    val cat = Xlsx.readSheet(spark, refXlsx, "Category", Schemas.xlsxCategory)
+    val cat = sheet("Category", "category", Schemas.xlsxCategory)
     val filled = graft.etl.Steps.fillCategory(cat)
     assert(filled.columns.toSeq == Seq("id", "name", "higherName"))
     assert(filled.count() == cat.count() && filled.count() > 0)
-    val fac = Xlsx.readSheet(spark, refXlsx, "InstallationFacility", Schemas.xlsxInstallationFacility)
+    val fac = sheet("InstallationFacility", "installation_facility",
+      Schemas.xlsxInstallationFacility)
     assert(graft.etl.Steps.fillInstallationFacility(fac).filter(col("id").isNull).isEmpty)
   }
 
@@ -205,48 +209,6 @@ class XlsxSpec extends SparkSpec {
     assert(fell.count() == 3)
   }
 
-  /** Same People sheet but with the score/name/id columns REORDERED —
-    * exercises the align-by-own-header contract of the bulk path.
-    */
-  private def miniXlsxReordered(): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val z = new ZipOutputStream(bos)
-    def put(name: String, body: String): Unit = {
-      z.putNextEntry(new ZipEntry(name)); z.write(body.getBytes(UTF_8)); z.closeEntry()
-    }
-    put("xl/workbook.xml",
-      """<?xml version="1.0"?><workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">""" +
-        """<sheets><sheet name="People" sheetId="1" r:id="rId1"/></sheets></workbook>""")
-    put("xl/_rels/workbook.xml.rels",
-      """<?xml version="1.0"?><Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
-        """<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet1.xml"/></Relationships>""")
-    put("xl/worksheets/sheet1.xml",
-      """<?xml version="1.0"?><worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""" +
-        """<row r="1"><c r="A1" t="inlineStr"><is><t>score</t></is></c><c r="B1" t="inlineStr"><is><t>id</t></is></c></row>""" +
-        """<row r="2"><c r="A2"><v>9.5</v></c><c r="B2"><v>7</v></c></row>""" +
-        """</sheetData></worksheet>""")
-    z.close()
-    bos.toByteArray
-  }
-
-  test("distributed bulk ingest aligns each workbook by its own header") {
-    import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("xlsx-bulk")
-    Seq("a.xlsx" -> miniXlsx(), "b.xlsx" -> miniXlsx(),
-        "c.xlsx" -> miniXlsxReordered()).foreach { case (n, bytes) =>
-      val fos = new FileOutputStream(dir.resolve(n).toFile)
-      try fos.write(bytes) finally fos.close()
-    }
-    val schema = StructType(Seq(StructField("id", IntegerType), StructField("score", DoubleType)))
-    val out = Xlsx.readSheetDistributed(spark, dir.toString + "/*.xlsx", "People", schema)
-    assert(out.columns.toSeq == Seq("id", "score", "source_file"))
-    assert(out.count() == 9) // 4 data rows × 2 files + 1 reordered row
-    assert(out.select("source_file").distinct().count() == 3)
-    assert(out.filter(col("id") === 1 && col("score") === 3.5).count() == 2)
-    // the reordered workbook's columns land by NAME, not position
-    assert(out.filter(col("id") === 7 && col("score") === 9.5).count() == 1)
-  }
-
   test("a corrupt row number is rejected, not materialized") {
     val bos = new ByteArrayOutputStream()
     val z = new ZipOutputStream(bos)
@@ -263,38 +225,5 @@ class XlsxSpec extends SparkSpec {
     z.close()
     val e = intercept[IllegalArgumentException](Xlsx.readRawBytes(bos.toByteArray))
     assert(e.getMessage.contains("corrupt sheet"))
-  }
-
-  test("permissive bulk ingest quarantines poison files instead of failing") {
-    import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("xlsx-poison")
-    def write(n: String, bytes: Array[Byte]): Unit = {
-      val fos = new FileOutputStream(dir.resolve(n).toFile)
-      try fos.write(bytes) finally fos.close()
-    }
-    write("good.xlsx", miniXlsx())
-    write("reordered.xlsx", miniXlsxReordered())
-    write("truncated.xlsx", miniXlsx().take(100)) // corrupt zip
-    val schema = StructType(Seq(
-      StructField("id", IntegerType), StructField("score", DoubleType)))
-    // strict path fails the whole job on the first poison file
-    intercept[org.apache.spark.SparkException] {
-      Xlsx.readSheetDistributed(spark, dir.toString + "/*.xlsx", "People", schema).count()
-    }
-    // permissive path: good rows flow, each bad FILE is one quarantine row
-    val out = Xlsx.readSheetDistributedPermissive(
-      spark, dir.toString + "/*.xlsx", "People", schema)
-    assert(out.columns.toSeq == Seq("id", "score", "source_file", "ingest_error"))
-    val good = out.filter(col("ingest_error").isNull)
-    val bad = out.filter(col("ingest_error").isNotNull)
-    assert(good.count() == 5) // 4 rows (good.xlsx) + 1 (reordered.xlsx)
-    assert(bad.count() == 1 && bad.select("source_file").first().getString(0).endsWith("truncated.xlsx"))
-    assert(bad.filter(col("id").isNull && col("score").isNull).count() == 1)
-    // a structurally fine workbook missing a declared column also quarantines
-    val out2 = Xlsx.readSheetDistributedPermissive(
-      spark, dir.toString + "/good.xlsx", "People",
-      StructType(Seq(StructField("id", IntegerType), StructField("nope", StringType))))
-    assert(out2.filter(col("ingest_error").isNull).isEmpty)
-    assert(out2.filter(col("ingest_error").contains("nope")).count() == 1)
   }
 }

@@ -78,47 +78,4 @@ class EventStreamsSpec extends SparkSpec {
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r === Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 1L))
   }
-
-  test("dedupedEvents: duplicate keys dropped across micro-batches, state watermark-bounded") {
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[(Long, Timestamp, String, Double)]
-    val events = input.toDF().toDF("event_id", "ts", "event_type", "value")
-    val q = EventStreams.dedupedEvents(events)
-      .writeStream.format("memory").queryName("deduped")
-      .outputMode(OutputMode.Append())
-      .start()
-    try {
-      input.addData(
-        (1L, ts("2024-01-01 10:00:00"), "click", 1.0),
-        (1L, ts("2024-01-01 10:00:30"), "click", 1.0), // same-batch dup
-        (2L, ts("2024-01-01 10:01:00"), "view", 2.0))
-      q.processAllAvailable()
-      input.addData((1L, ts("2024-01-01 10:02:00"), "click", 1.0)) // cross-batch dup
-      q.processAllAvailable()
-      val ids = spark.table("deduped").select("event_id").as[Long].collect().sorted
-      assert(ids.toSeq === Seq(1L, 2L)) // each key delivered exactly once
-    } finally q.stop()
-  }
-
-  test("userSessions: mapGroupsWithState accumulates per-user state across batches") {
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[EventStreams.Event]
-    val q = EventStreams.userSessions(input.toDS())
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode(OutputMode.Update())
-      .start()
-    try {
-      input.addData(
-        EventStreams.Event(1L, ts("2024-01-01 10:00:00"), 7L, "click", 1.5),
-        EventStreams.Event(2L, ts("2024-01-01 10:01:00"), 7L, "view", 2.5))
-      q.processAllAvailable()
-      input.addData(EventStreams.Event(3L, ts("2024-01-01 10:02:00"), 7L, "click", 1.0))
-      q.processAllAvailable()
-      val last = spark.table("sessions")
-        .filter(col("user_id") === 7L)
-        .orderBy(col("n_events").desc).head()
-      assert(last.getAs[Long]("n_events") === 3L) // state carried across batches
-      assert(last.getAs[Double]("total_value") === 5.0)
-    } finally q.stop()
-  }
 }

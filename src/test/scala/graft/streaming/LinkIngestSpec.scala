@@ -113,7 +113,7 @@ class LinkIngestSpec extends SparkSpec {
     assert(LinkIngest.nBatches(spark, idx, "pairs") === 1)
     assert(edgeSet(idx) === before)
     // history collapsed into the highest id: an older as-of read sees
-    // the EMPTY state, never a stale one (the compactLog horizon)
+    // the EMPTY state, never a stale one (the compaction horizon)
     assert(LinkIngest.edges(spark, idx, upToBatch = Some(1L)).isEmpty)
     // ingest continues on top of the collapsed index
     LinkIngest.processBatch(

@@ -60,7 +60,7 @@ class UpsertIngestSpec extends SparkSpec {
     assert(latest(tbl2) === latest(tbl))
   }
 
-  test("compactLog collapses depth, GCs markers below the horizon, replays short-circuit") {
+  test("compaction collapses depth and markers; replays short-circuit") {
     val dir = Files.createTempDirectory("upsertcompact").toFile
     dir.deleteOnExit()
     val tbl = dir.getAbsolutePath + "/tbl"
@@ -72,7 +72,7 @@ class UpsertIngestSpec extends SparkSpec {
     UpsertIngest.processBatch(b2, 2L, tbl)
     val before = latest(tbl)
     assert(UpsertIngest.logStats(spark, tbl).nBatches === 3)
-    UpsertIngest.compactLog(spark, tbl, "k")
+    assert(UpsertIngest.maybeCompact(spark, tbl, "k", maxBatches = 0))
     val st = UpsertIngest.logStats(spark, tbl)
     assert(st.nBatches === 1 && st.maxBatchId === 2L) // depth collapsed
     assert(latest(tbl) === before) // resolve unchanged row-for-row
@@ -106,7 +106,7 @@ class UpsertIngestSpec extends SparkSpec {
     // crash window: batch 2's rows land WITHOUT a marker
     Seq((3L, "c", 3L)).toDF("k", "v", "n").withColumn("batch_id", lit(2L))
       .write.mode("append").partitionBy("batch_id").parquet(s"$tbl/log")
-    UpsertIngest.compactLog(spark, tbl, "k")
+    assert(UpsertIngest.maybeCompact(spark, tbl, "k", maxBatches = 0))
     val st = UpsertIngest.logStats(spark, tbl)
     // the resolved view sits under the highest MARKERED id (1), the
     // debris is gone, and key 3 is absent (its batch never committed)
@@ -194,7 +194,7 @@ class UpsertIngestSpec extends SparkSpec {
     val r2 = latest(tbl)
     assert(r1 === r2, "rerun changed the within-batch winner")
     UpsertIngest.processBatch(Seq((3L, "c", 2L)).toDF("k", "v", "n"), 1L, tbl)
-    UpsertIngest.compactLog(spark, tbl, "k")
+    assert(UpsertIngest.maybeCompact(spark, tbl, "k", maxBatches = 0))
     assert(latest(tbl) === r1 + (3L -> ("c", 2L)),
       "compaction changed the within-batch winner")
   }
@@ -245,7 +245,7 @@ class UpsertIngestSpec extends SparkSpec {
     // compaction collapses history into the highest id: older as-of
     // reads now see the EMPTY state, not a stale one — the lakehouse
     // cleaning contract
-    UpsertIngest.compactLog(spark, tbl, "k")
+    assert(UpsertIngest.maybeCompact(spark, tbl, "k", maxBatches = 0))
     assert(asOf(1L) === Map(1L -> "a", 2L -> "B2", 3L -> "c"),
       "post-compaction as-of at the horizon must equal the resolved view")
     assert(asOf(0L).isEmpty,
